@@ -2,8 +2,11 @@ package graft.etl
 
 import java.time.LocalDate
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.functions.CidFunctions._
 import graft.operators.{PriorityDedup, RangeJoin}
@@ -133,32 +136,28 @@ object CidEtl {
     *
     * Ordering contract: the input must come from exactly ONE CSV file
     * (enforced below — there is no cross-file order to reconstruct).
-    * The rank comes from `zipWithIndex`, whose numbering follows
-    * partition index then intra-partition order — for a single CSV
-    * file, splits are ordered by byte offset and rows stream in file
-    * order within each split, so the index IS the line number. (The
-    * previous `coalesce(1) + monotonically_increasing_id` relied on
-    * coalesce preserving row order, a contract Spark doesn't state.)
-    * These dims are catalog-sized (<= a few thousand rows), so the
-    * round-trip through an RDD is off any hot path.
+    * `collect` returns rows by partition index then intra-partition
+    * order — for a single CSV file, splits are ordered by byte offset
+    * and rows stream in file order within each split, so the rank IS
+    * the line number. These dims are catalog-sized (<= a few thousand
+    * rows): they are collected once and ranked into a local relation,
+    * so every range join they feed reads them without another scan.
     */
   private def withFileOrder(df: DataFrame): DataFrame = {
     require(df.inputFiles.length == 1,
       s"file-order rank needs a single input file, got " +
         s"${df.inputFiles.length} (${df.inputFiles.take(3).mkString(", ")})")
-    val schema = df.schema.add("__ord", org.apache.spark.sql.types.LongType,
-      nullable = false)
-    val rdd = df.rdd.zipWithIndex.map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i)
-    }
-    df.sparkSession.createDataFrame(rdd, schema)
+    val schema = df.schema.add("__ord", LongType, nullable = false)
+    val ranked = df.collect().zipWithIndex
+      .map { case (r, i) => Row.fromSeq(r.toSeq :+ i.toLong) }
+    df.sparkSession.createDataFrame(ranked.toSeq.asJava, schema)
   }
 
   /** Read the 4 official CSVs and reconstruct the hierarchy: categories
     * get block/chapter via lexicographic containment (J3), blocks get
     * chapters via containment of either bound (J4) — both as broadcast
-    * theta joins with first-match row_number instead of the reference's
-    * per-row dict scans (etl_cid10.py:266-325).
+    * lookups into driver-resolved disjoint first-match pieces instead of
+    * the reference's per-row dict scans (etl_cid10.py:266-325).
     */
   def readDatasusOfficial(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
@@ -190,35 +189,38 @@ object CidEtl {
 
     // J3: category → first containing block range, then first
     // containing chapter range (independent first-matches, like the two
-    // separate dict scans in the reference). firstMatchByCase compiles
-    // the tiny ranges into a first-match CASE chain, so the probe side
-    // is never shuffled — at scale this is a pure map + broadcast
-    // lookup instead of a repartition-per-key row_number.
+    // separate dict scans in the reference). firstMatchDisjoint resolves
+    // first-match over the tiny ranges on the driver into disjoint
+    // pieces, so the probe side is never shuffled — at scale this is a
+    // pure map + broadcast lookup.
     val cats0 = categoriesRaw.select(
       upper(trim(col("CAT").cast("string"))).as("category_code"),
       trim(col("DESCRICAO").cast("string")).as("category_title"))
-    def contains(value: org.apache.spark.sql.Column, lo: String, hi: String) =
-      (r: org.apache.spark.sql.Row) =>
-        value.between(lit(r.getAs[String](lo)), lit(r.getAs[String](hi)))
-    val withBlock = RangeJoin.firstMatchByCase(
-      cats0, blockRanges.select("b_start", "b_end", "block_id", "__ord"),
-      "__ord", contains(col("category_code"), "b_start", "b_end"))
-      .drop("b_start", "b_end")
-    val categories = RangeJoin.firstMatchByCase(
-      withBlock,
-      chapterRanges.select("c_start", "c_end", "chapter_code", "__ord"),
-      "__ord", contains(col("category_code"), "c_start", "c_end"))
+    val chapterBounds = chapterRanges.select("c_start", "c_end", "chapter_code", "__ord")
+    val withBlock = RangeJoin.firstMatchDisjoint(
+        cats0, blockRanges.select("b_start", "b_end", "block_id", "__ord"),
+        col("category_code"), "b_start", "b_end", "__ord")
+      .drop("b_start", "b_end", "__ord")
+    val categories = RangeJoin.firstMatchDisjoint(
+        withBlock, chapterBounds, col("category_code"), "c_start", "c_end", "__ord")
       .select("category_code", "category_title", "block_id", "chapter_code")
 
     // J4: block → first chapter range containing either bound (the
-    // reference's OR predicate, etl_cid10.py:317-325).
-    val blocks = RangeJoin.firstMatchByCase(
-        blockRanges,
-        chapterRanges.select("c_start", "c_end", "chapter_code", "__ord"),
-        "__ord",
-        r => contains(col("b_start"), "c_start", "c_end")(r)
-          || contains(col("b_end"), "c_start", "c_end")(r))
-      .select(col("block_id"), col("block_title"), col("chapter_code"))
+    // reference's OR predicate, etl_cid10.py:317-325): the lower-ordered
+    // of the first chapter containing b_start and the first containing
+    // b_end.
+    def firstChapter(blocks: DataFrame, bound: String, tag: String) =
+      RangeJoin.firstMatchDisjoint(blocks,
+          chapterBounds.select(col("c_start"), col("c_end"),
+            col("chapter_code").as(s"${tag}_code"), col("__ord").as(s"${tag}_ord")),
+          col(bound), "c_start", "c_end", s"${tag}_ord")
+        .drop("c_start", "c_end")
+    val viaBoth = firstChapter(firstChapter(
+      blockRanges.select("b_start", "b_end", "block_id", "block_title"),
+      "b_start", "start"), "b_end", "end")
+    val startFirst = col("end_ord").isNull || col("start_ord") <= col("end_ord")
+    val blocks = viaBoth.select(col("block_id"), col("block_title"),
+      when(startFirst, col("start_code")).otherwise(col("end_code")).as("chapter_code"))
 
     // Subcategories: fixed-width dot insertion + 3-char category key.
     val tituloCol =

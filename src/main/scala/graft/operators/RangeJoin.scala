@@ -1,8 +1,14 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable.ArrayBuffer
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.types.PhysicalDataType
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, StructField, StructType}
 
 /** Range (theta) containment join with first-match semantics
   * (SURVEY.md §2.4 J3/J4).
@@ -12,7 +18,9 @@ import org.apache.spark.sql.functions._
   * design: a left BroadcastNestedLoopJoin on the containment predicate
   * (the ranges side is always small — broadcast it), then
   * row_number() == 1 per left key in `rangeOrder` to reproduce
-  * first-match when ranges overlap.
+  * first-match when ranges overlap. [[firstMatchDisjoint]] drops that
+  * window for a catalog-sized ranges side by resolving first-match on
+  * the driver.
   *
   * Scale: the probe side streams at full parallelism; the build side is
   * broadcast once per executor. For a large ranges side this would be
@@ -51,33 +59,101 @@ object RangeJoin {
 
   /** Map-only first-match for a CATALOG-SIZED ranges side: the ranges
     * are collected (same size contract as a broadcast build side) and
-    * compiled into a first-match CASE chain
-    * `WHEN pred(range_0) THEN 0 WHEN pred(range_1) THEN 1 …` evaluated
-    * per probe row — a literal transcription of the reference's
-    * first-match break loop (etl_cid10.py:303-310) — followed by one
-    * broadcast equi-join on the matched ordinal to attach the range's
-    * payload columns.
+    * first-match in the order of `ordCol` (a non-null long) is resolved
+    * on the driver into disjoint pieces. Every distinct bound becomes a
+    * closed point and every gap between two neighbouring bounds an open
+    * interval (sorted with Catalyst's ordering for the bounds' type, the
+    * ordering the join condition compares with); each piece takes the
+    * lowest-order range covering it, neighbouring pieces with the same
+    * range merge, and pieces no range covers drop. The pieces, carrying
+    * every column of their range (`ordCol` included), are broadcast and
+    * left-joined on `value` against their bounds.
     *
-    * Unlike [[firstMatch]], the probe side is never shuffled: at 100 TB
-    * probe scale the row_number variant repartitions the whole fact
-    * table on the left key just to deduplicate matches, while this is
-    * a pure map + broadcast lookup. `pred` builds the containment
-    * predicate for one collected range row (allowing OR-of-bounds
-    * forms like J4's).
+    * A probe row lies in at most one piece, so unlike [[firstMatch]]
+    * the probe side is never shuffled (no per-row dedup window), and
+    * the generated code does not grow with the number of ranges (no
+    * per-range CASE branch). A range with a null bound or `lo > hi`
+    * contains no value and is ignored; unmatched and null-valued probe
+    * rows survive with nulls.
     */
-  def firstMatchByCase(
+  def firstMatchDisjoint(
       left: DataFrame,
       ranges: DataFrame,
-      ordCol: String,
-      pred: org.apache.spark.sql.Row => Column): DataFrame = {
-    val collected = ranges.collect().sortBy(_.getAs[Long](ordCol))
-    val chain = collected.foldRight(lit(null).cast("long")) { (row, acc) =>
-      when(pred(row), lit(row.getAs[Long](ordCol))).otherwise(acc)
+      value: Column,
+      lo: String,
+      hi: String,
+      ordCol: String): DataFrame = {
+    val schema = ranges.schema
+    val boundType = schema(lo).dataType
+    require(schema(hi).dataType == boundType,
+      s"range bounds $lo and $hi differ in type: $boundType vs ${schema(hi).dataType}")
+    val (loIdx, hiIdx, ordIdx) =
+      (schema.fieldIndex(lo), schema.fieldIndex(hi), schema.fieldIndex(ordCol))
+    // Bounds compare as Catalyst values, with the ordering the join
+    // condition uses.
+    val byBound = Ordering.by[Any, Any](
+      CatalystTypeConverters.createToCatalystConverter(boundType))(
+      PhysicalDataType.ordering(boundType))
+
+    val live = ranges.collect()
+      .filter(r => !r.isNullAt(loIdx) && !r.isNullAt(hiIdx) &&
+        byBound.lteq(r.get(loIdx), r.get(hiIdx)))
+      .sortBy(_.getLong(ordIdx))
+    val bounds = live.flatMap(r => Seq(r.get(loIdx), r.get(hiIdx))).sorted(byBound)
+    val keys = (bounds.take(1) ++ bounds.sliding(2).collect {
+      case Array(a, b) if byBound.lt(a, b) => b
+    }).toIndexedSeq
+    def keyIndex(v: Any): Int = keys.search(v)(byBound).insertionPoint
+
+    // Element 2i is the point keys(i), element 2i+1 the open gap
+    // (keys(i), keys(i+1)). Ranges paint the elements they cover in
+    // ord order; `next` skips already-painted runs (union-find with
+    // path compression), so the paint is near-linear in the elements.
+    val owner = Array.fill(math.max(2 * keys.length - 1, 0))(-1)
+    val next = Array.tabulate(owner.length + 1)(identity)
+    def unpainted(i: Int): Int = {
+      var root = i
+      while (next(root) != root) root = next(root)
+      var j = i
+      while (j != root) { val n = next(j); next(j) = root; j = n }
+      root
     }
-    val r = ranges.withColumnRenamed(ordCol, "__range_ord")
-    left.withColumn("__matched_ord", chain)
-      .join(broadcast(r), col("__matched_ord") === col("__range_ord"), "left")
-      .drop("__matched_ord", "__range_ord")
+    live.indices.foreach { k =>
+      val last = 2 * keyIndex(live(k).get(hiIdx))
+      var e = unpainted(2 * keyIndex(live(k).get(loIdx)))
+      while (e <= last) {
+        owner(e) = k
+        next(e) = e + 1
+        e = unpainted(e + 1)
+      }
+    }
+
+    val pieces = ArrayBuffer.empty[Row]
+    var e = 0
+    while (e < owner.length) {
+      if (owner(e) < 0) e += 1
+      else {
+        val first = e
+        while (e + 1 < owner.length && owner(e + 1) == owner(first)) e += 1
+        val (pieceHi, hiIncl) =
+          if (e % 2 == 0) (keys(e / 2), true) else (keys(e / 2 + 1), false)
+        pieces += Row.fromSeq(
+          Seq(keys(first / 2), first % 2 == 0, pieceHi, hiIncl) ++
+            live(owner(first)).toSeq)
+        e += 1
+      }
+    }
+    val pieceSchema = StructType(Seq(
+      StructField("__piece_lo", boundType), StructField("__piece_lo_incl", BooleanType),
+      StructField("__piece_hi", boundType), StructField("__piece_hi_incl", BooleanType)) ++
+      schema.fields)
+    val piecesDf = ranges.sparkSession.createDataFrame(pieces.asJava, pieceSchema)
+    val (pLo, pHi) = (col("__piece_lo"), col("__piece_hi"))
+    val inPiece =
+      (value > pLo || (col("__piece_lo_incl") && value === pLo)) &&
+        (value < pHi || (col("__piece_hi_incl") && value === pHi))
+    left.join(broadcast(piecesDf), inPiece, "left")
+      .drop("__piece_lo", "__piece_lo_incl", "__piece_hi", "__piece_hi_incl")
   }
 
   /** Scale path for a ranges side too large to broadcast: both sides are

@@ -333,10 +333,12 @@ object CoreQueries extends Catalog {
              |ORDER BY l_orderkey, price_floor, disc_dev""".stripMargin)),
 
     // ---- numeric range (theta) join with first-match (J3/J4) ----
-    // Gated through the map-only CASE-chain variant: the probe side is
-    // never shuffled (the row_number variant would repartition the
-    // whole fact table on a per-row id just to dedupe matches — the
-    // plan you would NOT want at 100 TB probe scale). Oracle unchanged:
+    // Gated through the map-only disjoint-pieces variant: the probe
+    // side is never shuffled (the row_number variant would repartition
+    // the whole fact table on a per-row id just to dedupe matches — the
+    // plan you would NOT want at 100 TB probe scale). The double bounds
+    // are resolved on the driver with Catalyst's double ordering, the
+    // one the join condition compares with. Oracle unchanged:
     // first-match-by-lo-order is the same result either way.
     Q("q20_range_join",
       (s, dir) => {
@@ -348,10 +350,8 @@ object CoreQueries extends Catalog {
           // which for this catalog is exactly regionkey order
           col("r_regionkey").cast("long").as("ord"))
         val sup = Tables.load(s, dir, "supplier")
-        RangeJoin.firstMatchByCase(
-            sup, ranges, ordCol = "ord",
-            pred = row => col("s_acctbal") >= lit(row.getAs[Double]("lo")) &&
-              col("s_acctbal") <= lit(row.getAs[Double]("hi")))
+        RangeJoin.firstMatchDisjoint(
+            sup, ranges, col("s_acctbal"), lo = "lo", hi = "hi", ordCol = "ord")
           .select(col("s_suppkey"), col("r_name"), col("lo"))
           .orderBy(col("s_suppkey"))
       },

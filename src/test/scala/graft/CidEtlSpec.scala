@@ -57,4 +57,25 @@ class CidEtlSpec extends SparkSpec {
     assert(q.missingHierarchy == 2)
     assertGolden(out, s"$res/golden/combined_mode.csv")
   }
+
+  test("J4: a block spanning two chapters gets the one first in file order") {
+    val dir = Files.createTempDirectory("cid_j4")
+    def write(name: String, lines: String*): Unit =
+      Files.write(dir.resolve(name),
+        lines.mkString("", "\n", "\n").getBytes(StandardCharsets.ISO_8859_1))
+    write("CID-10-CAPITULOS.csv", "NUMCAP;CATINIC;CATFIM;DESCRICAO",
+      "2;C00;D48;Neoplasias", "1;A00;B99;Infecciosas", "3;E00;G99;Endocrinas")
+    write("CID-10-GRUPOS.csv", "CATINIC;CATFIM;DESCRICAO",
+      "B90;C05;end bound's chapter first", "D40;E05;start bound's chapter first",
+      "A10;A20;both bounds in one chapter", "X00;X10;no chapter")
+    write("CID-10-CATEGORIAS.csv", "CAT;DESCRICAO", "A15;Tuberculose")
+    write("CID-10-SUBCATEGORIAS.csv", "SUBCAT;DESCRICAO", "A150;Tuberculose pulmonar")
+    val (_, blocks, _, _) = CidEtl.readDatasusOfficial(spark, dir.toString)
+    val got = blocks.collect()
+      .map(r => r.getAs[String]("block_id") -> Option(r.getAs[String]("chapter_code")))
+      .toMap
+    assert(got == Map(
+      "B90-C05" -> Some("C00-D48"), "D40-E05" -> Some("C00-D48"),
+      "A10-A20" -> Some("A00-B99"), "X00-X10" -> None))
+  }
 }

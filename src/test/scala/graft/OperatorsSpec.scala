@@ -235,22 +235,6 @@ class OperatorsSpec extends SparkSpec {
     assert(viaBuckets == viaBroadcast)
   }
 
-  test("firstMatchByCase equals window firstMatch on overlapping ranges") {
-    val items = (0 until 500).map(i => (i.toLong, f"K${i % 97}%03d")).toDF("id", "code")
-    val ranges = Seq(
-      ("K000", "K030", "r0", 0L), ("K020", "K080", "r1", 1L),
-      ("K010", "K095", "r2", 2L), ("K050", "K060", "r3", 3L))
-      .toDF("lo", "hi", "name", "ord")
-    val viaWindow = RangeJoin.firstMatch(items, ranges, $"code", $"lo", $"hi",
-        leftKey = Seq("id"), rangeOrder = $"ord")
-      .select($"id", $"name").as[(Long, Option[String])].collect().toMap
-    val viaCase = RangeJoin.firstMatchByCase(items, ranges, "ord",
-        r => $"code".between(lit(r.getAs[String]("lo")), lit(r.getAs[String]("hi"))))
-      .select($"id", $"name").as[(Long, Option[String])].collect().toMap
-    assert(viaCase == viaWindow)
-    assert(viaCase.values.flatten.toSet.nonEmpty)
-  }
-
   test("PriorityDedup keeps exactly one max-priority row per key") {
     val df = Seq(
       ("A00", "DATASUS", 1), ("A00", "Estruturada", 2),

@@ -352,4 +352,33 @@ class PlansSpec extends SparkSpec {
     assert("partial_count".r.findAllIn(p).size >= 2,
       s"map-side partial aggregation missing:\n$p")
   }
+
+  test("RangeJoin.firstMatchDisjoint: no probe exchange, no CASE chain, " +
+       "generated methods stay JIT-sized over 300 ranges") {
+    import org.apache.spark.sql.catalyst.expressions.CaseWhen
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    val ranges = (0 until 300).map { i =>
+      val lo = rnd.nextInt(2000)
+      (f"K$lo%04d", f"K${lo + rnd.nextInt(200)}%04d", s"r$i", i.toLong)
+    }.toDF("lo", "hi", "name", "ord")
+    val probe = spark.range(0, 20000, 1, 4)
+      .select(format_string("K%04d", $"id" % 2300).as("code"))
+    val df = graft.operators.RangeJoin.firstMatchDisjoint(
+      probe, ranges, $"code", "lo", "hi", "ord")
+    assert(df.collect().length == 20000)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val plan = df.queryExecution.executedPlan
+    assert(helper.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty,
+      s"probe side shuffled:\n$plan")
+    assert(helper.find(plan)(_.expressions.exists(_.exists(_.isInstanceOf[CaseWhen]))).isEmpty,
+      s"CASE chain in the plan:\n$plan")
+    val methods = codegenStringSeq(plan).map(_._3.maxMethodCodeSize)
+    assert(methods.nonEmpty && methods.forall(_ < 8000),
+      s"generated method at or above the JIT's 8000-byte limit: $methods")
+  }
 }

@@ -99,6 +99,43 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("J3: firstMatchDisjoint equals window firstMatch row for row on " +
+       "random overlapping ranges") {
+    val key = Gen.choose(0, 30).map(i => f"K$i%02d")
+    // ordinary (nested or overlapping), point, inverted and null-bound
+    // ranges; an identical copy of the first range is appended below
+    val rangeGen: Gen[(String, String)] = Gen.frequency(
+      6 -> Gen.zip(key, key).map { case (a, b) => if (a <= b) (a, b) else (b, a) },
+      2 -> key.map(k => (k, k)),
+      1 -> Gen.zip(key, key).map { case (a, b) => if (a <= b) (b, a) else (a, b) },
+      1 -> key.map(k => (k, null)),
+      1 -> key.map(k => (null, k)))
+    // duplicates, values between bounds ("K07A"), values above every
+    // bound and nulls
+    val probeGen: Gen[String] = Gen.frequency(
+      9 -> Gen.zip(Gen.choose(0, 35), Gen.oneOf("", "A"))
+        .map { case (i, sfx) => f"K$i%02d$sfx" },
+      1 -> Gen.const(null))
+    val caseGen = Gen.zip(Gen.listOfN(12, rangeGen), Gen.listOfN(80, probeGen))
+    forAllSamples(caseGen, n = 10) { case (rs, probes) =>
+      val ranges = (rs :+ rs.head).zipWithIndex
+        .map { case ((lo, hi), i) => (lo, hi, s"r$i", i.toLong) }
+        .toDF("lo", "hi", "name", "ord")
+      val items = probes.zipWithIndex.map { case (c, i) => (i.toLong, c) }
+        .toDF("id", "code")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select($"id", $"code", $"name", $"ord")
+          .as[(Long, Option[String], Option[String], Option[Long])]
+          .collect().sortBy(_._1).toSeq
+      val viaWindow = rows(RangeJoin.firstMatch(items, ranges, $"code",
+        $"lo", $"hi", leftKey = Seq("id"), rangeOrder = $"ord"))
+      val viaPieces = rows(RangeJoin.firstMatchDisjoint(items, ranges,
+        $"code", "lo", "hi", "ord"))
+      assert(viaPieces == viaWindow)
+      assert(viaPieces.length == probes.length)
+    }
+  }
+
   private val eventLogGen: Gen[List[(Long, String, Long, Long)]] =
     Gen.listOfN(40, for {
       user <- Gen.choose(1L, 4L)
