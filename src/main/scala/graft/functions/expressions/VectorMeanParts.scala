@@ -39,11 +39,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, St
   *
   * Null handling mirrors the exploded form: a null array contributes to
   * no dimension; a null element contributes to neither sum nor count of
-  * its dimension; dimensions are per-row prefixes (posexplode emits
-  * 0..len-1), so a group's counts are non-increasing in dim and
-  * trailing all-null dims are truncated from the result — exactly the
-  * dims the old collect_list never saw. A group with no valid rows
-  * evaluates to an empty array.
+  * its dimension. The result has one entry per dimension up to the
+  * longest array seen (posexplode emits 0..len-1 for every row, null
+  * elements included). A dimension with no non-null value evaluates to
+  * `(null, 0)`, wherever it sits, so `s / c` is NULL there — the
+  * exploded form's `sum(NULL) / count = NULL` — rather than a
+  * division by zero. A group with no valid rows evaluates to an empty
+  * array.
   */
 case class VectorMeanParts(
     child: Expression,
@@ -57,7 +59,7 @@ case class VectorMeanParts(
 
   override def dataType: DataType = ArrayType(
     StructType(Seq(
-      StructField("s", DoubleType, nullable = false),
+      StructField("s", DoubleType, nullable = true),
       StructField("c", LongType, nullable = false))),
     containsNull = false)
 
@@ -108,15 +110,13 @@ case class VectorMeanParts(
   }
 
   override def eval(buf: VectorMeanParts.SumBuffer): Any = {
-    // truncate trailing never-seen dims (ragged-input parity with the
-    // exploded form, which only emitted dims that appeared)
-    var last = buf.dims
-    while (last > 0 && buf.counts(last - 1) == 0) last -= 1
-    val out = new Array[Any](last)
+    val out = new Array[Any](buf.dims)
     var i = 0
-    while (i < last) {
-      // Cast(decimal -> double) is BigDecimal.doubleValue
-      out(i) = InternalRow(buf.sums(i).doubleValue(), buf.counts(i))
+    while (i < buf.dims) {
+      // Cast(decimal -> double) is BigDecimal.doubleValue; a dim with
+      // no non-null value has a NULL sum, like sum() over all nulls
+      val s = if (buf.counts(i) == 0) null else buf.sums(i).doubleValue()
+      out(i) = InternalRow(s, buf.counts(i))
       i += 1
     }
     new GenericArrayData(out)

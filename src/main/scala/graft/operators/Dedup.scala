@@ -106,10 +106,10 @@ object Dedup {
     * Scale posture: the corpus side is index-shaped — its banded
     * bucket rows are map-only to compute, and in production are
     * materialized ONCE via `writeBucketIndex` and probed per batch via
-    * `incrementalDedupIndexed` (measured, graft.AbIncDedup at sf1:
-    * probe-only 2.1 s vs recompute-per-batch 10.4 s — the index scan
-    * is ~100× cheaper than signature recompute, break-even after two
-    * batches; PLANS.md "q109 index"). Recomputing here keeps the
+    * `incrementalDedupIndexed` (measured at sf1: probe-only 2.1 s vs
+    * recompute-per-batch 10.4 s — the index scan is ~100× cheaper
+    * than signature recompute, break-even after two batches; PLANS.md
+    * "Round-14: q109 index materialized"). Recomputing here keeps the
     * oracled query self-contained. The day's batch buckets BROADCAST
     * into the base probe, so the 100 TB side is a map-only scan with
     * zero shuffle; only the hit set (bounded by |delta| × bands) and
@@ -612,13 +612,13 @@ object Dedup {
     * `broadcastBatch` overrides the size estimate in either direction,
     * same accountability contract as [[incrementalDedupIndexed]].
     *
-    * Measured contract (AbIncContainment, PLANS.md r20): built for
-    * batches ≪ corpus — at a fixed 5 k-doc batch the probe is 2.4×
-    * faster than the all-pairs form at realdocs_sf3 and grows
-    * sublinearly with the corpus; at batch = 10% of the corpus the
-    * advantage is gone (the degrade path's replication costs what the
-    * avoided corpus×corpus enumeration saved). A corpus-sized replay
-    * belongs on [[containmentPairs]], per-cluster.
+    * Measured contract (PLANS.md "Round-20: incremental containment
+    * dedup"): built for batches ≪ corpus — at a fixed 5 k-doc batch
+    * the probe is 2.4× faster than the all-pairs form at realdocs_sf3
+    * and grows sublinearly with the corpus; at batch = 10% of the
+    * corpus the advantage is gone (the degrade path's replication
+    * costs what the avoided corpus×corpus enumeration saved). A
+    * corpus-sized replay belongs on [[containmentPairs]], per-cluster.
     */
   def containmentProbeIncremental(index: ContainmentIndex,
                                   batch: DataFrame, id: Column,

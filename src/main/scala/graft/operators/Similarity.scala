@@ -511,38 +511,14 @@ object Similarity {
         col("cos"), col("rank"))
   }
 
-  /** Threshold-qualifying pairs of an IVF-indexed corpus — the shared
-    * candidate stage of [[cosineTopKIndexed]] (top-k capped mining)
-    * and [[nearDupComponentsIndexed]] (the dedup decision path).
-    * Candidates are the symmetric closure of "the `nprobe` lists
-    * nearest each list" over a broadcast C×C centroid adjacency (self
-    * pair always included); each unordered candidate pair is scored
-    * exactly once (same-list pairs oriented aid < bid, cross-list
-    * pairs in adjacency orientation) and kept at `cos >= threshold`.
-    * Returns (aid, bid, cos).
-    */
   /** The probed-list adjacency of the indexed miners, as UNORDERED
-    * pairs (la <= lb, self pairs included) — shared by
-    * [[indexedQualifyingPairs]] and the A/B volume accounting
-    * ([[graft.AbTopKIndexed]]), so the measured candidate volume is
-    * the operator's by construction, not a reimplementation.
-    *
-    * `inDegreeCap` (0 = off, the production default) is the hub
-    * mitigation EXPERIMENT the r19 adjudication left open (PLANS.md
-    * r19 finding 2: nearest-partner selection concentrates on full
-    * hub lists, keeping the one-decade candidate exponent at 1.12
-    * after the occupancy cap). When > 0: each list ranks its
-    * `nprobe-1` nearest non-self partners plus ONE fallback
-    * alternate; a partner admits at most `inDegreeCap` probers (by
-    * descending centroid cosine, ties by prober id); probers rejected
-    * everywhere keep their nearest partner anyway (never fewer
-    * probes, so the recall floor of the uncapped form is preserved
-    * for starved lists). Deterministic, pure plan, same C×C
-    * broadcast economics.
+    * pairs (la <= lb, self pairs included): each list's `nprobe`
+    * nearest lists by rounded centroid cosine (ties by list id), plus
+    * the list itself, closed symmetrically. Deterministic, pure plan,
+    * one broadcastable C×C table.
     */
   private[graft] def probeAdjacency(centroids: DataFrame, nprobe: Int,
-                                    roundTo: Int = 9,
-                                    inDegreeCap: Int = 0): DataFrame = {
+                                    roundTo: Int = 9): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     require(nprobe >= 1, "nprobe must be >= 1")
     val cA = centroids.select(col("centroid_id").as("list_id"),
@@ -551,36 +527,11 @@ object Similarity {
       col("centroid").as("bv"))
     val wadj = Window.partitionBy(col("list_id"))
       .orderBy(col("d").desc, col("probe_list"))
-    val directed =
-      if (inDegreeCap <= 0)
-        cA.crossJoin(cB)
-          .withColumn("d", round(cosine(col("av"), col("bv")), roundTo))
-          .withColumn("rn", row_number().over(wadj))
-          .filter(col("rn") <= nprobe)
-          .select(col("list_id"), col("probe_list"))
-      else {
-        val ranked = cA.crossJoin(cB)
-          .filter(col("list_id") =!= col("probe_list"))
-          .withColumn("d", round(cosine(col("av"), col("bv")), roundTo))
-          .withColumn("rn", row_number().over(wadj))
-        val p = math.max(1, nprobe - 1) // non-self probes per list
-        val cand = ranked.filter(col("rn") <= p + 1)
-        val wIn = Window.partitionBy(col("probe_list"))
-          .orderBy(col("d").desc, col("list_id"))
-        val admitted = cand
-          .withColumn("dr", row_number().over(wIn))
-          .filter(col("dr") <= inDegreeCap)
-        val wOut = Window.partitionBy(col("list_id"))
-          .orderBy(col("rn").asc)
-        val kept = admitted.withColumn("kr", row_number().over(wOut))
-          .filter(col("kr") <= p)
-          .select(col("list_id"), col("probe_list"))
-        val starved = ranked.filter(col("rn") === 1)
-          .join(kept.select(col("list_id")).distinct(),
-            Seq("list_id"), "left_anti")
-          .select(col("list_id"), col("probe_list"))
-        kept.union(starved)
-      }
+    val directed = cA.crossJoin(cB)
+      .withColumn("d", round(cosine(col("av"), col("bv")), roundTo))
+      .withColumn("rn", row_number().over(wadj))
+      .filter(col("rn") <= nprobe)
+      .select(col("list_id"), col("probe_list"))
     // a list must ALWAYS probe itself: if training produced two
     // (rounded-)identical centroids, the d-then-id tiebreak can rank
     // the twin ABOVE the self pair and, at nprobe=1, drop it — the
@@ -601,10 +552,20 @@ object Similarity {
       .distinct()
   }
 
+  /** Threshold-qualifying pairs of an IVF-indexed corpus — the shared
+    * candidate stage of [[cosineTopKIndexed]] (top-k capped mining)
+    * and [[nearDupComponentsIndexed]] (the dedup decision path).
+    * Candidates are the symmetric closure of "the `nprobe` lists
+    * nearest each list" over a broadcast C×C centroid adjacency (self
+    * pair always included); each unordered candidate pair is scored
+    * exactly once (same-list pairs oriented aid < bid, cross-list
+    * pairs in adjacency orientation) and kept at `cos >= threshold`.
+    * Returns (aid, bid, cos).
+    */
   private[graft] def indexedQualifyingPairs(
       index: DataFrame, centroids: DataFrame, threshold: Double,
-      nprobe: Int, roundTo: Int = 9, inDegreeCap: Int = 0): DataFrame = {
-    val lp = probeAdjacency(centroids, nprobe, roundTo, inDegreeCap)
+      nprobe: Int, roundTo: Int = 9): DataFrame = {
+    val lp = probeAdjacency(centroids, nprobe, roundTo)
     val a = index.select(col("item_id").as("aid"), col("cv").as("av"),
       col("cn").as("an"), col("list_id").as("la"))
     val b = index.select(col("item_id").as("bid"), col("cv").as("bv"),
@@ -642,7 +603,8 @@ object Similarity {
     * With [[BlockDials.ivfLists]] scaling C ∝ n, listSize stays
     * ~constant and the mining pass is Θ(n). The recall trade: a true
     * neighbor outside the doc's `nprobe` adjacent lists is missed —
-    * measured against ground truth in AbTopKIndexed (PLANS.md).
+    * measured against exact ground truth in PLANS.md "Round-17:
+    * capped-mining recall on the realistic clustered corpus".
     *
     * Skew: list sizes are k-means-balanced, not guaranteed-bounded; a
     * genuinely hot list splits under AQE skew-join handling (the probe
@@ -656,10 +618,9 @@ object Similarity {
     */
   def cosineTopKIndexed(index: DataFrame, centroids: DataFrame,
                         k: Int, threshold: Double, nprobe: Int,
-                        roundTo: Int = 9, inDegreeCap: Int = 0): DataFrame = {
+                        roundTo: Int = 9): DataFrame = {
     val scored =
-      indexedQualifyingPairs(index, centroids, threshold, nprobe, roundTo,
-        inDegreeCap)
+      indexedQualifyingPairs(index, centroids, threshold, nprobe, roundTo)
     val directed = scored
       .select(explode(array(
         struct(col("aid").as("doc_id"), col("bid").as("neighbor_id"),
@@ -721,11 +682,9 @@ object Similarity {
     */
   def nearDupComponentsIndexed(index: DataFrame, centroids: DataFrame,
                                threshold: Double, nprobe: Int,
-                               roundTo: Int = 9,
-                               inDegreeCap: Int = 0): DataFrame = {
+                               roundTo: Int = 9): DataFrame = {
     val pairs =
-      indexedQualifyingPairs(index, centroids, threshold, nprobe, roundTo,
-        inDegreeCap)
+      indexedQualifyingPairs(index, centroids, threshold, nprobe, roundTo)
         .select(col("aid"), col("bid"))
     Dedup.connectedComponentsStar(index.select(col("item_id")),
       col("item_id"), pairs, col("aid"), col("bid"))

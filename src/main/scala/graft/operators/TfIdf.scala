@@ -36,9 +36,10 @@ import graft.functions.TextFunctions.tokens
   * that MEASUREMENT reversed: the carried form re-introduces a
   * second doc-keyed exchange (plus a per-partition top-k pre-sort of
   * the whole tf table) for the rank window, and was 1.3×/2.0× slower
-  * at sf0.1/sf1 with no sf10 win (AbQ69; PLANS.md round 17 — the r16
-  * sf10 "improvement" came from the ObjectHashAggregate threshold
-  * fix landed the same round, not from this rewrite).
+  * at sf0.1/sf1 with no sf10 win (PLANS.md "Round-17: q69
+  * adjudicated" — the r16 sf10 "improvement" came from the
+  * ObjectHashAggregate threshold fix landed the same round, not from
+  * this rewrite).
   */
 object TfIdf {
 

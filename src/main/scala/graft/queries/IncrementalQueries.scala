@@ -343,11 +343,11 @@ object IncrementalQueries extends Catalog {
     // Spark side resolves the same walk by POINTER DOUBLING
     // (operators/PointerDoubling.scala): ceil(log2 depth) self-join
     // rounds instead of one job per level. WITH RECURSIVE runs on
-    // Spark 4 too (identical results, verified every round by
-    // graft.AbQ96), but depth-many UnionLoop iterations inside one
-    // plan measured SLOWER than log2-many self-join rounds: sf0.1
-    // 1.91 s vs 0.72 s, sf1 3.35 s vs 1.75 s (PLANS.md "q96 floor",
-    // round-14 A/B) — the log-round rewrite stays.
+    // Spark 4 too (identical results), but depth-many UnionLoop
+    // iterations inside one plan measured SLOWER than log2-many
+    // self-join rounds: sf0.1 1.91 s vs 0.72 s, sf1 3.35 s vs 1.75 s
+    // (PLANS.md "q96 floor", round-14 A/B) — the log-round rewrite
+    // stays.
     Q("q96_recursive_cte",
       (s, dir) => {
         val part = Tables.load(s, dir, "part")

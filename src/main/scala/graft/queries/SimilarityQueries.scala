@@ -542,7 +542,8 @@ object SimilarityQueries extends Catalog {
     // oracle's lranked/af CTEs). Build (train + assign + write)
     // happens in-query here so the hash gate covers the whole
     // derivation; the build-vs-mine split and the recall-vs-q120
-    // trade are measured in AbTopKIndexed (PLANS.md).
+    // trade are measured in PLANS.md "Round-17: q124 indexed capped
+    // mining".
     Q("q124_cosine_topk_indexed",
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")

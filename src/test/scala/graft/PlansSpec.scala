@@ -270,8 +270,8 @@ class PlansSpec extends SparkSpec {
     // the rank window requires, so one doc-keyed shuffle serves both
     // (the r16 "carried-len" form that removed it re-introduced a
     // doc-keyed exchange + a WindowGroupLimit pre-sort over the whole
-    // tf table and measured slower at sf0.1/sf1/sf10 — AbQ69,
-    // PLANS.md round 17). The pin: both windows present, but NO
+    // tf table and measured slower at sf0.1/sf1/sf10 — PLANS.md
+    // "Round-17: q69 adjudicated"). The pin: both windows present, but NO
     // second doc_id hash exchange between them.
     val windows = countNodes(p, "Window")
     assert(windows == 2, s"expected len + rank windows, got $windows:\n$p")

@@ -59,8 +59,8 @@ class SimilaritySpec extends SparkSpec {
       .select($"g", transform($"mp",
         p => round(p.getField("s") / p.getField("c"), 9)).as("centroid"))
     def check(df: org.apache.spark.sql.DataFrame): Unit = {
-      val o = oldForm(df).as[(Long, Seq[Double])].collect().toMap
-      val n = newForm(df).as[(Long, Seq[Double])].collect().toMap
+      val o = oldForm(df).as[(Long, Seq[Option[Double]])].collect().toMap
+      val n = newForm(df).as[(Long, Seq[Option[Double]])].collect().toMap
       assert(o == n, s"means diverged:\nold=$o\nnew=$n")
     }
     val e = Tables.load(spark, dir, "embeddings")
@@ -85,6 +85,21 @@ class SimilaritySpec extends SparkSpec {
         |  (0L, array(cast(2.5 as double), cast(4.0 as double), 1.0))
         |AS t(g, v)""".stripMargin)
     check(withNull)
+    // a dim with no non-null value in its group: NULL mean, whether
+    // interior (not a divide-by-zero) or trailing (not dropped)
+    val interiorAllNull = spark.sql(
+      """SELECT * FROM VALUES
+        |  (0L, array(cast(1.5 as double), cast(null as double), 2.0)),
+        |  (0L, array(cast(2.5 as double), cast(null as double), 1.0))
+        |AS t(g, v)""".stripMargin)
+    check(interiorAllNull)
+    val trailingAllNull = spark.sql(
+      """SELECT * FROM VALUES
+        |  (0L, array(cast(1.5 as double), 2.0, cast(null as double))),
+        |  (0L, array(cast(2.5 as double), 4.0)),
+        |  (1L, array(cast(3.0 as double), cast(null as double)))
+        |AS t(g, v)""".stripMargin)
+    check(trailingAllNull)
   }
 
   test("multi-probe LSH recall dominates single-probe and clears 0.5") {
@@ -338,7 +353,7 @@ class SimilaritySpec extends SparkSpec {
       s"self-probe lost on identical centroids: $pairs")
   }
 
-  test("probeAdjacency in-degree cap: structural invariants hold") {
+  test("probeAdjacency on a hub topology: self probes plus the hub star") {
     // a deliberate hub topology: c0 is every other centroid's nearest
     // partner; c1..c5 are pairwise less similar than each is to c0
     val hub = Seq(1.0, 0.0, 0.0, 0.0)
@@ -349,27 +364,18 @@ class SimilaritySpec extends SparkSpec {
     val cents = ((0L, hub) +: dirs.zipWithIndex.map {
       case (v, i) => ((i + 1).toLong, v)
     }).toDF("centroid_id", "centroid")
-    def pairs(cap: Int): Set[(Long, Long)] =
-      Similarity.probeAdjacency(cents, nprobe = 2, inDegreeCap = cap)
+    def pairs(): Set[(Long, Long)] =
+      Similarity.probeAdjacency(cents, nprobe = 2)
         .as[(Long, Long)].collect().toSet
-    val uncapped = pairs(0)
-    val capped = pairs(1)
+    val got = pairs()
     val selfPairs = (0L to 5L).map(i => (i, i)).toSet
-    // every list always probes itself, capped or not
-    assert(selfPairs.subsetOf(uncapped) && selfPairs.subsetOf(capped))
-    // the starved-prober fallback: no list loses non-self probing
-    // entirely under the cap (the uncapped recall-floor guarantee)
-    val nonSelf = capped -- selfPairs
-    (0L to 5L).foreach { i =>
-      assert(nonSelf.exists(p => p._1 == i || p._2 == i),
-        s"list $i lost all non-self probing under the in-degree cap")
-    }
-    // deterministic: identical on re-invocation
-    assert(pairs(1) == capped)
-    // cap off reproduces the uncapped hub star exactly: 5 pairs, all
+    // every list always probes itself
+    assert(selfPairs.subsetOf(got))
+    // the non-self pairs are exactly the hub star: 5 pairs, all
     // touching the hub
-    assert(uncapped -- selfPairs ==
-      (1L to 5L).map(i => (0L, i)).toSet)
+    assert(got -- selfPairs == (1L to 5L).map(i => (0L, i)).toSet)
+    // deterministic: identical on re-invocation
+    assert(pairs() == got)
   }
 
   test("nearDupComponents == min-label CC over the blocked pair set") {

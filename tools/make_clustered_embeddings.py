@@ -18,7 +18,8 @@ boundaries. This tool generates that shape —
     shape whose recall the q57/q120/q121 gates care about,
   - same schema as the driver's embeddings table (vec_id BIGINT,
     embedding FLOAT[], label INT = cluster id; -1 for planted dups),
-    so Tables.load and AbTopKIndexed read it unchanged.
+    so Tables.load reads it unchanged (RecallSpec builds the same
+    shape in-process for its recall laws).
 
 Deterministic (PCG64 seeded like make_scale_data.py).
 Usage: python3 tools/make_clustered_embeddings.py <sf> [outdir]
@@ -85,8 +86,8 @@ def main():
     })
     pq.write_table(table, OUT / "embeddings.parquet")
     # ground-truth planted pairs, for recall checks that want the
-    # planted subset specifically (AbTopKIndexed computes full exact
-    # truth itself)
+    # planted subset specifically (RecallSpec gates the same (dup,
+    # orig) recall on its in-process mirror of this corpus)
     pq.write_table(pa.table({
         "dup_id": pa.array(dup_idx.astype(np.int64)),
         "orig_id": pa.array(src.astype(np.int64)),

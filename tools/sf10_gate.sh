@@ -61,7 +61,8 @@ FAMILY+="q125_near_dup_indexed,"
 # expansion completes at 100× on the capped layout). q126
 # (incremental containment) is EXCLUDED for q115's reason: the dense
 # synthetic vocab makes its batch×corpus result set itself ~quadratic;
-# its scale evidence is the realistic-vocab A/B (AbIncContainment).
+# its scale evidence is the realistic-vocab A/B (PLANS.md "Round-20:
+# incremental containment dedup").
 FAMILY+="q127_sql_near_dup_indexed,"
 # round 20 (second pass): the new curation operators — bloom
 # decontamination (bounded set-bit broadcast), span-level dup stats

@@ -23,8 +23,9 @@ OUT=/tmp/verify_sf1
 # complete. q126 (incremental containment) inherits the same vocab
 # pathology on its batch×corpus restriction (~18% of q115's pair set —
 # still ~10⁸ rows at sf1); its scale evidence is the realistic-vocab
-# A/B (graft.AbIncContainment, PLANS.md r20) where the result set is
-# sane and the probe arm is measured against the all-pairs arm.
+# A/B (PLANS.md "Round-20: incremental containment dedup") where the
+# result set is sane and the probe arm is measured against the
+# all-pairs arm.
 SKIP="${SPARK_GRAFT_VERIFY_SKIP:-q115_containment_dedup,q126_containment_probe_incremental}"
 SPARK_GRAFT_VERIFY_ONLY="$ONLY" SPARK_GRAFT_VERIFY_SKIP="$SKIP" \
   SPARK_GRAFT_CPUS=32 \
