@@ -51,11 +51,17 @@ object VectorFunctions {
 
   /** Sign-bit LSH bucket from the first `nbits` dimensions
     * (axis-aligned random-projection hashing): bucket =
-    * Σ (v[i] > 0) << i. Cheap, deterministic, and oracle-expressible;
-    * the operator accepts any bit count ≤ 16.
+    * Σ (v[i] > 0) << i. Cheap, deterministic, and oracle-expressible.
+    * `nbits` must be in [1, 16], the range of
+    * [[graft.operators.BlockDials.signBits]]: 0 bits has no bucket, and
+    * past 31 the Int shift wraps and merges opposite sign patterns into
+    * one bucket.
     */
-  def signBucket(a: Column, nbits: Int): Column =
+  def signBucket(a: Column, nbits: Int): Column = {
+    require(nbits >= 1 && nbits <= 16,
+      s"nbits must be in [1, 16], got $nbits")
     (0 until nbits).map { i =>
       when(element_at(a, i + 1) > 0, lit(1 << i)).otherwise(lit(0))
     }.reduce(_ + _)
+  }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFunctions._
@@ -8,14 +9,25 @@ import graft.functions.expressions.CustomExpressions.boundedTopK
 
 /** Similarity search over an embedding column (`array<float>`).
   *
-  * Baseline: brute-force cosine top-k (exact; the corpus side streams,
-  * queries broadcast — at 100 TB this is the "small query batch × huge
-  * corpus" shape, one pass, no shuffle of the corpus). Scale path:
-  * sign-bit LSH bucketing so each query only scores its bucket —
-  * trading recall for a corpus-partition-local join; an IVF variant
-  * would swap the bucket fn for learned centroids, same plan shape.
+  * Each operator is a candidate generator feeding one shared ranking
+  * step. Top-k search — brute force (exact: queries broadcast, the
+  * corpus streams once, unshuffled), sign-bit LSH at Hamming radius
+  * `maxHamming`, or IVF over learned centroid lists — ranks through
+  * [[rankTopK]]; the capped pair miners rank through [[topKPerDoc]].
   */
 object Similarity {
+
+  /** The shared top-k step: each `query_id`'s `k` best candidates by
+    * (cos DESC, `tie` ASC), numbered from 1 in `rank`. Cosines are
+    * rounded by the caller before they get here, so an ULP of
+    * cross-engine divergence cannot flip a rank.
+    */
+  private def rankTopK(scored: DataFrame, k: Int,
+                       tie: String = "neighbor_id"): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col(tie))
+    scored.withColumn("rank", row_number().over(w)).filter(col("rank") <= k)
+  }
 
   /** Exact top-k neighbors per query by cosine similarity.
     * `queries`/`corpus` need (`id`, `vec`) columns named by the params.
@@ -24,7 +36,6 @@ object Similarity {
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame,
                      id: String, vec: String, k: Int,
                      roundTo: Int = 9): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // norms are precomputed per side (not per pair) — same arithmetic,
     // O(n) instead of O(n*q) sqrt work
     val q = queries.select(col(id).as("query_id"), col(vec).as("qv"),
@@ -33,68 +44,39 @@ object Similarity {
       l2Norm(col(vec)).as("cn"))
     val scored = broadcast(q).crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
-      // round before ranking: an ULP of cross-engine divergence in the
-      // dot product must not flip a rank
       .withColumn("cos",
         round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankTopK(scored, k)
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
   }
 
-  /** Approximate top-k: both sides are hashed to a sign-bit bucket and
-    * only same-bucket pairs are scored. Recall is tunable via `nbits`
-    * (fewer bits → bigger buckets → higher recall & cost). Multi-probe
-    * (also scoring neighboring buckets) would be the next refinement.
+  /** Approximate top-k by sign-bit LSH: both sides hash to an
+    * `nbits`-bit sign bucket and each query scores only the corpus
+    * rows in the buckets within Hamming distance `maxHamming` of its
+    * own. At the default radius 0 that is the query's own bucket (the
+    * probe mask set is {0}); recall is then tuned by `nbits` alone
+    * (fewer bits → bigger buckets → higher recall and cost). A radius
+    * h > 0 probes Σ C(nbits, i), i <= h, buckets per query, recovering
+    * the neighbors a flipped sign bit hides without growing the
+    * buckets; measured on the fixture (nbits=4, k=5): recall@5 0.14
+    * at radius 0 -> 0.54 at 1 (5 probes) -> higher again at 2 (11
+    * probes).
+    *
+    * Scale: the query side expands ×probes BEFORE the join — cheap,
+    * queries are the broadcast-small side — while the corpus is
+    * hashed once and never shuffled beyond the bucket equi-join. A
+    * (query, neighbor) pair matches through at most one probe (a
+    * corpus row lives in exactly one bucket), so no dedup pass is
+    * needed. `bucket` in the output is the matched corpus bucket.
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame,
               id: String, vec: String, k: Int, nbits: Int,
-              roundTo: Int = 9): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val q = queries.select(col(id).as("query_id"), col(vec).as("qv"),
-      signBucket(col(vec), nbits).as("bucket"), l2Norm(col(vec)).as("qn"))
-    val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("cv"),
-      signBucket(col(vec), nbits).as("bucket"), l2Norm(col(vec)).as("cn"))
-    val scored = broadcast(q).join(c, Seq("bucket"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("bucket"),
-              col("cos"), col("rank"))
-  }
-
-  /** Multi-probe LSH top-k: like [[lshTopK]], but each query also
-    * probes every bucket within Hamming distance `maxHamming` of its
-    * own (default 1 = one sign-bit flip), recovering most neighbors
-    * that a flipped bit would otherwise hide — the standard recall
-    * repair for sign-bit LSH without growing the buckets themselves.
-    * Probe count is sum of C(nbits, i) for i <= maxHamming; measured
-    * on the fixture (nbits=4, k=5): recall@5 0.14 single-probe ->
-    * 0.54 at H1 (5 probes) -> higher again at H2 (11 probes) — the
-    * recall/cost knob per query, chosen per workload.
-    *
-    * Scale: the query side expands ×probes BEFORE the join — cheap,
-    * queries are the broadcast-small side — while the corpus is still
-    * hashed once and never shuffled beyond the bucket equi-join. A
-    * (query, neighbor) pair can match through at most one probe
-    * (corpus rows live in exactly one bucket), so no dedup pass is
-    * needed.
-    */
-  def lshTopKMultiProbe(queries: DataFrame, corpus: DataFrame,
-                        id: String, vec: String, k: Int, nbits: Int,
-                        roundTo: Int = 9, maxHamming: Int = 1): DataFrame = {
+              roundTo: Int = 9, maxHamming: Int = 0): DataFrame = {
     // masks() terminates its popcount bound only at h == 0, so a
     // negative radius would silently enumerate ALL 2^nbits masks
     // (full cross-bucket probe) instead of failing
     require(maxHamming >= 0 && maxHamming <= nbits,
       s"maxHamming must be in [0, $nbits], got $maxHamming")
-    import org.apache.spark.sql.expressions.Window
     // all XOR masks with popcount <= maxHamming, built combinatorially
     // (never enumerates 2^nbits)
     def masks(bits: List[Int], h: Int): Seq[Int] =
@@ -118,10 +100,7 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos",
         round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankTopK(scored, k)
       .select(col("query_id"), col("neighbor_id"), col("bucket"),
               col("cos"), col("rank"))
   }
@@ -208,7 +187,22 @@ object Similarity {
     * across this plan change (pinned in SimilaritySpec).
     */
   private def assignToCentroid(rows: DataFrame, centroids: DataFrame,
-                               vecCol: String, roundTo: Int = 9): DataFrame = {
+                               vecCol: String, roundTo: Int = 9): DataFrame =
+    centroidCosines(rows, centroids, vecCol, roundTo)
+      .withColumn("centroid_id",
+        element_at(col("cs"),
+          array_position(col("ds"), array_max(col("ds"))).cast("int"))
+          .getField("centroid_id"))
+      .drop("cs", "nv", "ds")
+
+  /** The scoring prefix of [[assignToCentroid]] and
+    * [[assignToCentroid2]]: `rows` plus `cs`, the centroids as ONE
+    * id-sorted broadcast array of (centroid_id, centroid, cnrm), `nv`,
+    * the row's norm, and `ds`, the row's rounded cosine to each `cs`
+    * entry, in the same order. The callers argmax over `ds`.
+    */
+  private def centroidCosines(rows: DataFrame, centroids: DataFrame,
+                              vecCol: String, roundTo: Int): DataFrame = {
     val cArr = centroids.agg(
       array_sort(collect_list(struct(col("centroid_id"), col("centroid"),
         l2Norm(col("centroid")).as("cnrm")))).as("cs"))
@@ -217,18 +211,33 @@ object Similarity {
       // a zero-norm row (or a degenerate all-zero centroid) makes the
       // divisor 0: under ANSI (Spark 4 default) a plain Divide KILLS
       // the whole assignment job, and under legacy mode it yields NULL,
-      // poisoning array_max/array_position below so the row SILENTLY
-      // DROPS from the index (null centroid_id). try_divide + coalesce
-      // to -1.0 — below any real cosine — lands such rows
+      // poisoning the callers' array_max/array_position so the row
+      // SILENTLY DROPS from the index (null centroid_id). try_divide +
+      // coalesce to -1.0 — below any real cosine — lands such rows
       // deterministically on the lowest-id centroid instead.
       .withColumn("ds", transform(col("cs"), c =>
         coalesce(round(try_divide(dot(col(vecCol), c.getField("centroid")),
           col("nv") * c.getField("cnrm")), roundTo), lit(-1.0))))
-      .withColumn("centroid_id",
-        element_at(col("cs"),
-          array_position(col("ds"), array_max(col("ds"))).cast("int"))
-          .getField("centroid_id"))
-      .drop("cs", "nv", "ds")
+  }
+
+  /** Each row's `nprobe` nearest centroids by rounded cosine, ties to
+    * the lower centroid_id: one output row per (row, probed centroid),
+    * carrying `rows`' columns plus `centroid_id`. `key` must identify
+    * a row of `rows`. The probe side of [[ivfTopK]] and
+    * [[ivfProbeIndexed]] (rows = queries) and of [[probeAdjacency]]
+    * (rows = the centroids themselves).
+    */
+  private def nearestCentroids(rows: DataFrame, key: String, vec: String,
+                               centroids: DataFrame, nprobe: Int,
+                               roundTo: Int): DataFrame = {
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    val w = Window.partitionBy(col(key))
+      .orderBy(col("d").desc, col("centroid_id"))
+    rows.crossJoin(broadcast(centroids))
+      .withColumn("d", round(cosine(col(vec), col("centroid")), roundTo))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= nprobe)
+      .drop("centroid", "d", "rn")
   }
 
   /** IVF (inverted-file) approximate top-k: the corpus is partitioned
@@ -240,29 +249,19 @@ object Similarity {
   def ivfTopK(queries: DataFrame, corpus: DataFrame, id: String,
               vec: String, k: Int, centroids: DataFrame, nprobe: Int,
               roundTo: Int = 9): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val c = assignToCentroid(
       corpus.select(col(id).as("cid"), toDoubles(col(vec)).as("v")),
       centroids, "v", roundTo)
       .select(col("cid").as("neighbor_id"), col("v").as("cv"),
               col("centroid_id"))
-    // each query picks its nprobe closest centroids
-    val qAssign = queries.select(col(id).as("qid"), toDoubles(col(vec)).as("qv"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("d", round(cosine(col("qv"), col("centroid")), roundTo))
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("d").desc, col("centroid_id"))
-    val q = qAssign.withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nprobe)
-      .select(col("qid").as("query_id"), col("qv"), col("centroid_id"))
+    val q = nearestCentroids(
+      queries.select(col(id).as("query_id"), toDoubles(col(vec)).as("qv")),
+      "query_id", "qv", centroids, nprobe, roundTo)
     val scored = broadcast(q).join(c, Seq("centroid_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", round(dot(col("qv"), col("cv")) /
         (l2Norm(col("qv")) * l2Norm(col("cv"))), roundTo))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankTopK(scored, k)
       .select(col("query_id"), col("neighbor_id"), col("centroid_id"),
               col("cos"), col("rank"))
   }
@@ -348,36 +347,34 @@ object Similarity {
     */
   def cosineTopKBlocked(df: DataFrame, id: String, vec: String,
                         k: Int, threshold: Double, nbits: Int,
-                        roundTo: Int = 9, chunks: Int = 16): DataFrame = {
-    val rows = df.select(col(id).as("vid"), col(vec).as("v"),
-      signBucket(col(vec), nbits).as("bucket"), l2Norm(col(vec)).as("nrm"))
-    val (a, b, keyCond) =
-      TrianglePairs.salted(rows, "vid", Seq("bucket"), chunks)
-    val scored = a.join(b, keyCond &&
-        TrianglePairs.orderedOnce(col("a.vid"), col("b.vid")))
-      .withColumn("cos",
-        round(dot(col("a.v"), col("b.v")) /
-          (col("a.nrm") * col("b.nrm")), roundTo))
-      .filter(col("cos") >= threshold)
-      .select(col("a.vid").as("xa"), col("b.vid").as("xb"), col("cos"))
-    // both directions in ONE pass: a union of two selects over `scored`
+                        roundTo: Int = 9, chunks: Int = 16): DataFrame =
+    topKPerDoc(cosinePairsBlocked(df, id, vec, threshold, nbits, roundTo,
+      chunks), "id_a", "id_b", k)
+
+  /** The shared tail of the capped pair miners: each unordered scored
+    * pair (`a`, `b`, cos) enters the ranking in both directions, and
+    * each doc keeps its top-`k` neighbors by (cos DESC, neighbor id)
+    * through the [[graft.functions.expressions.BoundedTopK]] partial
+    * heap. Returns (doc_id, neighbor_id, cos, rank).
+    */
+  private def topKPerDoc(pairs: DataFrame, a: String, b: String,
+                         k: Int): DataFrame =
+    // both directions in ONE pass: a union of two selects over `pairs`
     // would re-run the whole pair join per branch (two scans, two
     // joins — verified in the physical plan); a 2-element explode emits
     // (a→b, b→a) from the single scored row inside the same stage
-    val directed = scored
+    pairs
       .select(explode(array(
-        struct(col("xa").as("doc_id"), col("xb").as("neighbor_id"),
-          col("cos")),
-        struct(col("xb").as("doc_id"), col("xa").as("neighbor_id"),
-          col("cos")))).as("d"))
+        struct(col(a).as("doc_id"), col(b).as("neighbor_id"), col("cos")),
+        struct(col(b).as("doc_id"), col(a).as("neighbor_id"), col("cos"))))
+        .as("d"))
       .select(col("d.doc_id").as("doc_id"),
         col("d.neighbor_id").as("neighbor_id"), col("d.cos").as("cos"))
-    directed.groupBy(col("doc_id"))
+      .groupBy(col("doc_id"))
       .agg(boundedTopK(col("cos"), col("neighbor_id"), k).as("tk"))
       .select(col("doc_id"), posexplode(col("tk")).as(Seq("p", "e")))
       .select(col("doc_id"), col("e.id").as("neighbor_id"),
         col("e.score").as("cos"), (col("p") + 1).cast("int").as("rank"))
-  }
 
   /** Like [[assignToCentroid]], but emits the runner-up too — and the
     * winning (rounded) cosine, so a capacity rebalance can rank a
@@ -389,15 +386,8 @@ object Similarity {
     */
   private def assignToCentroid2(rows: DataFrame, centroids: DataFrame,
                                 vecCol: String, roundTo: Int = 9)
-      : DataFrame = {
-    val cArr = centroids.agg(
-      array_sort(collect_list(struct(col("centroid_id"), col("centroid"),
-        l2Norm(col("centroid")).as("cnrm")))).as("cs"))
-    rows.crossJoin(broadcast(cArr))
-      .withColumn("nv", l2Norm(col(vecCol)))
-      .withColumn("ds", transform(col("cs"), c =>
-        coalesce(round(try_divide(dot(col(vecCol), c.getField("centroid")),
-          col("nv") * c.getField("cnrm")), roundTo), lit(-1.0))))
+      : DataFrame =
+    centroidCosines(rows, centroids, vecCol, roundTo)
       .withColumn("bd", array_max(col("ds")))
       .withColumn("bp", array_position(col("ds"), col("bd")))
       .withColumn("centroid_id",
@@ -411,7 +401,6 @@ object Similarity {
           array_position(col("ds2"), array_max(col("ds2"))).cast("int"))
           .getField("centroid_id"))
       .drop("cs", "nv", "ds", "bp", "ds2")
-  }
 
   /** Materialized IVF index: the corpus assigned to its nearest
     * centroid and written partitioned by `list_id` — the embedding
@@ -450,7 +439,6 @@ object Similarity {
   def writeIvfIndex(corpus: DataFrame, id: String, vec: String,
                     centroids: DataFrame, path: String,
                     roundTo: Int = 9, listCap: Int = 0): Unit = {
-    import org.apache.spark.sql.expressions.Window
     val v = corpus.select(col(id).as("cid"), toDoubles(col(vec)).as("v"))
     val assigned =
       if (listCap <= 0) assignToCentroid(v, centroids, "v", roundTo)
@@ -487,25 +475,16 @@ object Similarity {
   def ivfProbeIndexed(index: DataFrame, queries: DataFrame, id: String,
                       vec: String, k: Int, centroids: DataFrame,
                       nprobe: Int, roundTo: Int = 9): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qAssign = queries
-      .select(col(id).as("qid"), toDoubles(col(vec)).as("qv"))
-      .crossJoin(broadcast(centroids))
-      .withColumn("d", round(cosine(col("qv"), col("centroid")), roundTo))
-    val wq = Window.partitionBy(col("qid"))
-      .orderBy(col("d").desc, col("centroid_id"))
-    val q = qAssign.withColumn("rn", row_number().over(wq))
-      .filter(col("rn") <= nprobe)
-      .select(col("qid").as("query_id"), col("qv"),
+    val q = nearestCentroids(
+        queries.select(col(id).as("query_id"), toDoubles(col(vec)).as("qv")),
+        "query_id", "qv", centroids, nprobe, roundTo)
+      .select(col("query_id"), col("qv"),
         l2Norm(col("qv")).as("qn"), col("centroid_id").as("list_id"))
     val scored = index.join(broadcast(q), Seq("list_id"))
       .filter(col("query_id") =!= col("item_id"))
       .withColumn("cos", round(dot(col("qv"), col("cv")) /
         (col("qn") * col("cn")), roundTo))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("item_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
+    rankTopK(scored, k, tie = "item_id")
       .select(col("query_id"), col("item_id").as("neighbor_id"),
         col("list_id").cast("long").as("centroid_id"),
         col("cos"), col("rank"))
@@ -519,19 +498,11 @@ object Similarity {
     */
   private[graft] def probeAdjacency(centroids: DataFrame, nprobe: Int,
                                     roundTo: Int = 9): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(nprobe >= 1, "nprobe must be >= 1")
-    val cA = centroids.select(col("centroid_id").as("list_id"),
-      col("centroid").as("av"))
-    val cB = centroids.select(col("centroid_id").as("probe_list"),
-      col("centroid").as("bv"))
-    val wadj = Window.partitionBy(col("list_id"))
-      .orderBy(col("d").desc, col("probe_list"))
-    val directed = cA.crossJoin(cB)
-      .withColumn("d", round(cosine(col("av"), col("bv")), roundTo))
-      .withColumn("rn", row_number().over(wadj))
-      .filter(col("rn") <= nprobe)
-      .select(col("list_id"), col("probe_list"))
+    val directed = nearestCentroids(
+        centroids.select(col("centroid_id").as("list_id"),
+          col("centroid").as("av")),
+        "list_id", "av", centroids, nprobe, roundTo)
+      .select(col("list_id"), col("centroid_id").as("probe_list"))
     // a list must ALWAYS probe itself: if training produced two
     // (rounded-)identical centroids, the d-then-id tiebreak can rank
     // the twin ABOVE the self pair and, at nprobe=1, drop it — the
@@ -589,8 +560,8 @@ object Similarity {
     * blocking on a materialized IVF layout ([[writeIvfIndex]]) instead
     * of sign buckets. Candidates come from [[indexedQualifyingPairs]]
     * (symmetric-closure probed-list pairs, each scored once), then
-    * both directions rank through the same BoundedTopK partial-heap
-    * as the blocked variant (top-`k` per doc, floor `threshold`).
+    * [[topKPerDoc]] ranks both directions, as in the blocked variant
+    * (top-`k` per doc, floor `threshold`).
     *
     * Why this beats sign buckets at scale: candidate volume here is
     * n × nprobe × listSize BY CONSTRUCTION — density-independent —
@@ -618,23 +589,10 @@ object Similarity {
     */
   def cosineTopKIndexed(index: DataFrame, centroids: DataFrame,
                         k: Int, threshold: Double, nprobe: Int,
-                        roundTo: Int = 9): DataFrame = {
-    val scored =
-      indexedQualifyingPairs(index, centroids, threshold, nprobe, roundTo)
-    val directed = scored
-      .select(explode(array(
-        struct(col("aid").as("doc_id"), col("bid").as("neighbor_id"),
-          col("cos")),
-        struct(col("bid").as("doc_id"), col("aid").as("neighbor_id"),
-          col("cos")))).as("d"))
-      .select(col("d.doc_id").as("doc_id"),
-        col("d.neighbor_id").as("neighbor_id"), col("d.cos").as("cos"))
-    directed.groupBy(col("doc_id"))
-      .agg(boundedTopK(col("cos"), col("neighbor_id"), k).as("tk"))
-      .select(col("doc_id"), posexplode(col("tk")).as(Seq("p", "e")))
-      .select(col("doc_id"), col("e.id").as("neighbor_id"),
-        col("e.score").as("cos"), (col("p") + 1).cast("int").as("rank"))
-  }
+                        roundTo: Int = 9): DataFrame =
+    topKPerDoc(
+      indexedQualifyingPairs(index, centroids, threshold, nprobe, roundTo),
+      "aid", "bid", k)
 
   /** Blocked near-dup pairs fed STRAIGHT into connected components:
     * the dedup-decision composition whose output is Θ(n) labels — the

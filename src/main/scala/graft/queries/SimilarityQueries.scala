@@ -376,13 +376,15 @@ object SimilarityQueries extends Catalog {
               |SELECT id_a, id_b, cos FROM pairs WHERE cos >= 0.45
               |ORDER BY id_a, id_b""".stripMargin)),
 
-    // Multi-probe LSH: each query also probes every bucket one sign
-    // flip away (Hamming-1) — the recall repair for q51's single probe
+    // Multi-probe LSH: q51's operator at Hamming radius 1 — each query
+    // also probes every bucket one sign flip away, the recall repair
+    // for the radius-0 single probe
     Q("q68_ann_lsh_multiprobe",
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")
-        Similarity.lshTopKMultiProbe(
-            e.filter(col("vec_id") < 10), e, "vec_id", "embedding", K, NBits)
+        Similarity.lshTopK(
+            e.filter(col("vec_id") < 10), e, "vec_id", "embedding", K, NBits,
+            maxHamming = 1)
           .orderBy(col("query_id"), col("rank"))
       },
       Some(s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v,

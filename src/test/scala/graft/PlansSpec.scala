@@ -263,6 +263,27 @@ class PlansSpec extends SparkSpec {
       s"salted pair-scan repartition no longer user-pinned:\n$p")
   }
 
+  test("q124: indexed miner ranks through the partial top-k heap, no " +
+      "doc-keyed window, no sort-merge or cartesian join") {
+    val p = plan("q124_cosine_topk_indexed")
+    val executed = p.split("== Initial Plan ==")(0)
+    // the per-doc ranking is BoundedTopK's map-side partial: the
+    // doc_id exchange carries at most k entries per doc per partition
+    assert(p.contains("partial_bounded_top_k"),
+      s"map-side partial top-k phase gone:\n$p")
+    // the only window allowed is the C×C centroid adjacency's; a
+    // row_number over the directed pair set would shuffle every pair
+    val docWindows = executed.linesIterator.filter(l =>
+      l.contains("Window [") && l.contains("windowspecdefinition(doc_id")).toSeq
+    assert(docWindows.isEmpty, s"row_number window over the pairs:\n$p")
+    // candidates are equi-joins on the probed-list key, which AQE
+    // broadcasts at this size; a cartesian product means the list
+    // blocking was lost, a sort-merge join that the plan shape moved
+    assert(!executed.contains("SortMergeJoin") &&
+      !executed.contains("CartesianProduct"),
+      s"pair join degraded to a sort-merge or cartesian product:\n$p")
+  }
+
   test("q69: two windows share ONE doc-keyed exchange") {
     val p = plan("q69_tfidf_topterms")
     // Round 17 (reverting round 16): the len window is BACK, by

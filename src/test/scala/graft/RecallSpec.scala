@@ -155,7 +155,7 @@ class RecallSpec extends SparkSpec {
     val dupIds = planted.map(_._1).toSet
     val queries = e.filter($"vec_id".isInCollection(dupIds))
     val nb = BlockDials.signBits(n)
-    val got = Similarity.lshTopKMultiProbe(
+    val got = Similarity.lshTopK(
         queries, e, "vec_id", "embedding", k = 5, nbits = nb,
         maxHamming = 1)
       .select($"query_id", $"neighbor_id")

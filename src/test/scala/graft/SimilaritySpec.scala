@@ -112,7 +112,8 @@ class SimilaritySpec extends SparkSpec {
     val single = pairs(
       Similarity.lshTopK(queries, e, "vec_id", "embedding", 5, 4))
     val multi = pairs(
-      Similarity.lshTopKMultiProbe(queries, e, "vec_id", "embedding", 5, 4))
+      Similarity.lshTopK(queries, e, "vec_id", "embedding", 5, 4,
+        maxHamming = 1))
     val rs = single.intersect(brute).size.toDouble / brute.size
     val rm = multi.intersect(brute).size.toDouble / brute.size
     info(s"recall@5 single-probe=$rs multi-probe=$rm")
@@ -122,7 +123,7 @@ class SimilaritySpec extends SparkSpec {
     assert(rm >= 0.5, s"multi-probe recall=$rm")
     // widening the probe radius is monotone in recall: H2 probes a
     // strict superset of H1's buckets
-    val multi2 = pairs(Similarity.lshTopKMultiProbe(
+    val multi2 = pairs(Similarity.lshTopK(
       e.filter($"vec_id" < 10), e, "vec_id", "embedding", 5, 4,
       maxHamming = 2))
     val rm2 = multi2.intersect(brute).size.toDouble / brute.size
@@ -204,6 +205,18 @@ class SimilaritySpec extends SparkSpec {
         $"centroid_id".cast("long").as("centroid_id"), $"cos", $"rank")
     assert(probed.collect().toSet == inline.collect().toSet)
     assert(probed.count() > 0)
+    // every centroid-probing entry point rejects an empty probe set
+    // instead of silently returning no rows
+    for (run <- Seq(
+        () => Similarity.ivfTopK(queries, e, "vec_id", "embedding", 3,
+          centroids, nprobe = 0),
+        () => Similarity.ivfProbeIndexed(Similarity.readIvfIndex(spark, path),
+          queries, "vec_id", "embedding", 3, centroids, nprobe = 0),
+        () => Similarity.cosineTopKIndexed(
+          Similarity.readIvfIndex(spark, path), centroids, 3, 0.5, 0))) {
+      val bad = intercept[IllegalArgumentException](run())
+      assert(bad.getMessage.contains("nprobe"), bad.getMessage)
+    }
   }
 
   test("map-only centroid assignment == row_number window argmax") {

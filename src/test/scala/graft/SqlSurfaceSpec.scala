@@ -301,5 +301,17 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(msg.contains("graft_exact_dedup"))
     assert(msg.toUpperCase.contains("STRING") &&
       !msg.toLowerCase.contains("foldable"), msg)
+    // a sign-bit count outside [1, 16] fails naming the parameter: 0
+    // bits has no bucket, and past 31 bits the Int shift wraps into a
+    // silently wrong candidate set
+    Seq((1L, Array(0.5f, 0.1f)), (2L, Array(-0.5f, -0.1f)))
+      .toDF("vec_id", "vec").createOrReplaceTempView("sql_bad_vecs")
+    for (nb <- Seq(0, 17)) {
+      val badBits = intercept[IllegalArgumentException] {
+        spark.sql("SELECT * FROM graft_cosine_pairs(" +
+          s"'sql_bad_vecs', 'vec_id', 'vec', 0.9D, $nb)").collect()
+      }
+      assert(badBits.getMessage.contains("nbits"), badBits.getMessage)
+    }
   }
 }
