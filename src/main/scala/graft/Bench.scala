@@ -27,9 +27,9 @@ object Bench {
     // Dev-only subset filter (comma-separated names), mirroring
     // Verify's SPARK_GRAFT_VERIFY_ONLY; the driver never sets it.
     // When set it selects from the FULL catalog, not just the
-    // headline bench set, so non-headline operators (e.g. the q47
-    // vs q103 connected-components A/B) can be timed with the same
-    // warm+median methodology.
+    // headline bench set, so non-headline operators (e.g. q47's
+    // connected components) can be timed with the same warm+median
+    // methodology.
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet)
     // Skip list for scale-point re-benches (mirrors Verify's SKIP): a

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.{BlockDials, Dedup, Similarity}
+import graft.operators.{BlockDials, Dedup, LongUnionFind, Similarity}
 import graft.functions.TextFunctions.tokens
 import graft.functions.VectorFunctions.{dot, l2Norm, signBucket}
 import graft.functions.expressions.CustomExpressions.sortedIntersectCountLong
@@ -25,6 +25,10 @@ import graft.functions.expressions.CustomExpressions.sortedIntersectCountLong
   *    could legally be compared);
   *  - sampled exactness: a seeded ~2k-pair sample re-scored from raw
   *    text/embeddings matches the reported score.
+  *
+  * The connected-components decisions (q47, q121, q123, q125) are
+  * checked against a driver-side union-find (`checkComponents`), and
+  * q123/q124 against their budget and per-doc cap laws.
   *
   * Writes a driver-shaped JSON artifact and exits non-zero on any
   * failed law.
@@ -125,53 +129,53 @@ object ScaleProps {
     val r57 = checkBlock("q57_near_dup_blocked", q57Pairs, "cos",
       "id_a", "id_b", 0.45, q57Meta, q57Exact)
 
-    // ---- connected-components invariants (q47/q103/q121) ----
+    // ---- connected-components invariants (q47/q121/q123) ----
     // The recursive-CTE oracle can't finish at sf10, so these queries
     // were bare "spark_only" completion anchors; the laws below are
     // the real gate a correct min-reachable-id labeling must satisfy,
-    // all checked distributed:
-    //  - cross_impl_equal: min-label propagation and star contraction
-    //    (two independent algorithms) produce the IDENTICAL labeling;
+    // checked on the star-contraction labels:
+    //  - cross_impl_equal: every label equals the driver-side
+    //    LongUnionFind reference over the same edges. The edges reach
+    //    the driver through the per-partition spanning forest (at most
+    //    one edge per vertex per partition), so driver memory is O(|V|);
     //  - edge_consistent: every candidate edge's endpoints share a
     //    component (one more propagation round is a fixpoint);
     //  - anchored: component(v) <= v, and every label maps to itself
     //    (the representative is a real vertex labeling itself — which
     //    also proves label ⊆ id);
-    //  - n_components matches between the implementations.
-    // `contract` opts the min-label side into spanning-forest edge
-    // contraction: q121's miner emits ~5*10^8 pairs at sf10, and
-    // symmetrizing them raw OOMs a 24g local driver — the contracted
-    // forest has <= |V| edges at the cost of a deeper tree, so the
-    // round budget rises with it (checkpoints truncate stats, so long
-    // loops are safe).
+    //  - n_components: the number of distinct labels.
     def checkComponents(name: String, vertices: DataFrame, id: String,
-                        pairs: DataFrame, a: String, b: String,
-                        contract: Boolean = false)
+                        pairs: DataFrame, a: String, b: String)
         : (String, Seq[(String, Any)]) = {
+      import scala.jdk.CollectionConverters._
       val edges = pairs.select(col(a), col(b))
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val l1 = Dedup.connectedComponents(
-        vertices.select(col(id)), col(id), edges, col(a), col(b),
-        maxIters = if (contract) 100 else 25, contractEdges = contract)
-        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val l2 = Dedup.connectedComponentsStar(
+      val labels = Dedup.connectedComponentsStar(
         vertices.select(col(id)), col(id), edges, col(a), col(b))
-      val nV = l1.count()
-      val crossEqual = l1.except(l2).isEmpty && l2.count() == nV
-      val lbl = (side: String) => l1
+        .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      val uf = new LongUnionFind
+      Dedup.localSpanningForest(edges).toLocalIterator.asScala
+        .foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+      var nV = 0L
+      var crossEqual = true
+      labels.toLocalIterator.asScala.foreach { r =>
+        nV += 1
+        crossEqual &&= uf.find(r.getLong(0)) == r.getLong(1)
+      }
+      val lbl = (side: String) => labels
         .select(col("v").as(side), col("component").as(s"__c$side"))
       val edgeConsistent = edges
         .join(lbl(a), a).join(lbl(b), b)
         .filter(col(s"__c$a") =!= col(s"__c$b"))
         .limit(1).count() == 0L
       val anchored =
-        l1.filter(col("component") > col("v")).limit(1).count() == 0L &&
-        l1.select(col("component").as("m")).distinct()
-          .join(l1, col("m") === col("v"), "left")
+        labels.filter(col("component") > col("v")).limit(1).count() == 0L &&
+        labels.select(col("component").as("m")).distinct()
+          .join(labels, col("m") === col("v"), "left")
           .filter(col("component").isNull || col("component") =!= col("m"))
           .limit(1).count() == 0L
-      val nComp = l1.select(col("component")).distinct().count()
-      l1.unpersist(); edges.unpersist()
+      val nComp = labels.select(col("component")).distinct().count()
+      labels.unpersist(); edges.unpersist()
       val all = Seq[(String, Any)](
         "vertices" -> nV, "n_components" -> nComp,
         "cross_impl_equal" -> crossEqual,
@@ -182,11 +186,13 @@ object ScaleProps {
 
     val lshPairs = Dedup.minhashCandidates(
       docs, col("doc_id"), col("text"), numHashes = 8, bands = 4)
+    // key kept from when a second catalog query shared q47's oracle,
+    // so earlier PROPS_sf10_r* artifacts stay comparable
     val rCc = checkComponents("q47_q103_components",
       docs, "doc_id", lshPairs, "doc_a", "doc_b")
     val rNd = checkComponents("q121_near_dup_components",
       emb, "vec_id", q57Pairs.select(col("id_a"), col("id_b")),
-      "id_a", "id_b", contract = true)
+      "id_a", "id_b")
 
     // ---- q123: the COMPOSED pipeline at scale ----
     // Stages are individually gated above/elsewhere; these laws gate
@@ -280,8 +286,7 @@ object ScaleProps {
       val pairs = Similarity.indexedQualifyingPairs(
         index, centroids, threshold = 0.45, nprobe = 2)
       checkComponents("q125_near_dup_indexed", emb, "vec_id",
-        pairs.select(col("aid"), col("bid")), "aid", "bid",
-        contract = true)
+        pairs.select(col("aid"), col("bid")), "aid", "bid")
     }
 
     val results = Seq(r45, r57, rCc, rNd, rPipeCc, rPipe, r124, rNdIdx)

@@ -41,7 +41,7 @@ object SparkEntry {
     * CORRECTNESS_sf1_r{N}.json): every scale-sensitive operator whose
     * DuckDB oracle COMPLETES at sf1 in bounded time — dedup,
     * similarity/ANN, text-pipeline, sketch, and iterative families.
-    * q45/q94 (DuckDB >620 s, killed), q47/q103 (recursive-CTE
+    * q45/q94 (DuckDB >620 s, killed), q47 (recursive-CTE
     * oracle, 365 s) and q115 (all-pairs containment: output itself is
     * ~quadratic on the 31-word synthetic vocab, like q45) are excluded
     * here and covered by the sf0.01 gate plus their PLANS.md plan

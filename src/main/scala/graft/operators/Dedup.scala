@@ -741,8 +741,19 @@ object Dedup {
         col("containment"))
   }
 
+  /** Stats-truncating eager local checkpoint, used once per round by
+    * [[connectedComponentsStar]]. Spark's own `localCheckpoint` copies
+    * the checkpointed plan's estimated Statistics onto the LogicalRDD,
+    * so a loop whose next round joins plans derived from its own
+    * checkpoint SQUARES the size estimate every round until planning
+    * throws `BigInteger would overflow supported range` (~24 rounds).
+    * This keeps both the lineage and the estimate flat.
+    */
+  private def flatCheckpoint(df: DataFrame): DataFrame =
+    org.apache.spark.sql.graftbridge.flatLocalCheckpoint(df)
+
   /** Per-partition spanning-forest contraction — the edge-volume
-    * reduction that lets the connected-components variants accept a
+    * reduction that lets the connected-components operator accept a
     * pair miner's raw output at scale. A dense near-dup block of m
     * docs qualifies Θ(m²) pairs (that density is WHY they are
     * near-dups), but connectivity needs only m−1 of them; at sf10
@@ -750,7 +761,7 @@ object Dedup {
     * them through the first CC shuffle is what OOM'd a 24 g driver.
     * Each input partition (for the pair miners: one complete
     * bucket×chunk-pair subgraph per task, so the reduction is maximal)
-    * streams through a local union-find and emits an edge ONLY when it
+    * streams through a [[LongUnionFind]] and emits an edge ONLY when it
     * merges two components — a spanning forest of that partition's
     * subgraph. Union over partitions preserves every global
     * connection, so the downstream fixpoint labeling is unchanged;
@@ -760,14 +771,7 @@ object Dedup {
     * Long-id graphs only — non-long vertex ids pass through untouched
     * (the generic path is correct, just not pre-contracted).
     */
-  /** Stats-truncating eager local checkpoint — see the Scaladoc on
-    * [[connectedComponents]] for why plain `localCheckpoint` is not
-    * usable inside an iterative self-join.
-    */
-  private def flatCheckpoint(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.flatLocalCheckpoint(df)
-
-  private def localSpanningForest(edges: DataFrame): DataFrame = {
+  private[graft] def localSpanningForest(edges: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.LongType
     val fields = edges.schema.fields
     if (fields.length != 2 ||
@@ -780,126 +784,19 @@ object Dedup {
       .filter(col(uName).isNotNull && col(vName).isNotNull)
       .as[(Long, Long)]
       .mapPartitions { it =>
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x: Long): Long = {
-          var r = x
-          while (parent.getOrElse(r, r) != r) r = parent(r)
-          var c = x
-          while (c != r) { val n = parent(c); parent(c) = r; c = n }
-          r
-        }
-        it.filter { case (u, v) =>
-          val ru = find(u); val rv = find(v)
-          if (ru == rv) false else { parent(math.max(ru, rv)) = math.min(ru, rv); true }
-        }
+        val uf = new LongUnionFind
+        it.filter { case (u, v) => uf.union(u, v) }
       }
       .toDF(uName, vName)
   }
 
   /** The dedup DECISION step: candidate pairs (from [[minhashCandidates]],
-    * [[jaccardPairs]], or `Similarity.cosinePairsBlocked`) form an
-    * undirected graph; each document's component representative is the
-    * MINIMUM doc id reachable from it, and the representative itself is
-    * the survivor. Min-label propagation to fixpoint: the converged
-    * labeling is canonical (unique regardless of iteration order), which
-    * is what makes it oracle-checkable — DuckDB's recursive CTE reaches
-    * the same fixpoint by a different route.
-    *
-    * Scale: each round is one equi-join (edges ⨝ labels on the vertex)
-    * + one min-groupBy, then a label-jump self-join
-    * (component(v) := component(component(v)) — path compression on the
-    * label forest). All shuffles are keyed by vertex id. The jump is
-    * what makes this survive deep chains: propagate-only needs
-    * graph-diameter rounds (a templated-spam chain at corpus scale can
-    * be thousands deep — sf3's regenerated corpus already exceeded 25),
-    * propagate+jump needs O(log diameter). Cliquish near-dup graphs
-    * (diameter 2-4) still converge in 2-3 rounds, now paying one extra
-    * small join each. A stats-truncating local checkpoint per round
-    * ([[graft.operators.Dedup.flatCheckpoint]]) keeps BOTH the lineage
-    * and the size estimate flat — Spark's own `localCheckpoint` copies
-    * the checkpointed plan's estimated Statistics onto the LogicalRDD,
-    * so a loop that self-joins its checkpoint would otherwise SQUARE
-    * the estimate every round until planning throws `BigInteger would
-    * overflow supported range` (~24 rounds). The prior round's blocks
-    * are freed as soon as the next materializes. Throws if `maxIters`
-    * rounds don't converge — a
-    * silently unconverged labeling would be nondeterministic, which is
-    * worse than loud.
-    */
-  def connectedComponents(vertices: DataFrame, id: Column,
-                          pairs: DataFrame, src: Column, dst: Column,
-                          maxIters: Int = 25,
-                          contractEdges: Boolean = false): DataFrame = {
-    // NO forest contraction by default, deliberately: min-label's
-    // round bound is O(log DIAMETER), and contracting a dense near-dup
-    // block (diameter ~1) to a spanning tree (diameter up to block
-    // size) trades away exactly the property this variant's bound
-    // rests on — measured at sf1: 9 rounds on raw edges vs >25 on the
-    // contracted forest. The contraction lives in
-    // [[connectedComponentsStar]], whose O(log n) round bound is
-    // structure-independent; that is the variant the high-volume pair
-    // miners feed (q121). `contractEdges = true` opts back in for
-    // edge sets too large to symmetrize raw (Θ(m²) miner output):
-    // same fixpoint, bounded memory, but budget maxIters for the
-    // deeper contracted forest — safe now that checkpoints truncate
-    // stats (no ~24-round planning ceiling).
-    // Serialized storage so a big edge set spills instead of OOMing.
-    val raw = pairs.select(src.as("src"), dst.as("dst"))
-    val e0 = if (contractEdges) localSpanningForest(raw) else raw
-    val edges = e0
-      .union(e0.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    var labels = flatCheckpoint(
-      vertices.select(id.as("v"), id.as("component")))
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
-      // each vertex keeps the min of its own label and its neighbors'
-      // materialized before the self-join below: joining a plan that
-      // still contains the union with itself trips Catalyst's
-      // constraint rewrite on shared attribute ids; a flat LogicalRDD
-      // self-join is unambiguous
-      val prop = flatCheckpoint(labels
-        .union(edges.join(labels, edges("dst") === labels("v"))
-          .select(edges("src").as("v"), col("component")))
-        .groupBy(col("v"))
-        .agg(min(col("component")).as("component")))
-      // label jump: every label value is itself a vertex id, so
-      // component∘component is defined; chasing one level per round
-      // doubles the effective propagation distance (O(log d) rounds).
-      // Monotone (labels only decrease) and stable at the propagation
-      // fixpoint (component(m) = m for a component min m), so the
-      // converged labeling — and the oracle — are unchanged.
-      val next = flatCheckpoint(prop.as("a")
-        .join(prop.as("b"), col("a.component") === col("b.v"), "left")
-        .select(col("a.v"),
-          coalesce(col("b.component"), col("a.component")).as("component")))
-      prop.unpersist()
-      converged = next.as("n")
-        .join(labels.as("p"), col("n.v") === col("p.v"))
-        .filter(col("n.component") =!= col("p.component"))
-        .isEmpty
-      labels.unpersist()
-      labels = next
-      i += 1
-    }
-    require(converged,
-      s"connectedComponents did not converge in $maxIters rounds — " +
-        "component diameter exceeds the bound; raise maxIters or use " +
-        "connectedComponentsStar")
-    edges.unpersist()
-    labels
-  }
-
-  /** Star-contraction connected components (alternating large-star /
-    * small-star, Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", SoCC 2014): converges in O(log n) rounds REGARDLESS of
-    * component diameter, where [[connectedComponents]]' min-label
-    * propagation needs diameter rounds. A 100 TB near-dup graph will
-    * contain pathological chains (templated spam pages each one edit
-    * from the next), and this is the variant that survives them.
+    * [[jaccardPairs]] or `Similarity.cosinePairsBlocked`) form an
+    * undirected graph; each vertex is labeled with the MINIMUM id
+    * reachable from it, and that representative survives. Star
+    * contraction (large-star / small-star, Kiveris et al., SoCC 2014)
+    * converges in O(log n) rounds REGARDLESS of component diameter, so
+    * templated-spam chains at corpus scale cannot stall it.
     *
     * Both steps are expressed so the heavy relation only ever shuffles
     * on a vertex key, and the per-vertex min is a groupBy aggregate
@@ -914,8 +811,9 @@ object Dedup {
     * stars (v, root-of-component); labels read off with one left join
     * (isolated vertices label themselves).
     *
-    * Fixpoint equals [[connectedComponents]]' fixpoint (min reachable
-    * id), so the same recursive-CTE oracle gates both.
+    * The labeling is canonical, so it is checkable: q47's recursive-CTE
+    * oracle and the driver-side [[LongUnionFind]] reference reach the
+    * same one. Throws if `maxIters` rounds don't converge.
     */
   def connectedComponentsStar(vertices: DataFrame, id: Column,
                               pairs: DataFrame, src: Column, dst: Column,
@@ -973,5 +871,29 @@ object Dedup {
       .select(col("v"), coalesce(col("root"), col("v")).as("component"))
     edges.unpersist()
     labels
+  }
+}
+
+/** Union-find over long ids with path compression; the smaller root
+  * wins, so `find(v)` is the minimum id in v's component. Backs
+  * [[Dedup.localSpanningForest]] and is the driver-side reference for
+  * [[Dedup.connectedComponentsStar]].
+  */
+private[graft] final class LongUnionFind {
+  private val parent = scala.collection.mutable.LongMap.empty[Long]
+
+  def find(x: Long): Long = {
+    var r = x
+    while (parent.getOrElse(r, r) != r) r = parent(r)
+    var c = x
+    while (c != r) { val n = parent(c); parent(c) = r; c = n }
+    r
+  }
+
+  /** Merges the components of `u` and `v`; true iff they were apart. */
+  def union(u: Long, v: Long): Boolean = {
+    val ru = find(u); val rv = find(v)
+    if (ru == rv) false
+    else { parent(math.max(ru, rv)) = math.min(ru, rv); true }
   }
 }

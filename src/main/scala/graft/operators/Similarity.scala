@@ -603,7 +603,7 @@ object Similarity {
     * ([[Dedup.connectedComponentsStar]] — O(log n) rounds regardless
     * of component diameter), which canonicalizes + dedups them as its
     * own first step. Returns (v, component) per input doc; component
-    * = min reachable id, the same canonical fixpoint q47/q103 gate.
+    * = min reachable id, the same canonical fixpoint q47 gates.
     *
     * Blocking caveat: sign buckets lose 22–30% of planted near-dup
     * pairs on clustered corpora (PLANS.md round 17) — prefer
@@ -636,7 +636,7 @@ object Similarity {
     * ([[Dedup.connectedComponentsStar]], O(log n) rounds regardless
     * of component diameter). Returns (v, component) per indexed item;
     * component = min reachable id, the same canonical fixpoint the
-    * q47/q103/q121 oracles gate.
+    * q47/q121 oracles gate.
     */
   def nearDupComponentsIndexed(index: DataFrame, centroids: DataFrame,
                                threshold: Double, nprobe: Int,

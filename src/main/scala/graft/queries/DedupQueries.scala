@@ -121,44 +121,12 @@ object DedupQueries extends Catalog {
 
     // The dedup DECISION: LSH candidate pairs form a graph; each doc
     // labels itself with the min reachable doc_id (its component) and
-    // the min itself survives. Spark converges by min-label
-    // propagation; the oracle reaches the SAME canonical fixpoint via
-    // a recursive CTE — convergence-order independence is what makes
-    // an iterative graph algorithm hash-checkable across engines.
+    // the min itself survives. Spark converges by star contraction
+    // (O(log n) rounds whatever the component diameter); the oracle
+    // reaches the SAME canonical fixpoint via a recursive CTE —
+    // convergence-order independence is what makes an iterative graph
+    // algorithm hash-checkable across engines.
     Q("q47_dedup_components",
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val pairs = Dedup.minhashCandidates(
-          d, col("doc_id"), col("text"), NumHashes, Bands)
-        Dedup.connectedComponents(
-            d, col("doc_id"), pairs, col("doc_a"), col("doc_b"))
-          .select(col("v").as("doc_id"), col("component"),
-            (col("v") === col("component")).as("survivor"))
-          .orderBy(col("doc_id"))
-      },
-      Some(s"""WITH RECURSIVE $duckShingleBody,
-              |$duckLshPairsBody,
-              |edges AS (
-              |  SELECT doc_a AS src, doc_b AS dst FROM pairs
-              |  UNION
-              |  SELECT doc_b, doc_a FROM pairs),
-              |walk(v, l) AS (
-              |  SELECT doc_id, doc_id FROM documents
-              |  UNION
-              |  SELECT e.dst, w.l FROM walk w JOIN edges e ON e.src = w.v)
-              |SELECT v AS doc_id, MIN(l) AS component,
-              |  (v = MIN(l)) AS survivor
-              |FROM walk GROUP BY v ORDER BY doc_id""".stripMargin),
-      bench = false), // iterative fixpoint: rounds x per-action floor
-                      // is pure scheduling noise at bench scale — an
-                      // offline index-build-style step, like q54
-
-    // Same dedup decision via star contraction (large-star/small-star):
-    // O(log n) rounds regardless of component diameter, the variant
-    // that survives pathological near-dup chains (templated spam) that
-    // min-label propagation cannot converge on. Same canonical
-    // fixpoint (min reachable doc_id) ⇒ the exact q47 oracle gates it.
-    Q("q103_dedup_components_star",
       (s, dir) => {
         val d = Tables.load(s, dir, "documents")
         val pairs = Dedup.minhashCandidates(
@@ -182,7 +150,9 @@ object DedupQueries extends Catalog {
               |SELECT v AS doc_id, MIN(l) AS component,
               |  (v = MIN(l)) AS survivor
               |FROM walk GROUP BY v ORDER BY doc_id""".stripMargin),
-      bench = false), // same offline-decision shape as q47
+      bench = false), // iterative fixpoint: rounds x per-action floor
+                      // is pure scheduling noise at bench scale — an
+                      // offline index-build-style step, like q54
 
     // Incremental dedup: the day's batch (doc_id % 10 = 0) adjudicated
     // against the standing corpus WITHOUT re-deduplicating the corpus —

@@ -11,7 +11,7 @@ import graft.operators.{BudgetSelect, Dedup}
   * training-data run actually executes, as ONE oracled query —
   * quality gate → exact dedup → near-dup components → token-budget
   * selection. Every stage is an operator that is individually oracled
-  * elsewhere (q39, q40, q103, q114); this entry gates that they
+  * elsewhere (q39, q40, q47, q114); this entry gates that they
   * COMPOSE: each stage's survivors feed the next with no
   * rematerialization, and the whole chain stays hash-checkable.
   *
@@ -188,8 +188,8 @@ object PipelineQueries extends Catalog {
               |  CAST(MAX(cum) AS BIGINT) AS max_cum
               |FROM c WHERE cum <= $PipeBudget
               |GROUP BY source ORDER BY source""".stripMargin),
-      bench = false) // the stage operators are benched individually
-                     // (q39/q40/q103/q114); the composed recursive-CTE
+      bench = false) // the stage operators are gated individually
+                     // (q39/q40/q47/q114); the composed recursive-CTE
                      // oracle is the gate here, not a headline time
   )
 }

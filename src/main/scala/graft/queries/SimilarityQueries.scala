@@ -220,7 +220,7 @@ object SimilarityQueries extends Catalog {
 
   // --- q125 oracle: the shared chain's qualifying pairs walked to
   // the min-reachable-id fixpoint (same recursive-CTE labeling that
-  // gates q47/q103/q121). ---
+  // gates q47/q121). ---
   private val duckNearDupIndexed: String =
     s"""WITH RECURSIVE $duckIndexedQualCtes,
        |edges AS (
@@ -494,7 +494,7 @@ object SimilarityQueries extends Catalog {
     // The other capped form: blocked pairs fed straight into star-
     // contraction connected components — Θ(n) labels out, the scored
     // pair table never materialized. Same canonical min-reachable-id
-    // fixpoint as q47/q103, so the recursive-CTE oracle gates it.
+    // fixpoint as q47, so the recursive-CTE oracle gates it.
     Q("q121_near_dup_components",
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")
@@ -530,7 +530,7 @@ object SimilarityQueries extends Catalog {
               |SELECT v AS vec_id, MIN(l) AS component,
               |  (v = MIN(l)) AS survivor
               |FROM walk GROUP BY v ORDER BY vec_id""".stripMargin),
-      bench = false), // iterative fixpoint (like q47/q103): rounds ×
+      bench = false), // iterative fixpoint (like q47): rounds ×
                       // job-launch floor is scheduling noise at bench
                       // scale; its scale evidence is the sf10 gate
 
@@ -573,7 +573,7 @@ object SimilarityQueries extends Catalog {
     // (RecallSpec pins the law). Qualifying pairs flow straight into
     // star-contraction CC — the pair table is never materialized,
     // output is Θ(n) labels. Same min-reachable-id fixpoint, same
-    // recursive-CTE oracle shape as q47/q103/q121, over the shared
+    // recursive-CTE oracle shape as q47/q121, over the shared
     // sample-trained-k-means CTE chain of q124.
     Q("q125_near_dup_indexed",
       (s, dir) => {

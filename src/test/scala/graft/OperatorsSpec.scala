@@ -10,50 +10,53 @@ class OperatorsSpec extends SparkSpec {
   test("connectedComponents labels chains, cliques, and singletons") {
     // components: {1,2,3,4} via a chain (diameter 3 — needs several
     // propagation rounds), {10,11,12} via a triangle, {20} singleton
-    val vertices = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L).toDF("id")
-    val pairs = Seq(
+    val ids = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L)
+    val edges = Seq(
       (2L, 1L), (2L, 3L), (4L, 3L),            // chain, mixed direction
-      (10L, 11L), (11L, 12L), (10L, 12L)).toDF("a", "b")
-    val got = Dedup.connectedComponents(vertices, $"id", pairs, $"a", $"b")
-      .as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
+      (10L, 11L), (11L, 12L), (10L, 12L))
+    val want = unionFindLabels(ids, edges)
+    assert(want == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L))
+    val got = Dedup.connectedComponentsStar(ids.toDF("id"), $"id",
+        edges.toDF("a", "b"), $"a", $"b")
+      .as[(Long, Long)].collect().toMap
+    assert(got == want)
   }
 
   test("connectedComponents throws rather than return unconverged labels") {
+    // one round turns the path into (2,1),(3,1),(4,2),(5,3),(6,4) —
+    // not the input edge set, so a 1-round budget must fail loudly
     val vertices = (1L to 6L).toDF("id")
     val pairs = (1L to 5L).map(i => (i, i + 1)).toDF("a", "b") // diameter 5
     intercept[IllegalArgumentException] {
-      Dedup.connectedComponents(vertices, $"id", pairs, $"a", $"b",
+      Dedup.connectedComponentsStar(vertices, $"id", pairs, $"a", $"b",
         maxIters = 1)
     }
   }
 
   test("connectedComponentsStar matches min-label on chains, cliques, singletons") {
-    val vertices = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L).toDF("id")
-    val pairs = Seq(
+    val ids = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L)
+    val edges = Seq(
       (2L, 1L), (2L, 3L), (4L, 3L),
-      (10L, 11L), (11L, 12L), (10L, 12L)).toDF("a", "b")
-    val got = Dedup.connectedComponentsStar(vertices, $"id", pairs, $"a", $"b")
+      (10L, 11L), (11L, 12L), (10L, 12L))
+    val got = Dedup.connectedComponentsStar(ids.toDF("id"), $"id",
+        edges.toDF("a", "b"), $"a", $"b")
       .as[(Long, Long)].collect().toMap
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
-      10L -> 10L, 11L -> 10L, 12L -> 10L, 20L -> 20L))
+    assert(got == unionFindLabels(ids, edges))
   }
 
   test("both components variants converge on a deep chain in log rounds") {
-    // a 60-vertex path: diameter 59. Propagate-only min-label would
-    // need ~59 rounds; the label-jump makes it O(log d), so BOTH
-    // variants must label the whole chain with component 1 well inside
-    // their default bounds (sf3's regenerated corpus produced a real
-    // >25-diameter component, so this is the scale-critical property).
-    val vertices = (1L to 60L).toDF("id")
-    val pairs = (1L until 60L).map(i => (i, i + 1)).toDF("a", "b")
-    val want = (1L to 60L).map(_ -> 1L).toMap
-    val minLabel = Dedup.connectedComponents(vertices, $"id", pairs, $"a", $"b",
-        maxIters = 10)
-      .as[(Long, Long)].collect().toMap
-    assert(minLabel == want)
-    val got = Dedup.connectedComponentsStar(vertices, $"id", pairs, $"a", $"b")
+    // a 60-vertex path: diameter 59. Label propagation would need ~59
+    // rounds; star contraction must label the whole chain with
+    // component 1 well inside its default O(log n) bound (sf3's
+    // regenerated corpus produced a real >25-diameter component, so
+    // this is the scale-critical property).
+    val ids = 1L to 60L
+    val edges = (1L until 60L).map(i => (i, i + 1))
+    val want = unionFindLabels(ids, edges)
+    assert(want == ids.map(_ -> 1L).toMap)
+    val got = Dedup.connectedComponentsStar(ids.toDF("id"), $"id",
+        edges.toDF("a", "b"), $"a", $"b")
       .as[(Long, Long)].collect().toMap
     assert(got == want)
   }
@@ -73,22 +76,13 @@ class OperatorsSpec extends SparkSpec {
     val scattered = (clique ++ chain ++ extra)
       .sortBy { case (a, b) => ((a * 31 + b * 17) % 97, a, b) }
     val pairs = spark.sparkContext.parallelize(scattered, 8).toDF("a", "b")
-    val vertices = ((1L to 40L) ++ (100L to 120L)).toDF("id")
+    val ids = (1L to 40L) ++ (100L to 120L)
+    val vertices = ids.toDF("id")
     val want = ((1L to 40L).map(_ -> 1L) ++ (100L to 120L).map(_ -> 100L)).toMap
-    val minLabel = Dedup.connectedComponents(vertices, $"id", pairs, $"a", $"b")
-      .as[(Long, Long)].collect().toMap
-    assert(minLabel == want)
+    assert(unionFindLabels(ids, scattered) == want)
     val star = Dedup.connectedComponentsStar(vertices, $"id", pairs, $"a", $"b")
       .as[(Long, Long)].collect().toMap
     assert(star == want)
-    // min-label with opt-in edge contraction (the sf10 q121 path):
-    // contracting the clique to a spanning tree stretches its diameter
-    // from 1 to up to 39, so give the round budget headroom — the
-    // labels must still come out identical.
-    val minContracted = Dedup.connectedComponents(vertices, $"id",
-        pairs, $"a", $"b", maxIters = 100, contractEdges = true)
-      .as[(Long, Long)].collect().toMap
-    assert(minContracted == want)
   }
 
   test("flatLocalCheckpoint: 30 self-join rounds don't overflow plan stats") {

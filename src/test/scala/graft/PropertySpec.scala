@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
 import graft.functions.CidFunctions._
-import graft.operators.{PriorityDedup, RangeJoin}
+import graft.operators.{Dedup, PriorityDedup, RangeJoin}
 
 /** Property-based checks from SURVEY.md §5's test plan: F1 idempotence,
   * F2 prefix-of-F1, W1 survivor invariants, U1+W1 row-count bounds,
@@ -441,6 +441,50 @@ class PropertySpec extends SparkSpec {
       }.toMap
       val expected = coarse.filter { case (a, b) => bits(a) == bits(b) }
       assert(fine == expected)
+    }
+  }
+
+  test("connectedComponentsStar equals the driver union-find on random " +
+       "graphs") {
+    // component shapes over disjoint id slices: a chain (a path up to
+    // 60 deep), a clique, a hub star, or an isolated vertex
+    val shapeGen: Gen[(String, Int)] = Gen.oneOf(
+      Gen.choose(2, 60).map("chain" -> _),
+      Gen.choose(2, 10).map("clique" -> _),
+      Gen.choose(2, 25).map("hub" -> _),
+      Gen.const("isolated" -> 1))
+    val graphGen = Gen.zip(
+      Gen.choose(3, 10).flatMap(Gen.listOfN(_, shapeGen)),
+      Gen.choose(0L, Long.MaxValue))
+    forAllSamples(graphGen, n = 10) { case (shapes, seed) =>
+      val rnd = new scala.util.Random(seed)
+      // shuffled ids, so a component's min sits anywhere in its shape
+      val ids = rnd.shuffle((1L to shapes.map(_._2).sum.toLong).toVector)
+      val slices = shapes.scanLeft(0)(_ + _._2).zip(shapes).map {
+        case (at, (kind, n)) => kind -> ids.slice(at, at + n) }
+      val shaped = slices.flatMap {
+        case ("chain", vs) => vs.zip(vs.tail)
+        case ("clique", vs) =>
+          for { i <- vs.indices; j <- i + 1 until vs.size } yield (vs(i), vs(j))
+        case ("hub", vs) => vs.tail.map(vs.head -> _)
+        case _ => Nil
+      }
+      // both orientations, duplicates, self-loops and a few bridges
+      // that merge shapes into irregular components
+      def pick() = ids(rnd.nextInt(ids.size))
+      val oriented = shaped.map { case (u, v) =>
+        if (rnd.nextBoolean()) (u, v) else (v, u) }
+      val dups = if (oriented.isEmpty) Nil else Seq.fill(rnd.nextInt(12)) {
+        val e = oriented(rnd.nextInt(oriented.size))
+        if (rnd.nextBoolean()) e else e.swap }
+      val extra = dups ++ Seq.fill(rnd.nextInt(4)) { val v = pick(); (v, v) } ++
+        Seq.fill(rnd.nextInt(3))((pick(), pick()))
+      val edges = rnd.shuffle(oriented ++ extra)
+      val got = Dedup.connectedComponentsStar(ids.toDF("id"), $"id",
+          spark.sparkContext.parallelize(edges, 6).toDF("a", "b"),
+          $"a", $"b")
+        .as[(Long, Long)].collect().toMap
+      assert(got == unionFindLabels(ids, edges))
     }
   }
 }

@@ -398,9 +398,9 @@ class SimilaritySpec extends SparkSpec {
       e, "vec_id", "embedding", t, nbits)
     val pairs = Similarity.cosinePairsBlocked(e, "vec_id", "embedding",
       t, nbits)
-    val viaMinLabel = graft.operators.Dedup.connectedComponents(
-      e.select($"vec_id"), $"vec_id", pairs, $"id_a", $"id_b")
-    assert(viaCompose.collect().toSet == viaMinLabel.collect().toSet)
+    val want = unionFindLabels(e.select($"vec_id").as[Long].collect(),
+      pairs.select($"id_a", $"id_b").as[(Long, Long)].collect())
+    assert(viaCompose.as[(Long, Long)].collect().toMap == want)
     // output is Θ(n): exactly one label per input doc
     assert(viaCompose.count() == e.count())
   }
@@ -443,9 +443,9 @@ class SimilaritySpec extends SparkSpec {
       index, centroids, threshold = 0.3, nprobe = 2)
     val pairs = Similarity.indexedQualifyingPairs(
       index, centroids, threshold = 0.3, nprobe = 2)
-    val viaMinLabel = graft.operators.Dedup.connectedComponents(
-      index.select($"item_id"), $"item_id", pairs, $"aid", $"bid")
-    assert(viaCompose.collect().toSet == viaMinLabel.collect().toSet)
+    val want = unionFindLabels(index.select($"item_id").as[Long].collect(),
+      pairs.select($"aid", $"bid").as[(Long, Long)].collect())
+    assert(viaCompose.as[(Long, Long)].collect().toMap == want)
     // output is Θ(n): exactly one label per indexed item
     assert(viaCompose.count() == e.count())
   }

@@ -24,7 +24,7 @@ cd "$(dirname "$0")/.."
 ROUND="${1:?usage: sf10_gate.sh <roundN>}"
 FAMILY="q23_revenue_topk,q43_minhash_lsh_pairs,q47_dedup_components,"
 FAMILY+="q56_regional_revenue,q80_sql_api,q96_recursive_cte,"
-FAMILY+="q103_dedup_components_star,q105_seq_pack,q106_det_shard,"
+FAMILY+="q105_seq_pack,q106_det_shard,"
 FAMILY+="q107_mixture_resample,q108_source_pctl_filter,"
 FAMILY+="q109_incremental_dedup,q110_shard_readback,"
 FAMILY+="q114_budget_select,q117_kmv_merge,q118_rolling_dedup,"
