@@ -4,7 +4,7 @@ import java.time.LocalDate
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -43,7 +43,7 @@ object CidEtl {
     * `chapter_code`, prefer categories' value, falling back to blocks'
     * (etl_cid10.py:59-67).
     */
-  private def categoryMap(chapters: DataFrame, blocks: DataFrame,
+  private[graft] def categoryMap(chapters: DataFrame, blocks: DataFrame,
                           categories: DataFrame): DataFrame = {
     val withChap =
       categories.join(broadcast(chapters), Seq("chapter_code"), "left")
@@ -170,16 +170,15 @@ object CidEtl {
     val categoriesRaw = read("CATEGORIAS")
     val subcatsRaw = read("SUBCATEGORIAS")
 
-    val chapters = chaptersRaw.select(
-      rangeId(col("CATINIC"), col("CATFIM")).as("chapter_code"),
-      trim(col("DESCRICAO").cast("string")).as("chapter_title"))
-
     // Range dims with normalized bounds + file order for first-match.
+    // The chapter dim is read from the same ranked rows, so each of the
+    // two range files is scanned once.
     val chapterRanges = withFileOrder(chaptersRaw.select(
       upper(trim(col("CATINIC").cast("string"))).as("c_start"),
       upper(trim(col("CATFIM").cast("string"))).as("c_end"),
       rangeId(col("CATINIC"), col("CATFIM")).as("chapter_code"),
       trim(col("DESCRICAO").cast("string")).as("chapter_title")))
+    val chapters = chapterRanges.select("chapter_code", "chapter_title")
 
     val blockRanges = withFileOrder(blocksRaw.select(
       upper(trim(col("CATINIC").cast("string"))).as("b_start"),
@@ -239,29 +238,20 @@ object CidEtl {
   // Consolidation — etl_cid10.py:179-196 / :357-370
   // -------------------------------------------------------------------
 
-  /** Union both branches, re-normalize codes, keep one row per code
-    * preferring "Estruturada" over "DATASUS" (W1 with a deterministic
-    * total-order tiebreak — the reference's unstable sort leaves ties
-    * nondeterministic, SURVEY.md §2.6), and stamp the run date.
+  /** Re-normalize codes, keep one row per code preferring "Estruturada"
+    * over "DATASUS" (W1 with a deterministic total-order tiebreak — the
+    * reference's unstable sort leaves ties nondeterministic, SURVEY.md
+    * §2.6), and stamp the run date. `rows` is the union of both branches
+    * in combined mode and the structured branch alone in dir mode.
     */
-  def consolidate(structured: DataFrame, enriched: DataFrame,
-                  runDate: LocalDate): DataFrame = {
-    val unioned = structured.unionByName(enriched)
+  def consolidate(rows: DataFrame, runDate: LocalDate): DataFrame = {
+    val normalized = rows
       .withColumn("cid_codigo", normalizeCode(col("cid_codigo")))
     val tiebreak = outputCols.filterNot(_ == "cid_codigo")
       .map(c => col(c).asc_nulls_last)
-    PriorityDedup(unioned, keys = Seq("cid_codigo"),
+    PriorityDedup(normalized, keys = Seq("cid_codigo"),
         priority = col("fonte").desc +: tiebreak)
       .withColumn("dt_atualizacao", lit(runDate.toString))
-  }
-
-  def quality(consolidated: DataFrame): Quality = {
-    val agg = consolidated.agg(
-      count(lit(1)).as("total"),
-      sum(when(col("bloco_codigo").isNull
-        || col("capitulo_codigo").isNull, 1L).otherwise(0L)).as("missing"))
-      .collect()(0)
-    Quality(agg.getLong(0), Option(agg.get(1)).map(_.toString.toLong).getOrElse(0L))
   }
 
   // -------------------------------------------------------------------
@@ -283,33 +273,41 @@ object CidEtl {
     val structured = buildStructured(chapters, blocks, categories, subcats)
     val cats = categoryMap(chapters, blocks, categories)
     val enriched = prepareDatasus(datasusRaw, cats)
-    finish(structured, enriched, outPath, runDate)
+    finish(structured.unionByName(enriched), outPath, runDate)
   }
 
-  /** Dir mode: everything derived from the 4 official DataSUS CSVs; the
-    * DATASUS branch is synthesized from the structured branch's own
-    * output (S5 self-enrichment, etl_cid10.py:350-353).
+  /** Dir mode: everything derived from the 4 official DataSUS CSVs. The
+    * reference also re-feeds the structured branch's own output as its
+    * DATASUS branch (S5 self-enrichment, etl_cid10.py:350-353), but that
+    * branch can never win W1: each of its rows has an "Estruturada" twin
+    * with the same code (normalizeCode is idempotent), and "Estruturada"
+    * ranks first. So the structured branch is consolidated alone —
+    * PropertySpec checks the output and `Quality` against the S5 path.
     */
   def runFromDatasusDir(spark: SparkSession, dir: String, outPath: String,
                         runDate: LocalDate = LocalDate.now()): Quality = {
     val (chapters, blocks, categories, subcats) =
       readDatasusOfficial(spark, dir)
-    val structured = buildStructured(chapters, blocks, categories, subcats)
-    val cats = categoryMap(chapters, blocks, categories)
-    val datasusRaw = structured.select(
-      col("cid_codigo").as("codigo"), col("descricao"))
-    val enriched = prepareDatasus(datasusRaw, cats)
-    finish(structured, enriched, outPath, runDate)
+    finish(buildStructured(chapters, blocks, categories, subcats),
+      outPath, runDate)
   }
 
-  private def finish(structured: DataFrame, enriched: DataFrame,
-                     outPath: String, runDate: LocalDate): Quality = {
-    val consolidated = consolidate(structured, enriched, runDate).cache()
-    val q = quality(consolidated)
+  /** Consolidate, write, and read the quality counters the write itself
+    * observed (A1/A2: rows written, rows missing block or chapter) — no
+    * cache and no separate counting job.
+    */
+  private def finish(rows: DataFrame, outPath: String,
+                     runDate: LocalDate): Quality = {
+    val obs = Observation()
+    val consolidated = consolidate(rows, runDate).observe(obs,
+      count(lit(1)).as("total"),
+      count_if(col("bloco_codigo").isNull || col("capitulo_codigo").isNull)
+        .as("missing"))
+    BomCsvSink.write(consolidated, outPath)
+    val m = obs.get
+    val q = Quality(m("total").asInstanceOf[Long], m("missing").asInstanceOf[Long])
     println(s"Total de códigos consolidados: ${q.total}")
     println(s"Registros sem bloco/capítulo após merge: ${q.missingHierarchy}")
-    BomCsvSink.write(consolidated, outPath)
-    consolidated.unpersist()
     q
   }
 

@@ -58,6 +58,22 @@ class CidEtlSpec extends SparkSpec {
     assertGolden(out, s"$res/golden/combined_mode.csv")
   }
 
+  test("a run launches one job per real step: dir <= 10, combined <= 6") {
+    val tmp = Files.createTempDirectory("cid_jobs")
+    val (_, dirJobs, _) = traced(CidEtl.runFromDatasusDir(spark,
+      s"$res/cid_official", tmp.resolve("dir.csv").toString, clock))
+    val (_, combinedJobs, _) = traced(CidEtl.runCombined(spark,
+      s"$res/cid_structured/datasus.csv",
+      s"$res/cid_structured/chapters.csv",
+      s"$res/cid_structured/blocks.csv",
+      s"$res/cid_structured/categories.csv",
+      s"$res/cid_structured/subcategories.csv",
+      tmp.resolve("comb.csv").toString, clock))
+    info(s"jobs: dir $dirJobs, combined $combinedJobs")
+    assert(dirJobs <= 10, s"dir mode launched $dirJobs jobs")
+    assert(combinedJobs <= 6, s"combined mode launched $combinedJobs jobs")
+  }
+
   test("J4: a block spanning two chapters gets the one first in file order") {
     val dir = Files.createTempDirectory("cid_j4")
     def write(name: String, lines: String*): Unit =

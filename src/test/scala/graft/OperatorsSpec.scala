@@ -7,7 +7,8 @@ import graft.operators.{Dedup, PriorityDedup, RangeJoin, Sampling}
 class OperatorsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("connectedComponents labels chains, cliques, and singletons") {
+  test("connectedComponentsStar labels chains, cliques and singletons as " +
+       "the driver union-find does") {
     // components: {1,2,3,4} via a chain (diameter 3 — needs several
     // propagation rounds), {10,11,12} via a triangle, {20} singleton
     val ids = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L)
@@ -23,7 +24,7 @@ class OperatorsSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("connectedComponents throws rather than return unconverged labels") {
+  test("connectedComponentsStar throws rather than return unconverged labels") {
     // one round turns the path into (2,1),(3,1),(4,2),(5,3),(6,4) —
     // not the input edge set, so a 1-round budget must fail loudly
     val vertices = (1L to 6L).toDF("id")
@@ -34,18 +35,7 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
-  test("connectedComponentsStar matches min-label on chains, cliques, singletons") {
-    val ids = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L)
-    val edges = Seq(
-      (2L, 1L), (2L, 3L), (4L, 3L),
-      (10L, 11L), (11L, 12L), (10L, 12L))
-    val got = Dedup.connectedComponentsStar(ids.toDF("id"), $"id",
-        edges.toDF("a", "b"), $"a", $"b")
-      .as[(Long, Long)].collect().toMap
-    assert(got == unionFindLabels(ids, edges))
-  }
-
-  test("both components variants converge on a deep chain in log rounds") {
+  test("connectedComponentsStar labels a deep chain in log rounds") {
     // a 60-vertex path: diameter 59. Label propagation would need ~59
     // rounds; star contraction must label the whole chain with
     // component 1 well inside its default O(log n) bound (sf3's

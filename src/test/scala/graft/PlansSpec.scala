@@ -402,4 +402,35 @@ class PlansSpec extends SparkSpec {
     assert(methods.nonEmpty && methods.forall(_ < 8000),
       s"generated method at or above the JIT's 8000-byte limit: $methods")
   }
+
+  test("CID dir mode: the write plan scans each official file at most " +
+       "once, caches nothing, and holds J3 x2 + J4 x2 as broadcast " +
+       "nested-loop joins") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
+    val out = java.nio.file.Files.createTempDirectory("cid_plan")
+      .resolve("dir.csv").toString
+    val (_, _, queries) = traced(graft.etl.CidEtl.runFromDatasusDir(spark,
+      "src/test/resources/cid_official", out,
+      java.time.LocalDate.parse("2026-01-15")))
+    val helper = new AdaptiveSparkPlanHelper {}
+    val writes = queries.map(_.executedPlan)
+      .filter(helper.find(_)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+    assert(writes.size == 1, s"expected one write, got:\n${writes.mkString("\n")}")
+    val plan = writes.head
+    val scanned = helper.collect(plan) { case s: FileSourceScanExec =>
+      s.relation.location.rootPaths.map(_.getName) }.flatten
+    // CAPITULOS and GRUPOS are read once, into the file-ordered range
+    // dims every join below takes from the driver.
+    assert(scanned.sorted ==
+      Seq("CID-10-CATEGORIAS.csv", "CID-10-SUBCATEGORIAS.csv"),
+      s"official files scanned: $scanned\n$plan")
+    assert(helper.collect(plan) { case c: InMemoryTableScanExec => c }.isEmpty,
+      s"cached relation in the write plan:\n$plan")
+    val nlj = helper.collect(plan) { case j: BroadcastNestedLoopJoinExec => j }
+    assert(nlj.size == 4, s"${nlj.size} broadcast nested-loop joins:\n$plan")
+  }
 }

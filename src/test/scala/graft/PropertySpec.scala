@@ -1,14 +1,20 @@
 package graft
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Path}
+import java.time.LocalDate
+
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
+import graft.etl.CidEtl
 import graft.functions.CidFunctions._
 import graft.operators.{Dedup, PriorityDedup, RangeJoin}
+import graft.sinks.BomCsvSink
 
 /** Property-based checks from SURVEY.md §5's test plan: F1 idempotence,
   * F2 prefix-of-F1, W1 survivor invariants, U1+W1 row-count bounds,
-  * J3 containment.
+  * J3 containment, S5 dissolved in dir mode.
   */
 class PropertySpec extends SparkSpec {
   import spark.implicits._
@@ -485,6 +491,78 @@ class PropertySpec extends SparkSpec {
           $"a", $"b")
         .as[(Long, Long)].collect().toMap
       assert(got == unionFindLabels(ids, edges))
+    }
+  }
+
+  test("S5: dir mode without self-enrichment equals the S5 path row for " +
+       "row, Quality included, on random official catalogs") {
+    // Chapter and block ranges span A and B codes, so Z categories fall
+    // outside every chapter; SUBCAT codes are drawn from a small pool
+    // (duplicates), some lower-case, padded, with a blank 4th position,
+    // 3 chars long, or null (an empty field).
+    def code(letters: Char*) = Gen.zip(Gen.oneOf(letters), Gen.choose(0, 5))
+      .map { case (l, d) => f"$l$d%02d" }
+    val cat = code('A', 'B', 'Z')
+    val title = Gen.oneOf("Colera", "Tifo", "Cólera clássica")
+    val range = Gen.zip(code('A', 'B'), code('A', 'B'))
+      .map { case (a, b) => if (a <= b) (a, b) else (b, a) }
+    val subcat = for {
+      c <- cat
+      tail <- Gen.oneOf("0", "1", "9", " ", "")
+      lower <- Gen.oneOf(false, true)
+      pad <- Gen.frequency(4 -> "", 1 -> " ")
+      isNull <- Gen.frequency(9 -> false, 1 -> true)
+      t <- title
+    } yield {
+      val code = if (lower) (c + tail).toLowerCase else c + tail
+      (if (isNull) "" else pad + code + pad) + ";" + t
+    }
+    val catalog = for {
+      chapters <- Gen.choose(1, 4).flatMap(Gen.listOfN(_, range))
+      blocks <- Gen.choose(1, 6).flatMap(Gen.listOfN(_, range))
+      cats <- Gen.listOfN(20, Gen.zip(cat, title))
+      subcats <- Gen.listOfN(30, subcat)
+    } yield (chapters, blocks, cats, subcats)
+    val clock = LocalDate.parse("2026-01-15")
+    val tiebreak = CidEtl.outputCols.filterNot(_ == "cid_codigo")
+      .map(c => col(c).asc_nulls_last)
+    def lines(p: Path) = {
+      val all = new String(Files.readAllBytes(p), StandardCharsets.UTF_8).split("\n")
+      all.head +: all.tail.sorted.toSeq
+    }
+
+    forAllSamples(catalog, n = 6) { case (chapters, blocks, cats, subcats) =>
+      val dir = Files.createTempDirectory("cid_s5")
+      def write(name: String, header: String, rows: Seq[String]): Unit =
+        Files.write(dir.resolve(name), (header +: rows).mkString("", "\n", "\n")
+          .getBytes(StandardCharsets.ISO_8859_1))
+      write("CID-10-CAPITULOS.csv", "NUMCAP;CATINIC;CATFIM;DESCRICAO",
+        chapters.zipWithIndex.map { case ((a, b), i) => s"$i;$a;$b;Capitulo $i" })
+      write("CID-10-GRUPOS.csv", "CATINIC;CATFIM;DESCRICAO",
+        blocks.zipWithIndex.map { case ((a, b), i) => s"$a;$b;Grupo $i" })
+      write("CID-10-CATEGORIAS.csv", "CAT;DESCRICAO",
+        cats.map { case (c, t) => s"$c;$t" })
+      write("CID-10-SUBCATEGORIAS.csv", "SUBCAT;DESCRICAO", subcats)
+
+      // The S5 path: the structured branch re-fed as the DATASUS branch,
+      // enriched against the category map, unioned, deduplicated.
+      val (chap, blk, categories, sub) = CidEtl.readDatasusOfficial(spark, dir.toString)
+      val structured = CidEtl.buildStructured(chap, blk, categories, sub)
+      val enriched = CidEtl.prepareDatasus(
+        structured.select($"cid_codigo".as("codigo"), $"descricao"),
+        CidEtl.categoryMap(chap, blk, categories))
+      val s5 = PriorityDedup(structured.unionByName(enriched)
+            .withColumn("cid_codigo", normalizeCode($"cid_codigo")),
+          Seq("cid_codigo"), $"fonte".desc +: tiebreak)
+        .withColumn("dt_atualizacao", lit(clock.toString))
+      val q = s5.agg(count(lit(1)),
+        count_if($"bloco_codigo".isNull || $"capitulo_codigo".isNull)).head()
+      BomCsvSink.write(s5, dir.resolve("s5.csv").toString)
+
+      val got = CidEtl.runFromDatasusDir(spark, dir.toString,
+        dir.resolve("dir.csv").toString, clock)
+      assert(got == CidEtl.Quality(q.getLong(0), q.getLong(1)))
+      assert(lines(dir.resolve("dir.csv")) == lines(dir.resolve("s5.csv")))
     }
   }
 }

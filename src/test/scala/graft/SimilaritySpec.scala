@@ -391,7 +391,7 @@ class SimilaritySpec extends SparkSpec {
     assert(pairs() == got)
   }
 
-  test("nearDupComponents == min-label CC over the blocked pair set") {
+  test("nearDupComponents == union-find components of the blocked pair set") {
     val e = Tables.load(spark, dir, "embeddings")
     val (t, nbits) = (0.3, 2)
     val viaCompose = Similarity.nearDupComponents(
@@ -431,7 +431,8 @@ class SimilaritySpec extends SparkSpec {
       "overflow did not move the two farthest members to the runner-up")
   }
 
-  test("nearDupComponentsIndexed == min-label CC over the indexed pair set") {
+  test("nearDupComponentsIndexed == union-find components of the indexed " +
+       "pair set") {
     val e = Tables.load(spark, dir, "embeddings")
     val centroids = Similarity.trainCentroids(
       e, "vec_id", "embedding", k = 4, iters = 2)
