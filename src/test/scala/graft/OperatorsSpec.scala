@@ -7,10 +7,10 @@ import graft.operators.{Dedup, PriorityDedup, RangeJoin, Sampling}
 class OperatorsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("connectedComponentsStar labels chains, cliques and singletons as " +
-       "the driver union-find does") {
-    // components: {1,2,3,4} via a chain (diameter 3 — needs several
-    // propagation rounds), {10,11,12} via a triangle, {20} singleton
+  test("connectedComponents labels chains, cliques, and singletons") {
+    // checked against the driver union-find. Components: {1,2,3,4} via a
+    // chain (diameter 3 — needs several propagation rounds), {10,11,12}
+    // via a triangle, {20} singleton
     val ids = Seq(1L, 2L, 3L, 4L, 10L, 11L, 12L, 20L)
     val edges = Seq(
       (2L, 1L), (2L, 3L), (4L, 3L),            // chain, mixed direction
