@@ -6,7 +6,6 @@ import org.apache.spark.sql.functions._
 import graft.operators.{BlockDials, Dedup, LongUnionFind, Similarity}
 import graft.functions.TextFunctions.tokens
 import graft.functions.VectorFunctions.{dot, l2Norm, signBucket}
-import graft.functions.expressions.CustomExpressions.sortedIntersectCountLong
 
 /** Property gate for the two pair operators whose sf10 result sets
   * are too large to hash against the DuckDB oracle (q45 ~44 M rows,
@@ -104,7 +103,7 @@ object ScaleProps {
       .join(docToks.select(col("doc_id").as("doc_a"), col("__t").as("__ta")), "doc_a")
       .join(docToks.select(col("doc_id").as("doc_b"), col("__t").as("__tb")), "doc_b")
       .withColumn("__i",
-        sortedIntersectCountLong(col("__ta"), col("__tb")).cast("double"))
+        size(array_intersect(col("__ta"), col("__tb"))).cast("double"))
       .withColumn("__rescore",
         col("__i") / (size(col("__ta")) + size(col("__tb")) - col("__i")))
     val r45 = checkBlock("q45_jaccard_pairs", q45Pairs, "jaccard",

@@ -108,264 +108,11 @@ case class MultiMinHash(child: Expression, numHashes: Int, shingleLen: Int)
     copy(child = newChild)
 }
 
-/** Count of common elements of two pre-sorted, pre-deduplicated string
-  * arrays — one merge scan, O(|a| + |b|), no per-element array lookups.
-  * Equivalent to size(array_intersect(a, b)) on distinct sorted inputs
-  * (and to the inverted-index join count), minus the shuffle.
-  */
-case class SortedIntersectCount(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_count"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    var i = 0
-    var j = 0
-    var cnt = 0
-    val na = a.numElements()
-    val nb = b.numElements()
-    while (i < na && j < nb) {
-      val x = a.getUTF8String(i)
-      val y = b.getUTF8String(j)
-      val c = x.compareTo(y)
-      if (c == 0) { cnt += 1; i += 1; j += 1 }
-      else if (c < 0) i += 1
-      else j += 1
-    }
-    cnt
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCount =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Merge-scan intersection count over pre-sorted long arrays — the
-  * cheap path for set-overlap joins: tokens are first collapsed to
-  * 64-bit hashes (xxhash64), so the per-pair work is integer compares
-  * over compact arrays instead of string compares over fat ones.
-  * Counting collides two distinct tokens only at ~2^-64 per pair —
-  * verified collision-free on the test corpora by the DuckDB oracle
-  * hash-match.
-  */
-case class SortedIntersectCountLong(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression
-    with CodegenFallback {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_count_long"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    var i = 0
-    var j = 0
-    var cnt = 0
-    val na = a.numElements()
-    val nb = b.numElements()
-    while (i < na && j < nb) {
-      val x = a.getLong(i)
-      val y = b.getLong(j)
-      if (x == y) { cnt += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    cnt
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectCountLong =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Threshold-aware merge-scan intersection over pre-sorted long arrays
-  * — the verify step of a Jaccard similarity join, with the two
-  * optimizations the plain count can't have:
-  *
-  *  - REAL codegen (`doGenCode`), not `CodegenFallback`: the merge loop
-  *    runs on 10^8-10^9 candidate pairs in a blocked similarity join,
-  *    and interpreted ArrayData eval with boxing was the dominant
-  *    per-pair constant.
-  *  - positional early exit (PPJoin-style): jaccard >= t needs
-  *    inter*(1+t) >= t*(na+nb); once even matching EVERY remaining
-  *    element can't reach that, the scan aborts and returns -1, which
-  *    makes the caller's computed jaccard negative — below any
-  *    positive threshold, so pruned pairs self-filter with no extra
-  *    predicate. The abort margin is 0.5 absolute: candidate counts
-  *    are integers, fp error here is <1e-6, so the margin can only
-  *    FORGO pruning near the boundary, never prune a true qualifier
-  *    (the final jaccard filter stays the decider either way).
-  */
-case class SortedIntersectAtLeastLong(
-    left: Expression, right: Expression, threshold: Double)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  // threshold is spliced into generated Java source as a literal; a
-  // non-finite value would make codegen emit non-compiling (or
-  // eval-divergent) source, so reject it before either path runs
-  require(java.lang.Double.isFinite(threshold),
-    s"threshold must be finite, got $threshold")
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_at_least_long"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    var i = 0; var j = 0; var cnt = 0
-    val na = a.numElements(); val nb = b.numElements()
-    val need = threshold * (na + nb) - 0.5
-    val onePlusT = 1.0 + threshold
-    while (i < na && j < nb) {
-      val rem = math.min(na - i, nb - j)
-      if ((cnt + rem) * onePlusT < need) { cnt = -1; i = na }
-      else {
-        val x = a.getLong(i); val y = b.getLong(j)
-        if (x == y) { cnt += 1; i += 1; j += 1 }
-        else if (x < y) i += 1
-        else j += 1
-      }
-    }
-    cnt
-  }
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val cnt = ctx.freshName("cnt"); val rem = ctx.freshName("rem")
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val need = ctx.freshName("need")
-      s"""
-         |int $i = 0, $j = 0, $cnt = 0;
-         |final int $na = $a.numElements();
-         |final int $nb = $b.numElements();
-         |final double $need = $threshold * ($na + $nb) - 0.5;
-         |while ($i < $na && $j < $nb) {
-         |  final int $rem = ($na - $i < $nb - $j) ? ($na - $i) : ($nb - $j);
-         |  if (($cnt + $rem) * (1.0 + $threshold) < $need) {
-         |    $cnt = -1; break;
-         |  }
-         |  final long $x = $a.getLong($i);
-         |  final long $y = $b.getLong($j);
-         |  if ($x == $y) { $cnt++; $i++; $j++; }
-         |  else if ($x < $y) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $cnt;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntersectAtLeastLong =
-    copy(left = newLeft, right = newRight)
-}
-
-/** [[SortedIntersectAtLeastLong]]'s CONTAINMENT sibling: same codegen'd
-  * merge scan, but the early-exit target is `inter >= t * |left|`
-  * (containment of the LEFT set) instead of the Jaccard bound — the
-  * verify step of an asymmetric containment join, where the right set
-  * may be arbitrarily larger. Aborts to -1 (self-filtering negative
-  * containment) once even matching every remaining element can't reach
-  * the target; the 0.5 margin only ever forgoes pruning near the
-  * boundary, never drops a true qualifier.
-  */
-case class SortedIntersectAtLeastFracLeftLong(
-    left: Expression, right: Expression, threshold: Double)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  require(java.lang.Double.isFinite(threshold),
-    s"threshold must be finite, got $threshold")
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "sorted_intersect_at_least_frac_left_long"
-
-  override protected def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    var i = 0; var j = 0; var cnt = 0
-    val na = a.numElements(); val nb = b.numElements()
-    val need = threshold * na - 0.5
-    while (i < na && j < nb) {
-      val rem = math.min(na - i, nb - j)
-      if (cnt + rem < need) { cnt = -1; i = na }
-      else {
-        val x = a.getLong(i); val y = b.getLong(j)
-        if (x == y) { cnt += 1; i += 1; j += 1 }
-        else if (x < y) i += 1
-        else j += 1
-      }
-    }
-    cnt
-  }
-
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val cnt = ctx.freshName("cnt"); val rem = ctx.freshName("rem")
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val need = ctx.freshName("need")
-      s"""
-         |int $i = 0, $j = 0, $cnt = 0;
-         |final int $na = $a.numElements();
-         |final int $nb = $b.numElements();
-         |final double $need = $threshold * $na - 0.5;
-         |while ($i < $na && $j < $nb) {
-         |  final int $rem = ($na - $i < $nb - $j) ? ($na - $i) : ($nb - $j);
-         |  if ($cnt + $rem < $need) {
-         |    $cnt = -1; break;
-         |  }
-         |  final long $x = $a.getLong($i);
-         |  final long $y = $b.getLong($j);
-         |  if ($x == $y) { $cnt++; $i++; $j++; }
-         |  else if ($x < $y) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $cnt;
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression)
-      : SortedIntersectAtLeastFracLeftLong =
-    copy(left = newLeft, right = newRight)
-}
-
 object CustomExpressions {
   /** Column wrapper: all k minhash digests over the shingles of a
     * token array column. */
   def multiMinHash(tokens: Column, numHashes: Int, shingleLen: Int): Column =
     toColumn(MultiMinHash(toExpression(tokens), numHashes, shingleLen))
-
-  /** Column wrapper: merge-scan intersection count of sorted arrays. */
-  def sortedIntersectCount(a: Column, b: Column): Column =
-    toColumn(SortedIntersectCount(toExpression(a), toExpression(b)))
-
-  /** Column wrapper: merge-scan intersection count of sorted long
-    * arrays (hashed-token fast path). */
-  def sortedIntersectCountLong(a: Column, b: Column): Column =
-    toColumn(SortedIntersectCountLong(toExpression(a), toExpression(b)))
-
-  /** Column wrapper: codegen'd, threshold-early-exit intersection count
-    * (returns -1 once jaccard >= t is unreachable). */
-  def sortedIntersectAtLeastLong(a: Column, b: Column, t: Double): Column =
-    toColumn(SortedIntersectAtLeastLong(toExpression(a), toExpression(b), t))
-
-  def sortedIntersectAtLeastFracLeftLong(a: Column, b: Column,
-                                         t: Double): Column =
-    toColumn(SortedIntersectAtLeastFracLeftLong(
-      toExpression(a), toExpression(b), t))
 
   /** Column wrapper: k-bounded top-k aggregate over (score, id) —
     * evaluates to array<struct<score,id>> best-first. Map-side partial

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions._
 import graft.functions.expressions.CustomExpressions._
+import graft.functions.expressions.SortedIntersectAtLeast.sortedIntersectAtLeast
 
 /** Deduplication operators for training-data pipelines: exact,
   * MinHash+LSH, SimHash, and blocked n-gram Jaccard.
@@ -286,7 +287,7 @@ object Dedup {
                    chunks: Int = 16): DataFrame = {
     // Block-equi join on the blocking keys, then one merge scan per
     // candidate pair over SORTED distinct token arrays (custom
-    // SortedIntersectCount expression). Compared at sf0.1: 30x faster
+    // SortedIntersectAtLeast expression). Compared at sf0.1: 30x faster
     // than per-pair array_contains scans, 2x faster than an
     // inverted-index token self-join (which shuffles |pairs| x |shared
     // tokens| rows); here the only shuffled rows are the docs
@@ -331,9 +332,11 @@ object Dedup {
       // threshold-aware intersect: codegen'd merge scan that aborts
       // (returning -1, hence a negative jaccard that self-filters)
       // once the remaining elements can't reach the threshold — the
-      // per-candidate constant is the whole cost of the verify phase
-      .withColumn("inter",
-        sortedIntersectAtLeastLong(col("a.toks"), col("b.toks"), threshold))
+      // per-candidate constant is the whole cost of the verify phase.
+      // jaccard >= t  <=>  inter >= t/(1+t)·(na+nb)
+      .withColumn("inter", sortedIntersectAtLeast(col("a.toks"),
+        col("b.toks"), threshold / (1.0 + threshold),
+        threshold / (1.0 + threshold)))
       .withColumn("jaccard",
         col("inter").cast("double") /
           (col("a.n_toks") + col("b.n_toks") - col("inter")).cast("double"))
@@ -385,13 +388,10 @@ object Dedup {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
     require(chunks >= 1, "chunks must be >= 1")
-    val nParts = df.sparkSession.sessionState.conf.numShufflePartitions
     // distinct token hashes per doc (compact longs, as in jaccardPairs)
     val toks = distinctTokenHashes(df, id, text)
     val expl = toks.select(col("doc_id"), explode(col("th")).as("tok"))
     val dfreq = expl.groupBy(col("tok")).agg(count(lit(1)).as("tdf"))
-    // rarity order: (df ASC, hash ASC) — struct array_sort is
-    // field-lexicographic, giving the identical total order everywhere
     // r22: the r21 repartition+localCheckpoint of the 4-consumer docs
     // table was REVERTED on the driver's ground truth (q115 3.5 ->
     // 23.1 s at 32 cores, core-scaling ratio 0.30 — the eager
@@ -412,88 +412,147 @@ object Dedup {
     //    under both consumers and ReuseExchange shares the whole
     //    scan+tokenize+df-count subtree under it instead of a
     //    materialization barrier (the q130 pattern).
-    val docs = expl.join(dfreq, "tok")
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(struct(col("tdf"), col("tok"))))
-        .as("rt"))
-      .select(col("doc_id"),
-        transform(col("rt"), s => s.getField("tok")).as("rtoks"))
+    val docs = rarityOrdered(expl.join(dfreq, "tok"))
       .withColumn("n", size(col("rtoks")))
-    // Prefix probe side: the floor((1-t)n)+2 rarest tokens of each doc.
     // Both join sides are SKINNY — (id, n, tok[, pos]) longs only; the
     // token arrays do NOT ride through the candidate join (round 15 —
     // the r14 advisor measured the array-carrying index explode as the
     // pipeline's largest shuffle, O(chunks × Σ|doc|²) bytes). They are
     // re-attached AFTER candidate dedup, so each doc's array is
     // shuffled once, not once per (position × salt).
-    val prefLen =
-      (floor(lit(1.0 - threshold) * col("n")) + lit(2)).cast("int")
-    val probes = docs.select(col("doc_id").as("a_id"), col("n").as("a_n"),
-      explode(slice(col("rtoks"), lit(1), prefLen)).as("tok"))
-    val index = docs.select(col("doc_id").as("b_id"), col("n").as("b_n"),
-      posexplode(col("rtoks")).as(Seq("pos_b", "tok")))
-    // Both-prefix lemma (Bayardo et al. WWW'07): the FIRST shared token
-    // in the global rarity order sits inside BOTH sides' prefixes, so
-    // the index side only needs positions <= n_b - ceil(t*n_a) + 1;
-    // floor()+2 is the fp-safe slack, mirroring the probe side.
-    val bPrefixBound =
-      col("pos_b") + 1 <=
-        col("b_n") - floor(lit(threshold) * col("a_n")) + lit(2)
-    // The token key is LOW-CARDINALITY (a vocabulary, Zipf-headed) and
-    // the shuffled rows are tiny in bytes while the downstream pair
-    // enumeration is quadratic — exactly the shape AQE's byte-based
-    // coalescing funnels onto one thread (the round-10 q45/q57
-    // lesson). Salt the FULL-token index side by doc hash and
-    // replicate the PREFIX probe side across all salts — the probe
-    // explode is the (1-t)-fraction side, so replicating it costs
-    // ~(1-t)·chunks·Σ|doc| skinny rows where replicating the index
-    // would cost chunks·Σ|doc| — and pin a fixed-count repartition on
-    // (tok, salt) that AQE may not coalesce.
-    val probesS = probes
-      .withColumn("__salt", explode(sequence(lit(0), lit(chunks - 1))))
-      .repartition(nParts, col("tok"), col("__salt"))
-    val indexS = index
-      // the outer coalesce keeps this salt NON-NULLABLE (Pmod is
-      // nullable by type whatever its inputs — div-by-zero semantics
-      // — and a literal chunks >= 1 never trips it): same value for
-      // every row, but without it the join's inferred isnotnull(salt)
-      // pushes to the index-side SCAN only, making the two rarity-agg
-      // exchange subtrees canonically different — which is exactly
-      // what blocks the ReuseExchange sharing the comment above
-      // `docs` relies on.
-      .withColumn("__salt",
-        coalesce(pmod(xxhash64(col("b_id")), lit(chunks)), lit(0L))
-          .cast("int"))
-      .repartition(nParts, col("tok"), col("__salt"))
-    val candidates = probesS.join(indexS,
-        probesS("tok") === indexS("tok") &&
-          probesS("__salt") === indexS("__salt") && bPrefixBound &&
-          (col("a_n") < col("b_n") ||
-            (col("a_n") === col("b_n") && col("a_id") < col("b_id"))))
+    val candidates = candidateJoin(prefixProbes(docs, threshold),
+        postings(docs), "b_id", threshold, chunks, broadcastSmall = false)
       // a candidate surfaces once per shared prefix token; dedup the
       // skinny (a,b) pairs BEFORE attaching arrays and verifying, so
       // the merge scan runs once per pair, not once per occurrence
-      .select(col("a_id"), col("b_id"))
       .distinct()
     // verify-side arrays from the map-only tokenize subtree (one scan
     // each, no shuffle): same rows as the old docs join — rarity
     // membership is exactly size(th) > 0
-    val sorted = toks
+    verifyContainment(candidates, sortedTokens(toks), threshold)
+  }
+
+  /** Rarity order of each doc's tokens, from (doc_id, tok, tdf) rows:
+    * (tdf ASC, tok ASC) — struct array_sort is field-lexicographic,
+    * giving the identical total order everywhere. (doc_id, rtoks).
+    */
+  private def rarityOrdered(withTdf: DataFrame): DataFrame =
+    withTdf
+      .groupBy(col("doc_id"))
+      .agg(array_sort(collect_list(struct(col("tdf"), col("tok"))))
+        .as("rt"))
+      .select(col("doc_id"),
+        transform(col("rt"), s => s.getField("tok")).as("rtoks"))
+
+  /** Hash-sorted token arrays of the docs with at least one token —
+    * the verify side of both containment operators: (doc_id, stoks, n).
+    */
+  private def sortedTokens(toks: DataFrame): DataFrame =
+    toks
       .select(col("doc_id"), array_sort(col("th")).as("stoks"))
       .withColumn("n", size(col("stoks")))
       .filter(col("n") > 0)
-    val small = sorted.select(col("doc_id").as("a_id"), col("n").as("a_n"),
+
+  /** Prefix length at containment threshold t: the floor((1-t)·n)+2
+    * rarest tokens (+2 absorbs the double-threshold rounding — an
+    * over-long prefix only adds candidates, never drops pairs).
+    */
+  private def prefixLen(threshold: Double, n: Column): Column =
+    floor(lit(1.0 - threshold) * n) + lit(2)
+
+  /** Probe rows of the candidate join: each doc's prefix
+    * tokens, (a_id, a_n, tok), from (doc_id, n, rtoks) rows.
+    */
+  private def prefixProbes(docs: DataFrame, threshold: Double): DataFrame =
+    docs.select(col("doc_id").as("a_id"), col("n").as("a_n"),
+      explode(slice(col("rtoks"), lit(1),
+        prefixLen(threshold, col("n")).cast("int"))).as("tok"))
+
+  /** Posting rows of the candidate join: every token with its
+    * rarity position, (b_id, b_n, pos_b, tok), from (doc_id, n, rtoks).
+    */
+  private def postings(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id").as("b_id"), col("n").as("b_n"),
+      posexplode(col("rtoks")).as(Seq("pos_b", "tok")))
+
+  /** The prefix-filter candidate join of both containment operators:
+    * (a_id, b_id) pairs where a's prefix token meets b's posting, b's
+    * posting passes the both-prefix bound and a is the smaller doc
+    * (size, then id). One side carries the probe rows (a_id, a_n, tok)
+    * and the other the postings (b_id, b_n, pos_b, tok), in either
+    * order: `big` is the side that may be corpus sized, `bigId` its id
+    * column for the salt.
+    *
+    * Broadcast form: `small` broadcasts into a map-only scan of `big`.
+    * Shuffle form: the token key is LOW-CARDINALITY (a vocabulary,
+    * Zipf-headed) and the shuffled rows are tiny in bytes while the
+    * downstream pair enumeration is quadratic — exactly the shape
+    * AQE's byte-based coalescing funnels onto one thread (the
+    * round-10 q45/q57 lesson). So `big` is salted by its id hash,
+    * `small` — the (1-t)-fraction prefix side in the batch form, the
+    * small batch in the incremental one — is replicated across all
+    * salts, and both pin a fixed-count repartition on (tok, salt) that
+    * AQE may not coalesce.
+    */
+  private def candidateJoin(small: DataFrame, big: DataFrame,
+                            bigId: String, threshold: Double, chunks: Int,
+                            broadcastSmall: Boolean): DataFrame = {
+    // Both-prefix lemma (Bayardo et al. WWW'07): the FIRST shared token
+    // in the global rarity order sits inside BOTH sides' prefixes, so
+    // the index side only needs positions <= n_b - ceil(t*n_a) + 1;
+    // floor()+2 is the fp-safe slack, mirroring the probe side.
+    val bothPrefix =
+      col("pos_b") + 1 <=
+        col("b_n") - floor(lit(threshold) * col("a_n")) + lit(2)
+    val sizeOrder = col("a_n") < col("b_n") ||
+      (col("a_n") === col("b_n") && col("a_id") < col("b_id"))
+    val joined =
+      if (broadcastSmall)
+        big.join(broadcast(small),
+          big("tok") === small("tok") && bothPrefix && sizeOrder)
+      else {
+        val nParts = big.sparkSession.sessionState.conf.numShufflePartitions
+        val smallS = small
+          .withColumn("__salt", explode(sequence(lit(0), lit(chunks - 1))))
+          .repartition(nParts, col("tok"), col("__salt"))
+        val bigS = big
+          // the outer coalesce keeps this salt NON-NULLABLE (Pmod is
+          // nullable by type whatever its inputs — div-by-zero
+          // semantics — and a literal chunks >= 1 never trips it): same
+          // value for every row, but without it the join's inferred
+          // isnotnull(salt) pushes to the big-side SCAN only, making
+          // containmentPairs' two rarity-agg exchange subtrees
+          // canonically different — which is exactly what blocks the
+          // ReuseExchange sharing its `docs` comment relies on.
+          .withColumn("__salt",
+            coalesce(pmod(xxhash64(col(bigId)), lit(chunks)), lit(0L))
+              .cast("int"))
+          .repartition(nParts, col("tok"), col("__salt"))
+        smallS.join(bigS,
+          smallS("tok") === bigS("tok") &&
+            smallS("__salt") === bigS("__salt") && bothPrefix && sizeOrder)
+      }
+    joined.select(col("a_id"), col("b_id"))
+  }
+
+  /** The exact verify step of both containment operators: re-attach
+    * the hash-sorted arrays from `docs` (doc_id, n, stoks) to the
+    * deduplicated (a_id, b_id) candidates and keep the pairs with
+    * |A∩B| / |A| >= threshold. The codegen'd merge scan's containment
+    * early exit returns -1 once the target is out of reach, which makes
+    * the computed containment negative: pruned pairs self-filter.
+    */
+  private def verifyContainment(candidates: DataFrame, docs: DataFrame,
+                                threshold: Double): DataFrame = {
+    val small = docs.select(col("doc_id").as("a_id"), col("n").as("a_n"),
       col("stoks").as("a_toks"))
-    val big = sorted.select(col("doc_id").as("b_id"),
+    val big = docs.select(col("doc_id").as("b_id"),
       col("stoks").as("b_toks"))
     candidates
       .join(small, "a_id")
       .join(big, "b_id")
-      // codegen'd merge scan with containment-target early exit (the
-      // -1 abort makes the computed containment negative: self-filters)
       .withColumn("inter",
-        sortedIntersectAtLeastFracLeftLong(
-          col("a_toks"), col("b_toks"), threshold))
+        sortedIntersectAtLeast(col("a_toks"), col("b_toks"), threshold, 0.0))
       .withColumn("containment",
         col("inter").cast("double") / col("a_n").cast("double"))
       .filter(col("containment") >= threshold)
@@ -547,12 +606,7 @@ object Dedup {
     // read the materialized df table back rather than recomputing the
     // vocabulary aggregation inside the postings plan
     val dfreq = graft.Tables.readCached(corpus.sparkSession, path + "/dfreq")
-    val rarity = expl.join(dfreq, Seq("tok"))
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(struct(col("tdf"), col("tok"))))
-        .as("rt"))
-      .select(col("doc_id"),
-        transform(col("rt"), s => s.getField("tok")).as("rtoks"))
+    val rarity = rarityOrdered(expl.join(dfreq, Seq("tok")))
     // r22: the r21 checkpoint-shared docs table is gone with the q115
     // revert (same driver-ground-truth rationale — see
     // containmentPairs). The two write ACTIONS never needed a shared
@@ -568,10 +622,7 @@ object Dedup {
       .select(col("doc_id"), col("n"),
         posexplode(col("rtoks")).as(Seq("pos", "tok")))
       .write.mode("overwrite").parquet(path + "/postings")
-    toks
-      .select(col("doc_id"), array_sort(col("th")).as("stoks"))
-      .withColumn("n", size(col("stoks")))
-      .filter(col("n") > 0)
+    sortedTokens(toks)
       .select(col("doc_id"), col("n"), col("stoks"))
       .write.mode("overwrite").parquet(path + "/docs")
   }
@@ -608,9 +659,10 @@ object Dedup {
     * vocabulary-sized work is the tdf attach (one equi-join against
     * `dfreq` per batch). An oversized batch (someone replaying a month
     * as one "batch") degrades to the salted shuffle joins of
-    * [[containmentPairs]] instead of failing on the broadcast limit;
-    * `broadcastBatch` overrides the size estimate in either direction,
-    * same accountability contract as [[incrementalDedupIndexed]].
+    * [[containmentPairs]] instead of failing on the broadcast limit:
+    * the batch broadcasts exactly when its size estimate fits
+    * `spark.sql.autoBroadcastJoinThreshold`. Candidate join and verify
+    * are the batch form's own steps.
     *
     * Measured contract (PLANS.md "Round-20: incremental containment
     * dedup"): built for batches ≪ corpus — at a fixed 5 k-doc batch
@@ -623,9 +675,7 @@ object Dedup {
   def containmentProbeIncremental(index: ContainmentIndex,
                                   batch: DataFrame, id: Column,
                                   text: Column, threshold: Double,
-                                  chunks: Int = 32,
-                                  broadcastBatch: Option[Boolean] = None)
-      : DataFrame = {
+                                  chunks: Int = 32): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0,1], got $threshold")
     require(chunks >= 1, "chunks must be >= 1")
@@ -633,13 +683,8 @@ object Dedup {
     val expl = toks.select(col("doc_id"), explode(col("th")).as("tok"))
     // rarity order under the corpus's frozen statistics; unseen
     // tokens coalesce to tdf 0 (sort first, match nothing)
-    val rarity = expl.join(index.dfreq, Seq("tok"), "left")
-      .withColumn("tdf", coalesce(col("tdf"), lit(0L)))
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(struct(col("tdf"), col("tok"))))
-        .as("rt"))
-      .select(col("doc_id"),
-        transform(col("rt"), s => s.getField("tok")).as("rtoks"))
+    val rarity = rarityOrdered(expl.join(index.dfreq, Seq("tok"), "left")
+      .withColumn("tdf", coalesce(col("tdf"), lit(0L))))
     val bdocs = toks
       .select(col("doc_id"), array_sort(col("th")).as("stoks"))
       .join(rarity, "doc_id")
@@ -647,75 +692,29 @@ object Dedup {
       .filter(col("n") > 0)
     // size-gate on the compact per-doc frame (the exploded probe and
     // postings forms below are the same magnitude in bytes — one long
-    // per token either way)
+    // per token either way). Read through sessionState.conf: the typed
+    // accessor handles "-1" (broadcast disabled), which routes to the
+    // shuffle path.
     val bcThreshold: Long =
       batch.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    lazy val batchBytes =
-      bdocs.queryExecution.optimizedPlan.stats.sizeInBytes
-    val doBroadcast = broadcastBatch.getOrElse(
-      bcThreshold >= 0 && batchBytes <= bcThreshold)
-    val nParts =
-      batch.sparkSession.sessionState.conf.numShufflePartitions
-    val prefLen =
-      (floor(lit(1.0 - threshold) * col("n")) + lit(2)).cast("int")
+    val doBroadcast = bcThreshold >= 0 &&
+      bdocs.queryExecution.optimizedPlan.stats.sizeInBytes <= bcThreshold
     // ---- direction 1: batch doc is the SMALL side ----
     // batch prefixes probe the corpus postings; the index side's
     // positional bound is the both-prefix lemma, as in the batch form
-    val bprobe = bdocs.select(col("doc_id").as("a_id"),
-      col("n").as("a_n"),
-      explode(slice(col("rtoks"), lit(1), prefLen)).as("tok"))
     val cpost = index.postings.select(col("doc_id").as("b_id"),
       col("n").as("b_n"), col("pos").as("pos_b"), col("tok"))
-    val sizeOrder = col("a_n") < col("b_n") ||
-      (col("a_n") === col("b_n") && col("a_id") < col("b_id"))
-    val bBound = col("pos_b") + 1 <=
-      col("b_n") - floor(lit(threshold) * col("a_n")) + lit(2)
-    val cand1 =
-      if (doBroadcast)
-        cpost.join(broadcast(bprobe),
-          cpost("tok") === bprobe("tok") && bBound && sizeOrder)
-          .select(col("a_id"), col("b_id"))
-      else {
-        val cs = cpost
-          .withColumn("__salt",
-            pmod(xxhash64(col("b_id")), lit(chunks)).cast("int"))
-          .repartition(nParts, col("tok"), col("__salt"))
-        val bs = bprobe
-          .withColumn("__salt",
-            explode(sequence(lit(0), lit(chunks - 1))))
-          .repartition(nParts, col("tok"), col("__salt"))
-        cs.join(bs, cs("tok") === bs("tok") &&
-            cs("__salt") === bs("__salt") && bBound && sizeOrder)
-          .select(col("a_id"), col("b_id"))
-      }
+    val cand1 = candidateJoin(prefixProbes(bdocs, threshold), cpost,
+      "b_id", threshold, chunks, doBroadcast)
     // ---- direction 2: corpus doc is the SMALL side ----
     // the corpus probe prefixes are the pos-filtered subset of the
     // SAME postings scan (prefix length is the corpus doc's own
     // floor((1-t)·n)+2); the batch postings are the index side
     val cprobe = index.postings
-      .filter(col("pos") + 1 <=
-        floor(lit(1.0 - threshold) * col("n")) + lit(2))
+      .filter(col("pos") + 1 <= prefixLen(threshold, col("n")))
       .select(col("doc_id").as("a_id"), col("n").as("a_n"), col("tok"))
-    val bpost = bdocs.select(col("doc_id").as("b_id"),
-      col("n").as("b_n"), posexplode(col("rtoks")).as(Seq("pos_b", "tok")))
-    val cand2 =
-      if (doBroadcast)
-        cprobe.join(broadcast(bpost),
-          cprobe("tok") === bpost("tok") && bBound && sizeOrder)
-          .select(col("a_id"), col("b_id"))
-      else {
-        val cs = cprobe
-          .withColumn("__salt",
-            pmod(xxhash64(col("a_id")), lit(chunks)).cast("int"))
-          .repartition(nParts, col("tok"), col("__salt"))
-        val bs = bpost
-          .withColumn("__salt",
-            explode(sequence(lit(0), lit(chunks - 1))))
-          .repartition(nParts, col("tok"), col("__salt"))
-        cs.join(bs, cs("tok") === bs("tok") &&
-            cs("__salt") === bs("__salt") && bBound && sizeOrder)
-          .select(col("a_id"), col("b_id"))
-      }
+    val cand2 = candidateJoin(postings(bdocs), cprobe,
+      "a_id", threshold, chunks, doBroadcast)
     // the two directions are disjoint by the size order (an unordered
     // batch×corpus pair lands in exactly one), but each surfaces a
     // pair once per shared prefix token — dedup the skinny ids before
@@ -724,21 +723,7 @@ object Dedup {
     val lookup = bdocs.select(col("doc_id"), col("n"), col("stoks"))
       .unionByName(index.docs.select(col("doc_id"), col("n"),
         col("stoks")))
-    val small = lookup.select(col("doc_id").as("a_id"),
-      col("n").as("a_n"), col("stoks").as("a_toks"))
-    val big = lookup.select(col("doc_id").as("b_id"),
-      col("stoks").as("b_toks"))
-    candidates
-      .join(small, "a_id")
-      .join(big, "b_id")
-      .withColumn("inter",
-        sortedIntersectAtLeastFracLeftLong(
-          col("a_toks"), col("b_toks"), threshold))
-      .withColumn("containment",
-        col("inter").cast("double") / col("a_n").cast("double"))
-      .filter(col("containment") >= threshold)
-      .select(col("a_id").as("doc_small"), col("b_id").as("doc_big"),
-        col("containment"))
+    verifyContainment(candidates, lookup, threshold)
   }
 
   /** Stats-truncating eager local checkpoint, used once per round by

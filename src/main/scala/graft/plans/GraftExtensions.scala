@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-import graft.functions.expressions.{ChunkMd5, DotProduct, MultiMinHash, ShingleMd5, SortedIntersectAtLeastFracLeftLong, SortedIntersectAtLeastLong, SortedIntersectCount, SortedIntersectCountLong, TokenFingerprint, TokenPairs, WindowMd5}
+import graft.functions.expressions.{ChunkMd5, DotProduct, MultiMinHash, ShingleMd5, SortedIntersectAtLeast, TokenFingerprint, TokenPairs, WindowMd5}
 
 /** SQL-surface registration of the engine's custom expressions, so
   * `spark.sql("SELECT token_fingerprint(lower(text)) …")` works — and
@@ -102,17 +102,14 @@ object GraftExtensions {
       new ExpressionInfo(classOf[MultiMinHash].getName, "multi_min_hash"),
       arity("multi_min_hash", 3)(es => MultiMinHash(es.head,
         intLit("multi_min_hash", "numHashes", es, 1),
-        intLit("multi_min_hash", "seed", es, 2)))),
-    ("sorted_intersect_count",
-      new ExpressionInfo(classOf[SortedIntersectCount].getName,
-        "sorted_intersect_count"),
-      arity("sorted_intersect_count", 2)(es =>
-        SortedIntersectCount(es.head, es(1)))),
-    ("sorted_intersect_count_long",
-      new ExpressionInfo(classOf[SortedIntersectCountLong].getName,
-        "sorted_intersect_count_long"),
-      arity("sorted_intersect_count_long", 2)(es =>
-        SortedIntersectCountLong(es.head, es(1)))),
+        intLit("multi_min_hash", "shingleLen", es, 2)))),
+    ("sorted_intersect_at_least",
+      new ExpressionInfo(classOf[SortedIntersectAtLeast].getName,
+        "sorted_intersect_at_least"),
+      arity("sorted_intersect_at_least", 4)(es =>
+        SortedIntersectAtLeast(es.head, es(1),
+          doubleLit("sorted_intersect_at_least", "fracLeft", es, 2),
+          doubleLit("sorted_intersect_at_least", "fracRight", es, 3)))),
     ("token_fingerprint",
       new ExpressionInfo(classOf[TokenFingerprint].getName,
         "token_fingerprint"),
@@ -135,20 +132,6 @@ object GraftExtensions {
     ("token_pairs",
       new ExpressionInfo(classOf[TokenPairs].getName, "token_pairs"),
       arity("token_pairs", 1)(es => TokenPairs(es.head))),
-    ("sorted_intersect_at_least_long",
-      new ExpressionInfo(classOf[SortedIntersectAtLeastLong].getName,
-        "sorted_intersect_at_least_long"),
-      arity("sorted_intersect_at_least_long", 3)(es =>
-        SortedIntersectAtLeastLong(es.head, es(1),
-          doubleLit("sorted_intersect_at_least_long", "threshold", es, 2)))),
-    ("sorted_intersect_at_least_frac_left_long",
-      new ExpressionInfo(
-        classOf[SortedIntersectAtLeastFracLeftLong].getName,
-        "sorted_intersect_at_least_frac_left_long"),
-      arity("sorted_intersect_at_least_frac_left_long", 3)(es =>
-        SortedIntersectAtLeastFracLeftLong(es.head, es(1),
-          doubleLit("sorted_intersect_at_least_frac_left_long",
-            "threshold", es, 2)))),
     // ---- size-derived blocking dials as SQL scalars ----------------
     // The auto-dial flow q45/q57 use is two steps: (1) one stats agg,
     // (2) the blocked operator with the derived dial. The table

@@ -94,4 +94,27 @@ class CidEtlSpec extends SparkSpec {
       "B90-C05" -> Some("C00-D48"), "D40-E05" -> Some("C00-D48"),
       "A10-A20" -> Some("A00-B99"), "X00-X10" -> None))
   }
+
+  test("A2: a row with a block but no chapter counts as missing hierarchy") {
+    val dir = Files.createTempDirectory("cid_a2")
+    def write(name: String, lines: String*): Unit =
+      Files.write(dir.resolve(name),
+        lines.mkString("", "\n", "\n").getBytes(StandardCharsets.ISO_8859_1))
+    write("CID-10-CAPITULOS.csv", "NUMCAP;CATINIC;CATFIM;DESCRICAO",
+      "1;A00;B99;Infecciosas")
+    write("CID-10-GRUPOS.csv", "CATINIC;CATFIM;DESCRICAO",
+      "A00;A09;Intestinais", "X00;X10;no chapter")
+    write("CID-10-CATEGORIAS.csv", "CAT;DESCRICAO",
+      "A01;Febres tifoide", "X05;Outside every chapter")
+    write("CID-10-SUBCATEGORIAS.csv", "SUBCAT;DESCRICAO",
+      "A010;Febre tifoide", "X050;Block but no chapter")
+    val out = dir.resolve("out.csv").toString
+    val q = CidEtl.runFromDatasusDir(spark, dir.toString, out, clock)
+    val rows = readLines(out)._3
+    assert(q.total == 2)
+    // X05.0 lies in block X00-X10, which no chapter range covers
+    assert(rows.exists(l => l.startsWith("\"X05.0\";") && l.contains("\"X00-X10\"")),
+      rows.mkString("\n"))
+    assert(q.missingHierarchy == 1)
+  }
 }

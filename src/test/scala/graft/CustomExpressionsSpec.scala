@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.functions.expressions.CustomExpressions._
+import graft.functions.expressions.SortedIntersectAtLeast.sortedIntersectAtLeast
 import graft.functions.expressions.TokenFingerprint.tokenFingerprint
 
 /** The custom Catalyst expressions must be value-identical to the
@@ -42,6 +43,27 @@ class CustomExpressionsSpec extends SparkSpec {
     assert(custom.collect().toSeq == composed.collect().toSeq)
   }
 
+  /** Runs `body` under whole-stage codegen, then again with every
+    * expression evaluated interpreted (`nullSafeEval`, not `doGenCode`).
+    */
+  private def codegenAndInterpreted(body: String => Unit): Unit = {
+    body("codegen")
+    val keys = Seq("spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    val saved = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
+    keys.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body("interpreted")
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Tokens hashed to the sorted distinct long arrays the merge scan
+    * expects. */
+  private def hashedSorted(c: org.apache.spark.sql.Column) =
+    array_sort(transform(array_distinct(c), t => xxhash64(t)))
+
   test("SortedIntersectCount == size(array_intersect) on sorted distinct arrays") {
     val df = Seq(
       (Seq("a", "b", "c"), Seq("b", "c", "d")),
@@ -49,11 +71,45 @@ class CustomExpressionsSpec extends SparkSpec {
       (Seq("a"), Seq.empty[String]),
       (Seq("a", "b"), Seq("a", "b")),
       (Seq("中", "a"), Seq("中"))).toDF("x", "y")
-    val composed = df.select(
-      size(array_intersect(array_sort($"x"), array_sort($"y"))).as("n"))
-    val custom = df.select(
-      sortedIntersectCount(array_sort($"x"), array_sort($"y")).as("n"))
-    assert(custom.collect().toSeq == composed.collect().toSeq)
+      .select(hashedSorted($"x").as("x"), hashedSorted($"y").as("y"))
+    codegenAndInterpreted { mode =>
+      val composed = df.select(size(array_intersect($"x", $"y")).as("n"))
+      val custom = df.select(
+        sortedIntersectAtLeast($"x", $"y", 0.0, 0.0).as("n"))
+      assert(custom.collect().toSeq == composed.collect().toSeq, mode)
+    }
+    // and on random arrays: at fractions (0, 0) the scan never aborts
+    earlyExitPairs(5, Seq(Seq.empty[Long], Seq(1L, 2L, 3L)), 0.0, 0.0) {
+      (mode, pairs) =>
+        pairs.foreach(r =>
+          assert(r.getInt(1) == r.getInt(0), s"$mode: count differs: $r"))
+    }
+  }
+
+  /** Random sorted-distinct long arrays (plus `fixed` boundary cases),
+    * all ordered pairs, with the exact count `full` (built-in
+    * size(array_intersect)) beside the merge scan's `fast` at the given
+    * fractions and the two sizes — collected once per evaluation path.
+    */
+  private def earlyExitPairs(seed: Int, fixed: Seq[Seq[Long]],
+                             fracLeft: Double, fracRight: Double)(
+      check: (String, Seq[org.apache.spark.sql.Row]) => Unit): Unit = {
+    val rnd = new scala.util.Random(seed)
+    val arrays = (fixed ++
+      (1 to 40).map(_ =>
+        (1 to (1 + rnd.nextInt(30))).map(_ => rnd.nextInt(40).toLong)
+          .distinct.sorted.toSeq)).zipWithIndex
+    val df = arrays.map { case (a, i) => (i.toLong, a) }.toDF("id", "toks")
+    codegenAndInterpreted { mode =>
+      val pairs = df.as("a").crossJoin(df.as("b"))
+        .select(
+          size(array_intersect(col("a.toks"), col("b.toks"))).as("full"),
+          sortedIntersectAtLeast(col("a.toks"), col("b.toks"),
+            fracLeft, fracRight).as("fast"),
+          size(col("a.toks")).as("na"), size(col("b.toks")).as("nb"))
+        .collect().toSeq
+      check(mode, pairs)
+    }
   }
 
   test("DotProduct == aggregate(zip_with(cast)) fold, incl. null/length edges") {
@@ -225,63 +281,50 @@ class CustomExpressionsSpec extends SparkSpec {
 
   test("SortedIntersectAtLeastLong: codegen early exit never flips the threshold verdict") {
     // random sorted-distinct long arrays; for every pair the early-exit
-    // expression must (a) return the exact count whenever the pair
-    // qualifies at t, and (b) return a value that makes the computed
-    // jaccard < t whenever it doesn't — i.e. pruning can never change
-    // the qualify set. Includes boundary pairs at jaccard == t exactly
-    // (4-of-5 overlap at t = 0.8) and empty arrays.
-    val rnd = new scala.util.Random(7)
-    val arrays = (Seq(
-      Seq.empty[Long], Seq(1L, 2L, 3L, 4L), Seq(1L, 2L, 3L, 4L, 5L)) ++
-      (1 to 40).map(_ =>
-        (1 to (1 + rnd.nextInt(30))).map(_ => rnd.nextInt(40).toLong)
-          .distinct.sorted.toSeq)).zipWithIndex
+    // expression at the Jaccard fractions t/(1+t) must (a) return the
+    // exact count whenever the pair qualifies at t, and (b) return a
+    // value that makes the computed jaccard < t whenever it doesn't —
+    // i.e. pruning can never change the qualify set. Includes boundary
+    // pairs at jaccard == t exactly (4-of-5 overlap at t = 0.8) and
+    // empty arrays.
     val t = 0.8
-    val df = arrays.map { case (a, i) => (i.toLong, a) }.toDF("id", "toks")
-    val pairs = df.as("a").crossJoin(df.as("b"))
-      .select(col("a.id").as("ia"), col("b.id").as("ib"),
-        sortedIntersectCountLong(col("a.toks"), col("b.toks")).as("full"),
-        sortedIntersectAtLeastLong(col("a.toks"), col("b.toks"), t).as("fast"),
-        size(col("a.toks")).as("na"), size(col("b.toks")).as("nb"))
-      .collect()
-    pairs.foreach { r =>
-      val (full, fast) = (r.getInt(2), r.getInt(3))
-      val (na, nb) = (r.getInt(4), r.getInt(5))
-      def j(c: Int) = if (na + nb - c == 0) 1.0 else c.toDouble / (na + nb - c)
-      if (j(full) >= t)
-        assert(fast == full, s"qualifying pair lost: $r")
-      else
-        assert(fast == full || (fast == -1 && j(-1) < t), s"bad prune: $r")
+    earlyExitPairs(7,
+      Seq(Seq.empty[Long], Seq(1L, 2L, 3L, 4L), Seq(1L, 2L, 3L, 4L, 5L)),
+      t / (1 + t), t / (1 + t)) { (mode, pairs) =>
+      pairs.foreach { r =>
+        val (full, fast) = (r.getInt(0), r.getInt(1))
+        val (na, nb) = (r.getInt(2), r.getInt(3))
+        def j(c: Int) =
+          if (na + nb - c == 0) 1.0 else c.toDouble / (na + nb - c)
+        if (j(full) >= t)
+          assert(fast == full, s"$mode: qualifying pair lost: $r")
+        else
+          assert(fast == full || (fast == -1 && j(-1) < t),
+            s"$mode: bad prune: $r")
+      }
+      assert(pairs.exists(_.getInt(1) == -1), s"$mode: early exit never fired")
     }
-    assert(pairs.exists(r => r.getInt(3) == -1), "early exit never fired")
   }
 
   test("SortedIntersectAtLeastFracLeftLong: containment early exit never flips the verdict") {
-    // same contract as the jaccard variant, but the target is
+    // same contract at the containment fractions (t, 0): the target is
     // inter >= t * |left| (asymmetric containment). Boundary pairs at
     // containment == t exactly (9-of-10 at t = 0.9) included.
-    val rnd = new scala.util.Random(11)
-    val arrays = (Seq(
-      Seq.empty[Long], (1L to 10L).toSeq, (1L to 9L) :+ 42L) ++
-      (1 to 40).map(_ =>
-        (1 to (1 + rnd.nextInt(30))).map(_ => rnd.nextInt(40).toLong)
-          .distinct.sorted.toSeq)).zipWithIndex
     val t = 0.9
-    val df = arrays.map { case (a, i) => (i.toLong, a) }.toDF("id", "toks")
-    val pairs = df.as("a").crossJoin(df.as("b"))
-      .select(
-        sortedIntersectCountLong(col("a.toks"), col("b.toks")).as("full"),
-        sortedIntersectAtLeastFracLeftLong(
-          col("a.toks"), col("b.toks"), t).as("fast"),
-        size(col("a.toks")).as("na"))
-      .collect()
-    pairs.foreach { r =>
-      val (full, fast, na) = (r.getInt(0), r.getInt(1), r.getInt(2))
-      def c(x: Int) = if (na == 0) 1.0 else x.toDouble / na
-      if (c(full) >= t) assert(fast == full, s"qualifying pair lost: $r")
-      else assert(fast == full || (fast == -1 && c(-1) < t), s"bad prune: $r")
+    earlyExitPairs(11,
+      Seq(Seq.empty[Long], (1L to 10L).toSeq, (1L to 9L) :+ 42L),
+      t, 0.0) { (mode, pairs) =>
+      pairs.foreach { r =>
+        val (full, fast, na) = (r.getInt(0), r.getInt(1), r.getInt(2))
+        def c(x: Int) = if (na == 0) 1.0 else x.toDouble / na
+        if (c(full) >= t)
+          assert(fast == full, s"$mode: qualifying pair lost: $r")
+        else
+          assert(fast == full || (fast == -1 && c(-1) < t),
+            s"$mode: bad prune: $r")
+      }
+      assert(pairs.exists(_.getInt(1) == -1), s"$mode: early exit never fired")
     }
-    assert(pairs.exists(r => r.getInt(1) == -1), "early exit never fired")
   }
 
   test("BoundedTopK == row_number window prefix, incl. ties/short groups/nulls") {

@@ -11,7 +11,10 @@ class GraftExtensionsSpec extends SparkSpec {
       """SELECT
         |  token_fingerprint('b a b') AS fp,
         |  md5('a b') AS expected_fp,
-        |  sorted_intersect_count(array('a','b','c'), array('b','c','d')) AS n,
+        |  sorted_intersect_at_least(
+        |    array_sort(transform(array('a','b','c'), t -> xxhash64(t))),
+        |    array_sort(transform(array('b','c','d'), t -> xxhash64(t))),
+        |    0D, 0D) AS n,
         |  element_at(multi_min_hash(array('x','y','z'), 2, 3), 1) AS m0,
         |  md5('0:x y z') AS expected_m0,
         |  dot_product(array(1.0F, 2.0F), array(3.0F, 4.0F)) AS dp,
@@ -44,14 +47,14 @@ class GraftExtensionsSpec extends SparkSpec {
     GraftExtensions.register(spark)
     val row = spark.sql(
       """SELECT
-        |  sorted_intersect_at_least_long(
-        |    array(1L,2L,3L,4L), array(2L,3L,4L,5L), 0.5D) AS j_pass,
-        |  sorted_intersect_at_least_long(
-        |    array(1L,2L,3L,4L), array(9L,10L,11L,12L), 0.5D) AS j_prune,
-        |  sorted_intersect_at_least_frac_left_long(
-        |    array(2L,3L,4L), array(1L,2L,3L,4L,5L), 0.9D) AS c_pass,
-        |  sorted_intersect_at_least_frac_left_long(
-        |    array(1L,2L,9L), array(3L,4L,5L,6L,7L), 0.9D) AS c_prune
+        |  sorted_intersect_at_least(array(1L,2L,3L,4L),
+        |    array(2L,3L,4L,5L), 0.5D / 1.5D, 0.5D / 1.5D) AS j_pass,
+        |  sorted_intersect_at_least(array(1L,2L,3L,4L),
+        |    array(9L,10L,11L,12L), 0.5D / 1.5D, 0.5D / 1.5D) AS j_prune,
+        |  sorted_intersect_at_least(
+        |    array(2L,3L,4L), array(1L,2L,3L,4L,5L), 0.9D, 0D) AS c_pass,
+        |  sorted_intersect_at_least(
+        |    array(1L,2L,9L), array(3L,4L,5L,6L,7L), 0.9D, 0D) AS c_prune
         |""".stripMargin).collect()(0)
     assert(row.getAs[Int]("j_pass") == 3)   // jaccard 3/5 >= 0.5, exact
     assert(row.getAs[Int]("j_prune") == -1) // disjoint -> early exit
@@ -66,10 +69,10 @@ class GraftExtensionsSpec extends SparkSpec {
     // misleading "non-foldable argument"
     val row = spark.sql(
       """SELECT
-        |  sorted_intersect_at_least_long(
-        |    array(1L,2L,3L,4L), array(2L,3L,4L,5L), 0.5) AS j,
-        |  sorted_intersect_at_least_frac_left_long(
-        |    array(2L,3L,4L), array(1L,2L,3L,4L,5L), 0.9) AS c
+        |  sorted_intersect_at_least(array(1L,2L,3L,4L),
+        |    array(2L,3L,4L,5L), 0.5 / 1.5, 0.5 / 1.5) AS j,
+        |  sorted_intersect_at_least(
+        |    array(2L,3L,4L), array(1L,2L,3L,4L,5L), 0.9, 0) AS c
         |""".stripMargin).collect()(0)
     assert(row.getAs[Int]("j") == 3)
     assert(row.getAs[Int]("c") == 3)
@@ -95,18 +98,24 @@ class GraftExtensionsSpec extends SparkSpec {
         .collect()
     }
     assert(nul.getMessage.contains("multi_min_hash"))
+    // non-foldable shingle length: the message names that parameter
+    val shingle = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql(
+        "SELECT multi_min_hash(array(c), 2, length(c)) FROM VALUES ('ab') t(c)")
+        .collect()
+    }
+    assert(shingle.getMessage.contains("multi_min_hash") &&
+      shingle.getMessage.contains("shingleLen"), shingle.getMessage)
   }
 
   test("extensions class injects the same functions at session build") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext) // must not throw; builders wired
     assert(GraftExtensions.functions.map(_._1).toSet ==
-      Set("multi_min_hash", "sorted_intersect_count",
-          "sorted_intersect_count_long", "token_fingerprint",
+      Set("multi_min_hash", "sorted_intersect_at_least",
+          "token_fingerprint",
           "dot_product", "shingle_md5", "chunk_md5", "window_md5",
           "token_pairs",
-          "sorted_intersect_at_least_long",
-          "sorted_intersect_at_least_frac_left_long",
           "graft_length_bucket_width", "graft_sign_bits"))
   }
 }

@@ -413,14 +413,26 @@ class OperatorsSpec extends SparkSpec {
       .createTempDirectory("graft_cidx_spec").toString
     Dedup.writeContainmentIndex(corpus, $"doc_id", $"text", path)
     val idx = Dedup.readContainmentIndex(spark, path)
-    for (t <- Seq(0.5, 0.9); bc <- Seq(Some(true), Some(false))) {
-      val got = Dedup.containmentProbeIncremental(idx, batch,
-          $"doc_id", $"text", t, chunks = 3, broadcastBatch = bc)
-        .as[(Long, Long, Double)].collect().toSet
+    // both arms through the session threshold: the default broadcasts
+    // the batch, -1 (broadcast disabled) takes the salted shuffle joins
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    for (t <- Seq(0.5, 0.9); bc <- Seq(None, Some("-1"))) {
+      val saved = spark.conf.getOption(key)
+      bc.foreach(spark.conf.set(key, _))
+      val (got, salted) = try {
+        val probe = Dedup.containmentProbeIncremental(idx, batch,
+          $"doc_id", $"text", t, chunks = 3)
+        (probe.as[(Long, Long, Double)].collect().toSet,
+          probe.queryExecution.executedPlan.toString.contains("__salt"))
+      } finally saved match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+      assert(salted == bc.isDefined, s"t=$t threshold=$bc: wrong arm")
       val want = Dedup.containmentPairs(all, $"doc_id", $"text", t)
         .filter(($"doc_small" % 4 === 0) =!= ($"doc_big" % 4 === 0))
         .as[(Long, Long, Double)].collect().toSet
-      assert(got == want, s"t=$t broadcastBatch=$bc")
+      assert(got == want, s"t=$t threshold=$bc")
       if (t == 0.9) {
         val pairs = got.map(p => (p._1, p._2))
         assert(pairs.contains((12L, 5L)) || pairs.contains((5L, 12L)),

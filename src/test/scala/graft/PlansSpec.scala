@@ -78,7 +78,7 @@ class PlansSpec extends SparkSpec {
     // the size-ratio prefilter + sorted-hash intersect must be part
     // of the join itself so non-qualifying pairs die in the join
     val joinLines = p.linesIterator.filter(_.contains("Join")).toSeq
-    assert(joinLines.exists(_.contains("sorted_intersect_at_least_long")),
+    assert(joinLines.exists(_.contains("sorted_intersect_at_least(")),
       s"intersect threshold left the join condition:\n$p")
     // the adjacency bucket must be an EQUI key (left of the condition
     // list), not a filter — that's what skips non-adjacent candidates
@@ -138,7 +138,7 @@ class PlansSpec extends SparkSpec {
     salted.foreach(l => assert(!l.contains("toks"),
       s"token arrays back in the salted candidate exchange:\n$l"))
     // the codegen'd containment merge scan still gates the output
-    assert(p.contains("sorted_intersect_at_least_frac_left_long"),
+    assert(p.contains("sorted_intersect_at_least("),
       s"codegen'd containment verify missing:\n$p")
     // r22: the 4-consumer recompute is cut structurally, not by a
     // materialization — the probe and index branches share the rarity
@@ -172,7 +172,7 @@ class PlansSpec extends SparkSpec {
     assert(!p.contains("SortMergeJoin"),
       s"corpus side sort-merge-joined:\n$p")
     // the codegen'd containment merge scan still gates the output
-    assert(p.contains("sorted_intersect_at_least_frac_left_long"),
+    assert(p.contains("sorted_intersect_at_least("),
       s"codegen'd containment verify missing:\n$p")
   }
 
