@@ -8,23 +8,16 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
 
 /** All `numHashes` MinHash digests over the word `shingleLen`-gram
-  * shingles of a token array, in ONE pass.
-  *
-  * Semantically identical to composing shingles(tokens, n) with
-  * `(0 until k).map(s => array_min(transform(sh, x => md5(concat(s,":",x)))))`
-  * — the shingle string is the " "-joined token window, the digest
-  * input is "<seed>:<shingle>" UTF-8, the result per seed is the
-  * lexicographic-min lowercase-hex digest — but an order of magnitude
-  * faster: the composed form materializes every shingle string and
-  * re-walks the array per seed with interpreted higher-order lambdas,
-  * while this builds each shingle's bytes once in a reused buffer,
-  * reuses one MessageDigest, and compares raw digest bytes (hex order
-  * == unsigned byte order, so the min is identical).
+  * shingles of a token array, in ONE pass: per seed `s`,
+  * `array_min(transform(shinglesOf(t, n), x -> md5(concat(s, ':', x))))`
+  * (`TextFunctions.minhashHex ∘ shinglesOf`). Each shingle is built
+  * once by the [[TokenWindows]] kernel and hashed per seed with one
+  * reused MessageDigest; minima compare raw digest bytes (hex order ==
+  * unsigned byte order, so the min is identical).
   *
   * Output: array<string> of `numHashes` hex minima (null iff the token
   * array is null; fewer than `shingleLen` tokens → array of nulls,
@@ -32,6 +25,9 @@ import org.apache.spark.sql.graftbridge.{toColumn, toExpression}
   */
 case class MultiMinHash(child: Expression, numHashes: Int, shingleLen: Int)
     extends UnaryExpression with CodegenFallback {
+
+  TokenWindows.requirePositive("numHashes", numHashes)
+  TokenWindows.requirePositive("shingleLen", shingleLen)
 
   override def dataType: DataType =
     ArrayType(StringType, containsNull = true)
@@ -43,42 +39,23 @@ case class MultiMinHash(child: Expression, numHashes: Int, shingleLen: Int)
       .map(s => s"$s:".getBytes(StandardCharsets.UTF_8)).toArray
 
   override protected def nullSafeEval(input: Any): Any = {
-    val arr = input.asInstanceOf[ArrayData]
-    val n = arr.numElements()
     val md = MessageDigest.getInstance("MD5")
-    val mins = Array.fill[Array[Byte]](numHashes)(null)
-    val toks = new Array[Array[Byte]](n)
-    var i = 0
-    while (i < n) {
-      toks(i) = if (arr.isNullAt(i)) Array.emptyByteArray
-                else arr.getUTF8String(i).getBytes
-      i += 1
-    }
-    val buf = new java.io.ByteArrayOutputStream(256)
-    i = 0
-    while (i <= n - shingleLen) {
-      buf.reset()
-      var w = 0
-      while (w < shingleLen) {
-        if (w > 0) buf.write(' ')
-        buf.write(toks(i + w), 0, toks(i + w).length)
-        w += 1
-      }
-      val shingle = buf.toByteArray
+    val mins = new Array[Array[Byte]](numHashes)
+    TokenWindows.walk(input.asInstanceOf[ArrayData], shingleLen, 1,
+        partialTail = false) { (_, buf, len) =>
       var s = 0
       while (s < numHashes) {
         md.reset()
         md.update(seedPrefixes(s))
-        md.update(shingle)
+        md.update(buf, 0, len)
         val digest = md.digest()
         if (mins(s) == null || unsignedLess(digest, mins(s)))
           mins(s) = digest
         s += 1
       }
-      i += 1
     }
     new GenericArrayData(mins.map { d =>
-      if (d == null) null else UTF8String.fromString(hex(d))
+      if (d == null) null else TokenWindows.hex(d)
     }.asInstanceOf[Array[Any]])
   }
 
@@ -91,17 +68,6 @@ case class MultiMinHash(child: Expression, numHashes: Int, shingleLen: Int)
       i += 1
     }
     false
-  }
-
-  private def hex(bytes: Array[Byte]): String = {
-    val sb = new java.lang.StringBuilder(32)
-    var i = 0
-    while (i < bytes.length) {
-      sb.append(Character.forDigit((bytes(i) >> 4) & 0xf, 16))
-      sb.append(Character.forDigit(bytes(i) & 0xf, 16))
-      i += 1
-    }
-    sb.toString
   }
 
   override protected def withNewChildInternal(newChild: Expression): MultiMinHash =

@@ -68,15 +68,7 @@ case class TokenFingerprint(child: Expression)
       md.update(it.next())
       first = false
     }
-    val digest = md.digest()
-    val sb = new java.lang.StringBuilder(32)
-    i = 0
-    while (i < digest.length) {
-      sb.append(Character.forDigit((digest(i) >> 4) & 0xf, 16))
-      sb.append(Character.forDigit(digest(i) & 0xf, 16))
-      i += 1
-    }
-    UTF8String.fromString(sb.toString)
+    TokenWindows.hex(md.digest())
   }
 
   override protected def withNewChildInternal(newChild: Expression): TokenFingerprint =

@@ -27,10 +27,8 @@ object Decontaminate {
     * Documents shorter than `n` tokens surface with n_grams = 0
     * (explode_outer keeps them; the null gram row counts as nothing).
     *
-    * Shingle+hash runs through the one-pass ShingleMd5 expression:
-    * the composed md5∘explode∘array_distinct∘shingles form pays the
-    * interpreted higher-order transform per element (measured 13×
-    * slower on this exact scan — see ShingleMd5's docs).
+    * Shingle+hash runs through the one-pass ShingleMd5 expression
+    * (why: see the TokenWindows kernel's docs).
     */
   def overlap(corpus: DataFrame, evalSet: DataFrame, id: String,
               text: String, n: Int): DataFrame = {

@@ -106,57 +106,40 @@ object Dedup {
     *
     * Scale posture: the corpus side is index-shaped — its banded
     * bucket rows are map-only to compute, and in production are
-    * materialized ONCE via `writeBucketIndex` and probed per batch via
-    * `incrementalDedupIndexed` (measured at sf1: probe-only 2.1 s vs
-    * recompute-per-batch 10.4 s — the index scan is ~100× cheaper
-    * than signature recompute, break-even after two batches; PLANS.md
-    * "Round-14: q109 index materialized"). Recomputing here keeps the
-    * oracled query self-contained. The day's batch buckets BROADCAST
-    * into the base probe, so the 100 TB side is a map-only scan with
-    * zero shuffle; only the hit set (bounded by |delta| × bands) and
-    * the batch-internal self-join shuffle.
+    * materialized ONCE (`bandedBuckets(...)` written as parquet) and
+    * probed per batch via `incrementalDedupIndexed` (measured at sf1:
+    * probe-only 2.1 s vs recompute-per-batch 10.4 s — the index scan
+    * is ~100× cheaper than signature recompute, break-even after two
+    * batches; PLANS.md "Round-14: q109 index materialized").
+    * Recomputing here keeps the oracled query self-contained. The
+    * day's batch buckets are the small side, so the planner broadcasts
+    * them into the base probe whenever they fit the session's
+    * `autoBroadcastJoinThreshold`: the 100 TB side is then a map-only
+    * scan with zero shuffle, and only the hit set (bounded by
+    * |delta| × bands) and the batch-internal self-join shuffle. An
+    * oversized batch, or a disabled threshold (-1), degrades to a
+    * shuffled join on (band, sig).
     */
   def incrementalDedup(base: DataFrame, delta: DataFrame,
                        id: Column, text: Column,
                        numHashes: Int, bands: Int,
-                       shingleLen: Int = 3,
-                       broadcastBatch: Option[Boolean] = None): DataFrame =
+                       shingleLen: Int = 3): DataFrame =
     incrementalDedupIndexed(
       bandedBuckets(base, id, text, numHashes, bands, shingleLen),
-      delta, id, text, numHashes, bands, shingleLen, broadcastBatch)
-
-  /** Materialize the corpus's banded bucket rows once — the
-    * production shape of the incremental path: the standing corpus's
-    * minhash pipeline runs at ingest (or one backfill), and every
-    * daily batch probes the INDEX, never re-reading corpus text.
-    * Plain parquet, no layout requirement: in the probe join the
-    * index side is a map-only scan (the batch broadcasts into it),
-    * so no partitioning of the index can be exploited anyway.
-    */
-  def writeBucketIndex(base: DataFrame, id: Column, text: Column,
-                       numHashes: Int, bands: Int, path: String,
-                       shingleLen: Int = 3): Unit =
-    bandedBuckets(base, id, text, numHashes, bands, shingleLen)
-      .write.mode("overwrite").parquet(path)
-
-  /** Read a `writeBucketIndex` layout back as the base side of
-    * `incrementalDedupIndexed`.
-    */
-  def readBucketIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String): DataFrame =
-    graft.Tables.readCached(spark, path)
+      delta, id, text, numHashes, bands, shingleLen)
 
   /** `incrementalDedup` against an already-computed corpus bucket
-    * index (from `writeBucketIndex`/`readBucketIndex`, or any frame
-    * with (doc_id, band, sig) rows). The batch's buckets are computed
-    * fresh — the batch is the small, new side — and probe the index.
+    * index: any frame with (doc_id, band, sig) rows, typically
+    * `bandedBuckets` of the corpus written once as plain parquet and
+    * read back with `Tables.readCached`. No layout helps: the index
+    * side is a map-only scan that the batch broadcasts into. The
+    * batch's buckets are computed fresh — the batch is the small, new
+    * side — and probe the index.
     */
   def incrementalDedupIndexed(baseBk: DataFrame, delta: DataFrame,
                               id: Column, text: Column,
                               numHashes: Int, bands: Int,
-                              shingleLen: Int = 3,
-                              broadcastBatch: Option[Boolean] = None)
-      : DataFrame = {
+                              shingleLen: Int = 3): DataFrame = {
     // r21 note: checkpointing these batch bucket rows (three
     // consumers: the index probe + both sides of the batch-internal
     // self-join) was tried and REVERTED — the LogicalRDD barrier
@@ -168,37 +151,8 @@ object Dedup {
     // extra map-only passes.
     val deltaBk = bandedBuckets(delta, id, text, numHashes, bands,
       shingleLen)
-    // Broadcast the delta buckets only when Catalyst's size estimate
-    // says they fit the session's broadcast threshold; an oversized
-    // "batch" (someone reprocessing a month at once) then degrades to
-    // a shuffled hash join on (band, sig) instead of failing on the
-    // driver/broadcast limit. conf "-1" (broadcast disabled) also
-    // routes to the shuffle path.
-    // Read through sessionState.conf, not a raw string parse:
-    // JavaUtils.byteStringAsBytes rejects "-1" (the standard value for
-    // "broadcast disabled"), so parsing the string here would crash
-    // exactly when the user asked for the shuffle path. The typed
-    // accessor returns Long and handles -1.
-    // `broadcastBatch` overrides the estimate in either direction:
-    // stats on a freshly-computed bucket frame are estimates, and a
-    // pathological misestimate must not broadcast an oversized batch
-    // (Some(false)) or shuffle a tiny one (Some(true)) — the operator,
-    // not the planner, is accountable for the degrade path.
-    val bcThreshold: Long =
-      baseBk.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
-    lazy val deltaBytes =
-      deltaBk.queryExecution.optimizedPlan.stats.sizeInBytes
-    val doBroadcast = broadcastBatch.getOrElse(
-      bcThreshold >= 0 && deltaBytes <= bcThreshold)
-    val probeSide =
-      if (doBroadcast) broadcast(deltaBk.as("d"))
-      else if (broadcastBatch.contains(false))
-        // an explicit opt-out must beat the planner's auto-broadcast,
-        // not just drop the hint — pin the shuffled hash join
-        deltaBk.as("d").hint("shuffle_hash")
-      else deltaBk.as("d")
     val baseHits = baseBk.as("b")
-      .join(probeSide, Seq("band", "sig"))
+      .join(deltaBk.as("d"), Seq("band", "sig"))
       .groupBy(col("d.doc_id").as("doc_id"))
       .agg(min(col("b.doc_id")).as("base_match"))
     val deltaHits = deltaBk.as("d")
@@ -593,9 +547,9 @@ object Dedup {
     *    the exact-verify merge scan.
     * One-time offline build (three actions re-scan the corpus text —
     * a backfill cost, not a per-batch one); plain unpartitioned
-    * parquet, same rationale as [[writeBucketIndex]]: the batch side
-    * broadcasts into the probe joins, so no index layout could be
-    * exploited anyway.
+    * parquet, same rationale as [[incrementalDedupIndexed]]'s bucket
+    * index: the batch side broadcasts into the probe joins, so no
+    * index layout could be exploited anyway.
     */
   def writeContainmentIndex(corpus: DataFrame, id: Column, text: Column,
                             path: String): Unit = {

@@ -404,7 +404,8 @@ object Similarity {
 
   /** Materialized IVF index: the corpus assigned to its nearest
     * centroid and written partitioned by `list_id` — the embedding
-    * analog of `Dedup.writeBucketIndex`'s materialized dedup index.
+    * analog of the materialized dedup bucket index that
+    * `Dedup.incrementalDedupIndexed` probes.
     * The k-means and the full-corpus assignment scan are paid ONCE,
     * offline; every later query batch probes the layout read-only.
     *

@@ -315,9 +315,8 @@ object AnalyticsQueries extends Catalog {
     // at least one other doc. The explode -> groupBy(hash) -> join-back
     // shape is the standard boilerplate-detection pass at corpus scale:
     // two shuffles, both on the chunk hash, no all-pairs anything.
-    // Chunk+hash runs through the one-pass ChunkMd5 expression (the
-    // composed transform/slice form pays the interpreted higher-order
-    // lambda on the explode path — see ShingleMd5's docs).
+    // Chunk+hash runs through the one-pass ChunkMd5 expression (why:
+    // see the TokenWindows kernel's docs).
     Q("q78_chunk_dedup",
       (s, dir) => {
         val chunks = Tables.load(s, dir, "documents")

@@ -216,6 +216,14 @@ class CustomExpressionsSpec extends SparkSpec {
       graft.functions.expressions.ChunkMd5.chunkMd5($"toks", W).as("hs"))
       .orderBy($"id").collect().toSeq
     assert(customChunk == composedChunk)
+
+    val sh = TextFunctions.shinglesOf($"toks", 2)
+    val composedMinHash = df.select($"id",
+      array((0 until 2).map(s => TextFunctions.minhashHex(sh, s)): _*)
+        .as("sig")).orderBy($"id").collect().toSeq
+    val customMinHash = df.select($"id", multiMinHash($"toks", 2, 2).as("sig"))
+      .orderBy($"id").collect().toSeq
+    assert(customMinHash == composedMinHash)
   }
 
   test("ChunkMd5 == md5 over stride-window transform composition") {

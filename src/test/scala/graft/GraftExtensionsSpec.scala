@@ -108,6 +108,25 @@ class GraftExtensionsSpec extends SparkSpec {
       shingle.getMessage.contains("shingleLen"), shingle.getMessage)
   }
 
+  test("window widths and seed counts below 1 fail at construction, " +
+      "naming the parameter") {
+    GraftExtensions.register(spark)
+    val cases = Seq(
+      "chunk_md5(t, 0)" -> "chunkLen",
+      "chunk_md5(t, -1)" -> "chunkLen",
+      "shingle_md5(t, 0)" -> "shingleLen",
+      "window_md5(t, 0)" -> "windowLen",
+      "multi_min_hash(t, 0, 2)" -> "numHashes",
+      "multi_min_hash(t, 2, 0)" -> "shingleLen")
+    for ((call, param) <- cases) {
+      val e = intercept[Exception] {
+        spark.sql(s"SELECT $call FROM VALUES (array('a', 'b')) AS v(t)")
+          .collect()
+      }
+      assert(e.getMessage.contains(s"$param must be >= 1"), s"$call: $e")
+    }
+  }
+
   test("extensions class injects the same functions at session build") {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new GraftExtensions().apply(ext) // must not throw; builders wired

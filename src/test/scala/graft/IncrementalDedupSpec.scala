@@ -55,9 +55,9 @@ class IncrementalDedupSpec extends SparkSpec {
       "verdicts to recompute-per-batch") {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_bkidx").toString
-    Dedup.writeBucketIndex(base, $"doc_id", $"text",
-      numHashes = 8, bands = 4, path = dir)
-    val idx = Dedup.readBucketIndex(spark, dir)
+    Dedup.bandedBuckets(base, $"doc_id", $"text", numHashes = 8, bands = 4)
+      .write.mode("overwrite").parquet(dir)
+    val idx = Tables.readCached(spark, dir)
     assert(idx.columns.sorted.toSeq == Seq("band", "doc_id", "sig"))
     val indexed = Dedup
       .incrementalDedupIndexed(idx, delta, $"doc_id", $"text", 8, 4)
@@ -80,36 +80,6 @@ class IncrementalDedupSpec extends SparkSpec {
     assert(scanLines.nonEmpty, "no index scan in plan")
     assert(scanLines.forall(l => !l.contains("text")),
       s"index scan read corpus text:\n${scanLines.mkString("\n")}")
-  }
-
-  test("broadcastBatch=Some(false) forces the shuffle path even when " +
-      "stats would broadcast") {
-    val out = Dedup.incrementalDedup(base, delta, $"doc_id", $"text", 8, 4,
-      broadcastBatch = Some(false))
-    val rows = out.select($"doc_id", $"is_new")
-      .as[(Long, Boolean)].collect().toMap
-    assert(rows(10L) == false && rows(11L) == true) // same verdicts
-    // the base-probe join must be the pinned shuffled hash join (the
-    // small delta SELF-join may still auto-broadcast — that one is not
-    // the 100 TB-side concern)
-    assert(out.queryExecution.executedPlan.toString
-      .contains("ShuffledHashJoin"), out.queryExecution.executedPlan)
-  }
-
-  test("broadcastBatch=Some(true) forces broadcast even when the " +
-      "session threshold disables it") {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "-1")
-      val out = Dedup.incrementalDedup(base, delta, $"doc_id", $"text", 8, 4,
-        broadcastBatch = Some(true))
-      val rows = out.select($"doc_id", $"is_new")
-        .as[(Long, Boolean)].collect().toMap
-      assert(rows(10L) == false && rows(11L) == true)
-      assert(out.queryExecution.executedPlan.toString
-        .contains("BroadcastHashJoin"))
-    } finally spark.conf.set(key, saved)
   }
 
   test("autoBroadcastJoinThreshold=-1 (broadcast disabled) degrades to " +

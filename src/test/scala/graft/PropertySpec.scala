@@ -293,6 +293,43 @@ class PropertySpec extends SparkSpec {
     }
   }
 
+  test("token-window expressions equal their built-in compositions on " +
+      "random arrays with null and empty elements") {
+    import graft.functions.TextFunctions.{minhashHex, shinglesOf}
+    import graft.functions.expressions.{ChunkMd5, ShingleMd5, WindowMd5}
+    import graft.functions.expressions.CustomExpressions.multiMinHash
+    val tok: Gen[String] = Gen.frequency(
+      1 -> Gen.const(null), 1 -> Gen.const(""),
+      6 -> Gen.oneOf("aa", "bb", "cc", "é", "中"))
+    val arrays = Gen.listOfN(12,
+      Gen.choose(0, 12).flatMap(len => Gen.listOfN(len, tok)))
+    forAllSamples(Gen.zip(arrays, Gen.choose(1, 5), Gen.choose(1, 4)),
+        n = 10) { case (toks, w, k) =>
+      val df = toks.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+        .toDF("id", "toks")
+      val t = $"toks"
+      val sh = shinglesOf(t, w)
+      val empty = array().cast("array<string>")
+      // q78's stride form is only defined on non-empty arrays
+      // (sequence(0, -1) counts down), so an empty array is guarded
+      val chunks = when(size(t) > 0,
+        transform(sequence(lit(0), floor((size(t) - 1) / lit(w)).cast("int")),
+          i => md5(concat_ws(" ", slice(t, i * w + 1, lit(w))))))
+        .otherwise(empty)
+      val got = df.select($"id",
+        ShingleMd5.shingleMd5(t, w), WindowMd5.windowMd5(t, w),
+        ChunkMd5.chunkMd5(t, w), multiMinHash(t, k, w))
+        .orderBy($"id").collect().toSeq
+      val want = df.select($"id",
+        transform(array_distinct(sh), g => md5(g)),
+        transform(sh, g => md5(g)),
+        chunks,
+        array((0 until k).map(s => minhashHex(sh, s)): _*))
+        .orderBy($"id").collect().toSeq
+      assert(got == want, s"width $w, $k hashes, arrays $toks")
+    }
+  }
+
   test("CountMin estimates equal an independent md5-grid recompute; " +
       "est >= exact always") {
     val gen = Gen.zip(Gen.listOfN(60, Gen.choose(0, 25)),
