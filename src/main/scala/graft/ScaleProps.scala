@@ -271,17 +271,10 @@ object ScaleProps {
     // exact production dials (size-derived lists, sampled training,
     // nprobe=2, t=0.45); the recall floor itself is RecallSpec's law.
     val rNdIdx = {
-      val nE = emb.count()
-      val c = BlockDials.ivfLists(nE)
-      val smp = math.min(nE, 50L * c).toInt
-      val centroids = Similarity.trainCentroids(
-        emb.orderBy(col("vec_id")).limit(smp), "vec_id", "embedding",
-        k = c, iters = 2)
       val path = new java.io.File(sys.props("java.io.tmpdir"),
         "graft_props_q125_idx").getAbsolutePath
-      Similarity.writeIvfIndex(emb, "vec_id", "embedding", centroids, path,
-        listCap = BlockDials.ivfListCap(nE, c))
-      val index = Similarity.readIvfIndex(spark, path)
+      val (index, centroids) = Similarity.sampledIvfIndex(
+        emb, "vec_id", "embedding", emb.count(), path)
       val pairs = Similarity.indexedQualifyingPairs(
         index, centroids, threshold = 0.45, nprobe = 2)
       checkComponents("q125_near_dup_indexed", emb, "vec_id",

@@ -319,13 +319,12 @@ object CidEtl {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
     val out = opts.getOrElse("out", "cid10_consolidado.csv")
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("cid-etl")
-      .config("spark.sql.shuffle.partitions",
+    // the engine's session defaults (GraftSession), so the CLI runs the
+    // configuration perfbench times
+    val spark = graft.GraftSession.builder(
+        sys.env.getOrElse("SPARK_MASTER", "local[*]"),
         sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .appName("cid-etl")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     try {

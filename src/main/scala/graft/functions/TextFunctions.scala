@@ -238,19 +238,13 @@ object TextFunctions {
   // --- Repetition signals (Gopher §A1.1 duplicate n-gram rules) ------
 
   /** Repeated-occurrence fraction of a precomputed shingle array:
-    * 1 - distinct/total, 0 when empty. */
+    * 1 - distinct/total, 0 when empty. Over word n-grams
+    * (`shingles(c, n)`) high values flag boilerplate / looped text. */
   def dupFractionOf(sh: Column): Column =
     when(size(sh) > 0,
         lit(1.0) - size(array_distinct(sh)).cast("double")
           / size(sh).cast("double"))
       .otherwise(lit(0.0))
-
-  /** Fraction of word n-gram occurrences that are repeats of an
-    * earlier occurrence (1 - distinct/total; 0 when the doc is too
-    * short to shingle). High values flag boilerplate / looped text.
-    */
-  def dupNgramFraction(c: Column, n: Int): Column =
-    dupFractionOf(shingles(c, n))
 
   /** Occurrence count of the most frequent element of a string array
     * (0 when empty): sort, then one linear fold tracking the current
@@ -271,9 +265,4 @@ object TextFunctions {
                greatest(acc.getField("best"), run).as("best"))
       },
       acc => acc.getField("best"))
-
-  /** Occurrence count of the single most frequent word n-gram (0 when
-    * the doc is too short). */
-  def topNgramCount(c: Column, n: Int): Column =
-    topCountOf(shingles(c, n))
 }

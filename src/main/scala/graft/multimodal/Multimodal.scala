@@ -3,9 +3,8 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
-/** Multimodal column plumbing: image/audio/video payloads as opaque
-  * `binary` columns with typed metadata, plus partition-batched
-  * feature extraction.
+/** Multimodal column plumbing: image/audio/video payloads as `binary`
+  * columns with typed metadata, decoded by partition-batched codecs.
   *
   * Image (PNG/JPEG via `javax.imageio`), audio (WAV/PCM via
   * `javax.sound.sampled`) and video (multi-frame animated GIF via
@@ -21,32 +20,16 @@ import org.apache.spark.sql.functions._
   *
   * Scale: decode is a mapPartitions pass — no shuffle, arbitrary
   * per-partition native batching; partition sizing is controlled by the
-  * usual file-split knobs, and skew (one giant video) is handled by
-  * splitting payloads into chunk rows BEFORE decode (chunk()).
+  * usual file-split knobs. The unit of decode is a whole asset (a byte
+  * range of a PNG, GIF or WAV file is not decodable on its own), so
+  * one giant asset occupies one task: skew is bounded per asset, not
+  * split below it.
   */
 object Multimodal {
 
   final case class MediaAsset(asset_id: Long, kind: String,
                               payload: Array[Byte],
                               width: Int, height: Int, duration_ms: Long)
-
-  final case class MediaFeatures(asset_id: Long, kind: String,
-                                 n_bytes: Int, checksum: Long,
-                                 head_hist: Array[Long])
-
-  /** Wrap a text corpus as binary media assets (the test stand-in for
-    * an object-store manifest of real image/audio files).
-    */
-  def assetsFromDocuments(docs: DataFrame): Dataset[MediaAsset] = {
-    import docs.sparkSession.implicits._
-    docs.select(
-        col("doc_id").as("asset_id"),
-        lit("text").as("kind"),
-        col("text").cast("binary").as("payload"),
-        lit(0).as("width"), lit(0).as("height"),
-        lit(0L).as("duration_ms"))
-      .as[MediaAsset]
-  }
 
   /** Decoded image features: true codec-recovered dimensions and the
     * red-channel pixel sum (lossless for PNG, so exactly oracle-able).
@@ -87,17 +70,6 @@ object Multimodal {
     img.setRGB(0, 0, width, height, buf, 0, width)
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos)
-    bos.toByteArray
-  }
-
-  /** Same pattern through the lossy codec — JPEG preserves dimensions
-    * exactly (spec-gated) even though pixel values are approximate.
-    */
-  def encodeJpeg(seed: Long, width: Int, height: Int): Array[Byte] = {
-    val png = javax.imageio.ImageIO.read(
-      new java.io.ByteArrayInputStream(encodePng(seed, width, height)))
-    val bos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(png, "jpg", bos)
     bos.toByteArray
   }
 
@@ -333,62 +305,5 @@ object Multimodal {
         AudioFeatures(a.asset_id, nFrames.toLong, sum)
       }
     }
-  }
-
-  /** Codec-agnostic structural fingerprint (checksum + byte histogram)
-    * for OPAQUE payload kinds — formats the JDK has no codec for pass
-    * through here; image/audio/video use the REAL decoders above. A
-    * production build swaps this body for the JNI/FFI decoder while
-    * keeping the signature and partition-batched driver loop identical.
-    */
-  private def fingerprint(payload: Array[Byte]): (Long, Array[Long]) = {
-    var checksum = 17L
-    val hist = new Array[Long](16)
-    var i = 0
-    while (i < payload.length) {
-      checksum = checksum * 31 + (payload(i) & 0xff)
-      hist((payload(i) & 0xff) % 16) += 1
-      i += 1
-    }
-    (checksum, hist)
-  }
-
-  /** Partition-batched feature extraction over the binary payloads. */
-  def extractFeatures(assets: Dataset[MediaAsset]): Dataset[MediaFeatures] = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions { it =>
-      // real decoders amortize codec init per partition — same shape here
-      it.map { a =>
-        val (checksum, hist) = fingerprint(a.payload)
-        MediaFeatures(a.asset_id, a.kind, a.payload.length, checksum, hist)
-      }
-    }
-  }
-
-  /** Split oversized payloads into fixed-size chunk rows so one giant
-    * asset cannot skew a partition.
-    */
-  def chunk(assets: Dataset[MediaAsset], chunkBytes: Int)
-      : DataFrame = {
-    import assets.sparkSession.implicits._
-    require(chunkBytes > 0, "chunkBytes must be positive")
-    assets.flatMap { a =>
-      a.payload.grouped(chunkBytes).zipWithIndex.map { case (bytes, i) =>
-        (a.asset_id, i, bytes)
-      }
-    }.toDF("asset_id", "chunk_id", "chunk")
-  }
-
-  /** BYTE-window frame sampling for opaque payloads: keep every
-    * `stride`-th fixed-size window. For container formats with a real
-    * frame index, `decodeVideoFeatures` strides the codec's own frame
-    * table instead. Map-only, skew-bounded like chunk().
-    */
-  def sampleFrames(assets: Dataset[MediaAsset], frameBytes: Int,
-                   stride: Int): DataFrame = {
-    require(stride > 0, "stride must be positive")
-    chunk(assets, frameBytes)
-      .filter(org.apache.spark.sql.functions.col("chunk_id") % stride === 0)
-      .toDF("asset_id", "frame_id", "frame")
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -16,6 +16,20 @@ import graft.functions.expressions.CustomExpressions.boundedTopK
   * [[rankTopK]]; the capped pair miners rank through [[topKPerDoc]].
   */
 object Similarity {
+
+  /** Decimal places every cosine (and every centroid mean) is rounded
+    * to before it is ranked, compared or thresholded, so an ULP of
+    * cross-engine divergence cannot flip an outcome; the DuckDB
+    * oracles replay the same `ROUND(…, 9)`.
+    */
+  private val Decimals = 9
+
+  /** The pair score of every scorer here: cosine from precomputed
+    * norms, rounded to [[Decimals]].
+    */
+  private def roundedCos(a: Column, b: Column, na: Column,
+                         nb: Column): Column =
+    round(dot(a, b) / (na * nb), Decimals)
 
   /** The shared top-k step: each `query_id`'s `k` best candidates by
     * (cos DESC, `tie` ASC), numbered from 1 in `rank`. Cosines are
@@ -34,8 +48,7 @@ object Similarity {
     * Self-matches (same id) are excluded.
     */
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame,
-                     id: String, vec: String, k: Int,
-                     roundTo: Int = 9): DataFrame = {
+                     id: String, vec: String, k: Int): DataFrame = {
     // norms are precomputed per side (not per pair) — same arithmetic,
     // O(n) instead of O(n*q) sqrt work
     val q = queries.select(col(id).as("query_id"), col(vec).as("qv"),
@@ -45,7 +58,7 @@ object Similarity {
     val scored = broadcast(q).crossJoin(c)
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo))
+        roundedCos(col("qv"), col("cv"), col("qn"), col("cn")))
     rankTopK(scored, k)
       .select(col("query_id"), col("neighbor_id"), col("cos"), col("rank"))
   }
@@ -71,7 +84,7 @@ object Similarity {
     */
   def lshTopK(queries: DataFrame, corpus: DataFrame,
               id: String, vec: String, k: Int, nbits: Int,
-              roundTo: Int = 9, maxHamming: Int = 0): DataFrame = {
+              maxHamming: Int = 0): DataFrame = {
     // masks() terminates its popcount bound only at h == 0, so a
     // negative radius would silently enumerate ALL 2^nbits masks
     // (full cross-bucket probe) instead of failing
@@ -99,7 +112,7 @@ object Similarity {
     val scored = broadcast(q).join(c, Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("cos",
-        round(dot(col("qv"), col("cv")) / (col("qn") * col("cn")), roundTo))
+        roundedCos(col("qv"), col("cv"), col("qn"), col("cn")))
     rankTopK(scored, k)
       .select(col("query_id"), col("neighbor_id"), col("bucket"),
               col("cos"), col("rank"))
@@ -125,7 +138,7 @@ object Similarity {
     * swap in reliable `checkpoint()` for long training runs.
     */
   def trainCentroids(corpus: DataFrame, id: String, vec: String,
-                     k: Int, iters: Int, roundTo: Int = 9): DataFrame = {
+                     k: Int, iters: Int): DataFrame = {
     // r21 note: checkpointing this projection (the MLlib cache-your-
     // k-means-input pattern) was tried BOTH eagerly and lazily and
     // REVERTED: the LogicalRDD barrier erases Catalyst's size
@@ -139,7 +152,7 @@ object Similarity {
     var centroids = v.orderBy(col("cid")).limit(k)
       .select(col("cid").as("centroid_id"), col("v").as("centroid"))
     for (_ <- 0 until iters) {
-      val assigned = assignToCentroid(v, centroids, "v", roundTo)
+      val assigned = assignToCentroid(v, centroids, "v")
       val prev = centroids
       // r22 one-exchange Lloyd step: per-dim decimal-exact (sum, count)
       // via the VectorMeanParts partial aggregate — one groupBy on
@@ -156,7 +169,7 @@ object Similarity {
           .vectorMeanParts(col("v")).as("mp"))
         .select(col("centroid_id"),
           transform(col("mp"),
-            p => round(p.getField("s") / p.getField("c"), roundTo))
+            p => round(p.getField("s") / p.getField("c"), Decimals))
             .as("centroid"))
         // truncate lineage: without this each Lloyd step re-plans the
         // whole preceding chain and the plan grows superlinearly
@@ -182,13 +195,13 @@ object Similarity {
     * avoids). Ties break to the lowest centroid_id (`array_position`
     * returns the FIRST max, and the array is id-sorted), identical to
     * the former window's (cos DESC, centroid_id ASC) order; cosines
-    * round to `roundTo` first, so assignments — and every oracle that
+    * round to [[Decimals]] first, so assignments — and every oracle that
     * replays them (q54/q122/q124) — are bit-stable across engines and
     * across this plan change (pinned in SimilaritySpec).
     */
   private def assignToCentroid(rows: DataFrame, centroids: DataFrame,
-                               vecCol: String, roundTo: Int = 9): DataFrame =
-    centroidCosines(rows, centroids, vecCol, roundTo)
+                               vecCol: String): DataFrame =
+    centroidCosines(rows, centroids, vecCol)
       .withColumn("centroid_id",
         element_at(col("cs"),
           array_position(col("ds"), array_max(col("ds"))).cast("int"))
@@ -202,7 +215,7 @@ object Similarity {
     * entry, in the same order. The callers argmax over `ds`.
     */
   private def centroidCosines(rows: DataFrame, centroids: DataFrame,
-                              vecCol: String, roundTo: Int): DataFrame = {
+                              vecCol: String): DataFrame = {
     val cArr = centroids.agg(
       array_sort(collect_list(struct(col("centroid_id"), col("centroid"),
         l2Norm(col("centroid")).as("cnrm")))).as("cs"))
@@ -217,53 +230,27 @@ object Similarity {
       // deterministically on the lowest-id centroid instead.
       .withColumn("ds", transform(col("cs"), c =>
         coalesce(round(try_divide(dot(col(vecCol), c.getField("centroid")),
-          col("nv") * c.getField("cnrm")), roundTo), lit(-1.0))))
+          col("nv") * c.getField("cnrm")), Decimals), lit(-1.0))))
   }
 
   /** Each row's `nprobe` nearest centroids by rounded cosine, ties to
     * the lower centroid_id: one output row per (row, probed centroid),
     * carrying `rows`' columns plus `centroid_id`. `key` must identify
-    * a row of `rows`. The probe side of [[ivfTopK]] and
-    * [[ivfProbeIndexed]] (rows = queries) and of [[probeAdjacency]]
-    * (rows = the centroids themselves).
+    * a row of `rows`. The probe side of [[ivfProbeIndexed]] (rows =
+    * queries) and of [[probeAdjacency]] (rows = the centroids
+    * themselves).
     */
   private def nearestCentroids(rows: DataFrame, key: String, vec: String,
-                               centroids: DataFrame, nprobe: Int,
-                               roundTo: Int): DataFrame = {
+                               centroids: DataFrame,
+                               nprobe: Int): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     val w = Window.partitionBy(col(key))
       .orderBy(col("d").desc, col("centroid_id"))
     rows.crossJoin(broadcast(centroids))
-      .withColumn("d", round(cosine(col(vec), col("centroid")), roundTo))
+      .withColumn("d", round(cosine(col(vec), col("centroid")), Decimals))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= nprobe)
       .drop("centroid", "d", "rn")
-  }
-
-  /** IVF (inverted-file) approximate top-k: the corpus is partitioned
-    * into centroid lists once; each query probes its `nprobe` nearest
-    * centroids and scores only those lists. Same plan shape as lshTopK
-    * with learned buckets instead of sign bits — recall/cost tunable
-    * via (k centroids, nprobe).
-    */
-  def ivfTopK(queries: DataFrame, corpus: DataFrame, id: String,
-              vec: String, k: Int, centroids: DataFrame, nprobe: Int,
-              roundTo: Int = 9): DataFrame = {
-    val c = assignToCentroid(
-      corpus.select(col(id).as("cid"), toDoubles(col(vec)).as("v")),
-      centroids, "v", roundTo)
-      .select(col("cid").as("neighbor_id"), col("v").as("cv"),
-              col("centroid_id"))
-    val q = nearestCentroids(
-      queries.select(col(id).as("query_id"), toDoubles(col(vec)).as("qv")),
-      "query_id", "qv", centroids, nprobe, roundTo)
-    val scored = broadcast(q).join(c, Seq("centroid_id"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos", round(dot(col("qv"), col("cv")) /
-        (l2Norm(col("qv")) * l2Norm(col("cv"))), roundTo))
-    rankTopK(scored, k)
-      .select(col("query_id"), col("neighbor_id"), col("centroid_id"),
-              col("cos"), col("rank"))
   }
 
   /** All pairs above a cosine threshold (embedding near-dup detection).
@@ -273,7 +260,7 @@ object Similarity {
     * a bucket-local equi-join.
     */
   def cosinePairs(df: DataFrame, id: String, vec: String,
-                  threshold: Double, roundTo: Int = 9): DataFrame = {
+                  threshold: Double): DataFrame = {
     // the stream side of the nested-loop join gets an explicit round-
     // robin repartition: an embeddings table is small in BYTES (20k
     // rows ≈ 6 MB at sf1 — one scan split at any maxPartitionBytes)
@@ -288,8 +275,7 @@ object Similarity {
     a.join(b, col("id_a") < col("id_b"))
       // round before thresholding so borderline values can't split
       // between engines
-      .withColumn("cos",
-        round(dot(col("va"), col("vb")) / (col("na") * col("nb")), roundTo))
+      .withColumn("cos", roundedCos(col("va"), col("vb"), col("na"), col("nb")))
       .filter(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), col("cos"))
   }
@@ -310,7 +296,7 @@ object Similarity {
     */
   def cosinePairsBlocked(df: DataFrame, id: String, vec: String,
                          threshold: Double, nbits: Int,
-                         roundTo: Int = 9, chunks: Int = 16): DataFrame = {
+                         chunks: Int = 16): DataFrame = {
     val rows = df.select(col(id).as("vid"), col(vec).as("v"),
       signBucket(col(vec), nbits).as("bucket"), l2Norm(col(vec)).as("nrm"))
     val (a, b, keyCond) =
@@ -318,8 +304,7 @@ object Similarity {
     a.join(b, keyCond &&
         TrianglePairs.orderedOnce(col("a.vid"), col("b.vid")))
       .withColumn("cos",
-        round(dot(col("a.v"), col("b.v")) /
-          (col("a.nrm") * col("b.nrm")), roundTo))
+        roundedCos(col("a.v"), col("b.v"), col("a.nrm"), col("b.nrm")))
       .filter(col("cos") >= threshold)
       .select(least(col("a.vid"), col("b.vid")).as("id_a"),
               greatest(col("a.vid"), col("b.vid")).as("id_b"),
@@ -341,15 +326,15 @@ object Similarity {
     * Each unordered in-bucket pair is scored ONCE (triangle-salted
     * i<j join, the [[TrianglePairs]] skew treatment), then both
     * directions enter the ranking. Docs with no qualifying neighbor
-    * emit nothing. Deterministic: cosines round to `roundTo` before
+    * emit nothing. Deterministic: cosines round to [[Decimals]] before
     * ranking and ties break by neighbor id, so the kept set is a
     * total-order prefix any engine reproduces.
     */
   def cosineTopKBlocked(df: DataFrame, id: String, vec: String,
                         k: Int, threshold: Double, nbits: Int,
-                        roundTo: Int = 9, chunks: Int = 16): DataFrame =
-    topKPerDoc(cosinePairsBlocked(df, id, vec, threshold, nbits, roundTo,
-      chunks), "id_a", "id_b", k)
+                        chunks: Int = 16): DataFrame =
+    topKPerDoc(cosinePairsBlocked(df, id, vec, threshold, nbits, chunks),
+      "id_a", "id_b", k)
 
   /** The shared tail of the capped pair miners: each unordered scored
     * pair (`a`, `b`, cos) enters the ranking in both directions, and
@@ -385,9 +370,8 @@ object Similarity {
     * `row_number() ORDER BY d DESC, id` rn=2.
     */
   private def assignToCentroid2(rows: DataFrame, centroids: DataFrame,
-                                vecCol: String, roundTo: Int = 9)
-      : DataFrame =
-    centroidCosines(rows, centroids, vecCol, roundTo)
+                                vecCol: String): DataFrame =
+    centroidCosines(rows, centroids, vecCol)
       .withColumn("bd", array_max(col("ds")))
       .withColumn("bp", array_position(col("ds"), col("bd")))
       .withColumn("centroid_id",
@@ -402,12 +386,13 @@ object Similarity {
           .getField("centroid_id"))
       .drop("cs", "nv", "ds", "bp", "ds2")
 
-  /** Materialized IVF index: the corpus assigned to its nearest
-    * centroid and written partitioned by `list_id` — the embedding
-    * analog of the materialized dedup bucket index that
-    * `Dedup.incrementalDedupIndexed` probes.
-    * The k-means and the full-corpus assignment scan are paid ONCE,
-    * offline; every later query batch probes the layout read-only.
+  /** IVF index frame: the corpus assigned to its nearest centroid, as
+    * (`item_id`, `cv` the vector as doubles, `cn` its norm, `list_id`
+    * the centroid id). [[writeIvfIndex]] materializes it for the
+    * probe-only queries; an ad-hoc search (q54) probes it unwritten
+    * through the same [[ivfProbeIndexed]]. The per-item norm is
+    * precomputed so probe-side scoring does no per-pair sqrt over the
+    * corpus vector.
     *
     * `listCap > 0` enables ONE deterministic overflow round: each
     * list ranks its members by (assignment cosine DESC, id) and
@@ -426,6 +411,31 @@ object Similarity {
     * RecallSpec's ≥ 0.95 law: an overflowed boundary item lands in
     * its second-nearest list, whose probe set almost always contains
     * the original neighbor region.
+    */
+  def ivfIndex(corpus: DataFrame, id: String, vec: String,
+               centroids: DataFrame, listCap: Int = 0): DataFrame = {
+    val v = corpus.select(col(id).as("cid"), toDoubles(col(vec)).as("v"))
+    val assigned =
+      if (listCap <= 0) assignToCentroid(v, centroids, "v")
+      else {
+        val w = Window.partitionBy(col("centroid_id"))
+          .orderBy(col("bd").desc, col("cid"))
+        assignToCentroid2(v, centroids, "v")
+          .withColumn("lr", row_number().over(w))
+          .withColumn("centroid_id",
+            when(col("lr") <= listCap, col("centroid_id"))
+              .otherwise(col("second_id")))
+          .drop("bd", "second_id", "lr")
+      }
+    assigned.select(col("cid").as("item_id"), col("v").as("cv"),
+      l2Norm(col("v")).as("cn"), col("centroid_id").as("list_id"))
+  }
+
+  /** Materialized IVF index: [[ivfIndex]] written partitioned by
+    * `list_id` — the embedding analog of the materialized dedup bucket
+    * index that `Dedup.incrementalDedupIndexed` probes. The k-means
+    * and the full-corpus assignment scan are paid ONCE, offline; every
+    * later query batch probes the layout read-only.
     *
     * Scale: `partitionBy(list_id)` makes the list the unit of I/O.
     * A probe joining the (tiny, broadcast) query×nprobe-list frame
@@ -433,58 +443,50 @@ object Similarity {
     * batch touching p of C lists READS p/C of the corpus bytes —
     * the index never rebuilds, never reshuffles, and the pruning is
     * visible in the plan (`PartitionFilters: dynamicpruning...`,
-    * pinned in PlansSpec). The per-item norm is precomputed at build
-    * time so probe-side scoring does no per-pair sqrt over the
-    * corpus vector.
+    * pinned in PlansSpec).
     */
   def writeIvfIndex(corpus: DataFrame, id: String, vec: String,
                     centroids: DataFrame, path: String,
-                    roundTo: Int = 9, listCap: Int = 0): Unit = {
-    val v = corpus.select(col(id).as("cid"), toDoubles(col(vec)).as("v"))
-    val assigned =
-      if (listCap <= 0) assignToCentroid(v, centroids, "v", roundTo)
-      else {
-        val w = Window.partitionBy(col("centroid_id"))
-          .orderBy(col("bd").desc, col("cid"))
-        assignToCentroid2(v, centroids, "v", roundTo)
-          .withColumn("lr", row_number().over(w))
-          .withColumn("centroid_id",
-            when(col("lr") <= listCap, col("centroid_id"))
-              .otherwise(col("second_id")))
-          .drop("bd", "second_id", "lr")
-      }
-    assigned
-      .select(col("cid").as("item_id"), col("v").as("cv"),
-        l2Norm(col("v")).as("cn"), col("centroid_id").as("list_id"))
+                    listCap: Int = 0): Unit =
+    ivfIndex(corpus, id, vec, centroids, listCap)
       .write.mode("overwrite").partitionBy("list_id").parquet(path)
+
+  /** The production sampled IVF index of the indexed miners (q124,
+    * q125, q127): C = [[BlockDials.ivfLists]](n) centroids trained for
+    * 2 Lloyd steps on the 50·C lowest-id rows, the whole corpus
+    * written to `path` under the [[BlockDials.ivfListCap]] occupancy
+    * cap, and read back. `n` is the corpus row count; callers pass a
+    * parquet footer count so sizing runs no job. RecallSpec's laws run
+    * this same recipe. Returns (index, centroids).
+    */
+  def sampledIvfIndex(corpus: DataFrame, id: String, vec: String,
+                      n: Long, path: String): (DataFrame, DataFrame) = {
+    val c = BlockDials.ivfLists(n)
+    val sample = corpus.orderBy(col(id)).limit(math.min(n, 50L * c).toInt)
+    val centroids = trainCentroids(sample, id, vec, k = c, iters = 2)
+    writeIvfIndex(corpus, id, vec, centroids, path,
+      listCap = BlockDials.ivfListCap(n, c))
+    (graft.Tables.readCached(corpus.sparkSession, path), centroids)
   }
 
-  /** Read a [[writeIvfIndex]] layout back as the corpus side of
-    * [[ivfProbeIndexed]].
-    */
-  def readIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                   path: String): DataFrame =
-    graft.Tables.readCached(spark, path)
-
-  /** Probe-only ANN over a materialized [[writeIvfIndex]] layout:
-    * each query picks its `nprobe` closest centroids (broadcast) and
-    * only those lists of the index are scanned (dynamic partition
-    * pruning) and scored. Same ranking semantics as [[ivfTopK]] —
-    * pinned equal in SimilaritySpec — without the per-batch k-means
-    * or corpus assignment.
+  /** ANN over an IVF index (an [[ivfIndex]] frame or its
+    * [[writeIvfIndex]] layout): each query picks its `nprobe` closest
+    * centroids (broadcast) and only those lists are scanned (dynamic
+    * partition pruning on a written layout) and scored, ranked by
+    * (cos DESC, neighbor id).
     */
   def ivfProbeIndexed(index: DataFrame, queries: DataFrame, id: String,
                       vec: String, k: Int, centroids: DataFrame,
-                      nprobe: Int, roundTo: Int = 9): DataFrame = {
+                      nprobe: Int): DataFrame = {
     val q = nearestCentroids(
         queries.select(col(id).as("query_id"), toDoubles(col(vec)).as("qv")),
-        "query_id", "qv", centroids, nprobe, roundTo)
+        "query_id", "qv", centroids, nprobe)
       .select(col("query_id"), col("qv"),
         l2Norm(col("qv")).as("qn"), col("centroid_id").as("list_id"))
     val scored = index.join(broadcast(q), Seq("list_id"))
       .filter(col("query_id") =!= col("item_id"))
-      .withColumn("cos", round(dot(col("qv"), col("cv")) /
-        (col("qn") * col("cn")), roundTo))
+      .withColumn("cos",
+        roundedCos(col("qv"), col("cv"), col("qn"), col("cn")))
     rankTopK(scored, k, tie = "item_id")
       .select(col("query_id"), col("item_id").as("neighbor_id"),
         col("list_id").cast("long").as("centroid_id"),
@@ -497,12 +499,12 @@ object Similarity {
     * the list itself, closed symmetrically. Deterministic, pure plan,
     * one broadcastable C×C table.
     */
-  private[graft] def probeAdjacency(centroids: DataFrame, nprobe: Int,
-                                    roundTo: Int = 9): DataFrame = {
+  private[graft] def probeAdjacency(centroids: DataFrame,
+                                    nprobe: Int): DataFrame = {
     val directed = nearestCentroids(
         centroids.select(col("centroid_id").as("list_id"),
           col("centroid").as("av")),
-        "list_id", "av", centroids, nprobe, roundTo)
+        "list_id", "av", centroids, nprobe)
       .select(col("list_id"), col("centroid_id").as("probe_list"))
     // a list must ALWAYS probe itself: if training produced two
     // (rounded-)identical centroids, the d-then-id tiebreak can rank
@@ -536,8 +538,8 @@ object Similarity {
     */
   private[graft] def indexedQualifyingPairs(
       index: DataFrame, centroids: DataFrame, threshold: Double,
-      nprobe: Int, roundTo: Int = 9): DataFrame = {
-    val lp = probeAdjacency(centroids, nprobe, roundTo)
+      nprobe: Int): DataFrame = {
+    val lp = probeAdjacency(centroids, nprobe)
     val a = index.select(col("item_id").as("aid"), col("cv").as("av"),
       col("cn").as("an"), col("list_id").as("la"))
     val b = index.select(col("item_id").as("bid"), col("cv").as("bv"),
@@ -550,9 +552,7 @@ object Similarity {
       // same-list pairs appear in both (a,b) and (b,a) order — keep
       // i<j once; cross-list pairs appear exactly once already
       .filter(col("la") =!= col("lb") || col("aid") < col("bid"))
-      .withColumn("cos",
-        round(dot(col("av"), col("bv")) / (col("an") * col("bn")),
-          roundTo))
+      .withColumn("cos", roundedCos(col("av"), col("bv"), col("an"), col("bn")))
       .filter(col("cos") >= threshold)
       .select(col("aid"), col("bid"), col("cos"))
   }
@@ -584,15 +584,14 @@ object Similarity {
     * salting).
     *
     * Determinism: the adjacency ranks by rounded centroid-pair cosine
-    * (ties by probe list id), pair scores round to `roundTo` before
+    * (ties by probe list id), pair scores round to [[Decimals]] before
     * ranking, ranking ties break by neighbor id — a total order any
     * engine replays (q124's oracle).
     */
   def cosineTopKIndexed(index: DataFrame, centroids: DataFrame,
-                        k: Int, threshold: Double, nprobe: Int,
-                        roundTo: Int = 9): DataFrame =
-    topKPerDoc(
-      indexedQualifyingPairs(index, centroids, threshold, nprobe, roundTo),
+                        k: Int, threshold: Double,
+                        nprobe: Int): DataFrame =
+    topKPerDoc(indexedQualifyingPairs(index, centroids, threshold, nprobe),
       "aid", "bid", k)
 
   /** Blocked near-dup pairs fed STRAIGHT into connected components:
@@ -613,9 +612,9 @@ object Similarity {
     */
   def nearDupComponents(df: DataFrame, id: String, vec: String,
                         threshold: Double, nbits: Int,
-                        roundTo: Int = 9, chunks: Int = 16): DataFrame = {
-    val pairs = cosinePairsBlocked(df, id, vec, threshold, nbits,
-      roundTo, chunks).select(col("id_a"), col("id_b"))
+                        chunks: Int = 16): DataFrame = {
+    val pairs = cosinePairsBlocked(df, id, vec, threshold, nbits, chunks)
+      .select(col("id_a"), col("id_b"))
     Dedup.connectedComponentsStar(df.select(col(id)), col(id),
       pairs, col("id_a"), col("id_b"))
   }
@@ -640,11 +639,10 @@ object Similarity {
     * q47/q121 oracles gate.
     */
   def nearDupComponentsIndexed(index: DataFrame, centroids: DataFrame,
-                               threshold: Double, nprobe: Int,
-                               roundTo: Int = 9): DataFrame = {
-    val pairs =
-      indexedQualifyingPairs(index, centroids, threshold, nprobe, roundTo)
-        .select(col("aid"), col("bid"))
+                               threshold: Double,
+                               nprobe: Int): DataFrame = {
+    val pairs = indexedQualifyingPairs(index, centroids, threshold, nprobe)
+      .select(col("aid"), col("bid"))
     Dedup.connectedComponentsStar(index.select(col("item_id")),
       col("item_id"), pairs, col("aid"), col("bid"))
   }

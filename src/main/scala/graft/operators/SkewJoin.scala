@@ -3,49 +3,14 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Salted equi-join for skewed keys.
+/** Explicit key salting for skewed aggregations.
   *
-  * A hash-partition join sends every row of a hot key to one task;
-  * salting splits each left key into `salts` sub-keys and replicates
-  * the right side once per salt, so the hot key's rows spread over
-  * `salts` tasks. Result is identical to the plain equi-join.
-  *
-  * AQE's skew-join handles most cases at runtime (sort-merge only);
-  * explicit salting remains the tool when the skewed side must hash
-  * join, when skew is known ahead of time, or for aggregations
-  * (saltedCount-style two-phase aggs).
+  * AQE's skew-join splits hot join partitions at run time, but a
+  * distinct aggregation still funnels every row of a hot key through
+  * one task; salting spreads the key over `salts` partial groups
+  * first (q35).
   */
 object SkewJoin {
-
-  /** `left ⋈ right ON left(key) = right(key)` with `salts`-way key
-    * splitting. `right` should be the smaller side (it is replicated
-    * `salts` times).
-    *
-    * Only left-preserving join types are supported: because the right
-    * side is replicated once per salt, a `right`/`full_outer` join
-    * would emit every unmatched right row `salts` times instead of
-    * once. (Those shapes need the salt on the other side, or a
-    * post-join dedup of the null-extended rows.)
-    */
-  private val leftPreserving =
-    Set("inner", "left", "leftouter", "leftsemi", "leftanti")
-
-  def saltedJoin(left: DataFrame, right: DataFrame, key: String,
-                 salts: Int, joinType: String = "inner"): DataFrame = {
-    require(salts > 0)
-    require(leftPreserving(joinType.toLowerCase.replace("_", "")),
-      s"saltedJoin supports left-preserving join types only, got $joinType")
-    // deterministic spread: hash the whole row id-space via a rownum-free
-    // expression — spark_partition_id + a per-row counter would not be
-    // stable, so use a hash of all left columns plus a disambiguator
-    val l = left.withColumn("__salt",
-      pmod(hash(left.columns.map(col) :+ monotonically_increasing_id(): _*),
-        lit(salts)))
-    val r = right.withColumn("__salt",
-      explode(sequence(lit(0), lit(salts - 1))))
-    l.join(r, l(key) === r(key) && l("__salt") === r("__salt"), joinType)
-      .drop("__salt")
-  }
 
   /** Two-phase skew-proof count per key: partial count on (key, salt),
     * then re-aggregate on key — the shuffle carries `salts` rows per

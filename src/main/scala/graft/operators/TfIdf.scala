@@ -43,9 +43,14 @@ import graft.functions.TextFunctions.tokens
   */
 object TfIdf {
 
+  /** Decimal places tf-idf scores round to before ranking (the
+    * oracle's `ROUND(…, 9)`).
+    */
+  private val Decimals = 9
+
   /** Top-`k` terms per document by tf-idf (ties broken by term). */
-  def topTerms(docs: DataFrame, id: Column, text: Column, k: Int,
-               roundTo: Int = 9): DataFrame = {
+  def topTerms(docs: DataFrame, id: Column, text: Column,
+               k: Int): DataFrame = {
     val toks = docs
       .select(id.as("doc_id"), explode(tokens(text)).as("term"))
     // r21 note: tf feeds both the window branch and the df branch;
@@ -83,7 +88,7 @@ object TfIdf {
       // ranking so a (hypothetical) ulp can't flip a rank
       .withColumn("tfidf", round(
         (col("cnt").cast("double") / col("len").cast("double")) *
-          (col("n_docs").cast("double") / col("df").cast("double")), roundTo))
+          (col("n_docs").cast("double") / col("df").cast("double")), Decimals))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("tfidf").desc, col("term").asc)
     scored.withColumn("rank", row_number().over(w))

@@ -45,23 +45,40 @@ object GraftExtensions {
   import org.apache.spark.sql.graftbridge
   import org.apache.spark.sql.types.IntegerType
 
-  /** Resolve argument `idx` of `fn` as a literal Int, failing analysis
-    * (with the function's name, via Spark's own error classes) on a
-    * non-foldable / non-integral / null argument instead of leaking a
-    * raw NPE or ClassCastException from `eval(null)`.
+  /** Resolve argument `idx` of `fn` as a literal Int in
+    * [`min`, `max`], failing analysis (with the function's name, via
+    * Spark's own error classes) on a non-foldable / non-integral / null
+    * argument instead of leaking a raw NPE or ClassCastException from
+    * `eval(null)`, and on a value outside the operator's domain instead
+    * of leaking the operator's `require` as a bare
+    * IllegalArgumentException.
     */
-  private def intLit(fn: String, param: String,
-                     es: Seq[Expression], idx: Int): Int = {
+  private def intLit(fn: String, param: String, es: Seq[Expression],
+                     idx: Int, min: Int, max: Int = Int.MaxValue): Int = {
     val e = es(idx)
     if (!e.foldable)
       throw graftbridge.nonFoldableArgumentError(fn, param, IntegerType)
     e.eval(null) match {
-      case n: Number => n.intValue()
+      case n: Number => inRange(fn, param, es, n.longValue, min, max).toInt
       case _ => // foldable but mistyped: name the expected type
         throw graftbridge.unexpectedInputTypeError(fn, idx + 1,
           IntegerType, e)
     }
   }
+
+  /** `v` if it lies in [`min`, `max`], else the analysis error Spark
+    * itself raises for an out-of-range literal argument, naming the
+    * call and the parameter.
+    */
+  private def inRange(fn: String, param: String, es: Seq[Expression],
+                      v: Long, min: Long, max: Long): Long =
+    if (v >= min && v <= max) v
+    else throw new org.apache.spark.sql.AnalysisException(
+      "DATATYPE_MISMATCH.VALUE_OUT_OF_RANGE", Map(
+        "sqlExpr" -> s"\"$fn(${es.map(_.sql).mkString(", ")})\"",
+        "exprName" -> s"`$param`",
+        "valueRange" -> s"[$min, $max]",
+        "currentValue" -> v.toString))
 
   /** Like [[intLit]] for a literal Double threshold argument. */
   private def doubleLit(fn: String, param: String,
@@ -101,8 +118,8 @@ object GraftExtensions {
     ("multi_min_hash",
       new ExpressionInfo(classOf[MultiMinHash].getName, "multi_min_hash"),
       arity("multi_min_hash", 3)(es => MultiMinHash(es.head,
-        intLit("multi_min_hash", "numHashes", es, 1),
-        intLit("multi_min_hash", "shingleLen", es, 2)))),
+        intLit("multi_min_hash", "numHashes", es, 1, 1),
+        intLit("multi_min_hash", "shingleLen", es, 2, 1)))),
     ("sorted_intersect_at_least",
       new ExpressionInfo(classOf[SortedIntersectAtLeast].getName,
         "sorted_intersect_at_least"),
@@ -120,15 +137,15 @@ object GraftExtensions {
     ("shingle_md5",
       new ExpressionInfo(classOf[ShingleMd5].getName, "shingle_md5"),
       arity("shingle_md5", 2)(es => ShingleMd5(es.head,
-        intLit("shingle_md5", "shingleLen", es, 1)))),
+        intLit("shingle_md5", "shingleLen", es, 1, 1)))),
     ("chunk_md5",
       new ExpressionInfo(classOf[ChunkMd5].getName, "chunk_md5"),
       arity("chunk_md5", 2)(es => ChunkMd5(es.head,
-        intLit("chunk_md5", "chunkLen", es, 1)))),
+        intLit("chunk_md5", "chunkLen", es, 1, 1)))),
     ("window_md5",
       new ExpressionInfo(classOf[WindowMd5].getName, "window_md5"),
       arity("window_md5", 2)(es => WindowMd5(es.head,
-        intLit("window_md5", "windowLen", es, 1)))),
+        intLit("window_md5", "windowLen", es, 1, 1)))),
     ("token_pairs",
       new ExpressionInfo(classOf[TokenPairs].getName, "token_pairs"),
       arity("token_pairs", 1)(es => TokenPairs(es.head))),
@@ -213,15 +230,16 @@ object GraftExtensions {
     }
   }
 
-  private def longLit(fn: String, param: String,
-                      es: Seq[Expression], idx: Int): Long = {
+  private def longLit(fn: String, param: String, es: Seq[Expression],
+                      idx: Int, min: Long): Long = {
     val e = es(idx)
     if (!e.foldable)
       throw graftbridge.nonFoldableArgumentError(fn, param,
         org.apache.spark.sql.types.LongType)
     e.eval(null) match {
-      case n: Number => n.longValue()
-      case d: org.apache.spark.sql.types.Decimal => d.toLong
+      case n: Number => inRange(fn, param, es, n.longValue, min, Long.MaxValue)
+      case d: org.apache.spark.sql.types.Decimal =>
+        inRange(fn, param, es, d.toLong, min, Long.MaxValue)
       case _ => // foldable but mistyped: name the expected type
         throw graftbridge.unexpectedInputTypeError(fn, idx + 1,
           org.apache.spark.sql.types.LongType, e)
@@ -275,14 +293,14 @@ object GraftExtensions {
             activeTable(strLit("graft_minhash_signatures", "view", es, 0)),
             col(strLit("graft_minhash_signatures", "idCol", es, 1)),
             col(strLit("graft_minhash_signatures", "textCol", es, 2)),
-            intLit("graft_minhash_signatures", "numHashes", es, 3))))),
+            intLit("graft_minhash_signatures", "numHashes", es, 3, 1))))),
       ("graft_lsh_pairs", tfInfo("graft_lsh_pairs"),
         arityT("graft_lsh_pairs", 5)(es => plan(Dedup.minhashCandidates(
           activeTable(strLit("graft_lsh_pairs", "view", es, 0)),
           col(strLit("graft_lsh_pairs", "idCol", es, 1)),
           col(strLit("graft_lsh_pairs", "textCol", es, 2)),
-          intLit("graft_lsh_pairs", "numHashes", es, 3),
-          intLit("graft_lsh_pairs", "bands", es, 4))))),
+          intLit("graft_lsh_pairs", "numHashes", es, 3, 1),
+          intLit("graft_lsh_pairs", "bands", es, 4, 1))))),
       ("graft_containment_pairs", tfInfo("graft_containment_pairs"),
         arityT("graft_containment_pairs", 4)(es =>
           plan(Dedup.containmentPairs(
@@ -297,21 +315,21 @@ object GraftExtensions {
             col(strLit("graft_budget_select", "scoreCol", es, 1)),
             col(strLit("graft_budget_select", "nTokCol", es, 2)),
             col(strLit("graft_budget_select", "tieCol", es, 3)),
-            longLit("graft_budget_select", "budget", es, 4))))),
+            longLit("graft_budget_select", "budget", es, 4, 0))))),
       ("graft_pack_sequences", tfInfo("graft_pack_sequences"),
         arityT("graft_pack_sequences", 4)(es =>
           plan(Packing.packByTokenBudget(
             activeTable(strLit("graft_pack_sequences", "view", es, 0)),
             col(strLit("graft_pack_sequences", "idCol", es, 1)),
             col(strLit("graft_pack_sequences", "tokenCol", es, 2)),
-            intLit("graft_pack_sequences", "budget", es, 3))))),
+            intLit("graft_pack_sequences", "budget", es, 3, 1))))),
       ("graft_kmv_distinct", tfInfo("graft_kmv_distinct"),
         arityT("graft_kmv_distinct", 4)(es =>
           plan(Kmv.kSmallestDistinctByGroup(
             activeTable(strLit("graft_kmv_distinct", "view", es, 0)),
             col(strLit("graft_kmv_distinct", "groupCol", es, 1)),
             col(strLit("graft_kmv_distinct", "hvCol", es, 2)),
-            intLit("graft_kmv_distinct", "k", es, 3))))),
+            intLit("graft_kmv_distinct", "k", es, 3, 1))))),
       // The blocked pair miners with literal dials — the second step
       // of the pure-SQL auto-dial recipe (first step: the
       // graft_length_bucket_width / graft_sign_bits scalars over one
@@ -319,7 +337,7 @@ object GraftExtensions {
       // shape: (language-ish column, floor(length / width)).
       ("graft_jaccard_pairs", tfInfo("graft_jaccard_pairs"),
         arityT("graft_jaccard_pairs", 7)(es => {
-          val w = intLit("graft_jaccard_pairs", "width", es, 5)
+          val w = intLit("graft_jaccard_pairs", "width", es, 5, 1)
           plan(graft.operators.Dedup.jaccardPairs(
             activeTable(strLit("graft_jaccard_pairs", "view", es, 0)),
             col(strLit("graft_jaccard_pairs", "idCol", es, 1)),
@@ -339,16 +357,16 @@ object GraftExtensions {
             strLit("graft_cosine_pairs", "idCol", es, 1),
             strLit("graft_cosine_pairs", "vecCol", es, 2),
             doubleLit("graft_cosine_pairs", "threshold", es, 3),
-            intLit("graft_cosine_pairs", "nbits", es, 4))))),
+            intLit("graft_cosine_pairs", "nbits", es, 4, 1, 16))))),
       ("graft_cosine_topk", tfInfo("graft_cosine_topk"),
         arityT("graft_cosine_topk", 6)(es =>
           plan(graft.operators.Similarity.cosineTopKBlocked(
             activeTable(strLit("graft_cosine_topk", "view", es, 0)),
             strLit("graft_cosine_topk", "idCol", es, 1),
             strLit("graft_cosine_topk", "vecCol", es, 2),
-            intLit("graft_cosine_topk", "k", es, 3),
+            intLit("graft_cosine_topk", "k", es, 3, 1),
             doubleLit("graft_cosine_topk", "threshold", es, 4),
-            intLit("graft_cosine_topk", "nbits", es, 5))))),
+            intLit("graft_cosine_topk", "nbits", es, 5, 1, 16))))),
       // Span-level duplicate statistics (the q129 operator) for
       // pure-SQL users: fixed-window exact-substring dedup stats.
       ("graft_dup_spans", tfInfo("graft_dup_spans"),
@@ -356,7 +374,7 @@ object GraftExtensions {
           activeTable(strLit("graft_dup_spans", "view", es, 0)),
           col(strLit("graft_dup_spans", "idCol", es, 1)),
           col(strLit("graft_dup_spans", "textCol", es, 2)),
-          intLit("graft_dup_spans", "windowLen", es, 3))))),
+          intLit("graft_dup_spans", "windowLen", es, 3, 1))))),
       // Bloom decontamination (the q128 operator): corpus view + eval
       // view, gram length and the two filter dials as literals.
       ("graft_bloom_decontam", tfInfo("graft_bloom_decontam"),
@@ -366,9 +384,9 @@ object GraftExtensions {
             activeTable(strLit("graft_bloom_decontam", "evalView", es, 1)),
             strLit("graft_bloom_decontam", "idCol", es, 2),
             strLit("graft_bloom_decontam", "textCol", es, 3),
-            intLit("graft_bloom_decontam", "n", es, 4),
-            intLit("graft_bloom_decontam", "mBits", es, 5),
-            intLit("graft_bloom_decontam", "numHashes", es, 6))))),
+            intLit("graft_bloom_decontam", "n", es, 4, 1),
+            intLit("graft_bloom_decontam", "mBits", es, 5, 2),
+            intLit("graft_bloom_decontam", "numHashes", es, 6, 1, 4))))),
       // Count-min heavy hitters (the q130 operator): bounded d×w
       // count state, over-estimate-only, exact counts on the winners.
       ("graft_cm_heavy_hitters", tfInfo("graft_cm_heavy_hitters"),
@@ -376,9 +394,9 @@ object GraftExtensions {
           plan(graft.operators.CountMin.heavyHitters(
             activeTable(strLit("graft_cm_heavy_hitters", "view", es, 0)),
             col(strLit("graft_cm_heavy_hitters", "keyCol", es, 1)),
-            intLit("graft_cm_heavy_hitters", "width", es, 2),
-            intLit("graft_cm_heavy_hitters", "depth", es, 3),
-            intLit("graft_cm_heavy_hitters", "k", es, 4))))),
+            intLit("graft_cm_heavy_hitters", "width", es, 2, 2),
+            intLit("graft_cm_heavy_hitters", "depth", es, 3, 1, 4),
+            intLit("graft_cm_heavy_hitters", "k", es, 4, 0))))),
       // The IVF-INDEXED miners — the production decision path (q124/
       // q125: >= 0.95 planted recall where the sign-bucket miners
       // above measure 0.70-0.78 on clustered corpora, RecallSpec) for
@@ -397,7 +415,7 @@ object GraftExtensions {
             activeTable(strLit("graft_ivf_qualifying_pairs",
               "centroidsView", es, 1)),
             doubleLit("graft_ivf_qualifying_pairs", "threshold", es, 2),
-            intLit("graft_ivf_qualifying_pairs", "nprobe", es, 3))))),
+            intLit("graft_ivf_qualifying_pairs", "nprobe", es, 3, 1))))),
       ("graft_cosine_topk_indexed", tfInfo("graft_cosine_topk_indexed"),
         arityT("graft_cosine_topk_indexed", 5)(es =>
           plan(graft.operators.Similarity.cosineTopKIndexed(
@@ -405,9 +423,9 @@ object GraftExtensions {
               "indexView", es, 0)),
             activeTable(strLit("graft_cosine_topk_indexed",
               "centroidsView", es, 1)),
-            intLit("graft_cosine_topk_indexed", "k", es, 2),
+            intLit("graft_cosine_topk_indexed", "k", es, 2, 1),
             doubleLit("graft_cosine_topk_indexed", "threshold", es, 3),
-            intLit("graft_cosine_topk_indexed", "nprobe", es, 4))))),
+            intLit("graft_cosine_topk_indexed", "nprobe", es, 4, 1))))),
       // The DOCUMENTED EXCEPTION to the action-free expansion
       // contract: star-contraction CC is a convergence-checked
       // fixpoint (rounds are data-dependent, so no pure plan can
@@ -427,7 +445,7 @@ object GraftExtensions {
             activeTable(strLit("graft_near_dup_indexed",
               "centroidsView", es, 1)),
             doubleLit("graft_near_dup_indexed", "threshold", es, 2),
-            intLit("graft_near_dup_indexed", "nprobe", es, 3))))))
+            intLit("graft_near_dup_indexed", "nprobe", es, 3, 1))))))
   }
 
   /** Register into an existing session's temp registries (scalar and

@@ -22,7 +22,7 @@ import graft.multimodal.Multimodal
   * Scale posture: encode and decode are both mapPartitions passes over
   * the asset rows — no shuffle until the final contract ORDER BY; the
   * 100 TB shape is "payloads in parquet binary columns, decode
-  * map-only, skew bounded by chunk() upstream" (Multimodal.scala).
+  * map-only, one whole asset per decode" (Multimodal.scala).
   */
 object MultimodalQueries extends Catalog {
 

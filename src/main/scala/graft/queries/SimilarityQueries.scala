@@ -281,19 +281,21 @@ object SimilarityQueries extends Catalog {
               |SELECT query_id, neighbor_id, bucket, cos, rank FROM ranked
               |WHERE rank <= $K ORDER BY query_id, rank""".stripMargin)),
 
-    // IVF: k-means coarse quantization + probe-limited search. The
-    // deterministic training loop (k=8, iters=3, 9-decimal rounding)
-    // is a fixed finite computation, so the oracle unrolls it as
-    // chained CTEs (duckIvf above) and replays the identical
-    // trajectory; SimilaritySpec additionally pins recall vs brute
-    // force + run-to-run determinism.
+    // IVF: k-means coarse quantization + probe-limited search over
+    // the unwritten index frame (q122 probes the same frame written
+    // to disk). The deterministic training loop (k=8, iters=3,
+    // 9-decimal rounding) is a fixed finite computation, so the
+    // oracle unrolls it as chained CTEs (duckIvf above) and replays
+    // the identical trajectory; SimilaritySpec additionally pins
+    // recall vs brute force + run-to-run determinism.
     Q("q54_ann_ivf",
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")
         val centroids = Similarity.trainCentroids(
           e, "vec_id", "embedding", k = 8, iters = 3)
-        Similarity.ivfTopK(
-            e.filter(col("vec_id") < 10), e, "vec_id", "embedding",
+        Similarity.ivfProbeIndexed(
+            Similarity.ivfIndex(e, "vec_id", "embedding", centroids),
+            e.filter(col("vec_id") < 10), "vec_id", "embedding",
             k = K, centroids = centroids, nprobe = 2)
           .orderBy(col("query_id"), col("rank"))
       },
@@ -319,7 +321,7 @@ object SimilarityQueries extends Catalog {
           s"graft_q122_ivf_index_${dirTag(dir)}").getAbsolutePath
         Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path)
         Similarity.ivfProbeIndexed(
-            Similarity.readIvfIndex(s, path),
+            Tables.readCached(s, path),
             e.filter(col("vec_id") >= 10 && col("vec_id") < 20),
             "vec_id", "embedding", k = K, centroids = centroids,
             nprobe = 2)
@@ -535,7 +537,8 @@ object SimilarityQueries extends Catalog {
                       // scale; its scale evidence is the sf10 gate
 
     // INDEXED capped mining — q120's scale form: blocking on a
-    // sample-trained, materialized IVF layout instead of sign
+    // sample-trained, materialized IVF layout (Similarity
+    // .sampledIvfIndex, shared with q125/q127) instead of sign
     // buckets, so candidate volume is n·nprobe·listSize BY
     // CONSTRUCTION (density-independent; C = GREATEST(4, n/500)
     // lists via BlockDials.ivfLists, per-list occupancy capped at
@@ -549,18 +552,11 @@ object SimilarityQueries extends Catalog {
     Q("q124_cosine_topk_indexed",
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")
-        val n = tableRows(s, dir, "embeddings")
-        val c = BlockDials.ivfLists(n)
-        val smp = math.min(n, 50L * c).toInt
-        val sample = e.orderBy(col("vec_id")).limit(smp)
-        val centroids = Similarity.trainCentroids(
-          sample, "vec_id", "embedding", k = c, iters = 2)
         val path = new java.io.File(sys.props("java.io.tmpdir"),
           s"graft_q124_ivf_topk_${dirTag(dir)}").getAbsolutePath
-        Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path,
-          listCap = BlockDials.ivfListCap(n, c))
-        Similarity.cosineTopKIndexed(
-            Similarity.readIvfIndex(s, path), centroids,
+        val (index, centroids) = Similarity.sampledIvfIndex(e, "vec_id",
+          "embedding", tableRows(s, dir, "embeddings"), path)
+        Similarity.cosineTopKIndexed(index, centroids,
             k = K, threshold = 0.45, nprobe = 2)
           .orderBy(col("doc_id"), col("rank"))
       },
@@ -578,18 +574,11 @@ object SimilarityQueries extends Catalog {
     Q("q125_near_dup_indexed",
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")
-        val n = tableRows(s, dir, "embeddings")
-        val c = BlockDials.ivfLists(n)
-        val smp = math.min(n, 50L * c).toInt
-        val sample = e.orderBy(col("vec_id")).limit(smp)
-        val centroids = Similarity.trainCentroids(
-          sample, "vec_id", "embedding", k = c, iters = 2)
         val path = new java.io.File(sys.props("java.io.tmpdir"),
           s"graft_q125_ivf_nd_${dirTag(dir)}").getAbsolutePath
-        Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path,
-          listCap = BlockDials.ivfListCap(n, c))
-        Similarity.nearDupComponentsIndexed(
-            Similarity.readIvfIndex(s, path), centroids,
+        val (index, centroids) = Similarity.sampledIvfIndex(e, "vec_id",
+          "embedding", tableRows(s, dir, "embeddings"), path)
+        Similarity.nearDupComponentsIndexed(index, centroids,
             threshold = 0.45, nprobe = 2)
           .select(col("v").as("vec_id"), col("component"),
             (col("v") === col("component")).as("survivor"))
@@ -611,19 +600,12 @@ object SimilarityQueries extends Catalog {
     Q("q127_sql_near_dup_indexed",
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")
-        val n = tableRows(s, dir, "embeddings")
-        val c = BlockDials.ivfLists(n)
-        val smp = math.min(n, 50L * c).toInt
-        val sample = e.orderBy(col("vec_id")).limit(smp)
-        val centroids = Similarity.trainCentroids(
-          sample, "vec_id", "embedding", k = c, iters = 2)
         val path = new java.io.File(sys.props("java.io.tmpdir"),
           s"graft_q127_ivf_nd_${dirTag(dir)}").getAbsolutePath
-        Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path,
-          listCap = BlockDials.ivfListCap(n, c))
+        val (index, centroids) = Similarity.sampledIvfIndex(e, "vec_id",
+          "embedding", tableRows(s, dir, "embeddings"), path)
         graft.plans.GraftExtensions.register(s)
-        Similarity.readIvfIndex(s, path)
-          .createOrReplaceTempView("q127_ivf_index")
+        index.createOrReplaceTempView("q127_ivf_index")
         centroids.createOrReplaceTempView("q127_ivf_centroids")
         s.sql("""SELECT v AS vec_id, component,
                 |  (v = component) AS survivor

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.io.FileNotFoundException
-import java.nio.charset.StandardCharsets
 
 import com.univocity.parsers.csv.CsvParser
 import org.apache.hadoop.fs.Path
@@ -83,39 +82,6 @@ object CsvSources {
       }
       .nextOption()
       .getOrElse(readCsv(spark, path, Map.empty))
-  }
-
-  /** Dialect auto-detection done right (engine extension, not parity):
-    * the reference's cascade accepts the first parse yielding >= 1
-    * column, so a comma-separated file read with sep=';' "succeeds" as
-    * one garbled column — readRobust mirrors that faithfully. This
-    * variant instead requires a parse to yield >= 2 columns before
-    * accepting it, falling back to the reference order otherwise.
-    */
-  def readAuto(spark: SparkSession, path: String): DataFrame = {
-    requireExists(spark, path)
-    try {
-      val p = new Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val in = fs.open(p)
-      val buf = new Array[Byte](64 * 1024)
-      val n = try in.read(buf) finally in.close()
-      val head = buf.take(math.max(n, 0))
-      // Encoding: latin1 decodes anything, so column counts can't tell
-      // the encodings apart — strict-validate a prefix as UTF-8 instead
-      // (accented latin1 text is almost never valid UTF-8).
-      val enc = {
-        val dec = StandardCharsets.UTF_8.newDecoder()
-        try { dec.decode(java.nio.ByteBuffer.wrap(head)); "UTF-8" }
-        catch { case _: Exception => "ISO-8859-1" }
-      }
-      // Separator: whichever of ';' ',' '\t' '|' splits the header line
-      // into the most fields.
-      val header = new String(head, enc).linesIterator.nextOption().getOrElse("")
-      val sep = Seq(";", ",", "\t", "|")
-        .maxBy(s => header.split(java.util.regex.Pattern.quote(s), -1).length)
-      readCsv(spark, path, Map("sep" -> sep, "encoding" -> enc))
-    } catch { case _: Exception => readRobust(spark, path) }
   }
 
   /** S2: plain CSV scan (",", UTF-8, header) with existence check. */

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -396,13 +396,5 @@ object EventStreams {
           state.update(st)
           (userId, stage(st))
       }
-  }
-
-  /** Convenience: events parquet dir as a bounded stream (for tests and
-    * replays — production would point readStream at a live source).
-    */
-  def readEventStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = graft.Tables.load(spark, dir, "events").schema
-    spark.readStream.schema(schema).parquet(s"$dir/events.parquet")
   }
 }

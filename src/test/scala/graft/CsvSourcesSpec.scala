@@ -28,17 +28,6 @@ class CsvSourcesSpec extends SparkSpec {
     }
   }
 
-  test("readAuto (engine extension) detects the dialect of all variants") {
-    val expected = CsvSources.readAuto(spark, s"$dir/datasus.csv")
-      .collect().map(_.toSeq).toSet
-    for (f <- Seq("datasus_comma_latin1.csv", "datasus_semi_utf8.csv",
-                  "datasus_comma_utf8.csv")) {
-      val got = CsvSources.readAuto(spark, s"$dir/$f")
-      assert(got.columns.toSeq == Seq("codigo", "descricao"), f)
-      assert(got.collect().map(_.toSeq).toSet == expected, f)
-    }
-  }
-
   test("accented latin1 content survives the cascade") {
     val rows = CsvSources.readRobust(spark, s"$dir/datasus.csv").collect()
     assert(rows.exists(_.getString(1).contains("Cólera clássica")))
@@ -102,12 +91,6 @@ class CsvSourcesSpec extends SparkSpec {
     assert(files.size == 12)
     for (f <- files; (name, read, want) <- readers)
       assertSameRead(s"$name $f", read(f), want(f))
-    for ((f, sep, enc) <- Seq(("datasus.csv", ";", "ISO-8859-1"),
-        ("datasus_comma_latin1.csv", ",", "ISO-8859-1"),
-        ("datasus_semi_utf8.csv", ";", "UTF-8"),
-        ("datasus_comma_utf8.csv", ",", "UTF-8")))
-      assertSameRead(s"readAuto $f", CsvSources.readAuto(spark, s"$dir/$f"),
-        inferred(s"$dir/$f", Map("sep" -> sep, "encoding" -> enc)))
   }
 
   test("header parity on edge files: BOM (also before blank lines), " +

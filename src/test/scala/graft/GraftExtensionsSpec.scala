@@ -110,20 +110,37 @@ class GraftExtensionsSpec extends SparkSpec {
 
   test("window widths and seed counts below 1 fail at construction, " +
       "naming the parameter") {
+    import spark.implicits._
     GraftExtensions.register(spark)
+    // the IVF table functions reach nearestCentroids' nprobe check the
+    // same way; they resolve their views first, so give them real ones
+    Seq((1L, Seq(1.0, 0.0), 1.0, 10L)).toDF("item_id", "cv", "cn", "list_id")
+      .createOrReplaceTempView("ext_ivf_index")
+    Seq((10L, Seq(1.0, 0.0))).toDF("centroid_id", "centroid")
+      .createOrReplaceTempView("ext_ivf_centroids")
+    val views = "'ext_ivf_index', 'ext_ivf_centroids'"
+    def scalar(fn: String, args: String) =
+      s"SELECT $fn($args) FROM VALUES (array('a', 'b')) AS v(t)"
+    def table(fn: String, args: String) = s"SELECT * FROM $fn($views, $args)"
     val cases = Seq(
-      "chunk_md5(t, 0)" -> "chunkLen",
-      "chunk_md5(t, -1)" -> "chunkLen",
-      "shingle_md5(t, 0)" -> "shingleLen",
-      "window_md5(t, 0)" -> "windowLen",
-      "multi_min_hash(t, 0, 2)" -> "numHashes",
-      "multi_min_hash(t, 2, 0)" -> "shingleLen")
-    for ((call, param) <- cases) {
-      val e = intercept[Exception] {
-        spark.sql(s"SELECT $call FROM VALUES (array('a', 'b')) AS v(t)")
-          .collect()
+      ("chunk_md5", "chunkLen", scalar("chunk_md5", "t, 0")),
+      ("chunk_md5", "chunkLen", scalar("chunk_md5", "t, -1")),
+      ("shingle_md5", "shingleLen", scalar("shingle_md5", "t, 0")),
+      ("window_md5", "windowLen", scalar("window_md5", "t, 0")),
+      ("multi_min_hash", "numHashes", scalar("multi_min_hash", "t, 0, 2")),
+      ("multi_min_hash", "shingleLen", scalar("multi_min_hash", "t, 2, 0")),
+      ("graft_ivf_qualifying_pairs", "nprobe",
+        table("graft_ivf_qualifying_pairs", "0.5D, 0")),
+      ("graft_cosine_topk_indexed", "nprobe",
+        table("graft_cosine_topk_indexed", "3, 0.5D, 0")),
+      ("graft_near_dup_indexed", "nprobe",
+        table("graft_near_dup_indexed", "0.5D, 0")))
+    for ((fn, param, sql) <- cases) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(sql).collect()
       }
-      assert(e.getMessage.contains(s"$param must be >= 1"), s"$call: $e")
+      assert(e.getMessage.contains(fn) && e.getMessage.contains(param),
+        s"$sql: ${e.getMessage}")
     }
   }
 

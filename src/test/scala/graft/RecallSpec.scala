@@ -84,20 +84,16 @@ class RecallSpec extends SparkSpec {
     val e = corpus
     val n = e.count()
     assert(planted.size > 200, s"fixture degenerate: ${planted.size} dups")
-    // the EXACT production dials of q125: size-derived list count,
-    // 50·C lowest-id training sample, 2 Lloyd steps, nprobe=2, t=0.45
-    val c = BlockDials.ivfLists(n)
-    val smp = math.min(n, 50L * c).toInt
-    val centroids = Similarity.trainCentroids(
-      e.orderBy($"vec_id").limit(smp), "vec_id", "embedding",
-      k = c, iters = 2)
+    // q125's production index (Similarity.sampledIvfIndex: size-
+    // derived list count, 50·C lowest-id training sample, 2 Lloyd
+    // steps, occupancy cap) and its dials nprobe=2, t=0.45
     val path = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_spec_recall_indexed").getAbsolutePath
-    Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path,
-      listCap = BlockDials.ivfListCap(n, c))
+    val (index, centroids) =
+      Similarity.sampledIvfIndex(e, "vec_id", "embedding", n, path)
+    val c = centroids.count()
     val comp = Similarity.nearDupComponentsIndexed(
-        Similarity.readIvfIndex(spark, path), centroids,
-        threshold = 0.45, nprobe = 2)
+        index, centroids, threshold = 0.45, nprobe = 2)
       .as[(Long, Long)].collect().toMap
     val recIdx = planted.count { case (d, o) => comp(d) == comp(o) }
       .toDouble / planted.size
@@ -118,8 +114,8 @@ class RecallSpec extends SparkSpec {
 
   test("RECALL LAW: indexed top-k mining surfaces >= 0.95 of planted " +
     "origs in the dup's top-k") {
-    // q124's exact production dials (queries.SimilarityQueries
-    // .topKDials + the size-derived IVF dials + occupancy cap) — the
+    // q124's production index (Similarity.sampledIvfIndex) and dials
+    // (queries.SimilarityQueries.topKDials) — the
     // gap the r19 verdict named: cosineTopKIndexed's recall lived only
     // in the A/B trail, so a dial change could regress it with every
     // gate green. A planted clone sits at cos >= ~0.999, so its orig
@@ -128,18 +124,13 @@ class RecallSpec extends SparkSpec {
     val e = corpus
     val n = e.count()
     val (k, t) = graft.queries.SimilarityQueries.topKDials
-    val c = BlockDials.ivfLists(n)
-    val smp = math.min(n, 50L * c).toInt
-    val centroids = Similarity.trainCentroids(
-      e.orderBy($"vec_id").limit(smp), "vec_id", "embedding",
-      k = c, iters = 2)
     val path = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_spec_recall_topk").getAbsolutePath
-    Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path,
-      listCap = BlockDials.ivfListCap(n, c))
+    val (index, centroids) =
+      Similarity.sampledIvfIndex(e, "vec_id", "embedding", n, path)
+    val c = centroids.count()
     val got = Similarity.cosineTopKIndexed(
-        Similarity.readIvfIndex(spark, path), centroids,
-        k = k, threshold = t, nprobe = 2)
+        index, centroids, k = k, threshold = t, nprobe = 2)
       .select($"doc_id", $"neighbor_id")
       .as[(Long, Long)].collect().toSet
     val rec = planted.count(got.contains).toDouble / planted.size

@@ -17,7 +17,9 @@ class SimilaritySpec extends SparkSpec {
     val queries = e.filter($"vec_id" < 10)
     def run() = {
       val centroids = Similarity.trainCentroids(e, "vec_id", "embedding", 8, 3)
-      Similarity.ivfTopK(queries, e, "vec_id", "embedding", 5, centroids, 2)
+      Similarity.ivfProbeIndexed(
+          Similarity.ivfIndex(e, "vec_id", "embedding", centroids),
+          queries, "vec_id", "embedding", 5, centroids, 2)
         .select($"query_id", $"neighbor_id", $"rank")
         .as[(Long, Long, Int)].collect().toSet
     }
@@ -150,16 +152,38 @@ class SimilaritySpec extends SparkSpec {
 
   test("every IVF neighbor comes from a probed centroid list") {
     val e = Tables.load(spark, dir, "embeddings")
+    val nprobe = 2
     val centroids = Similarity.trainCentroids(e, "vec_id", "embedding", 8, 3)
-    val out = Similarity.ivfTopK(
-      e.filter($"vec_id" < 5), e, "vec_id", "embedding", 5, centroids, 2)
+    val queries = e.filter($"vec_id" < 5)
+    val out = Similarity.ivfProbeIndexed(
+        Similarity.ivfIndex(e, "vec_id", "embedding", centroids),
+        queries, "vec_id", "embedding", 5, centroids, nprobe)
+      .select($"query_id", $"neighbor_id", $"centroid_id", $"rank")
+      .as[(Long, Long, Long, Int)].collect()
+    assert(out.nonEmpty)
     // ranks are 1..k without gaps per query
-    val ranks = out.groupBy($"query_id")
-      .agg(collect_list($"rank").as("rs"))
-      .as[(Long, Seq[Int])].collect()
-    ranks.foreach { case (_, rs) =>
-      assert(rs.sorted == (1 to rs.length))
+    out.groupBy(_._1).foreach { case (_, rows) =>
+      assert(rows.map(_._4).sorted.toSeq == (1 to rows.length))
     }
+    // each query's probe set, recomputed on the driver: the `nprobe`
+    // centroids of highest 9-decimal cosine (Spark's HALF_UP round of
+    // the double), ties to the lower id
+    def dotD(a: Seq[Double], b: Seq[Double]) =
+      a.zip(b).foldLeft(0.0) { case (acc, (x, y)) => acc + x * y }
+    def round9(d: Double) = BigDecimal(d)
+      .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val cents = centroids.as[(Long, Seq[Double])].collect()
+    val probed = queries.select($"vec_id", $"embedding")
+      .as[(Long, Seq[Float])].collect().map { case (q, fv) =>
+        val v = fv.map(_.toDouble)
+        q -> cents.map { case (cid, c) =>
+          (cid, round9(dotD(v, c) /
+            (math.sqrt(dotD(v, v)) * math.sqrt(dotD(c, c)))))
+        }.sortBy { case (cid, d) => (-d, cid) }.take(nprobe).map(_._1).toSet
+      }.toMap
+    val outside = out.filterNot { case (q, _, cid, _) => probed(q)(cid) }
+    assert(outside.isEmpty,
+      s"neighbors from unprobed lists: ${outside.take(3).toSeq}")
   }
 
   test("cosineTopKBlocked == per-doc window prefix of the blocked pair set") {
@@ -187,33 +211,32 @@ class SimilaritySpec extends SparkSpec {
     assert(overCap.isEmpty)
   }
 
-  test("ivfProbeIndexed over a materialized index == inline ivfTopK") {
+  test("written index == unwritten ivfIndex frame") {
     val e = Tables.load(spark, dir, "embeddings")
     val centroids = Similarity.trainCentroids(
       e, "vec_id", "embedding", k = 4, iters = 2)
     val path = new java.io.File(
       sys.props("java.io.tmpdir"), "graft_spec_ivf_index").getAbsolutePath
     Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path)
+    val written = Tables.readCached(spark, path)
+    val frame = Similarity.ivfIndex(e, "vec_id", "embedding", centroids)
+    def rows(idx: org.apache.spark.sql.DataFrame) =
+      idx.select($"item_id", $"cv", $"cn", $"list_id".cast("long"))
+        .collect().toSet
+    assert(rows(written) == rows(frame))
     val queries = e.filter($"vec_id" < 8)
-    val probed = Similarity.ivfProbeIndexed(
-      Similarity.readIvfIndex(spark, path), queries,
-      "vec_id", "embedding", k = 3, centroids = centroids, nprobe = 2)
-    val inline = Similarity.ivfTopK(
-      queries, e, "vec_id", "embedding", k = 3,
-      centroids = centroids, nprobe = 2)
-      .select($"query_id", $"neighbor_id",
-        $"centroid_id".cast("long").as("centroid_id"), $"cos", $"rank")
-    assert(probed.collect().toSet == inline.collect().toSet)
+    def probe(idx: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfProbeIndexed(idx, queries,
+        "vec_id", "embedding", k = 3, centroids = centroids, nprobe = 2)
+    val probed = probe(written)
+    assert(probed.collect().toSet == probe(frame).collect().toSet)
     assert(probed.count() > 0)
     // every centroid-probing entry point rejects an empty probe set
     // instead of silently returning no rows
     for (run <- Seq(
-        () => Similarity.ivfTopK(queries, e, "vec_id", "embedding", 3,
-          centroids, nprobe = 0),
-        () => Similarity.ivfProbeIndexed(Similarity.readIvfIndex(spark, path),
+        () => Similarity.ivfProbeIndexed(written,
           queries, "vec_id", "embedding", 3, centroids, nprobe = 0),
-        () => Similarity.cosineTopKIndexed(
-          Similarity.readIvfIndex(spark, path), centroids, 3, 0.5, 0))) {
+        () => Similarity.cosineTopKIndexed(written, centroids, 3, 0.5, 0))) {
       val bad = intercept[IllegalArgumentException](run())
       assert(bad.getMessage.contains("nprobe"), bad.getMessage)
     }
@@ -252,7 +275,7 @@ class SimilaritySpec extends SparkSpec {
     val path = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_spec_topk_idx").getAbsolutePath
     Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path)
-    val index = Similarity.readIvfIndex(spark, path)
+    val index = Tables.readCached(spark, path)
     val (k, t, nprobe) = (3, 0.3, 2)
     val got = Similarity.cosineTopKIndexed(index, centroids, k, t, nprobe)
     // reference: adjacency via a window over centroid pairs,
@@ -298,7 +321,7 @@ class SimilaritySpec extends SparkSpec {
     val path = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_spec_topk_idx_edge").getAbsolutePath
     Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path)
-    val index = Similarity.readIvfIndex(spark, path)
+    val index = Tables.readCached(spark, path)
     // nprobe=1: a list's nearest list is itself (cos=1 beats every
     // other rounded cosine; ties break to the lower id, and the self
     // pair is always present), so every neighbor must share the
@@ -439,7 +462,7 @@ class SimilaritySpec extends SparkSpec {
     val path = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_spec_nd_indexed").getAbsolutePath
     Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path)
-    val index = Similarity.readIvfIndex(spark, path)
+    val index = Tables.readCached(spark, path)
     val viaCompose = Similarity.nearDupComponentsIndexed(
       index, centroids, threshold = 0.3, nprobe = 2)
     val pairs = Similarity.indexedQualifyingPairs(

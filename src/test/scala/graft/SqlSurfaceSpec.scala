@@ -251,7 +251,7 @@ class SqlSurfaceSpec extends SparkSpec {
       .createTempDirectory("graft_sql_ivf_spec").toString
     Similarity.writeIvfIndex(vecs, "vec_id", "embedding", centroids,
       path, listCap = 40)
-    val idx = Similarity.readIvfIndex(spark, path)
+    val idx = Tables.readCached(spark, path)
     idx.createOrReplaceTempView("sql_ivf_index")
     centroids.createOrReplaceTempView("sql_ivf_centroids")
     sameAs(
@@ -301,17 +301,18 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(msg.contains("graft_exact_dedup"))
     assert(msg.toUpperCase.contains("STRING") &&
       !msg.toLowerCase.contains("foldable"), msg)
-    // a sign-bit count outside [1, 16] fails naming the parameter: 0
-    // bits has no bucket, and past 31 bits the Int shift wraps into a
-    // silently wrong candidate set
+    // a sign-bit count outside [1, 16] fails analysis naming the
+    // function and the parameter: 0 bits has no bucket, and past 31
+    // bits the Int shift wraps into a silently wrong candidate set
     Seq((1L, Array(0.5f, 0.1f)), (2L, Array(-0.5f, -0.1f)))
       .toDF("vec_id", "vec").createOrReplaceTempView("sql_bad_vecs")
     for (nb <- Seq(0, 17)) {
-      val badBits = intercept[IllegalArgumentException] {
+      val badBits = intercept[org.apache.spark.sql.AnalysisException] {
         spark.sql("SELECT * FROM graft_cosine_pairs(" +
           s"'sql_bad_vecs', 'vec_id', 'vec', 0.9D, $nb)").collect()
       }
-      assert(badBits.getMessage.contains("nbits"), badBits.getMessage)
+      assert(badBits.getMessage.contains("graft_cosine_pairs") &&
+        badBits.getMessage.contains("nbits"), badBits.getMessage)
     }
   }
 }

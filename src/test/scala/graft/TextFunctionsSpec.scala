@@ -55,8 +55,8 @@ class TextFunctionsSpec extends SparkSpec {
   test("dupNgramFraction and topNgramCount on known repetition") {
     // tokens: a b a b a -> bigrams: "a b","b a","a b","b a" (4 total, 2 distinct)
     val df = Seq("a b a b a", "x y z", "tiny").toDF("t").select(
-      round(dupNgramFraction($"t", 2), 6).as("dup2"),
-      topNgramCount($"t", 2).as("top2"))
+      round(dupFractionOf(shingles($"t", 2)), 6).as("dup2"),
+      topCountOf(shingles($"t", 2)).as("top2"))
     val rows = df.collect()
     assert(rows(0).getDouble(0) == 0.5 && rows(0).getInt(1) == 2)
     assert(rows(1).getDouble(0) == 0.0 && rows(1).getInt(1) == 1)

@@ -72,12 +72,12 @@ FAMILY+="q127_sql_near_dup_indexed,"
 FAMILY+="q128_bloom_decontam,q129_dup_span_windows,"
 FAMILY+="q130_cm_heavy_hitters"
 OUT=/tmp/verify_sf10
-SPARK_GRAFT_VERIFY_ONLY="$FAMILY" SPARK_GRAFT_CPUS=32 \
+SPARK_GRAFT_VERIFY_ONLY="$FAMILY" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
   sbt -batch "runMain graft.Verify testdata/sf10 $OUT" >/dev/null
 ORACLE_TIMEOUT_S="${ORACLE_TIMEOUT_S:-300}" \
   python3 tools/oracle_check.py testdata/sf10 "$OUT" \
   "CORRECTNESS_sf10_r${ROUND}.json"
 # property gate for the pair miners whose result sets outgrow the
 # hash compare (q57; q45 doubly covered)
-SPARK_GRAFT_CPUS=32 sbt -batch \
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" sbt -batch \
   "runMain graft.ScaleProps testdata/sf10 PROPS_sf10_r${ROUND}.json"

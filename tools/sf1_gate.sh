@@ -28,7 +28,7 @@ OUT=/tmp/verify_sf1
 # all-pairs arm.
 SKIP="${SPARK_GRAFT_VERIFY_SKIP:-q115_containment_dedup,q126_containment_probe_incremental}"
 SPARK_GRAFT_VERIFY_ONLY="$ONLY" SPARK_GRAFT_VERIFY_SKIP="$SKIP" \
-  SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
   sbt -batch "runMain graft.Verify testdata/sf1 $OUT" >/dev/null
 ORACLE_TIMEOUT_S="${ORACLE_TIMEOUT_S:-90}" \
   python3 tools/oracle_check.py testdata/sf1 "$OUT" \
