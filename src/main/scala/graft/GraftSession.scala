@@ -56,6 +56,7 @@ object GraftSession {
   def builder(master: String, shufflePartitions: String): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
+      .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.files.maxPartitionBytes", "16m")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",

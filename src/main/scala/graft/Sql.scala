@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** SQL entry point: registers the test tables as temp views and the
-  * engine's custom functions, then executes the SQL passed as the
-  * argument (or a demo query). Usage:
+/** SQL entry point: registers the test tables as temp views, then
+  * executes the SQL passed as the argument (or a demo query) in a
+  * session that has the engine's functions from its build. Usage:
   *   sbt "runMain graft.Sql <sfDir> <sql…>"
   */
 object Sql {
@@ -24,7 +24,6 @@ object Sql {
       Tables.all.foreach { t =>
         Tables.load(spark, sfDir, t).createOrReplaceTempView(t)
       }
-      graft.plans.GraftExtensions.register(spark)
       spark.sql(sql).show(100, truncate = false)
     } finally spark.stop()
   }

@@ -26,7 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * Window joining follows `concat_ws`: a null element is skipped and
   * gets no separator, so `["a", null, "b"]` joins to `"a b"`; an empty
   * string is an element like any other. A null token array never
-  * reaches the kernel (the expressions are null-intolerant → null).
+  * reaches the kernel: the expressions are null-intolerant, so a NULL
+  * array gives NULL, where the built-in compositions give `[]` (and
+  * `[NULL, …]`, one per seed, for the min-hash). Callers that explode
+  * the result (`explode_outer`) or pick one element (`element_at`) see
+  * the same rows either way; `PropertySpec` pins both results.
   */
 private[expressions] object TokenWindows {
 

@@ -410,7 +410,6 @@ object AnalyticsQueries extends Catalog {
     Q("q119_sql_surface",
       (s, dir) => {
         Tables.load(s, dir, "documents").createOrReplaceTempView("docs_raw")
-        graft.plans.GraftExtensions.register(s)
         s.sql("""CREATE OR REPLACE TEMP VIEW docs_keyed AS
                 |SELECT doc_id, lang, md5(text) AS content_hash,
                 |       (doc_id * 2654435761) % 1000000007 AS hv

@@ -604,7 +604,6 @@ object SimilarityQueries extends Catalog {
           s"graft_q127_ivf_nd_${dirTag(dir)}").getAbsolutePath
         val (index, centroids) = Similarity.sampledIvfIndex(e, "vec_id",
           "embedding", tableRows(s, dir, "embeddings"), path)
-        graft.plans.GraftExtensions.register(s)
         index.createOrReplaceTempView("q127_ivf_index")
         centroids.createOrReplaceTempView("q127_ivf_centroids")
         s.sql("""SELECT v AS vec_id, component,

@@ -16,29 +16,13 @@ package object graftbridge {
   def toExpression(c: Column): Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** Spark's own analysis errors for SQL function builders (the
-    * factories are private[sql], hence bridged here): a wrong-arity
-    * call or a non-literal parameter to a registered graft function
-    * should fail analysis with the function's name, not leak an NPE
-    * from the builder.
+  /** Spark's own wrong-arity analysis error (the factory is
+    * private[sql], hence bridged here), so a registered graft function
+    * called with the wrong number of arguments fails analysis naming
+    * the function instead of leaking an IndexOutOfBounds.
     */
   def wrongNumArgsError(fn: String, expected: Int, actual: Int): Throwable =
     errors.QueryCompilationErrors.wrongNumArgsError(fn, Seq(expected), actual)
-
-  def nonFoldableArgumentError(fn: String, param: String,
-                               tpe: types.DataType): Throwable =
-    errors.QueryCompilationErrors.nonFoldableArgumentError(fn, param, tpe)
-
-  /** A foldable argument of the WRONG type (e.g. `graft_exact_dedup(42,
-    * …)` where a view-name string is required) gets the type-mismatch
-    * error naming the expected type — not the misleading "non-foldable"
-    * message, which described a property the argument actually has.
-    */
-  def unexpectedInputTypeError(fn: String, paramIndex: Int,
-                               expected: types.DataType,
-                               e: Expression): Throwable =
-    errors.QueryCompilationErrors.unexpectedInputDataTypeError(
-      fn, paramIndex, expected, e)
 
   /** `localCheckpoint` that TRUNCATES inherited plan statistics.
     *

@@ -6,7 +6,6 @@ import graft.plans.GraftExtensions
 class GraftExtensionsSpec extends SparkSpec {
 
   test("registered functions evaluate from spark.sql") {
-    GraftExtensions.register(spark)
     val row = spark.sql(
       """SELECT
         |  token_fingerprint('b a b') AS fp,
@@ -44,7 +43,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("threshold merge-scan variants evaluate from spark.sql") {
-    GraftExtensions.register(spark)
     val row = spark.sql(
       """SELECT
         |  sorted_intersect_at_least(array(1L,2L,3L,4L),
@@ -63,7 +61,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("bare decimal threshold literal (no D suffix) folds to Double") {
-    GraftExtensions.register(spark)
     // a plain SQL decimal literal evals to Spark's Decimal (not a
     // java.lang.Number) — the builder must accept it, not report the
     // misleading "non-foldable argument"
@@ -79,7 +76,6 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("wrong arity / non-literal args fail analysis naming the function") {
-    GraftExtensions.register(spark)
     // wrong number of arguments: AnalysisException, not IndexOutOfBounds
     val arity = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT shingle_md5(array('a','b'))").collect()
@@ -111,7 +107,6 @@ class GraftExtensionsSpec extends SparkSpec {
   test("window widths and seed counts below 1 fail at construction, " +
       "naming the parameter") {
     import spark.implicits._
-    GraftExtensions.register(spark)
     // the IVF table functions reach nearestCentroids' nprobe check the
     // same way; they resolve their views first, so give them real ones
     Seq((1L, Seq(1.0, 0.0), 1.0, 10L)).toDF("item_id", "cv", "cn", "list_id")
@@ -144,14 +139,72 @@ class GraftExtensionsSpec extends SparkSpec {
     }
   }
 
-  test("extensions class injects the same functions at session build") {
-    val ext = new org.apache.spark.sql.SparkSessionExtensions
-    new GraftExtensions().apply(ext) // must not throw; builders wired
-    assert(GraftExtensions.functions.map(_._1).toSet ==
-      Set("multi_min_hash", "sorted_intersect_at_least",
-          "token_fingerprint",
-          "dot_product", "shingle_md5", "chunk_md5", "window_md5",
-          "token_pairs",
-          "graft_length_bucket_width", "graft_sign_bits"))
+  test("every declared function's argument errors name the call and " +
+      "the parameter") {
+    import org.apache.spark.sql.AnalysisException
+    import org.apache.spark.sql.types.StringType
+    import GraftExtensions.{Param, SqlFunction}
+    // a literal each parameter accepts; literals are read before a
+    // table function resolves its views, so no view needs to exist
+    def valid(p: Param): String = p.tpe match {
+      case None => "array('a', 'b')"
+      case Some(StringType) => "'x'"
+      case Some(t) => s"CAST(${p.min max 1} AS ${t.sql})"
+    }
+    def call(f: SqlFunction[Any], args: Seq[String]): String = {
+      val c = s"${f.name}(${args.mkString(", ")})"
+      if (GraftExtensions.functions.contains(f)) s"SELECT $c"
+      else s"SELECT * FROM $c"
+    }
+    def fails(sql: String, names: String*): String = {
+      val e = intercept[AnalysisException](spark.sql(sql).collect())
+      assert(names.forall(e.getMessage.contains), s"$sql: ${e.getMessage}")
+      e.getMessage
+    }
+    for (f <- GraftExtensions.functions ++ GraftExtensions.tableFunctions) {
+      val ok = f.params.map(valid)
+      // wrong arity: the last argument missing, or one too many
+      fails(call(f, ok.init), f.name, f.params.last.name)
+      fails(call(f, ok :+ ok.last), f.name, f.params.last.name)
+      for ((p, i) <- f.params.zipWithIndex; t <- p.tpe) {
+        def at(arg: String) = call(f, ok.updated(i, arg))
+        fails(at("rand()"), f.name, p.name, "foldable")
+        // a foldable literal of the wrong type gets the type-mismatch
+        // error naming the expected type, not the non-foldable one
+        val msg = fails(at(if (t == StringType) "42" else "'x'"),
+          f.name, p.name, s"\"${t.sql}\"")
+        assert(!msg.contains("foldable"), msg)
+        fails(at(s"CAST(NULL AS ${t.sql})"), f.name, p.name, "UNEXPECTED_NULL")
+        // every value just outside the declared domain, and -1
+        val outside = Seq(BigInt(p.min) - 1, BigInt(p.max) + 1, BigInt(-1))
+          .filter(v => v.isValidLong && (v < p.min || v > p.max))
+        if (t != StringType) outside.foreach(v =>
+          fails(at(v.toString), f.name, p.name, "VALUE_OUT_OF_RANGE"))
+      }
+    }
+    // a constraint between two parameters names both and the call
+    fails("SELECT * FROM graft_lsh_pairs('x', 'id', 'text', 4, 3)",
+      "graft_lsh_pairs", "`bands`(3)", "`numHashes`(4)",
+      "PARAMETER_CONSTRAINT_VIOLATION")
+    // valid literals naming a missing view fail on the view
+    fails("SELECT * FROM graft_exact_dedup('no_such_view', 'a', 'b')",
+      "no_such_view")
+  }
+
+  test("every declared function resolves in the session and in " +
+      "newSession()") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    for (s <- Seq(spark, spark.newSession())) {
+      val registry = s.sessionState.functionRegistry
+      val tables = s.sessionState.tableFunctionRegistry
+      for (f <- GraftExtensions.functions)
+        assert(registry.lookupFunction(FunctionIdentifier(f.name))
+          .exists(_.getUsage == f.signature), f.name)
+      for (f <- GraftExtensions.tableFunctions)
+        assert(tables.lookupFunction(FunctionIdentifier(f.name))
+          .exists(_.getUsage == f.signature), f.name)
+    }
+    assert(spark.newSession().sql("SELECT token_fingerprint('b a')").head()
+      .getString(0) == spark.sql("SELECT md5('a b')").head().getString(0))
   }
 }

@@ -298,11 +298,14 @@ class PropertySpec extends SparkSpec {
     import graft.functions.TextFunctions.{minhashHex, shinglesOf}
     import graft.functions.expressions.{ChunkMd5, ShingleMd5, WindowMd5}
     import graft.functions.expressions.CustomExpressions.multiMinHash
+    import org.apache.spark.sql.Row
     val tok: Gen[String] = Gen.frequency(
       1 -> Gen.const(null), 1 -> Gen.const(""),
       6 -> Gen.oneOf("aa", "bb", "cc", "é", "中"))
-    val arrays = Gen.listOfN(12,
-      Gen.choose(0, 12).flatMap(len => Gen.listOfN(len, tok)))
+    val arrays = Gen.listOfN(12, Gen.frequency(
+      1 -> Gen.const(null: List[String]),
+      6 -> Gen.choose(0, 12).flatMap(len => Gen.listOfN(len, tok))))
+    var nullArrays = 0
     forAllSamples(Gen.zip(arrays, Gen.choose(1, 5), Gen.choose(1, 4)),
         n = 10) { case (toks, w, k) =>
       val df = toks.zipWithIndex.map { case (t, i) => (i.toLong, t) }
@@ -326,8 +329,19 @@ class PropertySpec extends SparkSpec {
         chunks,
         array((0 until k).map(s => minhashHex(sh, s)): _*))
         .orderBy($"id").collect().toSeq
-      assert(got == want, s"width $w, $k hashes, arrays $toks")
+      // on a NULL array every expression returns NULL, where the
+      // compositions return [] (and one NULL per seed for the min-hash)
+      val (onNull, onArray) = got.zip(want)
+        .partition(r => toks(r._1.getLong(0).toInt) == null)
+      nullArrays += onNull.size
+      onNull.foreach { case (g, c) =>
+        assert(g == Row(g.get(0), null, null, null, null), g)
+        assert(c == Row(c.get(0), Nil, Nil, Nil, Seq.fill(k)(null)), c)
+      }
+      assert(onArray.forall(r => r._1 == r._2),
+        s"width $w, $k hashes, arrays $toks")
     }
+    assert(nullArrays > 0)
   }
 
   test("CountMin estimates equal an independent md5-grid recompute; " +

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{BudgetSelect, Dedup, Kmv, Packing}
-import graft.plans.GraftExtensions
 
 /** The operator-level SQL surface (r14 verdict task #6): every
   * registered table function must return EXACTLY what the Scala entry
@@ -15,8 +14,6 @@ import graft.plans.GraftExtensions
   */
 class SqlSurfaceSpec extends SparkSpec {
   import spark.implicits._
-
-  GraftExtensions.register(spark)
 
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog"),
@@ -81,7 +78,7 @@ class SqlSurfaceSpec extends SparkSpec {
     sameAs(
       "SELECT * FROM graft_containment_pairs('sql_docs', 'doc_id', 'text', 0.9D)",
       Dedup.containmentPairs(docs, $"doc_id", $"text", 0.9))
-    // bare decimal literal works here too (doubleLit Decimal arm)
+    // bare decimal literal works here too (the reader's Decimal arm)
     sameAs(
       "SELECT * FROM graft_containment_pairs('sql_docs', 'doc_id', 'text', 0.9)",
       Dedup.containmentPairs(docs, $"doc_id", $"text", 0.9))

@@ -19,7 +19,7 @@ rm -rf /tmp/fuzz_out
 # SqlVerify exits 1 if ANY query crashed Spark-side; the comparison
 # must still run for the other N-1 (oracle_check records the crashed
 # ones as FAIL "no spark output"), so tolerate the exit code here.
-SPARK_GRAFT_CPUS=8 sbt -batch \
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" sbt -batch \
   "runMain graft.SqlVerify $SF /tmp/fuzz_out /tmp/fuzz_sql.json" \
   >/dev/null || echo "[fuzz_gate] SqlVerify reported Spark-side failures;" \
   "oracle_check will record them per-query"
