@@ -38,58 +38,65 @@ import org.apache.spark.sql.functions._
   */
 object BlockDials {
 
+  /** Target docs per length band of [[lengthBucketWidth]]. */
+  private val DocsPerBlock = 1250L
+
   /** Width of the n_chars length-bucket for [[Dedup.jaccardPairs]]-
-    * style blocking: split the corpus into `ceil(n / docsPerBlock)`
+    * style blocking: split the corpus into `ceil(n / DocsPerBlock)`
     * equal-width length bands over [0, maxLen]. At the reference
     * data's distribution this holds per-(lang, band) occupancy near
-    * `docsPerBlock × langShare` at every scale.
+    * `DocsPerBlock × langShare` at every scale.
     */
-  def lengthBucketWidth(n: Long, maxLen: Long,
-                        docsPerBlock: Long = 1250L): Int = {
+  def lengthBucketWidth(n: Long, maxLen: Long): Int = {
     require(n >= 0 && maxLen >= 0, "stats must be non-negative")
-    require(docsPerBlock >= 1, "docsPerBlock must be >= 1")
     if (n == 0) return math.max(1, maxLen + 1).toInt
-    val k = math.ceil(n / docsPerBlock.toDouble).toLong
+    val k = math.ceil(n / DocsPerBlock.toDouble).toLong
     math.max(1L, math.ceil((maxLen + 1) / k.toDouble).toLong).toInt
   }
 
+  /** Target vectors per sign bucket of [[signBits]]. */
+  private val TargetOccupancy = 750L
+  /** Upper clamp of [[signBits]]: axis-aligned sign projections only
+    * exist up to the embedding dimension, and past ~16 bits bucket
+    * population is too sparse to pay for.
+    */
+  private val MaxBits = 16
+
   /** Sign-projection bit count for
     * [[Similarity.cosinePairsBlocked]]: the smallest `b` with
-    * `2^b >= ceil(n / targetOccupancy)` — the bit length of
-    * `ceil(n / targetOccupancy) - 1` (exactly
+    * `2^b >= ceil(n / TargetOccupancy)` — the bit length of
+    * `ceil(n / TargetOccupancy) - 1` (exactly
     * `GREATEST(1, LENGTH(BIN(k - 1)))` in DuckDB SQL, so the oracle
     * derives the identical value with no floating log2). Clamped to
-    * `[1, maxBits]`; axis-aligned sign projections only exist up to
-    * the embedding dimension, and past ~16 bits bucket population
-    * is too sparse to pay for.
+    * `[1, MaxBits]`.
     */
-  def signBits(n: Long, targetOccupancy: Long = 750L,
-               maxBits: Int = 16): Int = {
+  def signBits(n: Long): Int = {
     require(n >= 0, "count must be non-negative")
-    require(targetOccupancy >= 1, "targetOccupancy must be >= 1")
-    require(maxBits >= 1, "maxBits must be >= 1")
-    val k = math.ceil(n / targetOccupancy.toDouble).toLong
+    val k = math.ceil(n / TargetOccupancy.toDouble).toLong
     val bits = 64 - java.lang.Long.numberOfLeadingZeros(math.max(0L, k - 1))
-    math.min(maxBits, math.max(1, bits))
+    math.min(MaxBits, math.max(1, bits))
   }
 
+  /** Target vectors per IVF list of [[ivfLists]]. */
+  private val TargetList = 500L
+  /** Floor of [[ivfLists]]. */
+  private val MinLists = 4
+
   /** IVF list count for [[Similarity.cosineTopKIndexed]]-style indexed
-    * mining: `max(minLists, ceil(n / targetList))` — lists scale with
-    * the corpus so per-list occupancy stays ~`targetList` and the
-    * probe-join candidate volume is Θ(n · nprobe · targetList), i.e.
+    * mining: `max(MinLists, ceil(n / TargetList))` — lists scale with
+    * the corpus so per-list occupancy stays ~`TargetList` and the
+    * probe-join candidate volume is Θ(n · nprobe · TargetList), i.e.
     * linear in n by construction (unlike sign buckets, whose FIXED
     * axis-aligned projections concentrate a clustered corpus into few
     * hot buckets no matter how many bits the dial adds — k-means
     * centroids follow the data and split hot regions). Pure integer
-    * derivation (`GREATEST(minLists, CAST(CEIL(n / targetList.0) AS
-    * BIGINT))` in DuckDB), same oracle contract as the other dials.
+    * derivation (`GREATEST(4, CAST(CEIL(n / 500.0) AS BIGINT))` in
+    * DuckDB), same oracle contract as the other dials.
     */
-  def ivfLists(n: Long, targetList: Long = 500L, minLists: Int = 4): Int = {
+  def ivfLists(n: Long): Int = {
     require(n >= 0, "count must be non-negative")
-    require(targetList >= 1, "targetList must be >= 1")
-    require(minLists >= 1, "minLists must be >= 1")
-    math.min(Int.MaxValue.toLong, math.max(minLists.toLong,
-      math.ceil(n / targetList.toDouble).toLong)).toInt
+    math.min(Int.MaxValue.toLong, math.max(MinLists.toLong,
+      math.ceil(n / TargetList.toDouble).toLong)).toInt
   }
 
   /** Per-list occupancy cap for [[Similarity.writeIvfIndex]]'s

@@ -19,6 +19,12 @@ import graft.functions.expressions.SortedIntersectAtLeast.sortedIntersectAtLeast
   */
 object Dedup {
 
+  /** Word-shingle length of every MinHash signature these operators
+    * compute. The SQL surface exposes the length only on the token
+    * expressions (`multi_min_hash`, `shingle_md5`).
+    */
+  private val ShingleLen = 3
+
   /** Exact dedup by content hash: one representative (min id) + count
     * per distinct key. A single hash aggregation — map-side partial
     * aggregation makes the shuffle carry only distinct hashes.
@@ -28,17 +34,17 @@ object Dedup {
       .agg(min(id).as("keep_id"), count(lit(1)).as("n_copies"))
 
   /** Per-doc MinHash signature columns m0..m{k-1} (lowercase-hex
-    * min-digests over word `shingleLen`-grams). Pure map — higher-order
+    * min-digests over word 3-grams). Pure map — higher-order
     * expressions, no explode, no shuffle.
     */
   def minhashSignatures(df: DataFrame, id: Column, text: Column,
-                        numHashes: Int, shingleLen: Int = 3): DataFrame = {
+                        numHashes: Int): DataFrame = {
     // custom MultiMinHash expression: one pass over the token array
     // (shingles built internally in a reused buffer) for all seeds —
     // same values as the per-seed array_min(transform(md5)) over
     // shingles() composition, an order of magnitude cheaper
     val withSig = df.select(id.as("doc_id"),
-      multiMinHash(tokens(text), numHashes, shingleLen).as("sig"))
+      multiMinHash(tokens(text), numHashes, ShingleLen).as("sig"))
     val sigCols = (0 until numHashes)
       .map(s => element_at(col("sig"), s + 1).as(s"m$s"))
     withSig.select((col("doc_id") +: sigCols): _*)
@@ -51,11 +57,10 @@ object Dedup {
     * (they can never be near-dup candidates).
     */
   def bandedBuckets(df: DataFrame, id: Column, text: Column,
-                    numHashes: Int, bands: Int,
-                    shingleLen: Int = 3): DataFrame = {
+                    numHashes: Int, bands: Int): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val rows = numHashes / bands
-    val sigs = minhashSignatures(df, id, text, numHashes, shingleLen)
+    val sigs = minhashSignatures(df, id, text, numHashes)
     // concat (not concat_ws): a null minhash (shingle-less doc) must
     // null the band signature, or every empty doc lands in one bucket.
     val bandSig = (b: Int) =>
@@ -78,9 +83,8 @@ object Dedup {
     * explodes only where real duplicates exist.
     */
   def minhashCandidates(df: DataFrame, id: Column, text: Column,
-                        numHashes: Int, bands: Int,
-                        shingleLen: Int = 3): DataFrame = {
-    val buckets = bandedBuckets(df, id, text, numHashes, bands, shingleLen)
+                        numHashes: Int, bands: Int): DataFrame = {
+    val buckets = bandedBuckets(df, id, text, numHashes, bands)
     // Aggregate each bucket's members and generate the i<j pairs from
     // the sorted member array IN the expression layer. A bucket
     // self-join would recompute the whole signature pipeline for both
@@ -122,11 +126,10 @@ object Dedup {
     */
   def incrementalDedup(base: DataFrame, delta: DataFrame,
                        id: Column, text: Column,
-                       numHashes: Int, bands: Int,
-                       shingleLen: Int = 3): DataFrame =
+                       numHashes: Int, bands: Int): DataFrame =
     incrementalDedupIndexed(
-      bandedBuckets(base, id, text, numHashes, bands, shingleLen),
-      delta, id, text, numHashes, bands, shingleLen)
+      bandedBuckets(base, id, text, numHashes, bands),
+      delta, id, text, numHashes, bands)
 
   /** `incrementalDedup` against an already-computed corpus bucket
     * index: any frame with (doc_id, band, sig) rows, typically
@@ -138,8 +141,7 @@ object Dedup {
     */
   def incrementalDedupIndexed(baseBk: DataFrame, delta: DataFrame,
                               id: Column, text: Column,
-                              numHashes: Int, bands: Int,
-                              shingleLen: Int = 3): DataFrame = {
+                              numHashes: Int, bands: Int): DataFrame = {
     // r21 note: checkpointing these batch bucket rows (three
     // consumers: the index probe + both sides of the batch-internal
     // self-join) was tried and REVERTED — the LogicalRDD barrier
@@ -149,8 +151,7 @@ object Dedup {
     // (q109 solo 0.26 -> 0.58 s eager / 0.64 s lazy at sf0.1). The
     // batch is the small side by contract, so its recompute is two
     // extra map-only passes.
-    val deltaBk = bandedBuckets(delta, id, text, numHashes, bands,
-      shingleLen)
+    val deltaBk = bandedBuckets(delta, id, text, numHashes, bands)
     val baseHits = baseBk.as("b")
       .join(deltaBk.as("d"), Seq("band", "sig"))
       .groupBy(col("d.doc_id").as("doc_id"))

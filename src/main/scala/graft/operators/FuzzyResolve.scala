@@ -30,21 +30,18 @@ object FuzzyResolve {
   /** One row per dirty record that has a candidate within `maxDist`:
     * its lowest-distance clean match (ties broken by clean id).
     *
-    * `broadcastVerdicts` controls the verdict→record join strategy:
-    * Some(true) forces a broadcast hint, Some(false) forbids it, and
-    * the default None plants NO static hint — the verdict table's row
-    * count is a function of how many dirty names matched, unknowable
-    * before the quadratic candidate join runs, so a driver-side size
-    * check would pay that join twice; AQE's runtime statistics make
-    * the broadcast-vs-shuffle call for free once the verdicts
-    * materialize. At 100 TB with a high-cardinality name domain the
-    * old unconditional hint would OOM the driver; None degrades to a
-    * shuffle on (block, name) instead.
+    * The verdict→record join carries NO static hint: the verdict
+    * table's row count is a function of how many dirty names matched,
+    * unknowable before the quadratic candidate join runs, so a
+    * driver-side size check would pay that join twice; AQE's runtime
+    * statistics make the broadcast-vs-shuffle call for free once the
+    * verdicts materialize. At 100 TB with a high-cardinality name
+    * domain an unconditional broadcast hint would OOM the driver; the
+    * unhinted join degrades to a shuffle on (block, name) instead.
     */
   def bestMatch(dirty: DataFrame, clean: DataFrame, block: String,
                 dId: String, dName: String, cId: String, cName: String,
-                maxDist: Int,
-                broadcastVerdicts: Option[Boolean] = None): DataFrame = {
+                maxDist: Int): DataFrame = {
     val dn = dirty.select(col(block), col(dName)).distinct()
     val cn = clean.groupBy(col(block), col(cName))
       .agg(min(col(cId)).as(cId))
@@ -58,12 +55,7 @@ object FuzzyResolve {
     val best = cand.withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col(block), col(dName), col(cId), col(cName), col("dist"))
-    val verdicts = broadcastVerdicts match {
-      case Some(true)  => broadcast(best)
-      case Some(false) => best.hint("shuffle_hash")
-      case None        => best
-    }
-    dirty.join(verdicts, Seq(block, dName))
+    dirty.join(best, Seq(block, dName))
       .select(col(dId), col(dName), col(cId), col(cName), col("dist"))
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -48,51 +48,17 @@ object Kmv {
     */
   def kSmallestDistinctByGroup(df: DataFrame, group: Column, hv: Column,
                                k: Int, maxGroups: Int = 1 << 20): DataFrame = {
-    require(k >= 1, "k must be >= 1")
-    require(maxGroups >= 1, "maxGroups must be >= 1")
     val spark = df.sparkSession
     import spark.implicits._
-    val partial = df.select(group.cast("string").as("g"),
-        hv.cast("long").as("hv"))
-      .as[(String, Long)]
+    val partial = keyed(df, group, hv, k, maxGroups)
       .mapPartitions { it =>
-        val sets = scala.collection.mutable.Map.empty[
-          String, java.util.TreeSet[java.lang.Long]]
-        it.foreach { case (g, v) =>
-          val s = sets.getOrElseUpdate(g, {
-            if (sets.size >= maxGroups)
-              throw new IllegalStateException(
-                s"Kmv.kSmallestDistinctByGroup: more than $maxGroups " +
-                  "distinct groups in one partition — the group column " +
-                  "looks high-cardinality, so the bounded per-partition " +
-                  "sketch would OOM; use the generic distinct->rank " +
-                  "path or raise maxGroups")
-            new java.util.TreeSet[java.lang.Long]
-          })
-          // capped insert: only track a value while it can still be
-          // among the K smallest distinct seen in this partition
-          if (s.size < k) s.add(v)
-          else if (v < s.last) { s.add(v); if (s.size > k) s.pollLast() }
-        }
-        sets.iterator.flatMap { case (g, s) =>
-          val b = Seq.newBuilder[(String, Long)]
-          s.forEach(v => b += ((g, v.longValue())))
-          b.result().iterator
-        }
+        val sketches = new Sketches(k, maxGroups)
+        it.foreach { case (g, v) => sketches.insert(g, v) }
+        sketches.rows
       }
       .toDF("g", "hv")
-    // merge: the partials are tiny (≤ K × partitions per group), so
-    // the distinct + rank runs over thousands of rows
-    partial.distinct()
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("g")).orderBy(col("hv"))))
-      .filter(col("rn") <= k)
-      .select(col("g"), col("hv"))
+    merge(partial, k)
   }
-
-  /** Ungrouped variant: the table's K smallest distinct `hv`. */
-  def kSmallestDistinct(df: DataFrame, hv: Column, k: Int): DataFrame =
-    kSmallestDistinctByGroup(df, lit("_"), hv, k).select(col("hv"))
 
   /** One-pass dual sketch: the per-GROUP K-smallest-distinct sketches
     * AND the GLOBAL (ungrouped) one, from a SINGLE scan of the input —
@@ -115,63 +81,87 @@ object Kmv {
     *
     * Returns (perGroup, global): (g, hv) rows exactly equal to
     * [[kSmallestDistinctByGroup]], and (hv) rows exactly equal to
-    * [[kSmallestDistinct]] (pinned in OperatorsSpec).
+    * [[kSmallestDistinctByGroup]] over one constant group (pinned in
+    * OperatorsSpec).
     */
   def kSmallestDistinctByGroupWithGlobal(df: DataFrame, group: Column,
                                          hv: Column, k: Int,
                                          maxGroups: Int = 1 << 20)
       : (DataFrame, DataFrame) = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val partial = keyed(df, group, hv, k, maxGroups)
+      .mapPartitions { it =>
+        val perGroup = new Sketches(k, maxGroups)
+        val global = new Sketches(k, 1)
+        it.foreach { case (g, v) =>
+          perGroup.insert(g, v)
+          global.insert(null, v)
+        }
+        perGroup.rows.map { case (g, v) => (false, g, v) } ++
+          global.rows.map { case (g, v) => (true, g, v) }
+      }
+      .toDF("is_global", "g", "hv")
+      .localCheckpoint()
+    val perGroup = merge(
+      partial.filter(!col("is_global")).select(col("g"), col("hv")), k)
+    val global = merge(
+      partial.filter(col("is_global")).select(lit("_").as("g"), col("hv")), k)
+      .select(col("hv"))
+    (perGroup, global)
+  }
+
+  /** The (g, hv) rows both sketches read, once the dials are checked. */
+  private def keyed(df: DataFrame, group: Column, hv: Column, k: Int,
+                    maxGroups: Int): Dataset[(String, Long)] = {
     require(k >= 1, "k must be >= 1")
     require(maxGroups >= 1, "maxGroups must be >= 1")
     val spark = df.sparkSession
     import spark.implicits._
-    val partial = df.select(group.cast("string").as("g"),
-        hv.cast("long").as("hv"))
+    df.select(group.cast("string").as("g"), hv.cast("long").as("hv"))
       .as[(String, Long)]
-      .mapPartitions { it =>
-        val sets = scala.collection.mutable.Map.empty[
-          String, java.util.TreeSet[java.lang.Long]]
-        val global = new java.util.TreeSet[java.lang.Long]
-        def insert(s: java.util.TreeSet[java.lang.Long], v: Long): Unit =
-          if (s.size < k) s.add(v)
-          else if (v < s.last) { s.add(v); if (s.size > k) s.pollLast() }
-        it.foreach { case (g, v) =>
-          val s = sets.getOrElseUpdate(g, {
-            if (sets.size >= maxGroups)
-              throw new IllegalStateException(
-                s"Kmv.kSmallestDistinctByGroupWithGlobal: more than " +
-                  s"$maxGroups distinct groups in one partition — the " +
-                  "group column looks high-cardinality, so the bounded " +
-                  "per-partition sketch would OOM; use the generic " +
-                  "distinct->rank path or raise maxGroups")
-            new java.util.TreeSet[java.lang.Long]
-          })
-          insert(s, v)
-          insert(global, v)
-        }
-        val b = Seq.newBuilder[(Boolean, String, Long)]
-        sets.foreach { case (g, s) =>
-          s.forEach(v => b += ((false, g, v.longValue())))
-        }
-        global.forEach(v => b += ((true, null, v.longValue())))
-        b.result().iterator
-      }
-      .toDF("is_global", "g", "hv")
-      .localCheckpoint()
-    val perGroup = partial.filter(!col("is_global"))
-      .select(col("g"), col("hv"))
-      .distinct()
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("g")).orderBy(col("hv"))))
-      .filter(col("rn") <= k)
-      .select(col("g"), col("hv"))
-    val global = partial.filter(col("is_global"))
-      .select(lit("_").as("g"), col("hv"))
-      .distinct()
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("g")).orderBy(col("hv"))))
-      .filter(col("rn") <= k)
-      .select(col("hv"))
-    (perGroup, global)
   }
+
+  /** One partition's capped sketches, one per group key: the K
+    * smallest distinct values seen per key, with at most `maxGroups`
+    * keys.
+    */
+  private final class Sketches(k: Int, maxGroups: Int) {
+    private val sets = scala.collection.mutable.Map.empty[
+      String, java.util.TreeSet[java.lang.Long]]
+
+    def insert(g: String, v: Long): Unit = {
+      val s = sets.getOrElseUpdate(g, {
+        if (sets.size >= maxGroups)
+          throw new IllegalStateException(
+            s"Kmv: more than $maxGroups distinct groups in one partition " +
+              "— the group column looks high-cardinality, so the bounded " +
+              "per-partition sketch would OOM; use the generic " +
+              "distinct->rank path or raise maxGroups")
+        new java.util.TreeSet[java.lang.Long]
+      })
+      // capped insert: only track a value while it can still be
+      // among the K smallest distinct seen in this partition
+      if (s.size < k) s.add(v)
+      else if (v < s.last) { s.add(v); if (s.size > k) s.pollLast() }
+    }
+
+    def rows: Iterator[(String, Long)] = sets.iterator.flatMap {
+      case (g, s) =>
+        val b = Seq.newBuilder[(String, Long)]
+        s.forEach(v => b += ((g, v.longValue())))
+        b.result().iterator
+    }
+  }
+
+  /** Merge (g, hv) partial sketches into each group's K smallest
+    * distinct values: the partials are tiny (≤ K × partitions per
+    * group), so the distinct + rank runs over thousands of rows.
+    */
+  private def merge(partial: DataFrame, k: Int): DataFrame =
+    partial.distinct()
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("g")).orderBy(col("hv"))))
+      .filter(col("rn") <= k)
+      .select(col("g"), col("hv"))
 }

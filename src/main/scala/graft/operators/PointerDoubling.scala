@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: the per-round self-join shuffles only on the node /
   * ancestor key, rounds grow with log(depth) — not depth, not data —
-  * and `localCheckpoint` every `checkpointInterval` rounds keeps the
+  * and a `localCheckpoint` every second round keeps the
   * self-referencing plan tree bounded. For a BOM / org-chart /
   * part-ancestry walk on a 1000-executor cluster, depth-proportional
   * JOB LAUNCHES are the real cost this removes: a depth-60 hierarchy
@@ -33,42 +33,41 @@ import org.apache.spark.sql.functions._
   * labeled iff its whole parent chain exists in `edges` and reaches
   * `rootKey`. Nodes with broken chains (a missing ancestor) DROP OUT
   * of the state inside the round join — unlabeled, exactly as the CTE
-  * never reaches them. Only cycles (or a wrong `knownMaxDepth` bound)
-  * leave active rows at the end, and those the convergence guard
-  * reports loudly rather than silently mislabeling.
+  * never reaches them. Only cycles (or a wrong `maxDepth` bound)
+  * leave active rows at the end, and those the in-plan convergence
+  * guard reports loudly rather than silently mislabeling.
   */
 object PointerDoubling {
+
+  /** Checkpoint the state every this many rounds (the final round
+    * never checkpoints — its output flows straight into the caller's
+    * action). Each unmaterialized round references the previous state
+    * twice, so the read amplification of the last checkpointed state
+    * is 2^k; 2 measured best across sf0.1/sf1 (job floor vs re-read,
+    * PLANS.md "q96").
+    */
+  private val CheckpointInterval = 2
 
   /** Depth of every node reachable from `rootKey` through the
     * child→parent relation `edges` (one row per child; `rootKey`
     * itself need not appear as a child). Returns (key, depth) with
     * the root at depth 0.
     *
-    * `knownMaxDepth`: when the caller can bound the depth cheaply
-    * (for a halving hierarchy over long keys, 63 with zero data
-    * inspection), the loop runs exactly ceil(log2 bound) rounds with
-    * NO per-round convergence job. Since 2^plannedRounds >= bound,
-    * every chain within the bound has provably converged, so no
-    * post-loop emptiness job runs either: an in-plan row-level guard
-    * (`assert_true` in the output filter) throws on the caller's
-    * first action if a cycle or a wrong bound left an unconverged
-    * row — loud failure at zero extra jobs. Unbounded callers leave
-    * it None and pay a cheap emptiness probe on each round's
-    * checkpointed state, plus a `require` when `maxIters` runs out.
-    *
-    * `checkpointInterval`: checkpoint the state every k rounds
-    * instead of every round (the final round never checkpoints — its
-    * output flows straight into the caller's action). Each
-    * unmaterialized round references the previous state twice, so the
-    * read amplification of the last checkpointed state is 2^k — keep
-    * small (2-3) when the edge set is large; the default 2 measured
-    * best across sf0.1/sf1 (job floor vs re-read, PLANS.md "q96").
+    * `maxDepth` bounds every node's depth, and the loop runs exactly
+    * ceil(log2 maxDepth) rounds with no per-round convergence job. A
+    * caller gets the bound without a data pass: for a halving
+    * hierarchy over long keys (depth = bit length), 63, or the bit
+    * length of the max key read off the parquet footer; for any
+    * hierarchy, the edge count from the footers' row counts (a chain
+    * cannot be deeper than the edges it uses). Since
+    * 2^rounds >= maxDepth, every chain within the bound has provably
+    * converged, so no post-loop emptiness job runs either: an in-plan
+    * row-level guard (`assert_true` in the output filter) throws on
+    * the caller's first action if a cycle or a wrong bound left an
+    * unconverged row — loud failure at zero extra jobs.
     */
   def depths(edges: DataFrame, key: Column, parent: Column,
-             rootKey: Long, maxIters: Int = 20,
-             knownMaxDepth: Option[Long] = None,
-             checkpointInterval: Int = 2): DataFrame = {
-    require(checkpointInterval >= 1, "checkpointInterval must be >= 1")
+             rootKey: Long, maxDepth: Long): DataFrame = {
     val root = lit(rootKey)
     // state invariant: `anc` is an ancestor of `key` at exact distance
     // `d`; a row is DONE when anc == root (then d is the final depth)
@@ -85,16 +84,10 @@ object PointerDoubling {
       .filter(col("key") =!= root)
       .union(rootRow)
     // after r rounds every pointer has jumped 2^r deep (root-capped):
-    // a known depth bound D needs exactly ceil(log2 D) rounds
-    val plannedRounds = knownMaxDepth.map(d =>
-      math.ceil(math.log(math.max(d, 2).toDouble) / math.log(2.0)).toInt)
-    // early-exit emptiness probe, not a full count — it runs against
-    // checkpointed blocks and stops at the first active row
-    def anyActive(): Boolean = !st.filter(col("anc") =!= root).isEmpty
-    var active = plannedRounds.isDefined || anyActive()
-    var i = 0
-    val rounds = plannedRounds.getOrElse(maxIters)
-    while (active && i < rounds) {
+    // a depth bound D needs exactly ceil(log2 D) rounds
+    val rounds =
+      math.ceil(math.log(math.max(maxDepth, 2).toDouble) / math.log(2.0)).toInt
+    for (i <- 1 to rounds) {
       // jump: replace each active row's ancestor with that ancestor's
       // OWN tracked ancestor, adding the distances. ONE left self-join
       // carries done rows through (join condition is false for them, so
@@ -114,41 +107,25 @@ object PointerDoubling {
         .select(col("s.key").as("key"),
           coalesce(col("a.anc"), col("s.anc")).as("anc"),
           (col("s.d") + coalesce(col("a.d"), lit(0L))).as("d"))
-      i += 1
-      // bounded mode skips the checkpoint on off-interval rounds AND
-      // on the final round (that state is consumed exactly once, by
-      // the caller); unbounded mode must checkpoint every round — the
-      // emptiness probe below would otherwise re-run the whole chain
-      val mustCheckpoint =
-        if (plannedRounds.isDefined) i % checkpointInterval == 0 && i < rounds
-        else true
-      if (mustCheckpoint) st = st.localCheckpoint()
-      if (plannedRounds.isEmpty) active = anyActive()
+      // the final round's state is consumed exactly once, by the caller
+      if (i % CheckpointInterval == 0 && i < rounds) st = st.localCheckpoint()
     }
-    if (plannedRounds.isEmpty) {
-      require(!active,
-        s"PointerDoubling.depths did not converge after $i rounds — " +
-          "cycle in the parent relation, or depth exceeds the bound")
-      st.select(col("key"), col("d").as("depth"))
-    } else {
-      // zero-job convergence guard: 2^rounds >= bound, so any row
-      // still pointing below the root means a cycle or a wrong bound.
-      // assert_true throws with this message during the caller's
-      // action; a Filter is never pruned, so the guard runs even
-      // under a bare count(). The LAZY checkpoint below the filter is
-      // what keeps the guard sound: Catalyst would otherwise push the
-      // deterministic predicate through the final (uncheckpointed)
-      // self-join rounds, where the raise_error fires on mid-round
-      // rows the join was about to resolve. A LogicalRDD is a
-      // pushdown barrier, so the guard only ever sees FINAL rows —
-      // and lazy means no extra job: the caller's first action is
-      // what materializes the final state.
-      st.localCheckpoint(eager = false)
-        .filter(assert_true(col("anc") === root,
-          lit(s"PointerDoubling.depths did not converge after $i " +
-            "rounds — cycle in the parent relation, or depth exceeds " +
-            "the knownMaxDepth bound")).isNull)
-        .select(col("key"), col("d").as("depth"))
-    }
+    // zero-job convergence guard: 2^rounds >= bound, so any row still
+    // pointing below the root means a cycle or a wrong bound.
+    // assert_true throws with this message during the caller's action;
+    // a Filter is never pruned, so the guard runs even under a bare
+    // count(). The LAZY checkpoint below the filter is what keeps the
+    // guard sound: Catalyst would otherwise push the deterministic
+    // predicate through the final (uncheckpointed) self-join rounds,
+    // where the raise_error fires on mid-round rows the join was about
+    // to resolve. A LogicalRDD is a pushdown barrier, so the guard only
+    // ever sees FINAL rows — and lazy means no extra job: the caller's
+    // first action is what materializes the final state.
+    st.localCheckpoint(eager = false)
+      .filter(assert_true(col("anc") === root,
+        lit(s"PointerDoubling.depths did not converge after $rounds " +
+          "rounds — cycle in the parent relation, or depth exceeds " +
+          "the maxDepth bound")).isNull)
+      .select(col("key"), col("d").as("depth"))
   }
 }

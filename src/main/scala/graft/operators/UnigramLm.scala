@@ -16,7 +16,7 @@ import graft.functions.TextFunctions
   * surface the exact-rational mean token frequency — one IEEE double
   * division of exact integers, bit-identical everywhere — plus a
   * scale-invariant rare-token count (a token is rare when its count
-  * is under 1/(rareFactor · n_vocab) of all tokens, i.e. rareFactor×
+  * is under 1/(RareFactor · n_vocab) of all tokens, i.e. RareFactor×
   * below the uniform share, so the flag survives data-size changes).
   *
   * Scale shape: one explode + groupBy(term) builds the vocab (token
@@ -32,8 +32,12 @@ import graft.functions.TextFunctions
   */
 object UnigramLm {
 
+  /** How far below the uniform token share a token must fall to count
+    * as rare.
+    */
+  private val RareFactor = 4
+
   def score(docs: DataFrame, id: String, text: String,
-            rareFactor: Int = 4,
             broadcastMaxVocab: Long = 50L * 1000 * 1000): DataFrame = {
     val toks = docs.select(col(id),
       explode(TextFunctions.tokens(lower(col(text)))).as("term"))
@@ -55,7 +59,7 @@ object UnigramLm {
     val nVocab = statsRow.getAs[Long]("n_vocab")
     val v2 = v
       .withColumn("rare",
-        col("cnt") * lit(nVocab) * lit(rareFactor) < lit(total))
+        col("cnt") * lit(nVocab) * lit(RareFactor) < lit(total))
       .select(col("term"), col("cnt"), col("rare"),
               lit(total).as("total"))
     val vocabSide = if (nVocab <= broadcastMaxVocab) broadcast(v2) else v2

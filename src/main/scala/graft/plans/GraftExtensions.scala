@@ -190,8 +190,7 @@ object GraftExtensions {
     scalar("graft_sign_bits", expr("n"))(a => dialSignBits(a.expr(0))))
 
   /** [[graft.operators.BlockDials.lengthBucketWidth]] as a composed
-    * built-in expression (docsPerBlock fixed at the dial's default
-    * 1250): `n == 0 -> max(1, mx+1)`, else
+    * built-in expression (1250 docs per block): `n == 0 -> max(1, mx+1)`, else
     * `max(1, ceil((mx+1) / ceil(n/1250.0)))`. Both `ceil`s are the
     * same one-correctly-rounded-double-division-then-ceil the Scala
     * dial uses, so the values are bit-identical.
@@ -214,7 +213,7 @@ object GraftExtensions {
   }
 
   /** [[graft.operators.BlockDials.signBits]] as a composed built-in
-    * expression (targetOccupancy 750, maxBits 16): the bit length of
+    * expression (750 vectors per bucket): the bit length of
     * `max(1, ceil(n/750.0)) - 1` via LENGTH(BIN(k-1)) — the same
     * no-floating-log2 form the DuckDB oracles use — clamped to
     * [1, 16].

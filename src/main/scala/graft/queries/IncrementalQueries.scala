@@ -370,7 +370,7 @@ object IncrementalQueries extends Catalog {
             col("p_partkey"),
             floor(col("p_partkey") / 2.0).cast("long"),
             rootKey = 0L,
-            knownMaxDepth = Some(bound))
+            maxDepth = bound)
           .groupBy(col("depth"))
           .agg(count(lit(1)).as("n"),
             min(col("key")).as("min_key"), max(col("key")).as("max_key"))

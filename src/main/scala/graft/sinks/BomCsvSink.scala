@@ -28,14 +28,16 @@ import org.apache.spark.sql.functions._
   */
 object BomCsvSink {
 
-  def write(df: DataFrame, outPath: String, sep: String = ";"): Unit = {
+  private val Sep = ";"
+
+  def write(df: DataFrame, outPath: String): Unit = {
     val spark = df.sparkSession
     val cols = df.columns
     val tmp = outPath + ".__tmp__"
     // pandas QUOTE_ALL renders null cells as "" — coalesce then quoteAll.
     val filled = df.select(cols.map(c => coalesce(col(c).cast("string"), lit("")).as(c)): _*)
     filled.write.mode("overwrite")
-      .option("header", "false").option("sep", sep)
+      .option("header", "false").option("sep", Sep)
       .option("quoteAll", "true")
       // RFC 4180 doubled-quote escaping (pandas-compatible), not the
       // Spark default backslash escape.
@@ -51,7 +53,7 @@ object BomCsvSink {
     try {
       val w = new OutputStreamWriter(stream, StandardCharsets.UTF_8)
       w.write('\uFEFF') // UTF-8 BOM (encoded as EF BB BF)
-      w.write(cols.map(c => "\"" + c.replace("\"", "\"\"") + "\"").mkString(sep))
+      w.write(cols.map(c => "\"" + c.replace("\"", "\"\"") + "\"").mkString(Sep))
       w.write("\n")
       w.flush()
       val parts = fs.listStatus(tmpPath).map(_.getPath)

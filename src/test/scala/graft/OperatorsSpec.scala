@@ -7,7 +7,7 @@ import graft.operators.{Dedup, PriorityDedup, RangeJoin, Sampling}
 class OperatorsSpec extends SparkSpec {
   import spark.implicits._
 
-  test("connectedComponents labels chains, cliques, and singletons") {
+  test("connectedComponentsStar labels chains, cliques, and singletons") {
     // checked against the driver union-find. Components: {1,2,3,4} via a
     // chain (diameter 3 — needs several propagation rounds), {10,11,12}
     // via a triangle, {20} singleton
@@ -105,49 +105,54 @@ class OperatorsSpec extends SparkSpec {
 
   test("PointerDoubling.depths labels a deep chain in log rounds") {
     // path 1→2→…→50 rooted at 0 (parent(k)=k-1): depth 50 resolves
-    // inside maxIters=7 only because each round doubles the jump
+    // in ceil(log2 bound) rounds only because each round doubles the
+    // jump — with the tight bound (6 rounds) and the data-free bound
+    // of a long key (63, also 6 rounds)
     import graft.operators.PointerDoubling
     val edges = (1L to 50L).map(k => (k, k - 1)).toDF("k", "p")
-    val got = PointerDoubling.depths(edges, $"k", $"p", rootKey = 0L,
-        maxIters = 7)
-      .as[(Long, Long)].collect().toMap
-    assert(got == (0L to 50L).map(k => k -> k).toMap)
+    for (bound <- Seq(50L, 63L)) {
+      val got = PointerDoubling.depths(edges, $"k", $"p", rootKey = 0L,
+          maxDepth = bound)
+        .as[(Long, Long)].collect().toMap
+      assert(got == (0L to 50L).map(k => k -> k).toMap, s"bound $bound")
+    }
   }
+
+  private def messages(t: Throwable): Seq[String] =
+    Option(t).toSeq.flatMap(e =>
+      Option(e.getMessage).toSeq ++ messages(e.getCause))
 
   test("PointerDoubling.depths drops broken chains and rejects cycles") {
     import graft.operators.PointerDoubling
     // 5's parent 4 is missing from the relation: 5 and its child 6
-    // are unreachable and must drop out (recursive-CTE parity)
+    // are unreachable and must drop out (recursive-CTE parity); the
+    // edge count bounds the depth
     val broken = Seq((1L, 0L), (2L, 1L), (5L, 4L), (6L, 5L)).toDF("k", "p")
-    val got = PointerDoubling.depths(broken, $"k", $"p", rootKey = 0L)
+    val got = PointerDoubling.depths(broken, $"k", $"p", rootKey = 0L,
+        maxDepth = 4L)
       .as[(Long, Long)].collect().toMap
     assert(got == Map(0L -> 0L, 1L -> 1L, 2L -> 2L))
-    // a cycle never converges — loud failure, not a silent mislabel
+    // a cycle never converges — the in-plan guard fails loudly rather
+    // than silently mislabel, even under a bare count(), which prunes
+    // columns but never prunes a Filter
     val cyc = Seq((1L, 0L), (2L, 3L), (3L, 2L)).toDF("k", "p")
-    intercept[IllegalArgumentException] {
-      PointerDoubling.depths(cyc, $"k", $"p", rootKey = 0L, maxIters = 5)
+    val thrown = intercept[Exception] {
+      PointerDoubling.depths(cyc, $"k", $"p", rootKey = 0L,
+        maxDepth = 3L).count()
     }
+    assert(messages(thrown).exists(_.contains("did not converge")))
   }
 
-  test("PointerDoubling.depths bounded mode: same result, in-plan guard fires") {
+  test("PointerDoubling.depths fails in-plan when a node lies deeper " +
+    "than maxDepth") {
     import graft.operators.PointerDoubling
+    // a WRONG bound must not silently mislabel: 4 allows 2 rounds,
+    // which leave the chain's deeper rows unconverged
     val edges = (1L to 50L).map(k => (k, k - 1)).toDF("k", "p")
-    // trusted bound + sparse checkpoints: identical labels to the
-    // probe-per-round path, at roughly half the job count
-    val got = PointerDoubling.depths(edges, $"k", $"p", rootKey = 0L,
-        knownMaxDepth = Some(50L))
-      .as[(Long, Long)].collect().toMap
-    assert(got == (0L to 50L).map(k => k -> k).toMap)
-    // a WRONG bound must not silently mislabel: the zero-job
-    // assert_true guard throws during the caller's action — even a
-    // bare count(), which prunes columns but never prunes a Filter
     val thrown = intercept[Exception] {
       PointerDoubling.depths(edges, $"k", $"p", rootKey = 0L,
-          knownMaxDepth = Some(4L)).count()
+          maxDepth = 4L).count()
     }
-    def messages(t: Throwable): Seq[String] =
-      Option(t).toSeq.flatMap(e =>
-        Option(e.getMessage).toSeq ++ messages(e.getCause))
     assert(messages(thrown).exists(_.contains("did not converge")))
   }
 
@@ -324,8 +329,8 @@ class OperatorsSpec extends SparkSpec {
         .view.mapValues(_.map(_._2).distinct.sorted.take(k).toSeq).toMap
       assert(got == expected, s"k=$k")
     }
-    val flat = Kmv.kSmallestDistinct(rows, $"hv", 7)
-      .as[Long].collect().sorted.toSeq
+    val flat = Kmv.kSmallestDistinctByGroup(rows, lit("all"), $"hv", 7)
+      .select($"hv").as[Long].collect().sorted.toSeq
     val flatExp = rows.as[(String, Long)].collect()
       .map(_._2).distinct.sorted.take(7).toSeq
     assert(flat == flatExp)
@@ -342,8 +347,8 @@ class OperatorsSpec extends SparkSpec {
         .kSmallestDistinctByGroupWithGlobal(rows, $"g", $"hv", k)
       val pgExp = Kmv.kSmallestDistinctByGroup(rows, $"g", $"hv", k)
         .as[(String, Long)].collect().sorted.toSeq
-      val glExp = Kmv.kSmallestDistinct(rows, $"hv", k)
-        .as[Long].collect().sorted.toSeq
+      val glExp = Kmv.kSmallestDistinctByGroup(rows, lit("all"), $"hv", k)
+        .select($"hv").as[Long].collect().sorted.toSeq
       assert(pg.as[(String, Long)].collect().sorted.toSeq == pgExp,
         s"perGroup k=$k")
       assert(gl.as[Long].collect().sorted.toSeq == glExp, s"global k=$k")

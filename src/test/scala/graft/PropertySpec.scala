@@ -425,7 +425,7 @@ class PropertySpec extends SparkSpec {
     assert(BlockDials.signBits(20000) == 5)  // sf1
     assert(BlockDials.signBits(200000) == 9) // sf10
     assert(BlockDials.signBits(2000000) == 12)
-    assert(BlockDials.signBits(Long.MaxValue / 4) == 16) // maxBits clamp
+    assert(BlockDials.signBits(Long.MaxValue / 4) == 16) // 16-bit clamp
     // power-of-two edge: k = exactly 2^b must give b, not b+1
     assert(BlockDials.signBits(750L * 16) == 4)
     assert(BlockDials.signBits(750L * 16 + 1) == 5)
@@ -436,15 +436,15 @@ class PropertySpec extends SparkSpec {
     assert(BlockDials.lengthBucketWidth(0, 0) == 1)         // empty corpus
     // width never hits 0 even when bands outnumber characters
     assert(BlockDials.lengthBucketWidth(10000000, 3) == 1)
-    // ivfLists: GREATEST(minLists, CEIL(n/targetList)) — oracle parity
+    // ivfLists: GREATEST(4, CEIL(n/500)) — oracle parity
     // for q124's params CTE
     assert(BlockDials.ivfLists(0) == 4)        // empty corpus -> floor
     assert(BlockDials.ivfLists(500) == 4)      // sf0.01 (ceil=1, floored)
     assert(BlockDials.ivfLists(2000) == 4)     // sf0.1
     assert(BlockDials.ivfLists(20000) == 40)   // sf1
     assert(BlockDials.ivfLists(200000) == 400) // sf10
-    assert(BlockDials.ivfLists(500 * 4 + 1, targetList = 500) == 5)
-    assert(BlockDials.ivfLists(500L * 4, targetList = 500) == 4) // exact multiple
+    assert(BlockDials.ivfLists(500 * 4 + 1) == 5)
+    assert(BlockDials.ivfLists(500L * 4) == 4) // exact multiple
   }
 
   test("blocking dials are blocking-only: narrow-dial pairs = " +

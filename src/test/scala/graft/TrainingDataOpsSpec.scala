@@ -116,19 +116,28 @@ class TrainingDataOpsSpec extends SparkSpec {
     assert(hinted == shuffled && hinted.nonEmpty)
   }
 
-  test("fuzzy resolve: broadcast, shuffle and AQE verdict paths agree") {
+  test("fuzzy resolve: name-domain match equals record-domain ranking") {
     val dirty = Tables.load(spark, "/root/testdata/sf0.001", "customer")
       .select(col("c_custkey").as("did"),
         substring(col("c_name"), 1, 1).as("blk"),
         lower(col("c_name")).as("dname"))
     val clean = dirty.where("did % 3 = 0")
       .select(col("did").as("cid"), col("blk"), col("dname").as("cname"))
-    def run(mode: Option[Boolean]) = operators.FuzzyResolve
-      .bestMatch(dirty, clean, "blk", "did", "dname", "cid", "cname", 2,
-        broadcastVerdicts = mode)
+    val got = operators.FuzzyResolve
+      .bestMatch(dirty, clean, "blk", "did", "dname", "cid", "cname", 2)
       .orderBy("did", "cid").collect().toSeq
-    val aqe = run(None)
-    assert(aqe.nonEmpty && run(Some(true)) == aqe && run(Some(false)) == aqe)
+    // record domain: every (dirty, clean) pair of a block, ranked per
+    // dirty record — the per-block quadratic join the operator avoids
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("did")
+      .orderBy("dist", "cid")
+    val want = dirty.join(clean, "blk")
+      .withColumn("dist", levenshtein(col("dname"), col("cname")))
+      .where(col("dist") <= 2)
+      .withColumn("rn", row_number().over(w))
+      .where(col("rn") === 1)
+      .select("did", "dname", "cid", "cname", "dist")
+      .orderBy("did", "cid").collect().toSeq
+    assert(got.nonEmpty && got == want)
   }
 
   test("unigram LM: avg_freq is a probability-like mean in (0, 1]") {
