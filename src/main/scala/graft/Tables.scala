@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.ParquetStats
+
 /** Loaders for the driver-generated parquet test tables
   * (see /root/repo/TESTDATA.md). All query catalog entries read through
   * here so scan options stay in one place.
@@ -17,38 +19,19 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred-schema cache, keyed by table path. Every
-    * `spark.read.parquet(path)` pays a one-stage driver job to read
-    * footers for schema inference, and the engine reconstructs each
-    * query's DataFrame per run — so the suite paid that job once per
-    * table PER TIMED REP (measured: the first job of every timed pass
-    * is `parquet at Tables.scala`, ~0.1 s of the local job-launch
-    * floor). A production deployment reads these tables through a
-    * catalog/metastore whose schema is known, not re-inferred per
-    * query (guide §6 — manifest metadata beats per-query listing);
-    * this cache is that, in-session: the FIRST load of a path infers
-    * (and the bench's warmup run is defined to warm footers/plan
-    * state), later loads pass the schema explicitly and skip the
-    * inference job. Metadata only — every query still computes its
-    * result from the parquet bytes.
+  /** A parquet path read with the schema its files hold now: taken
+    * from the first data file's footer on the driver
+    * ([[graft.sources.ParquetStats.schema]]), so the read launches no
+    * schema-inference job (a bare `spark.read.parquet` launches one per
+    * DataFrame, and the engine rebuilds each query's DataFrames per
+    * run), and a path rewritten in the same session reads back its new
+    * schema. For a `partitionBy` layout the footer holds only the data
+    * columns; Spark infers the partition columns from the directory
+    * names as it does without a schema, so partition pruning is
+    * unchanged.
     */
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
-  /** Cached-schema parquet read for the engine's materialized-index
-    * layouts too (IVF index, containment index): they are re-read per
-    * query construction at a session-stable path with a fixed schema,
-    * so they pay the same per-rep inference job the test tables did.
-    */
-  private[graft] def readCached(spark: SparkSession, path: String): DataFrame = {
-    val cached = schemaCache.get(path)
-    if (cached != null) spark.read.schema(cached).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaCache.put(path, df.schema)
-      df
-    }
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(ParquetStats.schema(spark, path)).parquet(path)
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
     if (name == "events") {
@@ -66,13 +49,13 @@ object Tables {
       import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
       import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
       // With nanosAsLong OFF, a TIMESTAMP(NANOS) file fails inside
-      // spark.read.parquet's schema inference (raw "Illegal Parquet
-      // type: INT64 (TIMESTAMP(NANOS,...))") — before any type
-      // dispatch below could run. Catch that one failure and rethrow
-      // with the fix, so a session built without GraftSession.builder
-      // gets the pointer instead of a bare Parquet type error.
+      // the footer's schema conversion (raw "Illegal Parquet type:
+      // INT64 (TIMESTAMP(NANOS,...))") — before any type dispatch
+      // below could run. Catch that one failure and rethrow with the
+      // fix, so a session built without GraftSession.builder gets the
+      // pointer instead of a bare Parquet type error.
       val raw =
-        try readCached(spark, s"$dir/$name.parquet")
+        try read(spark, s"$dir/$name.parquet")
         catch {
           case e: Exception
               if String.valueOf(e.getMessage).contains("NANOS") =>
@@ -90,37 +73,31 @@ object Tables {
         case other => throw new IllegalStateException(
           s"unexpected events.ts type: $other")
       }
-    } else readCached(spark, s"$dir/$name.parquet")
+    } else read(spark, s"$dir/$name.parquet")
 
   /** Exact row count of a test table from its parquet FOOTERS —
-    * driver-side metadata, zero Spark jobs (the q96 ParquetStats
-    * pattern; r21). Identical to `load(...).count()` by parquet
-    * format contract; falls back to the count job if the path is
-    * missing (never the case for driver-generated dirs).
+    * driver-side metadata, zero Spark jobs. Identical to
+    * `load(...).count()` by parquet format contract. A missing table
+    * throws FileNotFoundException naming its path.
     */
   def rowCount(spark: SparkSession, dir: String, name: String): Long =
-    graft.sources.ParquetStats
-      .rowCount(spark.sparkContext.hadoopConfiguration,
-        s"$dir/$name.parquet")
-      .getOrElse(load(spark, dir, name).count())
+    ParquetStats.rowCount(ParquetStats.footers(
+      spark.sparkContext.hadoopConfiguration, s"$dir/$name.parquet"))
 
-  /** (row count, max of an integral column) from parquet footers —
-    * the zero-job form of [[graft.operators.BlockDials.countAndMax]]
-    * for size-derived dials. Column-chunk statistics are exact for
-    * integral types; an all-null or statistics-less column falls back
-    * to the agg job. The path must exist either way: a missing table
-    * makes the fallback's `load` throw (AnalysisException), the same
-    * contract as [[load]] itself — never the case for Tables-backed
-    * dirs.
+  /** (row count, max of an integral column) from parquet footers, each
+    * opened once — the zero-job form of
+    * [[graft.operators.BlockDials.countAndMax]] for size-derived dials.
+    * Column-chunk statistics are exact for integral types; an all-null
+    * or statistics-less column falls back to the agg job. A missing
+    * table throws FileNotFoundException naming its path.
     */
   def statsCountMax(spark: SparkSession, dir: String, name: String,
                     column: String): (Long, Long) = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val path = s"$dir/$name.parquet"
-    (graft.sources.ParquetStats.rowCount(conf, path),
-      graft.sources.ParquetStats.maxLong(conf, path, column)) match {
-      case (Some(n), Some(mx)) => (n, mx)
-      case _ =>
+    val footers = ParquetStats.footers(
+      spark.sparkContext.hadoopConfiguration, s"$dir/$name.parquet")
+    ParquetStats.maxLong(footers, column) match {
+      case Some(mx) => (ParquetStats.rowCount(footers), mx)
+      case None =>
         graft.operators.BlockDials.countAndMax(
           load(spark, dir, name),
           org.apache.spark.sql.functions.col(column))

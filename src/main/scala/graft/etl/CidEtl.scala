@@ -1,5 +1,6 @@
 package graft.etl
 
+import java.nio.charset.StandardCharsets
 import java.time.LocalDate
 
 import scala.jdk.CollectionConverters._
@@ -306,8 +307,14 @@ object CidEtl {
     BomCsvSink.write(consolidated, outPath)
     val m = obs.get
     val q = Quality(m("total").asInstanceOf[Long], m("missing").asInstanceOf[Long])
-    println(s"Total de códigos consolidados: ${q.total}")
-    println(s"Registros sem bloco/capítulo após merge: ${q.missingHierarchy}")
+    // UTF-8 bytes whatever the JVM's default charset is, as the
+    // reference's Python prints them (`println` turns "códigos" into
+    // "c?digos" under a POSIX locale)
+    Console.out.write(
+      (s"Total de códigos consolidados: ${q.total}\n" +
+        s"Registros sem bloco/capítulo após merge: ${q.missingHierarchy}\n")
+        .getBytes(StandardCharsets.UTF_8))
+    Console.out.flush()
     q
   }
 

@@ -134,10 +134,11 @@ object Dedup {
   /** `incrementalDedup` against an already-computed corpus bucket
     * index: any frame with (doc_id, band, sig) rows, typically
     * `bandedBuckets` of the corpus written once as plain parquet and
-    * read back with `Tables.readCached`. No layout helps: the index
-    * side is a map-only scan that the batch broadcasts into. The
-    * batch's buckets are computed fresh — the batch is the small, new
-    * side — and probe the index.
+    * read back with `Tables.read` (schema from the footer, no
+    * inference job). No layout helps: the index side is a map-only
+    * scan that the batch broadcasts into. The batch's buckets are
+    * computed fresh — the batch is the small, new side — and probe the
+    * index.
     */
   def incrementalDedupIndexed(baseBk: DataFrame, delta: DataFrame,
                               id: Column, text: Column,
@@ -560,7 +561,7 @@ object Dedup {
       .write.mode("overwrite").parquet(path + "/dfreq")
     // read the materialized df table back rather than recomputing the
     // vocabulary aggregation inside the postings plan
-    val dfreq = graft.Tables.readCached(corpus.sparkSession, path + "/dfreq")
+    val dfreq = graft.Tables.read(corpus.sparkSession, path + "/dfreq")
     val rarity = rarityOrdered(expl.join(dfreq, Seq("tok")))
     // r22: the r21 checkpoint-shared docs table is gone with the q115
     // revert (same driver-ground-truth rationale — see
@@ -586,9 +587,9 @@ object Dedup {
   def readContainmentIndex(spark: org.apache.spark.sql.SparkSession,
                            path: String): ContainmentIndex =
     ContainmentIndex(
-      graft.Tables.readCached(spark, path + "/dfreq"),
-      graft.Tables.readCached(spark, path + "/postings"),
-      graft.Tables.readCached(spark, path + "/docs"))
+      graft.Tables.read(spark, path + "/dfreq"),
+      graft.Tables.read(spark, path + "/postings"),
+      graft.Tables.read(spark, path + "/docs"))
 
   /** Incremental containment dedup: all pairs (doc_small, doc_big,
     * containment >= threshold) with one side in the NEW batch and the

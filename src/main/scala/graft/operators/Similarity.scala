@@ -466,7 +466,7 @@ object Similarity {
     val centroids = trainCentroids(sample, id, vec, k = c, iters = 2)
     writeIvfIndex(corpus, id, vec, centroids, path,
       listCap = BlockDials.ivfListCap(n, c))
-    (graft.Tables.readCached(corpus.sparkSession, path), centroids)
+    (graft.Tables.read(corpus.sparkSession, path), centroids)
   }
 
   /** ANN over an IVF index (an [[ivfIndex]] frame or its

@@ -359,9 +359,9 @@ object IncrementalQueries extends Catalog {
         // cost exactly the job-launch floor this query is bound by).
         // sf1's 2M keys give bitLength 21 ⇒ 5 compose rounds instead
         // of 6 — one fewer sequential self-join stage wave.
-        val bound = graft.sources.ParquetStats
-          .maxLong(s.sparkContext.hadoopConfiguration,
-            s"$dir/part.parquet", "p_partkey")
+        val footers = graft.sources.ParquetStats.footers(
+          s.sparkContext.hadoopConfiguration, s"$dir/part.parquet")
+        val bound = graft.sources.ParquetStats.maxLong(footers, "p_partkey")
           .filter(_ > 0)
           .map(m => (64 - java.lang.Long.numberOfLeadingZeros(m)).toLong)
           .getOrElse(63L)

@@ -118,18 +118,6 @@ object SimilarityQueries extends Catalog {
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
       .take(12)
 
-  /** Row count for the size-derived dials (BlockDials), read off the
-    * parquet FOOTERS driver-side — zero Spark jobs, the q96
-    * ParquetStats pattern (r21: each of the six former `e.count()`
-    * dial sites paid a full-scan job per invocation just to size the
-    * blocking). r22 (r21 advisor): delegate to [[Tables.rowCount]] —
-    * this was a verbatim copy of it, two fallback paths that could
-    * drift.
-    */
-  private def tableRows(s: org.apache.spark.sql.SparkSession, dir: String,
-                        name: String): Long =
-    Tables.rowCount(s, dir, name)
-
   // --- shared CTE chain for the IVF-indexed miners (q124/q125):
   // sample-trained k-means (2 Lloyd steps over the 50·C lowest-id
   // vectors), full-corpus assignment (af), self-unioned C×C centroid
@@ -321,7 +309,7 @@ object SimilarityQueries extends Catalog {
           s"graft_q122_ivf_index_${dirTag(dir)}").getAbsolutePath
         Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path)
         Similarity.ivfProbeIndexed(
-            Tables.readCached(s, path),
+            Tables.read(s, path),
             e.filter(col("vec_id") >= 10 && col("vec_id") < 20),
             "vec_id", "embedding", k = K, centroids = centroids,
             nprobe = 2)
@@ -357,7 +345,7 @@ object SimilarityQueries extends Catalog {
     Q("q57_near_dup_blocked",
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")
-        val nb = BlockDials.signBits(tableRows(s, dir, "embeddings"))
+        val nb = BlockDials.signBits(Tables.rowCount(s, dir, "embeddings"))
         Similarity.cosinePairsBlocked(e, "vec_id", "embedding", 0.45, nb)
           .orderBy(col("id_a"), col("id_b"))
       },
@@ -461,7 +449,7 @@ object SimilarityQueries extends Catalog {
     Q("q120_cosine_topk",
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")
-        val nb = BlockDials.signBits(tableRows(s, dir, "embeddings"))
+        val nb = BlockDials.signBits(Tables.rowCount(s, dir, "embeddings"))
         Similarity.cosineTopKBlocked(e, "vec_id", "embedding",
             k = K, threshold = 0.45, nbits = nb)
           .orderBy(col("doc_id"), col("rank"))
@@ -500,7 +488,7 @@ object SimilarityQueries extends Catalog {
     Q("q121_near_dup_components",
       (s, dir) => {
         val e = Tables.load(s, dir, "embeddings")
-        val nb = BlockDials.signBits(tableRows(s, dir, "embeddings"))
+        val nb = BlockDials.signBits(Tables.rowCount(s, dir, "embeddings"))
         Similarity.nearDupComponents(e, "vec_id", "embedding",
             threshold = 0.45, nbits = nb)
           .select(col("v").as("vec_id"), col("component"),
@@ -555,7 +543,7 @@ object SimilarityQueries extends Catalog {
         val path = new java.io.File(sys.props("java.io.tmpdir"),
           s"graft_q124_ivf_topk_${dirTag(dir)}").getAbsolutePath
         val (index, centroids) = Similarity.sampledIvfIndex(e, "vec_id",
-          "embedding", tableRows(s, dir, "embeddings"), path)
+          "embedding", Tables.rowCount(s, dir, "embeddings"), path)
         Similarity.cosineTopKIndexed(index, centroids,
             k = K, threshold = 0.45, nprobe = 2)
           .orderBy(col("doc_id"), col("rank"))
@@ -577,7 +565,7 @@ object SimilarityQueries extends Catalog {
         val path = new java.io.File(sys.props("java.io.tmpdir"),
           s"graft_q125_ivf_nd_${dirTag(dir)}").getAbsolutePath
         val (index, centroids) = Similarity.sampledIvfIndex(e, "vec_id",
-          "embedding", tableRows(s, dir, "embeddings"), path)
+          "embedding", Tables.rowCount(s, dir, "embeddings"), path)
         Similarity.nearDupComponentsIndexed(index, centroids,
             threshold = 0.45, nprobe = 2)
           .select(col("v").as("vec_id"), col("component"),
@@ -603,7 +591,7 @@ object SimilarityQueries extends Catalog {
         val path = new java.io.File(sys.props("java.io.tmpdir"),
           s"graft_q127_ivf_nd_${dirTag(dir)}").getAbsolutePath
         val (index, centroids) = Similarity.sampledIvfIndex(e, "vec_id",
-          "embedding", tableRows(s, dir, "embeddings"), path)
+          "embedding", Tables.rowCount(s, dir, "embeddings"), path)
         index.createOrReplaceTempView("q127_ivf_index")
         centroids.createOrReplaceTempView("q127_ivf_centroids")
         s.sql("""SELECT v AS vec_id, component,

@@ -74,6 +74,17 @@ class CidEtlSpec extends SparkSpec {
     assert(combinedJobs <= 6, s"combined mode launched $combinedJobs jobs")
   }
 
+  test("quality lines print as UTF-8 bytes whatever the console charset") {
+    val buf = new java.io.ByteArrayOutputStream
+    val ascii = new java.io.PrintStream(buf, true, StandardCharsets.US_ASCII)
+    val out = Files.createTempDirectory("cid_utf8").resolve("dir.csv").toString
+    Console.withOut(ascii)(
+      CidEtl.runFromDatasusDir(spark, s"$res/cid_official", out, clock))
+    val printed = buf.toByteArray.toSeq
+    assert(printed.containsSlice("códigos".getBytes(StandardCharsets.UTF_8)),
+      new String(buf.toByteArray, StandardCharsets.UTF_8))
+  }
+
   test("J4: a block spanning two chapters gets the one first in file order") {
     val dir = Files.createTempDirectory("cid_j4")
     def write(name: String, lines: String*): Unit =

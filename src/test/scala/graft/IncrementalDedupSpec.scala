@@ -57,7 +57,7 @@ class IncrementalDedupSpec extends SparkSpec {
       .createTempDirectory("graft_bkidx").toString
     Dedup.bandedBuckets(base, $"doc_id", $"text", numHashes = 8, bands = 4)
       .write.mode("overwrite").parquet(dir)
-    val idx = Tables.readCached(spark, dir)
+    val idx = Tables.read(spark, dir)
     assert(idx.columns.sorted.toSeq == Seq("band", "doc_id", "sig"))
     val indexed = Dedup
       .incrementalDedupIndexed(idx, delta, $"doc_id", $"text", 8, 4)

@@ -218,7 +218,7 @@ class SimilaritySpec extends SparkSpec {
     val path = new java.io.File(
       sys.props("java.io.tmpdir"), "graft_spec_ivf_index").getAbsolutePath
     Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path)
-    val written = Tables.readCached(spark, path)
+    val written = Tables.read(spark, path)
     val frame = Similarity.ivfIndex(e, "vec_id", "embedding", centroids)
     def rows(idx: org.apache.spark.sql.DataFrame) =
       idx.select($"item_id", $"cv", $"cn", $"list_id".cast("long"))
@@ -275,7 +275,7 @@ class SimilaritySpec extends SparkSpec {
     val path = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_spec_topk_idx").getAbsolutePath
     Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path)
-    val index = Tables.readCached(spark, path)
+    val index = Tables.read(spark, path)
     val (k, t, nprobe) = (3, 0.3, 2)
     val got = Similarity.cosineTopKIndexed(index, centroids, k, t, nprobe)
     // reference: adjacency via a window over centroid pairs,
@@ -321,7 +321,7 @@ class SimilaritySpec extends SparkSpec {
     val path = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_spec_topk_idx_edge").getAbsolutePath
     Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path)
-    val index = Tables.readCached(spark, path)
+    val index = Tables.read(spark, path)
     // nprobe=1: a list's nearest list is itself (cos=1 beats every
     // other rounded cosine; ties break to the lower id, and the self
     // pair is always present), so every neighbor must share the
@@ -462,7 +462,7 @@ class SimilaritySpec extends SparkSpec {
     val path = new java.io.File(sys.props("java.io.tmpdir"),
       "graft_spec_nd_indexed").getAbsolutePath
     Similarity.writeIvfIndex(e, "vec_id", "embedding", centroids, path)
-    val index = Tables.readCached(spark, path)
+    val index = Tables.read(spark, path)
     val viaCompose = Similarity.nearDupComponentsIndexed(
       index, centroids, threshold = 0.3, nprobe = 2)
     val pairs = Similarity.indexedQualifyingPairs(

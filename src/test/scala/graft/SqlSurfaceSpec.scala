@@ -248,7 +248,7 @@ class SqlSurfaceSpec extends SparkSpec {
       .createTempDirectory("graft_sql_ivf_spec").toString
     Similarity.writeIvfIndex(vecs, "vec_id", "embedding", centroids,
       path, listCap = 40)
-    val idx = Tables.readCached(spark, path)
+    val idx = Tables.read(spark, path)
     idx.createOrReplaceTempView("sql_ivf_index")
     centroids.createOrReplaceTempView("sql_ivf_centroids")
     sameAs(

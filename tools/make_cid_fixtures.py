@@ -1,21 +1,29 @@
 #!/usr/bin/env python3
 """Generate miniature CID-10 fixtures + golden outputs for ScalaTest.
 
-Runs the reference script (read-only, /root/reference/etl_cid10.py) on
-the fixtures to freeze golden CSVs, then pins dt_atualizacao to a fixed
-date so tests can inject the same clock. Dev tool — run once, outputs
-are committed; neither the engine nor the tests depend on pandas.
+Runs the reference script (read-only, `etl_cid10.py` in the reference
+checkout beside this repository) on the fixtures to freeze golden CSVs,
+then pins dt_atualizacao to a fixed date so tests can inject the same
+clock. Without the reference it exits non-zero before writing anything,
+so inputs and goldens never go out of step. Dev tool — run once,
+outputs are committed; neither the engine nor the tests depend on
+pandas.
 """
 import pathlib
 import re
 import subprocess
 import sys
 
-ROOT = pathlib.Path("/root/repo/src/test/resources")
+REPO = pathlib.Path(__file__).resolve().parent.parent
+REFERENCE = REPO.parent / "reference" / "etl_cid10.py"
+ROOT = REPO / "src" / "test" / "resources"
 OFFICIAL = ROOT / "cid_official"
 STRUCT = ROOT / "cid_structured"
 GOLDEN = ROOT / "golden"
 PINNED_DATE = "2026-01-15"
+
+if not REFERENCE.is_file():
+    raise SystemExit(f"reference script not found: {REFERENCE}; nothing written")
 
 for d in (OFFICIAL, STRUCT, GOLDEN):
     d.mkdir(parents=True, exist_ok=True)
@@ -105,7 +113,7 @@ for fname, sep, enc in cascade:
 
 # ---- run the reference to freeze goldens ----
 def run_ref(args, out):
-    r = subprocess.run([sys.executable, "/root/reference/etl_cid10.py", *args,
+    r = subprocess.run([sys.executable, str(REFERENCE), *args,
                         "--out", str(out)], capture_output=True, text=True)
     if r.returncode != 0:
         print(r.stdout, r.stderr)
