@@ -8,6 +8,36 @@ import org.apache.spark.sql.SparkSession
   * query happens to run first.
   */
 object Bench {
+
+  /** Per-query medians of the previous round's detail file, the
+    * baseline of the cross-round regression flag. Empty, so nothing is
+    * flagged, when the file is missing or unreadable, or was timed at
+    * another sf or under another consume: a detail file without a
+    * `consume` field timed `count()`, which prunes the projected
+    * columns, so its medians are not comparable with a full consume.
+    */
+  private[graft] def previousMedians(f: java.io.File, sfDir: String,
+                                     consume: String): Map[String, Double] =
+    try {
+      if (!f.exists) Map.empty
+      else {
+        val root = new com.fasterxml.jackson.databind.ObjectMapper()
+          .readTree(f)
+        def is(k: String, v: String) = root.hasNonNull(k) && root.get(k).asText == v
+        val prev = root.get("queries")
+        if (!is("sf", sfDir) || !is("consume", consume) || prev == null) Map.empty
+        else {
+          val it = prev.fieldNames()
+          Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+            .flatMap { n =>
+              val node = prev.get(n)
+              if (node.hasNonNull("med")) Some(n -> node.get("med").asDouble)
+              else None
+            }.toMap
+        }
+      }
+    } catch { case _: Exception => Map.empty } // unreadable baseline: no flags
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -44,6 +74,13 @@ object Bench {
     }).filterNot(skip)
     val fns = SparkEntry.queries
 
+    // Each timed run consumes the whole result through the `noop` sink,
+    // which evaluates every projected column and the final sort. A
+    // `count()` lets Catalyst prune both, so it times a different
+    // program than the one users run. The artifacts carry
+    // `"consume":"noop"`; earlier rounds, which timed `count()`, carry
+    // no such field.
+    val consume = "noop"
     // warm-then-time methodology, symmetric with
     // tools/bench_baseline.py (which also warms once and reports the
     // median of the same run count): each query runs once to warm
@@ -56,7 +93,7 @@ object Bench {
     def once(name: String): Option[Double] =
       try {
         val t0 = System.nanoTime()
-        fns(name)(spark, sfDir).count()
+        fns(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
         Some((System.nanoTime() - t0) / 1e9)
       } catch {
         case e: Throwable =>
@@ -126,26 +163,7 @@ object Bench {
     // silent drift into an artifact field someone must adjudicate.
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_DETAIL",
       "BENCH_DETAIL.json")
-    val prevMeds: Map[String, Double] = try {
-      val f = new java.io.File(detailPath)
-      if (!f.exists) Map.empty
-      else {
-        val root = new com.fasterxml.jackson.databind.ObjectMapper()
-          .readTree(f)
-        val sameSf = root.hasNonNull("sf") && root.get("sf").asText == sfDir
-        val prev = root.get("queries")
-        if (!sameSf || prev == null) Map.empty
-        else {
-          val it = prev.fieldNames()
-          Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-            .flatMap { n =>
-              val node = prev.get(n)
-              if (node.hasNonNull("med")) Some(n -> node.get("med").asDouble)
-              else None
-            }.toMap
-        }
-      }
-    } catch { case _: Exception => Map.empty } // unreadable baseline: no flags
+    val prevMeds = previousMedians(new java.io.File(detailPath), sfDir, consume)
     def trips(name: String, ts: Seq[Double]): Boolean =
       prevMeds.get(name).exists(p => ts.head > 2 * p && ts.head - p > 0.15)
     // Self-healing pass: a tripped flag is re-measured ISOLATED before
@@ -240,7 +258,7 @@ object Bench {
               num(math.min(dp, 2), ts.head)
           }
           .mkString(""","qmin":{""", ",", "}")
-      s"""{"metric":"total","value":${num(3, total)},"unit":"sec","runs":$runs,$remeasureJson,"regressed":$regressedJson,"total_min":${num(3, totalMin)},"total_max":${num(3, totalMax)},"queries":$qs$qmin,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${num(3, total)},"unit":"sec","runs":$runs,"consume":"$consume",$remeasureJson,"regressed":$regressedJson,"total_min":${num(3, totalMin)},"total_max":${num(3, totalMax)},"queries":$qs$qmin,"failed":$failedJson,"sf":"$sfDir"}"""
     }
     val line = (for { dp <- 3 to 0 by -1; nMin <- Seq(12, 8, 4, 0) }
         yield jsonLine(dp, nMin))
@@ -271,7 +289,7 @@ object Bench {
         "\"" + k + "\":" + stats
       }.mkString("{\n  ", ",\n  ", "\n}")
       val body =
-        s"""{"sf":"$sfDir","runs":$runs,$remeasureJson,"regressed":$regressedJson,"total_med":${num(3, total)},"total_min":${num(3, totalMin)},"total_max":${num(3, totalMax)},"queries":$detail}"""
+        s"""{"sf":"$sfDir","runs":$runs,"consume":"$consume",$remeasureJson,"regressed":$regressedJson,"total_med":${num(3, total)},"total_min":${num(3, totalMin)},"total_max":${num(3, totalMax)},"queries":$detail}"""
       // best-effort: an unwritable detail path must not crash the run
       // and lose the stdout metrics line the harness parses
       try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),

@@ -8,12 +8,27 @@ import org.apache.spark.sql.functions._
   * quality ratios, fingerprinting.
   *
   * Everything here is a native `Column` expression (higher-order array
-  * functions — codegen'd, no UDFs, no explode), so per-document work
-  * stays inside whole-stage codegen and scales embarrassingly: a 100 TB
-  * corpus is just a map over partitions, no shuffle until the caller
-  * aggregates.
+  * functions — no UDFs, no explode), so per-document work stays inside
+  * one projection and scales embarrassingly: a 100 TB corpus is just a
+  * map over partitions, no shuffle until the caller aggregates.
+  *
+  * Evaluate-once rule: Catalyst's subexpression elimination does not
+  * enter higher-order functions (they are `CodegenFallback`) or
+  * conditional branches, so an array expression referenced N times
+  * inside them is recomputed N times per row. A kernel that reuses a
+  * non-attribute array (a token split, a per-token hash array, a
+  * score vector) binds it once with `let`; a kernel that takes an
+  * array column (`shinglesOf`, `dupFractionOf`, ...) reads it as-is,
+  * and a query that derives several outputs from one array stages it
+  * with `withColumn` (q30, q32, q33, q72).
   */
 object TextFunctions {
+
+  /** Evaluate `e` once and hand it to `f` as a lambda variable, which
+    * `f` may reference any number of times for free. A NULL `e`
+    * reaches `f` unchanged. */
+  private def let(e: Column)(f: Column => Column): Column =
+    element_at(transform(array(e), f), 1)
 
   /** Explicit whitespace class — Java regex \s includes vertical tab,
     * RE2 (DuckDB) \s does not; spelling it out keeps tokenization
@@ -46,7 +61,7 @@ object TextFunctions {
       .otherwise(array().cast("array<string>"))
 
   /** Word n-gram shingles, empty array when the doc is too short. */
-  def shingles(c: Column, n: Int): Column = shinglesOf(tokens(c), n)
+  def shingles(c: Column, n: Int): Column = let(tokens(c))(shinglesOf(_, n))
 
   /** One MinHash value: the minimum md5 hex digest over the shingles,
     * salted with the hash index. Hex strings are uniform, so the
@@ -64,19 +79,19 @@ object TextFunctions {
     * exactly.
     */
   def simhash16(c: Column): Column = {
-    val toks = tokens(c)
-    val hashes = transform(toks, t => {
-      val h = md5(t)
+    val hashes = transform(tokens(c), t => let(md5(t)) { h =>
       val d = (i: Int) => conv(substring(h, i, 1), 16, 10).cast("int")
       (((d(1) * 16 + d(2)) * 16 + d(3)) * 16 + d(4)).cast("int")
     })
-    val n = size(hashes)
-    (0 until 16).map { j =>
-      val pow = 1 << j
-      val cnt = size(filter(hashes,
-        h => floor(h.cast("double") / lit(pow)).cast("int") % 2 === 1))
-      when(cnt * 2 > n, lit(1 << j)).otherwise(lit(0))
-    }.reduce(_ + _)
+    let(hashes) { hs =>
+      val n = size(hs)
+      (0 until 16).map { j =>
+        val pow = 1 << j
+        val cnt = size(filter(hs,
+          h => floor(h.cast("double") / lit(pow)).cast("int") % 2 === 1))
+        when(cnt * 2 > n, lit(1 << j)).otherwise(lit(0))
+      }.reduce(_ + _)
+    }
   }
 
   /** Canonical content fingerprint: md5 of the sorted distinct
@@ -96,24 +111,31 @@ object TextFunctions {
     "de" -> Seq("der", "die", "und", "das", "ist", "ein", "nicht", "mit", "den", "von"),
     "pt" -> Seq("o", "os", "do", "da", "em", "uma", "para", "com", "por", "mais"))
 
-  /** Count of tokens contained in `set`. */
-  def stopwordHits(c: Column, set: Seq[String]): Column = {
+  /** Count of tokens of a precomputed token array contained in `set`. */
+  def stopwordHitsOf(t: Column, set: Seq[String]): Column = {
     val arr = array(set.map(lit): _*)
-    size(filter(tokens(lower(c)), t => array_contains(arr, t)))
+    size(filter(t, x => array_contains(arr, x)))
   }
 
-  /** Language-ID by stopword scoring: argmax over the per-language hit
-    * counts with a fixed priority order on ties (en > es > fr > de >
-    * pt); "und" (undetermined) when nothing matches. An n-gram model
-    * would be the production upgrade; the operator shape (pure column
-    * expression, no shuffle) is identical.
+  /** Count of lowercase tokens contained in `set`. */
+  def stopwordHits(c: Column, set: Seq[String]): Column =
+    stopwordHitsOf(tokens(lower(c)), set)
+
+  /** Language-ID of a precomputed lowercase token array
+    * (`tokens(lower(c))`) by stopword scoring: argmax over the
+    * per-language hit counts with a fixed priority order on ties
+    * (en > es > fr > de > pt); "und" (undetermined) when nothing
+    * matches. An n-gram model would be the production upgrade; the
+    * operator shape (pure column expression, no shuffle) is identical.
     */
-  def langId(c: Column): Column = {
+  def langIdOf(t: Column): Column = {
     val order = Seq("en", "es", "fr", "de", "pt")
-    val scores = order.map(l => l -> stopwordHits(c, stopwords(l)))
-    val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
-    scores.foldRight(lit("und"): Column) { case ((l, s), acc) =>
-      when(s === best && best > 0, lit(l)).otherwise(acc)
+    let(array(order.map(l => stopwordHitsOf(t, stopwords(l))): _*)) { sc =>
+      val scores = order.indices.map(i => element_at(sc, i + 1))
+      val best = greatest(scores: _*)
+      order.zip(scores).foldRight(lit("und"): Column) { case ((l, s), acc) =>
+        when(s === best && best > 0, lit(l)).otherwise(acc)
+      }
     }
   }
 
@@ -142,16 +164,16 @@ object TextFunctions {
     * bit 4: too repetitive (distinct-token ratio < 0.2)
     */
   def qualityMask(c: Column): Column = {
-    val n = tokenCount(c)
-    val avgLen = avgTokenLen(c)
-    val symRatio = punctRatio(c)
-    val distinctRatio = distinctTokenRatio(c)
-    val hits = stopwordHits(c, stopwords("en"))
-    when(n < 50 || n > 100000, 1).otherwise(0) +
-      when(avgLen < 3.0 || avgLen > 10.0, 2).otherwise(0) +
-      when(symRatio > 0.1, 4).otherwise(0) +
-      when(hits === 0, 8).otherwise(0) +
-      when(distinctRatio < 0.2, 16).otherwise(0)
+    val tokenBits = let(tokens(c)) { t =>
+      val n = size(t)
+      val avgLen = avgTokenLenOf(t)
+      when(n < 50 || n > 100000, 1).otherwise(0) +
+        when(avgLen < 3.0 || avgLen > 10.0, 2).otherwise(0) +
+        when(distinctTokenRatioOf(t) < 0.2, 16).otherwise(0)
+    }
+    tokenBits +
+      when(punctRatio(c) > 0.1, 4).otherwise(0) +
+      when(stopwordHits(c, stopwords("en")) === 0, 8).otherwise(0)
   }
 
   /** Punctuation character ratio over total length (0 for empty). */
@@ -163,21 +185,19 @@ object TextFunctions {
       .otherwise(lit(0.0))
   }
 
-  /** Distinct-token ratio — a repetition signal (0 for empty docs). */
-  def distinctTokenRatio(c: Column): Column = {
-    val t = tokens(c)
+  /** Distinct-token ratio of a precomputed token array — a repetition
+    * signal (0 for empty docs). */
+  def distinctTokenRatioOf(t: Column): Column =
     when(size(t) > 0,
         size(array_distinct(t)).cast("double") / size(t).cast("double"))
       .otherwise(lit(0.0))
-  }
 
-  /** Mean token length (0 for empty docs). */
-  def avgTokenLen(c: Column): Column = {
-    val t = tokens(c)
+  /** Mean token length of a precomputed token array (0 for empty
+    * docs). */
+  def avgTokenLenOf(t: Column): Column =
     when(size(t) > 0,
         length(concat_ws("", t)).cast("double") / size(t).cast("double"))
       .otherwise(lit(0.0))
-  }
 
   /** English stopword ratio — a cheap fluency/quality signal. */
   def stopwordRatio(c: Column): Column = {

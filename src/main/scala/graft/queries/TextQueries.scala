@@ -30,11 +30,12 @@ object TextQueries extends Catalog {
 
     Q("q30_text_tokens",
       (s, dir) => Tables.load(s, dir, "documents")
+        .withColumn("toks", tokens(col("text")))
         .select(
           col("doc_id"),
-          tokenCount(col("text")).as("n_tokens"),
-          size(array_distinct(tokens(col("text")))).as("n_distinct"),
-          round(avgTokenLen(col("text")), 6).as("avg_token_len"),
+          size(col("toks")).as("n_tokens"),
+          size(array_distinct(col("toks"))).as("n_distinct"),
+          round(avgTokenLenOf(col("toks")), 6).as("avg_token_len"),
           fingerprint(col("text")).as("fp"))
         .orderBy(col("doc_id")),
       Some(s"""SELECT doc_id,
@@ -64,11 +65,12 @@ object TextQueries extends Catalog {
 
     Q("q32_lang_id",
       (s, dir) => Tables.load(s, dir, "documents")
+        .withColumn("ltoks", tokens(lower(col("text"))))
         .select(
           col("doc_id"),
-          langId(col("text")).as("lang_pred"),
-          stopwordHits(col("text"), stopwords("en")).as("score_en"),
-          stopwordHits(col("text"), stopwords("es")).as("score_es"))
+          langIdOf(col("ltoks")).as("lang_pred"),
+          stopwordHitsOf(col("ltoks"), stopwords("en")).as("score_en"),
+          stopwordHitsOf(col("ltoks"), stopwords("es")).as("score_es"))
         .orderBy(col("doc_id")),
       Some {
         val order = Seq("en", "es", "fr", "de", "pt")
@@ -86,12 +88,12 @@ object TextQueries extends Catalog {
 
     Q("q33_shingles",
       (s, dir) => Tables.load(s, dir, "documents")
+        .withColumn("sh", shingles(col("text"), 3))
         .select(
           col("doc_id"),
-          size(shingles(col("text"), 3)).as("n_shingles"),
-          size(array_distinct(shingles(col("text"), 3)))
-            .as("n_distinct_shingles"),
-          array_min(shingles(col("text"), 3)).as("min_shingle"))
+          size(col("sh")).as("n_shingles"),
+          size(array_distinct(col("sh"))).as("n_distinct_shingles"),
+          array_min(col("sh")).as("min_shingle"))
         .orderBy(col("doc_id")),
       Some(s"""WITH d AS (SELECT doc_id, $duckToks AS toks FROM documents),
               |s AS (SELECT doc_id,
@@ -209,8 +211,8 @@ object TextQueries extends Catalog {
     Q("q72_repetition",
       (s, dir) => Tables.load(s, dir, "documents")
         // mirror the oracle's WITH d/s staging: tokenize once, shingle
-        // once, derive every output from the staged arrays (no reliance
-        // on subexpression elimination to dedupe five tokenizations)
+        // once, derive every output from the staged arrays — the
+        // evaluate-once rule in the TextFunctions scaladoc
         .withColumn("toks", tokens(col("text")))
         .withColumn("sh2", shinglesOf(col("toks"), 2))
         .withColumn("sh3", shinglesOf(col("toks"), 3))

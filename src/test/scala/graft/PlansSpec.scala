@@ -374,6 +374,47 @@ class PlansSpec extends SparkSpec {
       s"map-side partial aggregation missing:\n$p")
   }
 
+  /** Each optimized `Project` of a query with the expressions it
+    * holds of class `T`, lambda bodies included. */
+  private def projectExprs[T: scala.reflect.ClassTag](name: String)
+      : Seq[(String, Seq[T])] = {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val df = SparkEntry.queries(name)(spark, dir)
+    df.queryExecution.optimizedPlan.collect { case p: Project =>
+      p.toString -> p.projectList.flatMap(_.collect { case e: T => e })
+    }
+  }
+
+  test("q44: simhash16 splits each document once and md5-hashes each " +
+       "token once") {
+    import org.apache.spark.sql.catalyst.expressions.{Md5, StringSplit}
+    val splits = projectExprs[StringSplit]("q44_simhash").filter(_._2.nonEmpty)
+    assert(splits.map(_._2.size) == Seq(1), s"text projections: $splits")
+    val md5s = projectExprs[Md5]("q44_simhash").filter(_._2.nonEmpty)
+    assert(md5s.map(_._2.size) == Seq(1), s"md5 projections: $md5s")
+  }
+
+  test("q33: shingles splits each document once") {
+    import org.apache.spark.sql.catalyst.expressions.StringSplit
+    val splits = projectExprs[StringSplit]("q33_shingles").filter(_._2.nonEmpty)
+    assert(splits.map(_._2.size) == Seq(1), s"text projections: $splits")
+  }
+
+  test("text kernels: no Project repeats a tokenizer over a " +
+       "non-attribute input (q30-q33, q39, q44, q72)") {
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, StringSplit}
+    val names = Seq("q30_text_tokens", "q31_text_quality", "q32_lang_id",
+      "q33_shingles", "q39_quality_filter", "q44_simhash", "q72_repetition")
+    val repeats = for {
+      name <- names
+      (project, splits) <- projectExprs[StringSplit](name)
+      (split, n) <- splits.filterNot(_.str.isInstanceOf[Attribute])
+        .groupBy(_.canonicalized).map { case (k, v) => k -> v.size }
+      if n > 1
+    } yield s"$name: $n x $split in\n$project"
+    assert(repeats.isEmpty, repeats.mkString("\n"))
+  }
+
   test("RangeJoin.firstMatchDisjoint: no probe exchange, no CASE chain, " +
        "generated methods stay JIT-sized over 300 ranges") {
     import org.apache.spark.sql.catalyst.expressions.CaseWhen

@@ -344,6 +344,142 @@ class PropertySpec extends SparkSpec {
     assert(nullArrays > 0)
   }
 
+  /** The text kernels as they were written before they bound their
+    * reused arrays once (each reference re-tokenized the document):
+    * the references the evaluate-once forms must equal row for row. */
+  private object Recomputing {
+    import org.apache.spark.sql.Column
+    import graft.functions.TextFunctions.{punctRatio, shinglesOf,
+      stopwords, tokenCount, tokens}
+
+    def shingles(c: Column, n: Int): Column = shinglesOf(tokens(c), n)
+
+    def simhash16(c: Column): Column = {
+      val toks = tokens(c)
+      val hashes = transform(toks, t => {
+        val h = md5(t)
+        val d = (i: Int) => conv(substring(h, i, 1), 16, 10).cast("int")
+        (((d(1) * 16 + d(2)) * 16 + d(3)) * 16 + d(4)).cast("int")
+      })
+      val n = size(hashes)
+      (0 until 16).map { j =>
+        val pow = 1 << j
+        val cnt = size(filter(hashes,
+          h => floor(h.cast("double") / lit(pow)).cast("int") % 2 === 1))
+        when(cnt * 2 > n, lit(1 << j)).otherwise(lit(0))
+      }.reduce(_ + _)
+    }
+
+    def stopwordHits(c: Column, set: Seq[String]): Column = {
+      val arr = array(set.map(lit): _*)
+      size(filter(tokens(lower(c)), t => array_contains(arr, t)))
+    }
+
+    def langId(c: Column): Column = {
+      val order = Seq("en", "es", "fr", "de", "pt")
+      val scores = order.map(l => l -> stopwordHits(c, stopwords(l)))
+      val best = scores.map(_._2).reduce((a, b) => greatest(a, b))
+      scores.foldRight(lit("und"): Column) { case ((l, s), acc) =>
+        when(s === best && best > 0, lit(l)).otherwise(acc)
+      }
+    }
+
+    def qualityMask(c: Column): Column = {
+      val n = tokenCount(c)
+      val avgLen = avgTokenLen(c)
+      val symRatio = punctRatio(c)
+      val distinctRatio = distinctTokenRatio(c)
+      val hits = stopwordHits(c, stopwords("en"))
+      when(n < 50 || n > 100000, 1).otherwise(0) +
+        when(avgLen < 3.0 || avgLen > 10.0, 2).otherwise(0) +
+        when(symRatio > 0.1, 4).otherwise(0) +
+        when(hits === 0, 8).otherwise(0) +
+        when(distinctRatio < 0.2, 16).otherwise(0)
+    }
+
+    def distinctTokenRatio(c: Column): Column = {
+      val t = tokens(c)
+      when(size(t) > 0,
+          size(array_distinct(t)).cast("double") / size(t).cast("double"))
+        .otherwise(lit(0.0))
+    }
+
+    def avgTokenLen(c: Column): Column = {
+      val t = tokens(c)
+      when(size(t) > 0,
+          length(concat_ws("", t)).cast("double") / size(t).cast("double"))
+        .otherwise(lit(0.0))
+    }
+  }
+
+  /** Random documents plus, in every sample, the edge cases: NULL,
+    * empty and whitespace-only text, one token, fewer tokens than a
+    * shingle width, heavy repetition and non-ASCII tokens. */
+  private val documents: Gen[List[String]] = {
+    val edges = List(null, "", "   ", " \t\n\r ", "solo", "two words",
+      ("again " * 70).trim, "中文 é Über ñandú 中文")
+    val tok = Gen.oneOf("the", "of", "and", "el", "la", "le", "les", "der",
+      "die", "o", "os", "a", "é", "中文", "Über", "hello,", "(x)", "ok!",
+      "wordsmithingly", "q")
+    val ws = Gen.oneOf(" ", "  ", "\t", "\n", " \u000B ")
+    val doc = for {
+      n <- Gen.frequency(3 -> Gen.choose(1, 4), 3 -> Gen.choose(5, 80))
+      toks <- Gen.frequency(
+        4 -> Gen.listOfN(n, tok),
+        1 -> tok.map(t => List.fill(n)(t)))
+      seps <- Gen.listOfN(n + 1, ws)
+      pad <- Gen.oneOf(true, false)
+    } yield {
+      val body = toks.zip(seps.tail).map { case (t, s) => t + s }.mkString
+      if (pad) seps.head + body else body.trim
+    }
+    Gen.listOfN(24, doc).map(edges ++ _)
+  }
+
+  test("simhash16 and shingles equal their recomputing compositions on " +
+      "random documents") {
+    import graft.functions.TextFunctions.{shingles, simhash16}
+    forAllSamples(Gen.zip(documents, Gen.choose(1, 4)), n = 8) {
+      case (texts, n) =>
+        val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+          .toDF("id", "text")
+          .select($"id", $"text", simhash16($"text"),
+            Recomputing.simhash16($"text"), shingles($"text", n),
+            Recomputing.shingles($"text", n))
+          .collect()
+        assert(rows.length == texts.size)
+        rows.foreach { r =>
+          assert(r.get(2) == r.get(3), s"simhash16 of '${r.get(1)}'")
+          assert(r.get(4) == r.get(5), s"shingles($n) of '${r.get(1)}'")
+        }
+        assert(rows.find(_.isNullAt(1)).exists(_.getInt(2) == 0),
+          "NULL text must give simhash 0")
+    }
+  }
+
+  test("langId, stopwordHits, qualityMask, avgTokenLen and " +
+      "distinctTokenRatio equal their recomputing compositions on " +
+      "random documents") {
+    import graft.functions.TextFunctions._
+    forAllSamples(documents, n = 8) { texts =>
+      val t = $"text"
+      val pairs = Seq(
+        langIdOf(tokens(lower(t))) -> Recomputing.langId(t),
+        stopwordHits(t, stopwords("es")) ->
+          Recomputing.stopwordHits(t, stopwords("es")),
+        qualityMask(t) -> Recomputing.qualityMask(t),
+        avgTokenLenOf(tokens(t)) -> Recomputing.avgTokenLen(t),
+        distinctTokenRatioOf(tokens(t)) -> Recomputing.distinctTokenRatio(t))
+      val rows = texts.toDF("text")
+        .select(t +: pairs.flatMap { case (a, b) => Seq(a, b) }: _*)
+        .collect()
+      assert(rows.length == texts.size)
+      for (r <- rows; k <- pairs.indices)
+        assert(r.get(1 + 2 * k) == r.get(2 + 2 * k),
+          s"kernel $k of '${r.get(0)}'")
+    }
+  }
+
   test("CountMin estimates equal an independent md5-grid recompute; " +
       "est >= exact always") {
     val gen = Gen.zip(Gen.listOfN(60, Gen.choose(0, 25)),
