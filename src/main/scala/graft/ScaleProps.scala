@@ -133,34 +133,61 @@ object ScaleProps {
     // were bare "spark_only" completion anchors; the laws below are
     // the real gate a correct min-reachable-id labeling must satisfy,
     // checked on the star-contraction labels:
-    //  - cross_impl_equal: every label equals the driver-side
-    //    LongUnionFind reference over the same edges. The edges reach
-    //    the driver through the per-partition spanning forest (at most
-    //    one edge per vertex per partition), so driver memory is O(|V|);
+    //  - cross_impl_equal: the labels of the distributed star rounds
+    //    (forced with autoBroadcastJoinThreshold -1) equal the
+    //    driver-side LongUnionFind reference over the same edges. The
+    //    edges reach the driver through the per-partition spanning
+    //    forest (at most one edge per vertex per partition), so driver
+    //    memory is O(|V|);
+    //  - default_path_equal: so do the labels under the session's own
+    //    threshold, the path the queries take (the driver finish
+    //    wherever the contracted edges fit a broadcast);
     //  - edge_consistent: every candidate edge's endpoints share a
     //    component (one more propagation round is a fixpoint);
     //  - anchored: component(v) <= v, and every label maps to itself
     //    (the representative is a real vertex labeling itself — which
     //    also proves label ⊆ id);
-    //  - n_components: the number of distinct labels.
+    //  - n_components: the number of distinct labels;
+    //  - contracted_edges / path: the forest-contracted edge count the
+    //    operator starts from, and whether the session's threshold
+    //    sends it straight to the driver finish or into the rounds.
     def checkComponents(name: String, vertices: DataFrame, id: String,
                         pairs: DataFrame, a: String, b: String)
         : (String, Seq[(String, Any)]) = {
       import scala.jdk.CollectionConverters._
       val edges = pairs.select(col(a), col(b))
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-      val labels = Dedup.connectedComponentsStar(
+      val components = () => Dedup.connectedComponentsStar(
         vertices.select(col(id)), col(id), edges, col(a), col(b))
         .persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
+      val contracted = Dedup.contractedEdges(edges, col(a), col(b))
+      val nContracted = contracted.count()
+      val path =
+        if (Dedup.fitsDriverFinish(contracted, nContracted)) "driver finish"
+        else "rounds"
       val uf = new LongUnionFind
       Dedup.localSpanningForest(edges).toLocalIterator.asScala
         .foreach(r => uf.union(r.getLong(0), r.getLong(1)))
-      var nV = 0L
-      var crossEqual = true
-      labels.toLocalIterator.asScala.foreach { r =>
-        nV += 1
-        crossEqual &&= uf.find(r.getLong(0)) == r.getLong(1)
+      def equalsUf(labels: DataFrame): (Long, Boolean) = {
+        var nV = 0L
+        var equal = true
+        labels.toLocalIterator.asScala.foreach { r =>
+          nV += 1
+          equal &&= uf.find(r.getLong(0)) == r.getLong(1)
+        }
+        (nV, equal)
       }
+      val thresholdKey = "spark.sql.autoBroadcastJoinThreshold"
+      val saved = spark.conf.getOption(thresholdKey)
+      spark.conf.set(thresholdKey, "-1")
+      val roundsEqual =
+        try {
+          val rounds = components()
+          try equalsUf(rounds)._2 finally rounds.unpersist()
+        } finally saved.fold(spark.conf.unset(thresholdKey))(
+          spark.conf.set(thresholdKey, _))
+      val labels = components()
+      val (nV, defaultEqual) = equalsUf(labels)
       val lbl = (side: String) => labels
         .select(col("v").as(side), col("component").as(s"__c$side"))
       val edgeConsistent = edges
@@ -177,7 +204,9 @@ object ScaleProps {
       labels.unpersist(); edges.unpersist()
       val all = Seq[(String, Any)](
         "vertices" -> nV, "n_components" -> nComp,
-        "cross_impl_equal" -> crossEqual,
+        "contracted_edges" -> nContracted, "path" -> path,
+        "cross_impl_equal" -> roundsEqual,
+        "default_path_equal" -> defaultEqual,
         "edge_consistent" -> edgeConsistent, "anchored" -> anchored)
       println(s"[props] $name: $all")
       (name, all)
@@ -285,6 +314,7 @@ object ScaleProps {
     val json = results.map { case (name, m) =>
       val fields = m.map {
         case (k, v: Boolean) => s""""$k": $v"""
+        case (k, v: String) => s""""$k": "$v""""
         case (k, v) => s""""$k": $v"""
       }.mkString(", ")
       s""""$name": {$fields}"""

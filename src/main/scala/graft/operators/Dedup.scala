@@ -682,17 +682,6 @@ object Dedup {
     verifyContainment(candidates, lookup, threshold)
   }
 
-  /** Stats-truncating eager local checkpoint, used once per round by
-    * [[connectedComponentsStar]]. Spark's own `localCheckpoint` copies
-    * the checkpointed plan's estimated Statistics onto the LogicalRDD,
-    * so a loop whose next round joins plans derived from its own
-    * checkpoint SQUARES the size estimate every round until planning
-    * throws `BigInteger would overflow supported range` (~24 rounds).
-    * This keeps both the lineage and the estimate flat.
-    */
-  private def flatCheckpoint(df: DataFrame): DataFrame =
-    org.apache.spark.sql.graftbridge.flatLocalCheckpoint(df)
-
   /** Per-partition spanning-forest contraction — the edge-volume
     * reduction that lets the connected-components operator accept a
     * pair miner's raw output at scale. A dense near-dup block of m
@@ -731,6 +720,33 @@ object Dedup {
       .toDF(uName, vName)
   }
 
+  /** The edge set [[connectedComponentsStar]] starts from: candidate
+    * pairs canonically oriented (u > v), self-loops dropped,
+    * per-partition forest-contracted ([[localSpanningForest]]) BEFORE
+    * the distinct shuffle — a pair miner's quadratic in-block output
+    * reduces to ≤ one edge per vertex inside its own tasks; global
+    * labels unchanged.
+    */
+  private[graft] def contractedEdges(pairs: DataFrame, src: Column,
+                                     dst: Column): DataFrame =
+    localSpanningForest(pairs
+        .select(greatest(src, dst).as("u"), least(src, dst).as("v"))
+        .filter(col("u") =!= col("v")))
+      .distinct()
+
+  /** Whether [[connectedComponentsStar]] finishes `rows` rows of
+    * `edges` on the driver: long ids, and rows × 16 B (two longs) at
+    * most the session's `spark.sql.autoBroadcastJoinThreshold`, which
+    * must be > 0.
+    */
+  private[graft] def fitsDriverFinish(edges: DataFrame, rows: Long): Boolean = {
+    val bcThreshold: Long =
+      edges.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    edges.schema.fields.forall(
+      _.dataType == org.apache.spark.sql.types.LongType) &&
+      bcThreshold > 0 && rows * 16 <= bcThreshold
+  }
+
   /** The dedup DECISION step: candidate pairs (from [[minhashCandidates]],
     * [[jaccardPairs]] or `Similarity.cosinePairsBlocked`) form an
     * undirected graph; each vertex is labeled with the MINIMUM id
@@ -752,13 +768,40 @@ object Dedup {
     * stars (v, root-of-component); labels read off with one left join
     * (isolated vertices label themselves).
     *
+    * Driver finish: once the edge set fits a broadcast — its rows ×
+    * 16 B (two longs) at most the session's
+    * `spark.sql.autoBroadcastJoinThreshold`, the rule
+    * [[containmentProbeIncremental]] sizes its batch by — the rounds
+    * stop. The edges are collected, a [[LongUnionFind]] labels them
+    * on the driver (its smaller root wins, so `find` is the component
+    * minimum) and the labels are broadcast back onto `vertices`. The
+    * check runs on the contracted forest and after every round, on the
+    * row count each checkpoint's materializing job returns, so it
+    * costs no job; on a small or medium graph it removes every round
+    * and its per-action job floor. A threshold ≤ 0 turns the finish
+    * off, and so do non-`LongType` ids (the union-find holds longs
+    * only): both keep the distributed rounds. At scale the edge count
+    * never falls below the number of non-root vertices, so a large
+    * graph keeps the O(log n) rounds to the end.
+    *
+    * Storage: each round's local checkpoint is released once the next
+    * has materialized. On the distributed path the LAST checkpoint
+    * stays alive, because the returned labels read it lazily; the
+    * driver finish releases it after the collect.
+    *
     * The labeling is canonical, so it is checkable: q47's recursive-CTE
     * oracle and the driver-side [[LongUnionFind]] reference reach the
-    * same one. Throws if `maxIters` rounds don't converge.
+    * same one. Throws if `maxIters` distributed rounds neither converge
+    * nor shrink the edge set to the driver-finish size.
     */
   def connectedComponentsStar(vertices: DataFrame, id: Column,
                               pairs: DataFrame, src: Column, dst: Column,
                               maxIters: Int = 20): DataFrame = {
+    // flatLocalCheckpoint keeps the size estimate from compounding
+    // over rounds and returns the row count its materializing job
+    // took: the only count a round takes
+    import org.apache.spark.sql.graftbridge.{flatLocalCheckpoint,
+      releaseCheckpoint}
     // large-star: every vertex hooks its LARGER neighbors to the min of
     // its neighborhood (m = min(N(u) ∪ {u})); needs both orientations
     // of each edge, so symmetrize per round (cheap union, no shuffle).
@@ -782,43 +825,45 @@ object Dedup {
         .union(mins.select(col("u"), col("mn").as("v"))) // (u, m), u > m
         .distinct()
     }
-    // forest-contract BEFORE the distinct shuffle (localSpanningForest
-    // — a pair miner's quadratic in-block output reduces to ≤ one
-    // edge per vertex inside its own tasks; global labels unchanged)
-    var edges = localSpanningForest(pairs
-        .select(greatest(src, dst).as("u"), least(src, dst).as("v"))
-        .filter(col("u") =!= col("v")))
-      .distinct()
-      .localCheckpoint(true,
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    var converged = edges.isEmpty // no edges: everything is isolated
+    var (edges, n) = flatLocalCheckpoint(contractedEdges(pairs, src, dst),
+      Some(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER))
+    var converged = n == 0 // no edges: everything is isolated
     var i = 0
-    while (!converged && i < maxIters) {
-      val next = flatCheckpoint(smallStar(largeStar(edges)))
+    while (!converged && !fitsDriverFinish(edges, n) && i < maxIters) {
+      val (next, nextN) = flatLocalCheckpoint(smallStar(largeStar(edges)))
       // both sets are distinct + canonical, so equal counts plus empty
       // one-sided difference means set equality
-      converged = next.count() == edges.count() &&
-        next.except(edges).isEmpty
-      edges.unpersist()
+      converged = nextN == n && next.except(edges).isEmpty
+      releaseCheckpoint(edges)
       edges = next
+      n = nextN
       i += 1
     }
-    require(converged,
-      s"connectedComponentsStar did not converge in $maxIters rounds " +
-        "(bound is O(log n) — raise maxIters)")
-    val roots = edges.groupBy(col("u")).agg(min(col("v")).as("root"))
-    val labels = vertices.select(id.as("v"))
+    val roots =
+      if (fitsDriverFinish(edges, n)) {
+        val uf = new LongUnionFind
+        edges.collect().foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+        releaseCheckpoint(edges)
+        val spark = pairs.sparkSession
+        import spark.implicits._
+        broadcast(uf.nonRoots.toSeq.toDF("u", "root"))
+      } else {
+        require(converged,
+          s"connectedComponentsStar did not converge in $maxIters rounds " +
+            "(bound is O(log n) — raise maxIters)")
+        edges.groupBy(col("u")).agg(min(col("v")).as("root"))
+      }
+    vertices.select(id.as("v"))
       .join(roots, col("v") === col("u"), "left")
       .select(col("v"), coalesce(col("root"), col("v")).as("component"))
-    edges.unpersist()
-    labels
   }
 }
 
 /** Union-find over long ids with path compression; the smaller root
   * wins, so `find(v)` is the minimum id in v's component. Backs
-  * [[Dedup.localSpanningForest]] and is the driver-side reference for
-  * [[Dedup.connectedComponentsStar]].
+  * [[Dedup.localSpanningForest]] and the driver finish of
+  * [[Dedup.connectedComponentsStar]], and is the tests' reference for
+  * its labels.
   */
 private[graft] final class LongUnionFind {
   private val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -830,6 +875,10 @@ private[graft] final class LongUnionFind {
     while (c != r) { val n = parent(c); parent(c) = r; c = n }
     r
   }
+
+  /** Every vertex that is not its component's root, with its root. */
+  def nonRoots: Array[(Long, Long)] =
+    parent.keys.toArray.map(x => x -> find(x))
 
   /** Merges the components of `u` and `v`; true iff they were apart. */
   def union(u: Long, v: Long): Boolean = {

@@ -131,11 +131,13 @@ object Similarity {
     * (assign) + one shuffle (groupBy centroid for the means) — the
     * textbook distributed Lloyd step. Each iteration ends in an eager
     * `localCheckpoint` so lineage (and thus plan size) stays flat no
-    * matter how many Lloyd steps run; the prior iteration's blocks are
-    * unpersisted as soon as the next materializes, so peak storage is
-    * one k-row table. Caveat: localCheckpoint is not recoverable on
-    * executor loss — on a real cluster configure a checkpoint dir and
-    * swap in reliable `checkpoint()` for long training runs.
+    * matter how many Lloyd steps run; the prior iteration's checkpoint
+    * is released as soon as the next materializes, so at most two
+    * k-row tables are stored at once, and the returned one stays
+    * stored for its lazy readers. Caveat: localCheckpoint is not
+    * recoverable on executor loss — on a real cluster configure a
+    * checkpoint dir and swap in reliable `checkpoint()` for long
+    * training runs.
     */
   def trainCentroids(corpus: DataFrame, id: String, vec: String,
                      k: Int, iters: Int): DataFrame = {
@@ -176,8 +178,8 @@ object Similarity {
         .localCheckpoint()
       // eager checkpoint above has materialized the new centroids, so
       // the previous iteration's blocks can go (no-op on iteration 0,
-      // whose `prev` was never persisted)
-      prev.unpersist()
+      // whose `prev` is not a checkpoint)
+      org.apache.spark.sql.graftbridge.releaseCheckpoint(prev)
     }
     centroids
   }

@@ -150,9 +150,10 @@ object DedupQueries extends Catalog {
               |SELECT v AS doc_id, MIN(l) AS component,
               |  (v = MIN(l)) AS survivor
               |FROM walk GROUP BY v ORDER BY doc_id""".stripMargin),
-      bench = false), // iterative fixpoint: rounds x per-action floor
-                      // is pure scheduling noise at bench scale — an
-                      // offline index-build-style step, like q54
+      bench = false), // building it launches 5 jobs at sf0.01 (pair
+                      // mining, the counted forest checkpoint, the
+                      // driver-finish collect; PlansSpec pins <= 6)
+                      // — an offline index-build-style step, like q54
 
     // Incremental dedup: the day's batch (doc_id % 10 = 0) adjudicated
     // against the standing corpus WITHOUT re-deduplicating the corpus —

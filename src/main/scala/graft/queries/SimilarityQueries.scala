@@ -520,9 +520,9 @@ object SimilarityQueries extends Catalog {
               |SELECT v AS vec_id, MIN(l) AS component,
               |  (v = MIN(l)) AS survivor
               |FROM walk GROUP BY v ORDER BY vec_id""".stripMargin),
-      bench = false), // iterative fixpoint (like q47): rounds ×
-                      // job-launch floor is scheduling noise at bench
-                      // scale; its scale evidence is the sf10 gate
+      bench = false), // a dedup decision (like q47): building it
+                      // launches 5 jobs at sf0.01 (PlansSpec pins
+                      // <= 6); its scale evidence is the sf10 gate
 
     // INDEXED capped mining — q120's scale form: blocking on a
     // sample-trained, materialized IVF layout (Similarity
@@ -573,10 +573,10 @@ object SimilarityQueries extends Catalog {
           .orderBy(col("vec_id"))
       },
       Some(duckNearDupIndexed),
-      bench = false), // iterative fixpoint (like q121): rounds ×
-                      // job-launch floor is scheduling noise at bench
-                      // scale; its scale evidence is the sf10 props
-                      // gate + the RecallSpec recall law
+      bench = false), // a dedup decision (like q121): building it
+                      // launches 17 jobs at sf0.01, the IVF index
+                      // build included; its scale evidence is the
+                      // sf10 props gate + the RecallSpec recall law
 
     // q125's decision path reached PURELY THROUGH SQL: the same
     // index build, then temp views over the materialized layout and

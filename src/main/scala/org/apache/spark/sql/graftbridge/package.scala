@@ -24,6 +24,25 @@ package object graftbridge {
   def wrongNumArgsError(fn: String, expected: Int, actual: Int): Throwable =
     errors.QueryCompilationErrors.wrongNumArgsError(fn, Seq(expected), actual)
 
+  /** Frees the blocks behind a `localCheckpoint` result (Spark's own or
+    * [[flatLocalCheckpoint]]'s). `Dataset.unpersist` does nothing there:
+    * the checkpoint persists its RDD directly and never registers with
+    * the `CacheManager`, so each superseded round of an iterative loop
+    * would stay in the block manager until the session ends. A frame
+    * whose plan is not a checkpoint scan holds no blocks of its own and
+    * is left alone. Every frame still reading `df` fails once this has
+    * run, so call it only after its successor has materialized. The
+    * blocks go through the context because `RDD.unpersist` logs a
+    * warning that the lineage is lost, for every release, and losing
+    * it is the point here.
+    */
+  def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case l: execution.LogicalRDD =>
+        l.rdd.sparkContext.unpersistRDD(l.rdd.id, blocking = false)
+      case _ =>
+    }
+
   /** `localCheckpoint` that TRUNCATES inherited plan statistics.
     *
     * Spark 4's `Dataset.localCheckpoint` copies the checkpointed
@@ -40,20 +59,26 @@ package object graftbridge {
     * (falls back to `defaultSizeInBytes` — constant, so per-round
     * estimates stop compounding) while keeping the materialized
     * blocks, output partitioning and ordering.
+    *
+    * Returns the checkpoint with its row count. The count is the job
+    * that materializes the checkpoint: Spark's eager checkpoint runs
+    * the same count on the same RDD and drops the result, so a loop
+    * that needs its round's size gets it without a second action.
     */
   def flatLocalCheckpoint(df: DataFrame,
-                          storageLevel: Option[org.apache.spark.storage.StorageLevel] = None): DataFrame = {
+                          storageLevel: Option[org.apache.spark.storage.StorageLevel] = None): (DataFrame, Long) = {
     val ds = df.asInstanceOf[classic.Dataset[Row]]
     val ck = storageLevel match {
-      case Some(sl) => ds.localCheckpoint(eager = true, storageLevel = sl)
-      case None     => ds.localCheckpoint()
+      case Some(sl) => ds.localCheckpoint(eager = false, storageLevel = sl)
+      case None     => ds.localCheckpoint(eager = false)
     }
     ck.queryExecution.logical match {
       case l: execution.LogicalRDD =>
-        classic.Dataset.ofRows(ck.sparkSession,
+        val rows = l.rdd.count()
+        (classic.Dataset.ofRows(ck.sparkSession,
           execution.LogicalRDD(l.output, l.rdd, l.outputPartitioning,
             l.outputOrdering, l.isStreaming, l.stream)(
-            ck.sparkSession, None, None))
+            ck.sparkSession, None, None)), rows)
       case other =>
         // A non-LogicalRDD checkpoint plan means a Spark upgrade moved
         // the stats we exist to truncate: returning it silently would

@@ -84,10 +84,7 @@ class IncrementalDedupSpec extends SparkSpec {
 
   test("autoBroadcastJoinThreshold=-1 (broadcast disabled) degrades to " +
       "the shuffle path instead of crashing") {
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
-    try {
-      spark.conf.set(key, "-1")
+    withBroadcastThreshold(Some("-1")) {
       val out = Dedup
         .incrementalDedup(base, delta, $"doc_id", $"text", 8, 4)
         .select($"doc_id", $"is_new")
@@ -97,6 +94,6 @@ class IncrementalDedupSpec extends SparkSpec {
       assert(rows(10L) == false && rows(11L) == true)
       assert(!out.queryExecution.executedPlan.toString
         .contains("BroadcastHashJoin"))
-    } finally spark.conf.set(key, saved)
+    }
   }
 }

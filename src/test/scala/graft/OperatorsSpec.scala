@@ -24,14 +24,20 @@ class OperatorsSpec extends SparkSpec {
     assert(got == want)
   }
 
+  // The rounds run only when the driver finish is off: broadcast
+  // disabled (-1) or non-long ids.
+  private val distributed = Some("-1")
+
   test("connectedComponentsStar throws rather than return unconverged labels") {
     // one round turns the path into (2,1),(3,1),(4,2),(5,3),(6,4) —
     // not the input edge set, so a 1-round budget must fail loudly
     val vertices = (1L to 6L).toDF("id")
     val pairs = (1L to 5L).map(i => (i, i + 1)).toDF("a", "b") // diameter 5
-    intercept[IllegalArgumentException] {
-      Dedup.connectedComponentsStar(vertices, $"id", pairs, $"a", $"b",
-        maxIters = 1)
+    withBroadcastThreshold(distributed) {
+      intercept[IllegalArgumentException] {
+        Dedup.connectedComponentsStar(vertices, $"id", pairs, $"a", $"b",
+          maxIters = 1)
+      }
     }
   }
 
@@ -45,10 +51,48 @@ class OperatorsSpec extends SparkSpec {
     val edges = (1L until 60L).map(i => (i, i + 1))
     val want = unionFindLabels(ids, edges)
     assert(want == ids.map(_ -> 1L).toMap)
-    val got = Dedup.connectedComponentsStar(ids.toDF("id"), $"id",
-        edges.toDF("a", "b"), $"a", $"b")
-      .as[(Long, Long)].collect().toMap
+    val got = withBroadcastThreshold(distributed) {
+      Dedup.connectedComponentsStar(ids.toDF("id"), $"id",
+          edges.toDF("a", "b"), $"a", $"b")
+        .as[(Long, Long)].collect().toMap
+    }
     assert(got == want)
+  }
+
+  test("connectedComponentsStar labels string ids through the rounds") {
+    // the driver finish holds longs only, so string ids take the
+    // distributed rounds under the default threshold; the label is
+    // the lexicographic minimum of the component
+    val ids = Seq("d", "b", "x", "a", "m", "q", "z")
+    val pairs = Seq("d" -> "b", "x" -> "d", "a" -> "x", "m" -> "q",
+      "q" -> "m", "z" -> "z").toDF("a", "b")
+    val got = Dedup.connectedComponentsStar(ids.toDF("id"), $"id",
+        pairs, $"a", $"b")
+      .as[(String, String)].collect().toMap
+    assert(got == Map("d" -> "a", "b" -> "a", "x" -> "a", "a" -> "a",
+      "m" -> "m", "q" -> "m", "z" -> "z"))
+  }
+
+  test("connectedComponentsStar keeps at most its last round's " +
+       "checkpoint, and none after the driver finish") {
+    // each superseded round is released once its successor has
+    // materialized; the distributed labels read the last checkpoint
+    // lazily, so that one stays. Collecting the labels must not
+    // checkpoint anything either.
+    val ids = 1L to 60L
+    val vertices = ids.toDF("id")
+    val pairs = (1L until 60L).map(i => (i, i + 1)).toDF("a", "b")
+    for (threshold <- Seq(distributed, None)) {
+      val before = spark.sparkContext.getPersistentRDDs.size
+      val got = withBroadcastThreshold(threshold) {
+        Dedup.connectedComponentsStar(vertices, $"id", pairs, $"a", $"b")
+          .as[(Long, Long)].collect().toMap
+      }
+      assert(got == ids.map(_ -> 1L).toMap)
+      val grown = spark.sparkContext.getPersistentRDDs.size - before
+      assert(grown <= (if (threshold.isDefined) 1 else 0),
+        s"threshold $threshold: $grown persisted RDDs left behind")
+    }
   }
 
   test("forest contraction: dense clique scattered across partitions") {
@@ -85,9 +129,11 @@ class OperatorsSpec extends SparkSpec {
     import org.apache.spark.sql.graftbridge.flatLocalCheckpoint
     var df = Seq((1L, 1L), (2L, 1L)).toDF("v", "c")
     for (_ <- 1 to 30) {
-      df = flatLocalCheckpoint(
+      val (next, rows) = flatLocalCheckpoint(
         df.as("a").join(df.as("b"), $"a.c" === $"b.v")
           .select($"a.v", $"b.c".as("c")))
+      assert(rows == 2)
+      df = next
       // the estimate must stay put (defaultSizeInBytes), not compound
       assert(df.queryExecution.optimizedPlan.stats.sizeInBytes
         .bitLength < 64, "checkpoint stats compounding again")
@@ -420,18 +466,12 @@ class OperatorsSpec extends SparkSpec {
     val idx = Dedup.readContainmentIndex(spark, path)
     // both arms through the session threshold: the default broadcasts
     // the batch, -1 (broadcast disabled) takes the salted shuffle joins
-    val key = "spark.sql.autoBroadcastJoinThreshold"
     for (t <- Seq(0.5, 0.9); bc <- Seq(None, Some("-1"))) {
-      val saved = spark.conf.getOption(key)
-      bc.foreach(spark.conf.set(key, _))
-      val (got, salted) = try {
+      val (got, salted) = withBroadcastThreshold(bc) {
         val probe = Dedup.containmentProbeIncremental(idx, batch,
           $"doc_id", $"text", t, chunks = 3)
         (probe.as[(Long, Long, Double)].collect().toSet,
           probe.queryExecution.executedPlan.toString.contains("__salt"))
-      } finally saved match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
       }
       assert(salted == bc.isDefined, s"t=$t threshold=$bc: wrong arm")
       val want = Dedup.containmentPairs(all, $"doc_id", $"text", t)

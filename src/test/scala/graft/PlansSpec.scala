@@ -474,4 +474,13 @@ class PlansSpec extends SparkSpec {
     val nlj = helper.collect(plan) { case j: BroadcastNestedLoopJoinExec => j }
     assert(nlj.size == 4, s"${nlj.size} broadcast nested-loop joins:\n$plan")
   }
+
+  test("q121 and q47: building the query launches at most 6 jobs") {
+    // the pair mining's stages, the forest checkpoint (whose job also
+    // counts the edges) and the driver finish's collect: 5 at sf0.01
+    for (name <- Seq("q121_near_dup_components", "q47_dedup_components")) {
+      val (_, jobs, _) = traced(SparkEntry.queries(name)(spark, dir))
+      assert(jobs <= 6, s"$name: $jobs jobs while building the query")
+    }
+  }
 }

@@ -673,11 +673,18 @@ class PropertySpec extends SparkSpec {
       val extra = dups ++ Seq.fill(rnd.nextInt(4)) { val v = pick(); (v, v) } ++
         Seq.fill(rnd.nextInt(3))((pick(), pick()))
       val edges = rnd.shuffle(oriented ++ extra)
-      val got = Dedup.connectedComponentsStar(ids.toDF("id"), $"id",
-          spark.sparkContext.parallelize(edges, 6).toDF("a", "b"),
-          $"a", $"b")
-        .as[(Long, Long)].collect().toMap
-      assert(got == unionFindLabels(ids, edges))
+      val want = unionFindLabels(ids, edges)
+      // the default session finishes on the driver; -1 (broadcast
+      // disabled) forces the distributed rounds to the fixpoint
+      for (threshold <- Seq(None, Some("-1"))) {
+        val got = withBroadcastThreshold(threshold) {
+          Dedup.connectedComponentsStar(ids.toDF("id"), $"id",
+              spark.sparkContext.parallelize(edges, 6).toDF("a", "b"),
+              $"a", $"b")
+            .as[(Long, Long)].collect().toMap
+        }
+        assert(got == want, s"threshold $threshold")
+      }
     }
   }
 

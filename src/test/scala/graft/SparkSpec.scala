@@ -25,6 +25,19 @@ trait SparkSpec extends AnyFunSuite {
     vertices.map(v => v -> uf.find(v)).toMap
   }
 
+  /** Runs `body` with `spark.sql.autoBroadcastJoinThreshold` set to
+    * `threshold` (unchanged for None), then restores the setting. */
+  def withBroadcastThreshold[A](threshold: Option[String])(body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val saved = spark.conf.getOption(key)
+    threshold.foreach(spark.conf.set(key, _))
+    try body
+    finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   /** Runs `body` and returns its result with the Spark jobs it launched
     * and the query executions that succeeded while it ran, as Spark's
     * listeners report them.
